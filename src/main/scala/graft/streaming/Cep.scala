@@ -36,7 +36,7 @@ object Cep {
     val spark = df.sparkSession
     val schema = df.schema
     val keyIdx = schema.fieldIndex(keyCol)
-    val tsIdx = schema.fieldIndex(tsCol)
+    val tsIdx = StatefulOps.eventTimeIndex(schema, tsCol)
     val idIdx = schema.fieldIndex(idCol)
     val keyType = schema(keyIdx).dataType
     val idType = schema(idIdx).dataType
@@ -603,7 +603,7 @@ object Cep {
       "a pattern cannot START with a negated step (nothing anchors the " +
       "match) — the reference rejects Pattern.begin(not...) the same way")
     private val keyIdx = schema.fieldIndex(keyCol)
-    private val tsIdx = schema.fieldIndex(tsCol)
+    private val tsIdx = StatefulOps.eventTimeIndex(schema, tsCol)
     private val idIdx = schema.fieldIndex(idCol)
     private val names = unionNames(branches).toIndexedSeq
 

@@ -72,10 +72,10 @@ object Changelog {
       vals(kindIdx) = kind
       Row.fromSeq(vals.toIndexedSeq)
     }
-    val timeout = StatefulOps.ttlTimeout(df, ttlSec)
+    val ttl = StatefulOps.stateTtl(df, ttlSec)
     df.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
       .flatMapGroupsWithState[Row, Row](
-        OutputMode.Append, timeout)(StatefulOps.withTtl(timeout, ttlSec) {
+        OutputMode.Append, ttl.timeout)(StatefulOps.withTtl(ttl) {
         (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
           val out = scala.collection.mutable.ArrayBuffer.empty[Row]
           var last: Option[Row] = if (state.exists) Some(state.get) else None
@@ -134,10 +134,10 @@ object Changelog {
       case n: java.lang.Number => n.doubleValue
       case _ => 0.0
     }
-    val timeout = StatefulOps.ttlTimeout(df, ttlSec)
+    val ttl = StatefulOps.stateTtl(df, ttlSec)
     df.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
       .flatMapGroupsWithState[(Long, Double), Row](
-        OutputMode.Update, timeout)(StatefulOps.withTtl(timeout, ttlSec) {
+        OutputMode.Update, ttl.timeout)(StatefulOps.withTtl(ttl) {
         (_: String, rows: Iterator[Row], state: GroupState[(Long, Double)]) =>
           if (!rows.hasNext) Iterator.empty // TTL timeout: state drops, no emission
           else {

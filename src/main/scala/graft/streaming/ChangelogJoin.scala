@@ -63,10 +63,10 @@ object ChangelogJoin {
     val p = new Plan(left, leftKeys, right, rightKeys, seqCol, joinType)
     import p._
     val taggedDs = tagged
-    val timeout = StatefulOps.ttlTimeout(taggedDs, ttlSec)
+    val ttl = StatefulOps.stateTtl(taggedDs, ttlSec)
     taggedDs.groupByKey(keyOf)(keyEnc)
       .flatMapGroupsWithState[Row, Row](
-        OutputMode.Append, timeout)(StatefulOps.withTtl(timeout, ttlSec) {
+        OutputMode.Append, ttl.timeout)(StatefulOps.withTtl(ttl) {
         (_: String, it: Iterator[Row], state: GroupState[Row]) =>
           val st =
             if (state.exists) JoinState.fromRow(state.get) else new JoinState()
@@ -158,8 +158,8 @@ object ChangelogJoin {
     private val rSchema = right.schema
     private val lKindIdx = lSchema.fieldIndex(KindCol)
     private val rKindIdx = rSchema.fieldIndex(KindCol)
-    private val lSeqIdx = lSchema.fieldIndex(seqCol)
-    private val rSeqIdx = rSchema.fieldIndex(seqCol)
+    private val lSeqIdx = StatefulOps.eventTimeIndex(lSchema, seqCol)
+    private val rSeqIdx = StatefulOps.eventTimeIndex(rSchema, seqCol)
     private val lKeyIdx = leftKeys.map(lSchema.fieldIndex)
     private val rKeyIdx = rightKeys.map(rSchema.fieldIndex)
     private val lDataIdx = lSchema.fields.indices
@@ -196,14 +196,8 @@ object ChangelogJoin {
     def tagged: org.apache.spark.sql.Dataset[Row] = {
       val li = lSeqIdx
       val ri = rSeqIdx
-      left.map(r => Row(0, toLong(r.get(li)), r, null))(tagEnc)
-        .union(right.map(r => Row(1, toLong(r.get(ri)), null, r))(tagEnc))
-    }
-
-    private def toLong(v: Any): Long = v match {
-      case l: Long => l; case i: Int => i.toLong
-      case t: java.sql.Timestamp => t.getTime
-      case o => o.hashCode().toLong
+      left.map(r => Row(0, StatefulOps.timeMillis(r.get(li)), r, null))(tagEnc)
+        .union(right.map(r => Row(1, StatefulOps.timeMillis(r.get(ri)), null, r))(tagEnc))
     }
 
     def keyOf(t: Row): String =

@@ -87,10 +87,10 @@ object NearDupStreaming {
       ExpressionEncoder(RowEncoder.encoderFor(
         StructType(Seq(idField.copy(name = "owner", nullable = true)))))
     val keyIdx = Seq(schema.fieldIndex("band"), schema.fieldIndex("bucket"))
-    val timeout = StatefulOps.ttlTimeout(banded, ttlSec)
+    val ttl = StatefulOps.stateTtl(banded, ttlSec)
     banded.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
       .flatMapGroupsWithState[Row, Row](
-        OutputMode.Append, timeout)(StatefulOps.withTtl(timeout, ttlSec) {
+        OutputMode.Append, ttl.timeout)(StatefulOps.withTtl(ttl) {
         (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
           var hasOwner = state.exists
           var owner: Any = if (hasOwner) state.get.get(0) else null

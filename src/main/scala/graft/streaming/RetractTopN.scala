@@ -56,10 +56,10 @@ object RetractTopN {
       Row.fromSeq(vals.toIndexedSeq :+ rank)
     }
 
-    val timeout = StatefulOps.ttlTimeout(df, ttlSec)
+    val ttl = StatefulOps.stateTtl(df, ttlSec)
     df.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
       .flatMapGroupsWithState[Row, Row](
-        OutputMode.Append, timeout)(StatefulOps.withTtl(timeout, ttlSec) {
+        OutputMode.Append, ttl.timeout)(StatefulOps.withTtl(ttl) {
         (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
           var m: Map[String, Row] =
             if (state.exists)

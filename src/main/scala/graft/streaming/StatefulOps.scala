@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, StructField,
+  StructType, TimestampNTZType, TimestampType}
 
 /** Stateful operators re-expressing the reference's keyed-state runtime
   * (SURVEY.md §2.5 deduplicate, §2.5 rank/TopN, §2.3 temporal join) on
@@ -63,44 +64,88 @@ object StatefulOps extends Serializable {
       case _ => false
     }
 
-  private[streaming] def ttlTimeout(df: Dataset[_], ttlSec: Long): GroupStateTimeout =
-    if (ttlSec > 0 && hasWatermark(df)) GroupStateTimeout.EventTimeTimeout
-    else GroupStateTimeout.NoTimeout
+  /** A keyed op's TTL settings, fixed when the op is built: the timeout
+    * mode, the TTL, and how to read event time (millis) off the rows
+    * being grouped — the columns the upstream `EventTimeWatermark`
+    * nodes name, found at the top level or one struct level down
+    * (ChangelogJoin groups side-tagged rows that carry each input as a
+    * struct; the other side's struct is null). `eventMs` is None when
+    * the grouped rows no longer carry such a column (NearDupStreaming's
+    * banded rows); timers then arm from the watermark alone.
+    */
+  private[streaming] final case class StateTtl(
+      timeout: GroupStateTimeout, ttlSec: Long, eventMs: Option[Row => Long])
+
+  private[streaming] def stateTtl(df: Dataset[_], ttlSec: Long): StateTtl = {
+    val names = df.queryExecution.logical.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark => w.eventTime.name
+    }.toSet
+    if (ttlSec <= 0 || names.isEmpty)
+      return StateTtl(GroupStateTimeout.NoTimeout, ttlSec, None)
+    def isTime(f: StructField): Boolean = names(f.name) &&
+      (f.dataType == TimestampType || f.dataType == TimestampNTZType)
+    val schema = df.schema
+    val getters: Seq[Row => Any] = schema.fields.toSeq.zipWithIndex.flatMap {
+      case (f, i) if isTime(f) => Seq((r: Row) => r.get(i))
+      case (StructField(_, s: StructType, _, _), i) =>
+        s.fields.toSeq.zipWithIndex.collect { case (f, j) if isTime(f) =>
+          (r: Row) => { val v = r.getStruct(i); if (v == null) null else v.get(j) } }
+      case _ => Nil
+    }
+    val eventMs = if (getters.isEmpty) None else Some { (r: Row) =>
+      var latest = Long.MinValue
+      getters.foreach { g =>
+        val v = g(r)
+        if (v != null) latest = math.max(latest, timeMillis(v))
+      }
+      latest
+    }
+    StateTtl(GroupStateTimeout.EventTimeTimeout, ttlSec, eventMs)
+  }
 
   /** Wrap a flatMapGroupsWithState body with TTL bookkeeping. On every
     * data invocation the key's purge timer is re-armed to
-    * watermark + ttl (Flink's OnReadAndWrite update type). When the
-    * timer fires, the body runs once more with an EMPTY input — so
-    * watermark-buffered ops (temporal sort, event-time OVER aggs, CEP)
+    * max(watermark, latest event time the key received in this
+    * invocation) + ttl (Flink's OnReadAndWrite update type, in event
+    * time). Arming from the watermark alone would expire a key that is
+    * still receiving events whenever one micro-batch spans more event
+    * time than the TTL (a backlog after a restart or an outage), and
+    * keep-first dedup would then emit a second "first" row for it.
+    * When the timer fires, the body runs once more with an EMPTY input —
+    * so watermark-buffered ops (temporal sort, event-time OVER aggs, CEP)
     * release everything the watermark already permits, exactly like
     * Flink draining timers before state cleanup — and the entry is
     * then removed. All graft op bodies return materialized iterators
     * and finish their state writes before returning, which is what
     * makes the remove-after-body ordering here final.
     */
-  private[streaming] def withTtl[S, O](timeout: GroupStateTimeout, ttlSec: Long)(
+  private[streaming] def withTtl[S, O](ttl: StateTtl)(
       f: (String, Iterator[Row], GroupState[S]) => Iterator[O])
       : (String, Iterator[Row], GroupState[S]) => Iterator[O] =
-    if (timeout == GroupStateTimeout.NoTimeout) f
+    if (ttl.timeout == GroupStateTimeout.NoTimeout) f
     else (k: String, rows: Iterator[Row], state: GroupState[S]) =>
       if (state.hasTimedOut) {
         val out = f(k, Iterator.empty, state)
         state.remove()
         out
       } else {
-        val out = f(k, rows, state)
-        val wm = state.getCurrentWatermarkMs()
-        // wm == 0 ⇒ no watermark committed yet (the query's first
-        // micro-batch): arming now would read as "expire at the first
-        // real watermark" — a premature purge. Skip; the key's next
-        // data invocation arms the timer. Keys seen ONLY before the
-        // first watermark commit are retained forever — a bounded
-        // startup edge. Choose ttlSec comfortably above the watermark
-        // delay: a key's still-buffered rows older than the TTL
-        // horizon are dropped with the key, exactly like Flink state
-        // TTL expiring an unfired window.
-        if (state.exists && wm > 0L)
-          state.setTimeoutTimestamp(wm + ttlSec * 1000L)
+        var latest = Long.MinValue
+        val seen = ttl.eventMs match {
+          case Some(ms) => rows.map { r => latest = math.max(latest, ms(r)); r }
+          case None => rows
+        }
+        val out = f(k, seen, state)
+        val base = math.max(state.getCurrentWatermarkMs(), latest)
+        // base == 0 ⇒ no watermark committed yet (the query's first
+        // micro-batch) and no event time read: arming now would read
+        // as "expire at the first real watermark" — a premature purge.
+        // Skip; the key's next data invocation arms the timer. Choose
+        // ttlSec comfortably above the watermark delay: a key's
+        // still-buffered rows older than the TTL horizon are dropped
+        // with the key, exactly like Flink state TTL expiring an
+        // unfired window.
+        if (state.exists && base > 0L)
+          state.setTimeoutTimestamp(base + ttl.ttlSec * 1000L)
         out
       }
 
@@ -167,28 +212,64 @@ object StatefulOps extends Serializable {
     (out.toSeq, keepTail)
   }
 
+  /** Event-time types every op here can order: TIMESTAMP, TIMESTAMP_NTZ
+    * (read as UTC wall clock, Spark's own encoding of it), DATE (its UTC
+    * midnight), and BIGINT/INT taken as already in the op's unit.
+    */
+  private val EventTimeTypes: Set[DataType] =
+    Set(TimestampType, TimestampNTZType, DateType, LongType, IntegerType)
+
+  /** Index of the event-time or order column `name`, rejecting at plan
+    * time a type the decoders below cannot order — such a value would
+    * otherwise fail, or be ordered by something meaningless, per row.
+    */
+  private[streaming] def eventTimeIndex(schema: StructType, name: String): Int = {
+    val i = schema.fieldIndex(name)
+    require(EventTimeTypes(schema(i).dataType),
+      s"event-time column '$name' is ${schema(i).dataType.sql}; expected one of " +
+        EventTimeTypes.map(_.sql).toSeq.sorted.mkString(", "))
+    i
+  }
+
+  /** Event-time value in MICROS — the ONE package-wide decode (r19
+    * review: seven hand-rolled copies had silently divergent type
+    * handling, one of which read Long as SECONDS). Long/Int are already
+    * micros. Ops whose domain is MILLIS (dedup order, window assignment,
+    * watermark alignment) use [[timeMillis]]. Columns pass
+    * [[eventTimeIndex]] when the op is built.
+    */
+  private[streaming] def tsMicros(r: Row, idx: Int): Long = r.get(idx) match {
+    case t: java.sql.Timestamp => t.getTime * 1000 + (t.getNanos / 1000) % 1000
+    case t: java.time.Instant => instantMicros(t)
+    case t: java.time.LocalDateTime => instantMicros(t.toInstant(java.time.ZoneOffset.UTC))
+    case d: java.sql.Date => d.toLocalDate.toEpochDay * 86400000000L
+    case d: java.time.LocalDate => d.toEpochDay * 86400000000L
+    case l: Long => l
+    case i: Int => i.toLong
+    case o => throw new IllegalArgumentException(s"not an event time: $o")
+  }
+
+  private def instantMicros(t: java.time.Instant): Long =
+    t.getEpochSecond * 1000000L + t.getNano / 1000
+
+  /** Event-time value in MILLIS; Long/Int are already millis. */
+  private[streaming] def timeMillis(v: Any): Long = v match {
+    case t: java.sql.Timestamp => t.getTime
+    case t: java.time.Instant => t.toEpochMilli
+    case t: java.time.LocalDateTime => t.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
+    case d: java.sql.Date => d.toLocalDate.toEpochDay * 86400000L
+    case d: java.time.LocalDate => d.toEpochDay * 86400000L
+    case l: Long => l
+    case i: Int => i.toLong
+    case o => throw new IllegalArgumentException(s"not an event time: $o")
+  }
+
   /** Collision-free composite grouping key: length-prefixed segments,
     * so ("ab","c") and ("a","bc") stay distinct for ANY content
     * (including separators inside values). The reference keys state by
     * binary rows (BinaryRowData), which are unambiguous by
     * construction; a flat string concat is not.
     */
-  /** Event-time value at `idx` in MICROS — the ONE package-wide decode
-    * (r19 review: seven hand-rolled copies had silently divergent type
-    * handling, one of which read Long as SECONDS). Timestamp/Instant
-    * decode at micro precision; Long/Int are already micros. Ops whose
-    * domain is MILLIS (window assignment, watermark alignment) keep
-    * their own millis() — this helper pins the micros convention for
-    * everything else.
-    */
-  private[streaming] def tsMicros(r: Row, idx: Int): Long = r.get(idx) match {
-    case t: java.sql.Timestamp => t.getTime * 1000 + (t.getNanos / 1000) % 1000
-    case t: java.time.Instant => t.getEpochSecond * 1000000L + t.getNano / 1000
-    case l: Long => l
-    case i: Int => i.toLong
-    case o => o.hashCode().toLong
-  }
-
   private[streaming] def encodeKey(r: Row, idx: Seq[Int]): String =
     idx.iterator.map { i =>
       val v = r.get(i)
@@ -244,17 +325,12 @@ object StatefulOps extends Serializable {
     val stateEnc: ExpressionEncoder[Row] = rowEnc(schema)
     implicit val keyEnc = Encoders.STRING
     val keyIdx = keys.map(schema.fieldIndex)
-    val ordIdx = schema.fieldIndex(orderCol)
-    def ord(r: Row): Long = r.get(ordIdx) match {
-      case t: java.sql.Timestamp => t.getTime
-      case l: Long => l
-      case i: Int => i.toLong
-      case o => o.hashCode().toLong
-    }
-    val timeout = ttlTimeout(df, ttlSec)
+    val ordIdx = eventTimeIndex(schema, orderCol)
+    def ord(r: Row): Long = timeMillis(r.get(ordIdx))
+    val ttl = stateTtl(df, ttlSec)
     df.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
       .flatMapGroupsWithState[Row, Row](
-        OutputMode.Update, timeout)(withTtl(timeout, ttlSec) {
+        OutputMode.Update, ttl.timeout)(withTtl(ttl) {
         (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
           val incoming = rows.toSeq
           val best0 = if (state.exists) Some(state.get) else None
@@ -282,17 +358,12 @@ object StatefulOps extends Serializable {
     val stateEnc: ExpressionEncoder[Row] = rowEnc(schema)
     implicit val keyEnc = Encoders.STRING
     val keyIdx = keys.map(schema.fieldIndex)
-    val ordIdx = schema.fieldIndex(orderCol)
-    def ord(r: Row): Long = r.get(ordIdx) match {
-      case t: java.sql.Timestamp => t.getTime
-      case l: Long => l
-      case i: Int => i.toLong
-      case o => o.hashCode().toLong
-    }
-    val timeout = ttlTimeout(df, ttlSec)
+    val ordIdx = eventTimeIndex(schema, orderCol)
+    def ord(r: Row): Long = timeMillis(r.get(ordIdx))
+    val ttl = stateTtl(df, ttlSec)
     df.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
       .flatMapGroupsWithState[Row, Row](
-        OutputMode.Update, timeout)(withTtl(timeout, ttlSec) {
+        OutputMode.Update, ttl.timeout)(withTtl(ttl) {
         (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
           val incoming = rows.toSeq
           val best0 = if (state.exists) Some(state.get) else None
@@ -351,10 +422,10 @@ object StatefulOps extends Serializable {
       case _ => 0.0
     }
     val sign = if (descending) -1.0 else 1.0
-    val timeout = ttlTimeout(df, ttlSec)
+    val ttl = stateTtl(df, ttlSec)
     df.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
       .flatMapGroupsWithState[Row, Row](
-        OutputMode.Update, timeout)(withTtl(timeout, ttlSec) {
+        OutputMode.Update, ttl.timeout)(withTtl(ttl) {
         (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
           val cur: Array[Row] =
             if (state.exists) state.get.getSeq[Row](0).toArray else Array.empty[Row]
@@ -391,18 +462,12 @@ object StatefulOps extends Serializable {
       StructField("rows", org.apache.spark.sql.types.ArrayType(schema)))))
     implicit val keyEnc = Encoders.STRING
     val keyIdx = keys.map(schema.fieldIndex)
-    val tsIdx = schema.fieldIndex(tsCol)
+    val tsIdx = eventTimeIndex(schema, tsCol)
     val scoreIdx = schema.fieldIndex(scoreCol)
-    def millis(r: Row): Long = r.get(tsIdx) match {
-      case t: java.sql.Timestamp => t.getTime
-      case t: java.time.Instant => t.toEpochMilli
-      // Long = epoch MILLIS, the package-wide convention (keepLast,
-      // watermark alignment, the over-agg ops) — this op briefly read
-      // Long as seconds (*1000), putting windows and timers 1000x off
-      case l: Long => l
-      case i: Int => i.toLong
-      case o => o.hashCode().toLong
-    }
+    // Long = epoch MILLIS, the package-wide convention (keepLast,
+    // watermark alignment, the over-agg ops) — this op briefly read
+    // Long as seconds (*1000), putting windows and timers 1000x off
+    def millis(r: Row): Long = timeMillis(r.get(tsIdx))
     def windowStartMs(r: Row): Long = {
       val w = windowSec * 1000L
       val t = millis(r)
@@ -478,10 +543,10 @@ object StatefulOps extends Serializable {
     val stateEnc: ExpressionEncoder[Row] = rowEnc(stateSchema)
     implicit val keyEnc = Encoders.STRING
     val keyIdx = keys.map(schema.fieldIndex)
-    val timeout = ttlTimeout(df, ttlSec)
+    val ttl = stateTtl(df, ttlSec)
     df.groupByKey(r => encodeKey(r, keyIdx))
       .flatMapGroupsWithState[Row, Row](
-        OutputMode.Append, timeout)(withTtl(timeout, ttlSec) {
+        OutputMode.Append, ttl.timeout)(withTtl(ttl) {
         (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
           var (buf, done) =
             if (state.exists) (state.get.getSeq[Row](0).toVector, state.get.getLong(1))
@@ -520,15 +585,15 @@ object StatefulOps extends Serializable {
     val stateEnc: ExpressionEncoder[Row] = rowEnc(StructType(Seq(
       StructField("buf", org.apache.spark.sql.types.ArrayType(schema)))))
     implicit val keyEnc = Encoders.STRING
-    val tsIdx = schema.fieldIndex(tsCol)
+    val tsIdx = eventTimeIndex(schema, tsCol)
     val tieIdx = tieBreak.map(schema.fieldIndex)
     def micros(r: Row): Long = tsMicros(r, tsIdx)
     def sortKey(r: Row): (Long, String) =
       (micros(r), tieIdx.map(i => String.valueOf(r.get(i))).mkString("|"))
-    val timeout = ttlTimeout(df, ttlSec)
+    val ttl = stateTtl(df, ttlSec)
     df.groupByKey(_ => "")(keyEnc)
       .flatMapGroupsWithState[Row, Row](
-        OutputMode.Append, timeout)(withTtl(timeout, ttlSec) {
+        OutputMode.Append, ttl.timeout)(withTtl(ttl) {
         (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
           val buf = (if (state.exists) state.get.getSeq[Row](0) else Seq.empty[Row]) ++ rows
           val wmMicros = state.getCurrentWatermarkMs() * 1000L
@@ -559,23 +624,18 @@ object StatefulOps extends Serializable {
     implicit val stateEnc = Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong)
     implicit val keyEnc = Encoders.STRING
     val keyIdx = keys.map(schema.fieldIndex)
-    val ordIdx = schema.fieldIndex(orderCol)
+    val ordIdx = eventTimeIndex(schema, orderCol)
     val valIdx = schema.fieldIndex(valueCol)
-    def ord(r: Row): Long = r.get(ordIdx) match {
-      case t: java.sql.Timestamp => t.getTime
-      case l: Long => l
-      case i: Int => i.toLong
-      case o => o.hashCode().toLong
-    }
+    def ord(r: Row): Long = timeMillis(r.get(ordIdx))
     def num(r: Row): Double = r.get(valIdx) match {
       case d: Double => d; case f: Float => f.toDouble
       case l: Long => l.toDouble; case i: Int => i.toDouble
       case b: java.math.BigDecimal => b.doubleValue(); case _ => 0.0
     }
-    val timeout = ttlTimeout(df, ttlSec)
+    val ttl = stateTtl(df, ttlSec)
     df.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
       .flatMapGroupsWithState[(Double, Long), Row](
-        OutputMode.Append, timeout)(withTtl(timeout, ttlSec) {
+        OutputMode.Append, ttl.timeout)(withTtl(ttl) {
         (_: String, rows: Iterator[Row], state: GroupState[(Double, Long)]) =>
           var (sum, count) = if (state.exists) state.get else (0.0, 0L)
           val out = rows.toSeq.sortBy(ord).map { r =>
@@ -620,7 +680,7 @@ object StatefulOps extends Serializable {
       StructField("ttl_deadline", org.apache.spark.sql.types.LongType))))
     implicit val keyEnc = Encoders.STRING
     val keyIdx = keys.map(schema.fieldIndex)
-    val tsIdx = schema.fieldIndex(tsCol)
+    val tsIdx = eventTimeIndex(schema, tsCol)
     val valIdx = schema.fieldIndex(valueCol)
     val tieIdx = tieBreak.map(schema.fieldIndex)
     def micros(r: Row): Long = tsMicros(r, tsIdx)
@@ -708,7 +768,7 @@ object StatefulOps extends Serializable {
       StructField("ttl_deadline", org.apache.spark.sql.types.LongType))))
     implicit val keyEnc = Encoders.STRING
     val keyIdx = keys.map(schema.fieldIndex)
-    val tsIdx = schema.fieldIndex(tsCol)
+    val tsIdx = eventTimeIndex(schema, tsCol)
     val valIdx = schema.fieldIndex(valueCol)
     val tieIdx = tieBreak.map(schema.fieldIndex)
     val rangeMicros = rangeSec * 1000000L
@@ -927,7 +987,7 @@ object StatefulOps extends Serializable {
     implicit val outEnc: ExpressionEncoder[Row] = rowEnc(outSchema)
     implicit val keyEnc = Encoders.STRING
     val keyIdx = keys.map(schema.fieldIndex)
-    val tsIdx = schema.fieldIndex(tsCol)
+    val tsIdx = eventTimeIndex(schema, tsCol)
     def micros(r: Row): Long = tsMicros(r, tsIdx)
     df.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
       .flatMapGroupsWithState[Long, Row](
@@ -1354,8 +1414,8 @@ object StatefulOps extends Serializable {
     implicit val keyEnc = Encoders.STRING
     val eKeyIdx = Seq(eSchema.fieldIndex(eventKey))
     val vKeyIdx = Seq(vSchema.fieldIndex(versionKey))
-    val eTimeIdx = eSchema.fieldIndex(eventTime)
-    val vTimeIdx = vSchema.fieldIndex(versionTime)
+    val eTimeIdx = eventTimeIndex(eSchema, eventTime)
+    val vTimeIdx = eventTimeIndex(vSchema, versionTime)
     def micros(r: Row, i: Int): Long = tsMicros(r, i)
     val nulls: Seq[Any] = vKeep.map(_ => null)
     events.groupByKey(r => encodeKey(r, eKeyIdx))(keyEnc)

@@ -69,17 +69,8 @@ object WatermarkAlignment {
                           tsCol: String): DataFrame = {
     val schema = df.schema
     val pIdx = schema.fieldIndex(partitionCol)
-    val tsIdx = schema.fieldIndex(tsCol)
-    def millis(r: Row): Long = r.get(tsIdx) match {
-      case t: java.sql.Timestamp => t.getTime
-      case t: java.time.Instant => t.toEpochMilli
-      case l: Long => l
-      case i: Int => i.toLong
-      case o => throw new IllegalArgumentException(
-        s"watermark column '$tsCol' must be timestamp/long/int epoch millis, " +
-          s"got ${if (o == null) "null" else o.getClass.getName} — a silent " +
-          "fallback here would produce garbage watermarks")
-    }
+    val tsIdx = StatefulOps.eventTimeIndex(schema, tsCol)
+    def millis(r: Row): Long = StatefulOps.timeMillis(r.get(tsIdx))
     implicit val outEnc: ExpressionEncoder[Row] = StatefulOps.rowEnc(heartbeatSchema)
     implicit val keyEnc = Encoders.STRING
     df.groupByKey(r => String.valueOf(r.get(pIdx)))

@@ -29,9 +29,10 @@ import graft.streaming.{Changelog, StatefulOps}
   *     watermark-less streaming spec, which all run with the TTL
   *     default ON.
   *
-  * Timers arm against the committed watermark, so each scenario first
-  * establishes one (a batch-1 timer would arm against wm=0 and fire
-  * prematurely — see the withTtl scaladoc).
+  * Timers arm at max(committed watermark, the key's latest event time
+  * in the invocation) + ttl, so a key stays live for the TTL after its
+  * last event even when one batch spans more event time than the TTL.
+  * Each scenario first establishes a watermark.
   */
 class StateTtlSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -144,6 +145,37 @@ class StateTtlSpec extends AnyFunSuite {
       val kinds = spark.sql("SELECT row_kind FROM ttl_chlog WHERE key = 'k1' ORDER BY seq")
         .collect().map(_.getString(0)).toList
       assert(kinds == List("+I", "+I"), s"second +U after expiry must re-insert, got $kinds")
+    } finally q.stop()
+  }
+
+  test("a backlog spanning more event time than the TTL does not expire a live key") {
+    // The timer arms at max(watermark, the key's latest event time in
+    // the invocation) + ttl. Armed from the batch-start watermark
+    // alone, u1's timer (00:00 + 100 s) would fall behind the
+    // watermark the backlog itself pushes to 00:10, u1 would expire at
+    // the next batch although it received an event at 00:10, and its
+    // row at 00:10:30 would come out as a second "first" row.
+    implicit val sc = spark.sqlContext
+    val in = MemoryStream[Ev]
+    val out = StatefulOps.keepFirstStreaming(
+      in.toDF().withWatermark("ts", "0 seconds"), Seq("user"), "ts", ttlSec = 100)
+    val q = out.writeStream.format("memory").queryName("ttl_backlog")
+      .outputMode(OutputMode.Update).start()
+    try {
+      in.addData(Ev(ts("2024-01-01 00:00:00"), "u2", "a", 0.0))
+      q.processAllAvailable()
+      // one backlog: u1 from 00:00:10 to 00:10:00, ten minutes > TTL
+      in.addData(Ev(ts("2024-01-01 00:00:10"), "u1", "first", 1.0),
+        Ev(ts("2024-01-01 00:10:00"), "u1", "later", 2.0))
+      q.processAllAvailable()
+      // an idle-for-u1 batch: its timer is checked against wm 00:10
+      in.addData(Ev(ts("2024-01-01 00:10:20"), "u3", "a", 3.0))
+      q.processAllAvailable()
+      in.addData(Ev(ts("2024-01-01 00:10:30"), "u1", "again", 4.0))
+      q.processAllAvailable()
+      val u1 = spark.sql("SELECT tpe FROM ttl_backlog WHERE user = 'u1'")
+        .collect().map(_.getString(0)).toList
+      assert(u1 == List("first"), s"u1 must be emitted once, got $u1")
     } finally q.stop()
   }
 
