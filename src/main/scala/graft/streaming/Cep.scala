@@ -49,18 +49,13 @@ object Cep {
       })
     implicit val outEnc: ExpressionEncoder[Row] =
       ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    implicit val inEnc: ExpressionEncoder[Row] =
-      ExpressionEncoder(RowEncoder.encoderFor(schema))
-    implicit val keyEnc = org.apache.spark.sql.Encoders.STRING
 
     def tsMicros(r: Row): Long = StatefulOps.tsMicros(r, tsIdx)
+    val order = Ordering.by(tsMicros).orElse(StatefulOps.tieOrdering(schema, Seq(idCol)))
 
-    // encodeKey, not String.valueOf: a NULL key and the literal string
-    // "null" must be separate groups (StatefulOps.encodeKey's contract)
-    // or a pattern could chain across two distinct keys' events
-    df.groupByKey(r => StatefulOps.encodeKey(r, Seq(keyIdx)))
-      .flatMapGroups { (_: String, it: Iterator[Row]) =>
-        val events = it.toArray.sortBy(r => (tsMicros(r), String.valueOf(r.get(idIdx))))
+    StatefulOps.keyed(df, Seq(keyCol))
+      .flatMapGroups { (_: Row, it: Iterator[Row]) =>
+        val events = it.toArray.sorted(order)
         val n = events.length
         val out = scala.collection.mutable.ArrayBuffer.empty[Row]
         var i = 0
@@ -424,18 +419,15 @@ object Cep {
                                 withinSec: Long, afterMatch: AfterMatch,
                                 withBranch: Boolean): DataFrame = {
     val schema = df.schema
-    val keyIdx = schema.fieldIndex(keyCol)
-    val outSchema = patternOutSchema(keyCol, schema(keyIdx).dataType,
-      schema(schema.fieldIndex(idCol)).dataType, unionNames(branches), withBranch)
+    val outSchema = patternOutSchema(keyCol, schema(keyCol).dataType,
+      schema(idCol).dataType, unionNames(branches), withBranch)
     implicit val outEnc: ExpressionEncoder[Row] =
       ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    implicit val keyEnc = org.apache.spark.sql.Encoders.STRING
     val runner = new PatternRunner(schema, keyCol, tsCol, idCol,
       branches, withinSec, afterMatch, withBranch)
-    // encodeKey: NULL key vs literal "null" stay distinct groups
-    df.groupByKey(r => StatefulOps.encodeKey(r, Seq(keyIdx)))
-      .flatMapGroups { (_: String, it: Iterator[Row]) =>
-        val events = it.toArray.sortBy(runner.sortKey)
+    StatefulOps.keyed(df, Seq(keyCol))
+      .flatMapGroups { (_: Row, it: Iterator[Row]) =>
+        val events = it.toArray.sorted(runner.order)
         runner.emitMatches(events, 0, events.length, runner.NoCursor)._1.iterator
       }(outEnc)
   }
@@ -491,21 +483,17 @@ object Cep {
       withinSec: Long, afterMatch: AfterMatch, withBranch: Boolean,
       ttlSec: Long = StatefulOps.DefaultTtlSec): DataFrame = {
     val schema = df.schema
-    val keyIdx = schema.fieldIndex(keyCol)
-    val outSchema = patternOutSchema(keyCol, schema(keyIdx).dataType,
-      schema(schema.fieldIndex(idCol)).dataType, unionNames(branches), withBranch)
+    val outSchema = patternOutSchema(keyCol, schema(keyCol).dataType,
+      schema(idCol).dataType, unionNames(branches), withBranch)
     implicit val outEnc: ExpressionEncoder[Row] =
       ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    implicit val inEnc: ExpressionEncoder[Row] =
-      ExpressionEncoder(RowEncoder.encoderFor(schema))
-    implicit val keyEnc = org.apache.spark.sql.Encoders.STRING
     // state = (buffered rows, skip-strategy resume cursor as sort key,
     // TTL purge horizon in epoch ms — 0 when TTL is disabled or no
     // watermark has committed yet)
     val stateSchema = StructType(Seq(
       StructField("buf", ArrayType(schema)),
       StructField("cur_ts", LongType),
-      StructField("cur_id", StringType),
+      StructField("cur_id", schema(idCol).dataType),
       StructField("cur_incl", BooleanType),
       StructField("ttl_deadline", LongType)))
     val stateEnc: ExpressionEncoder[Row] =
@@ -533,23 +521,22 @@ object Cep {
     val timeout =
       if (StatefulOps.hasWatermark(df)) GroupStateTimeout.EventTimeTimeout
       else GroupStateTimeout.NoTimeout
-    // encodeKey: NULL key vs literal "null" stay distinct groups
-    df.groupByKey(r => StatefulOps.encodeKey(r, Seq(keyIdx)))
+    val ttl = StatefulOps.stateTtl(df, ttlSec)
+    StatefulOps.keyed(df, Seq(keyCol))
       .flatMapGroupsWithState[Row, Row](
         OutputMode.Append, timeout) {
-        (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
+        (_: Row, rows: Iterator[Row], state: GroupState[Row]) =>
           val hadTimeout = state.hasTimedOut
           val cursor0 =
             if (state.exists)
-              (state.get.getLong(1), state.get.getString(2), state.get.getBoolean(3))
+              (state.get.getLong(1), state.get.get(2), state.get.getBoolean(3))
             else runner.NoCursor
           val buf0 = if (state.exists) state.get.getSeq[Row](0) else Seq.empty[Row]
           val prevTtl = if (state.exists) state.get.getLong(4) else 0L
           val wmMs = state.getCurrentWatermarkMs()
           val wmMicros = wmMs * 1000L
-          val events =
-            ((if (hadTimeout) Iterator.empty else rows) ++ buf0.iterator)
-              .toArray.sortBy(runner.sortKey)
+          val incoming = if (hadTimeout) Seq.empty[Row] else rows.toSeq
+          val events = (incoming ++ buf0).toArray.sorted(runner.order)
           // anchors with deadline ≤ watermark are final — match them now
           val decidableTo = events.indexWhere(r =>
             runner.tsMicros(r) + withinSec * 1000000L > wmMicros) match {
@@ -567,12 +554,9 @@ object Cep {
             // undecided anchor's window
             val keep = events.dropWhile(r =>
               runner.tsMicros(r) + withinSec * 1000000L <= wmMicros)
-            // the TTL horizon advances only on data (wm == 0 ⇒ no
-            // watermark committed yet — arming would read as "expire
-            // at the first real watermark", a premature purge)
+            // the TTL horizon advances only on data
             val ttlDeadline =
-              if (!hadTimeout && ttlSec > 0 && wmMs > 0L) wmMs + ttlSec * 1000L
-              else prevTtl
+              if (hadTimeout) prevTtl else ttl.refreshed(prevTtl, wmMs, incoming)
             state.update(Row(keep.toSeq, cursor._1, cursor._2, cursor._3, ttlDeadline))
             if (timeout == GroupStateTimeout.EventTimeTimeout) {
               val nextEmit =
@@ -608,7 +592,9 @@ object Cep {
     private val names = unionNames(branches).toIndexedSeq
 
     def tsMicros(r: Row): Long = StatefulOps.tsMicros(r, tsIdx)
-    def sortKey(r: Row): (Long, String) = (tsMicros(r), String.valueOf(r.get(idIdx)))
+    /** Event order: rowtime, then the typed id. */
+    val order: Ordering[Row] =
+      Ordering.by(tsMicros).orElse(StatefulOps.tieOrdering(schema, Seq(idCol)))
 
     /** Suppression cursor — the skip strategy's resume position as a
       * SORT KEY, not an index, so it survives trigger boundaries and
@@ -616,12 +602,12 @@ object Cep {
       * at it, when `inclusive`) may not start a match. `NoCursor`
       * suppresses nothing.
       */
-    type Cursor = (Long, String, Boolean) // (micros, id, inclusive)
-    val NoCursor: Cursor = (Long.MinValue, "", true)
+    type Cursor = (Long, Any, Boolean) // (micros, id, inclusive)
+    val NoCursor: Cursor = (Long.MinValue, null, true)
 
-    private def suppressed(k: (Long, String), c: Cursor): Boolean = {
-      val cmp = java.lang.Long.compare(k._1, c._1) match {
-        case 0 => k._2.compareTo(c._2)
+    private def suppressed(r: Row, c: Cursor): Boolean = {
+      val cmp = java.lang.Long.compare(tsMicros(r), c._1) match {
+        case 0 => StatefulOps.compareValues(r.get(idIdx), c._2)
         case x => x
       }
       cmp < 0 || (cmp == 0 && c._3)
@@ -653,7 +639,7 @@ object Cep {
       // matcher itself is O(1) per anchor once the memos warm)
       var limit = from
       while (i < until && i < decidableTo) {
-        if (!suppressed(sortKey(events(i)), cursor)) {
+        if (!suppressed(events(i), cursor)) {
           val deadline = tsMicros(events(i)) + withinSec * 1000000L
           if (limit < i) limit = i
           while (limit < until && tsMicros(events(limit)) <= deadline) limit += 1
@@ -669,9 +655,8 @@ object Cep {
             val steps = branches(bi)
             out += buildRow(events, bi, steps, res, i, endPos)
             def stepIdxOf(v: String): Int = steps.indexWhere(_.name == v)
-            def at(idx: Int, inclusive: Boolean): Cursor = {
-              val k = sortKey(events(idx)); (k._1, k._2, inclusive)
-            }
+            def at(idx: Int, inclusive: Boolean): Cursor =
+              (tsMicros(events(idx)), events(idx).get(idIdx), inclusive)
             cursor = afterMatch match {
               case SkipPastLastRow => at(endPos - 1, inclusive = true)
               case SkipToFirst(v) =>

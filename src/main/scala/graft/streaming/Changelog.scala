@@ -64,8 +64,6 @@ object Changelog {
     // stays readable across builds, unlike java serialization.
     val stateEnc: ExpressionEncoder[Row] =
       ExpressionEncoder(RowEncoder.encoderFor(schema))
-    implicit val keyEnc = Encoders.STRING
-    val keyIdx = keys.map(schema.fieldIndex)
     val kindIdx = schema.fieldIndex(KindCol)
     def withKind(r: Row, kind: String): Row = {
       val vals = r.toSeq.toArray
@@ -73,10 +71,10 @@ object Changelog {
       Row.fromSeq(vals.toIndexedSeq)
     }
     val ttl = StatefulOps.stateTtl(df, ttlSec)
-    df.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
+    StatefulOps.keyed(df, keys)
       .flatMapGroupsWithState[Row, Row](
         OutputMode.Append, ttl.timeout)(StatefulOps.withTtl(ttl) {
-        (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
+        (_: Row, rows: Iterator[Row], state: GroupState[Row]) =>
           val out = scala.collection.mutable.ArrayBuffer.empty[Row]
           var last: Option[Row] = if (state.exists) Some(state.get) else None
           rows.foreach { r =>
@@ -121,28 +119,20 @@ object Changelog {
     val schema = df.schema
     require(schema.fieldNames.contains(KindCol), s"need $KindCol column")
     val kindIdx = schema.fieldIndex(KindCol)
-    val valIdx = schema.fieldIndex(valueCol)
-    val keyIdx = keys.map(schema.fieldIndex)
-    implicit val keyEnc = Encoders.STRING
+    val num = StatefulOps.numberAt(schema, valueCol)
     implicit val stateEnc = Encoders.product[(Long, Double)]
     val outSchema = StructType(keys.map(k => schema(k)) ++ Seq(
       StructField("cnt", LongType, nullable = false),
       StructField("sum_val", DoubleType, nullable = false)))
     implicit val outEnc: ExpressionEncoder[Row] =
       ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    def num(r: Row): Double = r.get(valIdx) match {
-      case n: java.lang.Number => n.doubleValue
-      case _ => 0.0
-    }
     val ttl = StatefulOps.stateTtl(df, ttlSec)
-    df.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
+    StatefulOps.keyed(df, keys)
       .flatMapGroupsWithState[(Long, Double), Row](
         OutputMode.Update, ttl.timeout)(StatefulOps.withTtl(ttl) {
-        (_: String, rows: Iterator[Row], state: GroupState[(Long, Double)]) =>
+        (key: Row, rows: Iterator[Row], state: GroupState[(Long, Double)]) =>
           if (!rows.hasNext) Iterator.empty // TTL timeout: state drops, no emission
           else {
-            val it = rows.buffered
-            val keyVals = keyIdx.map(it.head.get)
             val hadState = state.exists
             var (cnt, sum) = if (hadState) state.get else (0L, 0.0)
             var sawAccumulate = false
@@ -151,7 +141,7 @@ object Changelog {
             // arrival order, so a -U folded before its own +U must
             // still net correctly — addition commutes, per-element
             // ignore-on-empty would not.
-            it.foreach { r =>
+            rows.foreach { r =>
               val acc = r.getString(kindIdx) match {
                 case Insert | UpdateAfter => 1
                 case _ => -1
@@ -172,7 +162,7 @@ object Changelog {
             // residue from the +x/-x cancellation); a batch of ONLY
             // ignored retractions on an unknown key emits nothing
             if (cnt == 0 && !sawAccumulate && !hadState) Iterator.empty
-            else Iterator(Row.fromSeq(keyVals ++ Seq(cnt, if (cnt == 0) 0.0 else sum)))
+            else Iterator(Row.fromSeq(key.toSeq ++ Seq(cnt, if (cnt == 0) 0.0 else sum)))
           }
       })
   }

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, KeyValueGroupedDataset, Row}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.functions.when
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
@@ -42,8 +43,8 @@ object ChangelogJoin {
             seqCol: String, joinType: String = "inner"): DataFrame = {
     val p = new Plan(left, leftKeys, right, rightKeys, seqCol, joinType)
     import p._
-    tagged.groupByKey(keyOf)(keyEnc)
-      .flatMapGroups { (_: String, it: Iterator[Row]) =>
+    grouped(tagged)
+      .flatMapGroups { (_: Row, it: Iterator[Row]) =>
         val st = new JoinState()
         it.toArray.sortBy(_.getLong(1)).iterator.flatMap(t => process(t, st))
       }(outEnc)
@@ -64,10 +65,10 @@ object ChangelogJoin {
     import p._
     val taggedDs = tagged
     val ttl = StatefulOps.stateTtl(taggedDs, ttlSec)
-    taggedDs.groupByKey(keyOf)(keyEnc)
+    grouped(taggedDs)
       .flatMapGroupsWithState[Row, Row](
         OutputMode.Append, ttl.timeout)(StatefulOps.withTtl(ttl) {
-        (_: String, it: Iterator[Row], state: GroupState[Row]) =>
+        (_: Row, it: Iterator[Row], state: GroupState[Row]) =>
           val st =
             if (state.exists) JoinState.fromRow(state.get) else new JoinState()
           val out = it.toArray.sortBy(_.getLong(1)).flatMap(t => process(t, st))
@@ -160,8 +161,6 @@ object ChangelogJoin {
     private val rKindIdx = rSchema.fieldIndex(KindCol)
     private val lSeqIdx = StatefulOps.eventTimeIndex(lSchema, seqCol)
     private val rSeqIdx = StatefulOps.eventTimeIndex(rSchema, seqCol)
-    private val lKeyIdx = leftKeys.map(lSchema.fieldIndex)
-    private val rKeyIdx = rightKeys.map(rSchema.fieldIndex)
     private val lDataIdx = lSchema.fields.indices
       .filterNot(i => i == lKindIdx || i == lSeqIdx)
     private val rDataIdx = rSchema.fields.indices
@@ -173,7 +172,8 @@ object ChangelogJoin {
          rDataIdx.map(i => rSchema.fields(i).copy(nullable = true))))
     val outEnc: ExpressionEncoder[Row] =
       ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    val keyEnc = org.apache.spark.sql.Encoders.STRING
+    private val keyTypes = StatefulOps.commonKeyTypes(
+      leftKeys.map(lSchema(_)), rightKeys.map(rSchema(_)))
 
     private val taggedSchema = StructType(Seq(
       StructField("side", IntegerType), StructField("seq", LongType),
@@ -200,9 +200,13 @@ object ChangelogJoin {
         .union(right.map(r => Row(1, StatefulOps.timeMillis(r.get(ri)), null, r))(tagEnc))
     }
 
-    def keyOf(t: Row): String =
-      if (t.getInt(0) == 0) StatefulOps.encodeKey(t.getStruct(2), lKeyIdx)
-      else StatefulOps.encodeKey(t.getStruct(3), rKeyIdx)
+    /** `t` (the [[tagged]] union) grouped by the tagged side's key
+      * columns, each cast to its pair's common type. */
+    def grouped(t: Dataset[Row]): KeyValueGroupedDataset[Row, Row] =
+      StatefulOps.keyedOn(t, keyTypes.indices.map { i =>
+        when(t("side") === 0, t("l").getField(leftKeys(i)).cast(keyTypes(i)))
+          .otherwise(t("r").getField(rightKeys(i)).cast(keyTypes(i)))
+      })
 
     private def isAccumulate(kind: String): Boolean =
       kind == Insert || kind == UpdateAfter

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -50,17 +50,23 @@ object NearDupStreaming {
     w.start()
   }
 
-  /** (doc_id, band, bucket) rows — minhash + banding, map-side. */
+  /** (doc_id, band, bucket) rows — minhash + banding, map-side —
+    * followed by the event-time columns of the watermarks upstream, so
+    * [[bucketOwners]]' TTL arms from each bucket's latest event time.
+    */
   def bandedStream(docs: DataFrame, idCol: String, textCol: String,
                    k: Int, bands: Int): DataFrame = {
     val rows = k / bands
-    docs.select(col(idCol).as("doc_id"),
+    val eventTime = StatefulOps.watermarkColumns(docs).toSeq.sorted
+      .filter(docs.columns.contains).map(col)
+    docs.select(col(idCol).as("doc_id") +:
       graft.functions.functions.minhash(
-        array_distinct(split(col(textCol), " ")), k).as("sig"))
-      .select(col("doc_id"),
+        array_distinct(split(col(textCol), " ")), k).as("sig") +: eventTime: _*)
+      .select(col("doc_id") +:
         explode(expr(s"transform(sequence(0, ${bands - 1}), " +
-          s"b -> struct(b AS band, hash(slice(sig, b * $rows + 1, $rows)) AS bucket))")).as("bb"))
-      .select(col("doc_id"), col("bb.band"), col("bb.bucket"))
+          s"b -> struct(b AS band, hash(slice(sig, b * $rows + 1, $rows)) AS bucket))")).as("bb")
+        +: eventTime: _*)
+      .select(Seq(col("doc_id"), col("bb.band"), col("bb.bucket")) ++ eventTime: _*)
   }
 
   /** Per-(band, bucket) keep-first: every band row comes back with the
@@ -82,16 +88,14 @@ object NearDupStreaming {
     val outSchema = StructType(schema.fields :+ idField.copy(name = "owner"))
     implicit val outEnc: ExpressionEncoder[Row] =
       ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    implicit val keyEnc = Encoders.STRING
     val stateEnc: ExpressionEncoder[Row] =
       ExpressionEncoder(RowEncoder.encoderFor(
         StructType(Seq(idField.copy(name = "owner", nullable = true)))))
-    val keyIdx = Seq(schema.fieldIndex("band"), schema.fieldIndex("bucket"))
     val ttl = StatefulOps.stateTtl(banded, ttlSec)
-    banded.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
+    StatefulOps.keyed(banded, Seq("band", "bucket"))
       .flatMapGroupsWithState[Row, Row](
         OutputMode.Append, ttl.timeout)(StatefulOps.withTtl(ttl) {
-        (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
+        (_: Row, rows: Iterator[Row], state: GroupState[Row]) =>
           var hasOwner = state.exists
           var owner: Any = if (hasOwner) state.get.get(0) else null
           val out = rows.map { r =>

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType, StructField, StructType}
@@ -36,18 +36,10 @@ object RetractTopN {
       StructType(Seq(StructField("id", StringType), StructField("row", schema)))))))
     val stateEnc: ExpressionEncoder[Row] =
       ExpressionEncoder(RowEncoder.encoderFor(stateSchema))
-    implicit val keyEnc = Encoders.STRING
-
-    val keyIdx = keys.map(schema.fieldIndex)
     val kindIdx = schema.fieldIndex(KindCol)
     val idIdx = schema.fieldIndex(idCol)
-    val scoreIdx = schema.fieldIndex(scoreCol)
+    val score = StatefulOps.numberAt(schema, scoreCol)
     val sign = if (descending) -1.0 else 1.0
-    def score(r: Row): Double = r.get(scoreIdx) match {
-      case d: Double => d; case f: Float => f.toDouble
-      case l: Long => l.toDouble; case i: Int => i.toDouble
-      case b: java.math.BigDecimal => b.doubleValue(); case _ => 0.0
-    }
     def topOf(m: Map[String, Row]): Seq[(String, Row)] =
       m.toSeq.sortBy { case (id, r) => (sign * score(r), id) }.take(n)
     def out(r: Row, kind: String, rank: Int): Row = {
@@ -57,10 +49,10 @@ object RetractTopN {
     }
 
     val ttl = StatefulOps.stateTtl(df, ttlSec)
-    df.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
+    StatefulOps.keyed(df, keys)
       .flatMapGroupsWithState[Row, Row](
         OutputMode.Append, ttl.timeout)(StatefulOps.withTtl(ttl) {
-        (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
+        (_: Row, rows: Iterator[Row], state: GroupState[Row]) =>
           var m: Map[String, Row] =
             if (state.exists)
               state.get.getSeq[Row](0).map(e => e.getString(0) -> e.getStruct(1)).toMap

@@ -1,12 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, KeyValueGroupedDataset, Row}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, StructField,
-  StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, DataType, DateType,
+  DoubleType, FloatType, IntegerType, LongType, NumericType, StringType, StructField, StructType,
+  TimestampNTZType, TimestampType}
 
 /** Stateful operators re-expressing the reference's keyed-state runtime
   * (SURVEY.md §2.5 deduplicate, §2.5 rank/TopN, §2.3 temporal join) on
@@ -21,14 +22,81 @@ import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, St
   * lives with the key's shuffle partition, so the op scales to any
   * number of executors.
   */
-// Serializable: closures that call helpers like tsMicros/encodeKey from
-// inside a local def capture the module instance (the lambda body
-// compiles as an instance method), so tasks serialize it; the object is
-// stateless and Scala modules deserialize back to MODULE$.
+// Serializable: closures that call helpers like tsMicros from inside a
+// local def capture the module instance (the lambda body compiles as an
+// instance method), so tasks serialize it; the object is stateless and
+// Scala modules deserialize back to MODULE$.
 object StatefulOps extends Serializable {
 
   private[streaming] def rowEnc(schema: StructType): ExpressionEncoder[Row] =
     ExpressionEncoder(RowEncoder.encoderFor(schema))
+
+  /** Group `df` for a keyed state op by the key columns themselves,
+    * as the reference keys state by the serialized key row
+    * (BinaryRowData): equal key content is one key whatever the type
+    * (BINARY, struct, array, NULL anywhere), and distinct keys never
+    * collide. Handlers get the key as a Row of `keyCols`, in order; a
+    * computed key (a window start, a cast) is just another column.
+    */
+  private[streaming] def keyedOn(df: Dataset[Row], keyCols: Seq[Column])
+      : KeyValueGroupedDataset[Row, Row] = {
+    val cols = keyCols.zip(df.select(keyCols: _*).schema.fields).map {
+      case (c, f) if floating(f.dataType) => normalizedKey(c, f.dataType).as(f.name)
+      case (c, _) => c
+    }
+    df.groupBy(cols: _*).as[Row, Row](rowEnc(df.select(cols: _*).schema), rowEnc(df.schema))
+  }
+
+  private def floating(t: DataType): Boolean = t match {
+    case DoubleType | FloatType => true
+    case s: StructType => s.fields.exists(f => floating(f.dataType))
+    case a: ArrayType => floating(a.elementType)
+    case _ => false
+  }
+
+  /** `c` with -0.0 folded into 0.0 and every NaN into one NaN, inside
+    * structs and arrays too, as Spark does to batch grouping keys
+    * (NormalizeFloatingNumbers): the state store compares key bytes,
+    * and those of -0.0 and 0.0 differ.
+    */
+  private def normalizedKey(c: Column, t: DataType): Column = t match {
+    case DoubleType | FloatType =>
+      val zero = lit(0).cast(t)
+      when(isnan(c), lit(Double.NaN).cast(t)).when(c === zero, zero).otherwise(c)
+    case s: StructType if floating(s) =>
+      when(c.isNull, lit(null).cast(s)).otherwise(struct(s.fields.toSeq.map(f =>
+        normalizedKey(c.getField(f.name), f.dataType).as(f.name)): _*))
+    case a: ArrayType if floating(a) => transform(c, normalizedKey(_, a.elementType))
+    case _ => c
+  }
+
+  /** The type each pair of key columns of two inputs is grouped in:
+    * the pair's common wider type, so an INT 5 and a BIGINT 5 are one
+    * key. A pair with none — or only by turning a non-string into a
+    * STRING — is rejected when the op is built.
+    */
+  private[streaming] def commonKeyTypes(left: Seq[StructField],
+                                        right: Seq[StructField]): Seq[DataType] = {
+    require(left.length == right.length,
+      s"key column counts differ: ${left.map(_.name)} vs ${right.map(_.name)}")
+    left.zip(right).map { case (l, r) =>
+      val t = org.apache.spark.sql.catalyst.analysis.TypeCoercion
+        .findWiderTypeForTwo(l.dataType, r.dataType)
+        .filter(t => t != StringType || (l.dataType == StringType && r.dataType == StringType))
+      require(t.isDefined, s"key columns '${l.name}' (${l.dataType.sql}) and " +
+        s"'${r.name}' (${r.dataType.sql}) have no common type")
+      t.get
+    }
+  }
+
+  /** [[keyedOn]] the named top-level columns. */
+  private[streaming] def keyed(df: Dataset[Row], keys: Seq[String])
+      : KeyValueGroupedDataset[Row, Row] =
+    keyedOn(df, keys.map(topCol(df, _)))
+
+  /** The top-level column `name` of `df`, dots and all. */
+  private[streaming] def topCol(df: Dataset[_], name: String): Column =
+    df.col(s"`${name.replace("`", "``")}`")
 
   // ---- State TTL ------------------------------------------------------
 
@@ -59,10 +127,7 @@ object StatefulOps extends Serializable {
     * pipelines valid.
     */
   private[streaming] def hasWatermark(df: Dataset[_]): Boolean =
-    df.queryExecution.logical.exists {
-      case _: org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark => true
-      case _ => false
-    }
+    watermarkColumns(df).nonEmpty
 
   /** A keyed op's TTL settings, fixed when the op is built: the timeout
     * mode, the TTL, and how to read event time (millis) off the rows
@@ -70,16 +135,45 @@ object StatefulOps extends Serializable {
     * nodes name, found at the top level or one struct level down
     * (ChangelogJoin groups side-tagged rows that carry each input as a
     * struct; the other side's struct is null). `eventMs` is None when
-    * the grouped rows no longer carry such a column (NearDupStreaming's
-    * banded rows); timers then arm from the watermark alone.
+    * the grouped rows carry no such column; timers then arm from the
+    * watermark alone.
     */
   private[streaming] final case class StateTtl(
-      timeout: GroupStateTimeout, ttlSec: Long, eventMs: Option[Row => Long])
+      timeout: GroupStateTimeout, ttlSec: Long, eventMs: Option[Row => Long]) {
 
-  private[streaming] def stateTtl(df: Dataset[_], ttlSec: Long): StateTtl = {
-    val names = df.queryExecution.logical.collect {
+    /** The purge deadline a data invocation arms: max(watermark, the
+      * key's latest event time in the invocation) + ttl; 0 when TTL is
+      * off or neither is known yet (the first micro-batch: arming then
+      * would purge at the first real watermark). Choose ttlSec well
+      * above the watermark delay: a key's still-buffered rows older than
+      * the horizon are dropped with it, like Flink state TTL expiring an
+      * unfired window.
+      */
+    def deadline(wmMs: Long, latestMs: Long): Long = {
+      val base = math.max(wmMs, latestMs)
+      if (ttlSec > 0 && base > 0L) base + ttlSec * 1000L else 0L
+    }
+
+    /** For ops that keep the deadline in state beside release timers:
+      * [[deadline]] after a data invocation of `rows`, else `prev`. */
+    def refreshed(prev: Long, wmMs: Long, rows: Iterable[Row]): Long = {
+      val latest = eventMs.fold(Long.MinValue)(ms =>
+        rows.foldLeft(Long.MinValue)((m, r) => math.max(m, ms(r))))
+      deadline(wmMs, latest) match {
+        case 0L => prev
+        case d => d
+      }
+    }
+  }
+
+  /** Names of the event-time columns the watermarks upstream of `df` are defined on. */
+  private[streaming] def watermarkColumns(df: Dataset[_]): Set[String] =
+    df.queryExecution.logical.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark => w.eventTime.name
     }.toSet
+
+  private[streaming] def stateTtl(df: Dataset[_], ttlSec: Long): StateTtl = {
+    val names = watermarkColumns(df)
     if (ttlSec <= 0 || names.isEmpty)
       return StateTtl(GroupStateTimeout.NoTimeout, ttlSec, None)
     def isTime(f: StructField): Boolean = names(f.name) &&
@@ -105,12 +199,11 @@ object StatefulOps extends Serializable {
 
   /** Wrap a flatMapGroupsWithState body with TTL bookkeeping. On every
     * data invocation the key's purge timer is re-armed to
-    * max(watermark, latest event time the key received in this
-    * invocation) + ttl (Flink's OnReadAndWrite update type, in event
-    * time). Arming from the watermark alone would expire a key that is
-    * still receiving events whenever one micro-batch spans more event
-    * time than the TTL (a backlog after a restart or an outage), and
-    * keep-first dedup would then emit a second "first" row for it.
+    * [[StateTtl.deadline]] (Flink's OnReadAndWrite update type, in
+    * event time). Arming from the watermark alone would expire a key
+    * that is still receiving events whenever one micro-batch spans more
+    * event time than the TTL (a backlog after a restart or an outage),
+    * and keep-first dedup would then emit a second "first" row for it.
     * When the timer fires, the body runs once more with an EMPTY input —
     * so watermark-buffered ops (temporal sort, event-time OVER aggs, CEP)
     * release everything the watermark already permits, exactly like
@@ -119,11 +212,11 @@ object StatefulOps extends Serializable {
     * and finish their state writes before returning, which is what
     * makes the remove-after-body ordering here final.
     */
-  private[streaming] def withTtl[S, O](ttl: StateTtl)(
-      f: (String, Iterator[Row], GroupState[S]) => Iterator[O])
-      : (String, Iterator[Row], GroupState[S]) => Iterator[O] =
+  private[streaming] def withTtl[K, S, O](ttl: StateTtl)(
+      f: (K, Iterator[Row], GroupState[S]) => Iterator[O])
+      : (K, Iterator[Row], GroupState[S]) => Iterator[O] =
     if (ttl.timeout == GroupStateTimeout.NoTimeout) f
-    else (k: String, rows: Iterator[Row], state: GroupState[S]) =>
+    else (k: K, rows: Iterator[Row], state: GroupState[S]) =>
       if (state.hasTimedOut) {
         val out = f(k, Iterator.empty, state)
         state.remove()
@@ -135,17 +228,8 @@ object StatefulOps extends Serializable {
           case None => rows
         }
         val out = f(k, seen, state)
-        val base = math.max(state.getCurrentWatermarkMs(), latest)
-        // base == 0 ⇒ no watermark committed yet (the query's first
-        // micro-batch) and no event time read: arming now would read
-        // as "expire at the first real watermark" — a premature purge.
-        // Skip; the key's next data invocation arms the timer. Choose
-        // ttlSec comfortably above the watermark delay: a key's
-        // still-buffered rows older than the TTL horizon are dropped
-        // with the key, exactly like Flink state TTL expiring an
-        // unfired window.
-        if (state.exists && base > 0L)
-          state.setTimeoutTimestamp(base + ttl.ttlSec * 1000L)
+        val deadline = ttl.deadline(state.getCurrentWatermarkMs(), latest)
+        if (state.exists && deadline > 0L) state.setTimeoutTimestamp(deadline)
         out
       }
 
@@ -249,6 +333,59 @@ object StatefulOps extends Serializable {
     case o => throw new IllegalArgumentException(s"not an event time: $o")
   }
 
+  /** [[timeMillis]] of the event-time column `name` as a column, for
+    * keys computed from event time (NTZ via [[timeMillis]] itself:
+    * Spark's NTZ arithmetic runs in the session time zone). */
+  private[streaming] def millisColumn(df: Dataset[_], name: String): Column = {
+    val c = topCol(df, name)
+    df.schema(eventTimeIndex(df.schema, name)).dataType match {
+      case TimestampType => unix_millis(c)
+      case TimestampNTZType =>
+        udf((t: java.time.LocalDateTime) => timeMillis(t)).apply(c)
+      case DateType => unix_date(c).cast(LongType) * 86400000L
+      case _ => c.cast(LongType)
+    }
+  }
+
+  /** Reader of the value column `name` as a Double (NULL as 0.0),
+    * rejecting at plan time a column that is not NUMERIC — such a
+    * column would otherwise be read as 0.0 on every row. */
+  private[streaming] def numberAt(schema: StructType, name: String): Row => Double = {
+    val i = schema.fieldIndex(name)
+    require(schema(i).dataType.isInstanceOf[NumericType],
+      s"value column '$name' is ${schema(i).dataType.sql}; expected a numeric type")
+    r => r.get(i) match {
+      case null => 0.0
+      case n: java.lang.Number => n.doubleValue
+    }
+  }
+
+  /** Ascending order over the typed tie-break columns `cols`, NULLs
+    * first — what `ORDER BY cols` does in batch (Windows' dedup, the
+    * batch ops here), so an INT 9 sorts before 10. Rejects at plan time
+    * a column without a total value order (struct, array, map).
+    */
+  private[streaming] def tieOrdering(schema: StructType, cols: Seq[String]): Ordering[Row] = {
+    val idx = cols.map { c =>
+      val t = schema(c).dataType
+      require(t.isInstanceOf[NumericType] || Seq(StringType, BooleanType, BinaryType, DateType,
+        TimestampType, TimestampNTZType).contains(t), s"tie-break column '$c' is ${t.sql}")
+      schema.fieldIndex(c)
+    }
+    (a: Row, b: Row) =>
+      idx.iterator.map(i => compareValues(a.get(i), b.get(i))).find(_ != 0).getOrElse(0)
+  }
+
+  /** Compare two values of one tie-orderable column, NULLs first;
+    * BINARY compares as unsigned bytes, like Spark's own ordering. */
+  private[streaming] def compareValues(a: Any, b: Any): Int = (a, b) match {
+    case (null, null) => 0
+    case (null, _) => -1
+    case (_, null) => 1
+    case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.compareUnsigned(x, y)
+    case (x: Comparable[Any] @unchecked, y) => x.compareTo(y)
+  }
+
   private def instantMicros(t: java.time.Instant): Long =
     t.getEpochSecond * 1000000L + t.getNano / 1000
 
@@ -263,25 +400,6 @@ object StatefulOps extends Serializable {
     case i: Int => i.toLong
     case o => throw new IllegalArgumentException(s"not an event time: $o")
   }
-
-  /** Collision-free composite grouping key: length-prefixed segments,
-    * so ("ab","c") and ("a","bc") stay distinct for ANY content
-    * (including separators inside values). The reference keys state by
-    * binary rows (BinaryRowData), which are unambiguous by
-    * construction; a flat string concat is not.
-    */
-  private[streaming] def encodeKey(r: Row, idx: Seq[Int]): String =
-    idx.iterator.map { i =>
-      val v = r.get(i)
-      // Null gets its own marker segment: String.valueOf(null) is the
-      // 4-char string "null", which would collide with a genuine "null"
-      // value. "n" can't collide with "<digits>:..." segments.
-      if (v == null) "n"
-      else {
-        val s = String.valueOf(v)
-        s"${s.length}:$s"
-      }
-    }.mkString("|")
 
   // ---- Deduplicate ----------------------------------------------------
 
@@ -323,15 +441,13 @@ object StatefulOps extends Serializable {
     val schema = df.schema
     implicit val enc: ExpressionEncoder[Row] = rowEnc(schema)
     val stateEnc: ExpressionEncoder[Row] = rowEnc(schema)
-    implicit val keyEnc = Encoders.STRING
-    val keyIdx = keys.map(schema.fieldIndex)
     val ordIdx = eventTimeIndex(schema, orderCol)
     def ord(r: Row): Long = timeMillis(r.get(ordIdx))
     val ttl = stateTtl(df, ttlSec)
-    df.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
+    keyed(df, keys)
       .flatMapGroupsWithState[Row, Row](
         OutputMode.Update, ttl.timeout)(withTtl(ttl) {
-        (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
+        (_: Row, rows: Iterator[Row], state: GroupState[Row]) =>
           val incoming = rows.toSeq
           val best0 = if (state.exists) Some(state.get) else None
           if (best0.isEmpty && incoming.isEmpty) Iterator.empty
@@ -356,15 +472,13 @@ object StatefulOps extends Serializable {
     // readable by the next (Flink's serializer-compatibility contract);
     // javaSerialization is slow and version-brittle.
     val stateEnc: ExpressionEncoder[Row] = rowEnc(schema)
-    implicit val keyEnc = Encoders.STRING
-    val keyIdx = keys.map(schema.fieldIndex)
     val ordIdx = eventTimeIndex(schema, orderCol)
     def ord(r: Row): Long = timeMillis(r.get(ordIdx))
     val ttl = stateTtl(df, ttlSec)
-    df.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
+    keyed(df, keys)
       .flatMapGroupsWithState[Row, Row](
         OutputMode.Update, ttl.timeout)(withTtl(ttl) {
-        (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
+        (_: Row, rows: Iterator[Row], state: GroupState[Row]) =>
           val incoming = rows.toSeq
           val best0 = if (state.exists) Some(state.get) else None
           if (best0.isEmpty && incoming.isEmpty) Iterator.empty
@@ -410,23 +524,13 @@ object StatefulOps extends Serializable {
     val stateSchema = StructType(Seq(StructField("rows",
       org.apache.spark.sql.types.ArrayType(schema))))
     val stateEnc: ExpressionEncoder[Row] = rowEnc(stateSchema)
-    implicit val keyEnc = Encoders.STRING
-    val keyIdx = keys.map(schema.fieldIndex)
-    val scoreIdx = schema.fieldIndex(scoreCol)
-    def score(r: Row): Double = r.get(scoreIdx) match {
-      case d: Double => d
-      case f: Float => f.toDouble
-      case l: Long => l.toDouble
-      case i: Int => i.toDouble
-      case b: java.math.BigDecimal => b.doubleValue()
-      case _ => 0.0
-    }
+    val score = numberAt(schema, scoreCol)
     val sign = if (descending) -1.0 else 1.0
     val ttl = stateTtl(df, ttlSec)
-    df.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
+    keyed(df, keys)
       .flatMapGroupsWithState[Row, Row](
         OutputMode.Update, ttl.timeout)(withTtl(ttl) {
-        (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
+        (_: Row, rows: Iterator[Row], state: GroupState[Row]) =>
           val cur: Array[Row] =
             if (state.exists) state.get.getSeq[Row](0).toArray else Array.empty[Row]
           val merged = (cur ++ rows).sortBy(r => sign * score(r)).take(n)
@@ -460,34 +564,24 @@ object StatefulOps extends Serializable {
     implicit val outEnc: ExpressionEncoder[Row] = rowEnc(outSchema)
     val stateEnc: ExpressionEncoder[Row] = rowEnc(StructType(Seq(
       StructField("rows", org.apache.spark.sql.types.ArrayType(schema)))))
-    implicit val keyEnc = Encoders.STRING
-    val keyIdx = keys.map(schema.fieldIndex)
     val tsIdx = eventTimeIndex(schema, tsCol)
-    val scoreIdx = schema.fieldIndex(scoreCol)
     // Long = epoch MILLIS, the package-wide convention (keepLast,
     // watermark alignment, the over-agg ops) — this op briefly read
     // Long as seconds (*1000), putting windows and timers 1000x off
     def millis(r: Row): Long = timeMillis(r.get(tsIdx))
-    def windowStartMs(r: Row): Long = {
-      val w = windowSec * 1000L
-      val t = millis(r)
-      t - java.lang.Math.floorMod(t, w)
-    }
-    def score(r: Row): Double = r.get(scoreIdx) match {
-      case d: Double => d; case f: Float => f.toDouble
-      case l: Long => l.toDouble; case i: Int => i.toDouble
-      case b: java.math.BigDecimal => b.doubleValue()
-      case t: java.sql.Timestamp => t.getTime.toDouble // dedup orders by time
-      case t: java.time.Instant => t.toEpochMilli.toDouble
-      case _ => 0.0
-    }
+    val wMs = windowSec * 1000L
+    val ms = millisColumn(df, tsCol)
+    val windowStart = (ms - pmod(ms, lit(wMs))).as("__wstart")
+    // window dedup ranks by the event time itself
+    val score: Row => Double =
+      if (scoreCol == tsCol) r => millis(r).toDouble else numberAt(schema, scoreCol)
     val sign = if (descending) -1.0 else 1.0
 
-    df.groupByKey(r => s"${windowStartMs(r)}|${encodeKey(r, keyIdx)}")
+    keyedOn(df, windowStart +: keys.map(topCol(df, _)))
       .flatMapGroupsWithState[Row, Row](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[Row], state: GroupState[Row]) =>
-          val winStart = key.takeWhile(_ != '|').toLong
+        (key: Row, rows: Iterator[Row], state: GroupState[Row]) =>
+          val winStart = key.getLong(0)
           if (state.hasTimedOut) {
             // window closed: final ranking, exactly once, state purged
             val top = state.get.getSeq[Row](0)
@@ -502,7 +596,7 @@ object StatefulOps extends Serializable {
               .sortBy(r => (sign * score(r), millis(r))).take(n)
             state.update(Row(merged))
             // fire when the watermark passes the window end
-            state.setTimeoutTimestamp(winStart + windowSec * 1000L)
+            state.setTimeoutTimestamp(winStart + wMs)
             Iterator.empty
           }
       }(stateEnc, outEnc)
@@ -541,13 +635,11 @@ object StatefulOps extends Serializable {
       StructField("buf", org.apache.spark.sql.types.ArrayType(schema)),
       StructField("done", org.apache.spark.sql.types.LongType)))
     val stateEnc: ExpressionEncoder[Row] = rowEnc(stateSchema)
-    implicit val keyEnc = Encoders.STRING
-    val keyIdx = keys.map(schema.fieldIndex)
     val ttl = stateTtl(df, ttlSec)
-    df.groupByKey(r => encodeKey(r, keyIdx))
+    keyed(df, keys)
       .flatMapGroupsWithState[Row, Row](
         OutputMode.Append, ttl.timeout)(withTtl(ttl) {
-        (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
+        (_: Row, rows: Iterator[Row], state: GroupState[Row]) =>
           var (buf, done) =
             if (state.exists) (state.get.getSeq[Row](0).toVector, state.get.getLong(1))
             else (Vector.empty[Row], 0L)
@@ -586,10 +678,8 @@ object StatefulOps extends Serializable {
       StructField("buf", org.apache.spark.sql.types.ArrayType(schema)))))
     implicit val keyEnc = Encoders.STRING
     val tsIdx = eventTimeIndex(schema, tsCol)
-    val tieIdx = tieBreak.map(schema.fieldIndex)
     def micros(r: Row): Long = tsMicros(r, tsIdx)
-    def sortKey(r: Row): (Long, String) =
-      (micros(r), tieIdx.map(i => String.valueOf(r.get(i))).mkString("|"))
+    val order = Ordering.by(micros).orElse(tieOrdering(schema, tieBreak))
     val ttl = stateTtl(df, ttlSec)
     df.groupByKey(_ => "")(keyEnc)
       .flatMapGroupsWithState[Row, Row](
@@ -599,7 +689,7 @@ object StatefulOps extends Serializable {
           val wmMicros = state.getCurrentWatermarkMs() * 1000L
           val (ready, pending) = buf.partition(micros(_) <= wmMicros)
           state.update(Row(pending))
-          ready.sortBy(sortKey).iterator
+          ready.sorted(order).iterator
       })(stateEnc, enc)
   }
 
@@ -622,21 +712,14 @@ object StatefulOps extends Serializable {
       StructField("running_count", org.apache.spark.sql.types.LongType)))
     implicit val outEnc: ExpressionEncoder[Row] = rowEnc(outSchema)
     implicit val stateEnc = Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong)
-    implicit val keyEnc = Encoders.STRING
-    val keyIdx = keys.map(schema.fieldIndex)
     val ordIdx = eventTimeIndex(schema, orderCol)
-    val valIdx = schema.fieldIndex(valueCol)
     def ord(r: Row): Long = timeMillis(r.get(ordIdx))
-    def num(r: Row): Double = r.get(valIdx) match {
-      case d: Double => d; case f: Float => f.toDouble
-      case l: Long => l.toDouble; case i: Int => i.toDouble
-      case b: java.math.BigDecimal => b.doubleValue(); case _ => 0.0
-    }
+    val num = numberAt(schema, valueCol)
     val ttl = stateTtl(df, ttlSec)
-    df.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
+    keyed(df, keys)
       .flatMapGroupsWithState[(Double, Long), Row](
         OutputMode.Append, ttl.timeout)(withTtl(ttl) {
-        (_: String, rows: Iterator[Row], state: GroupState[(Double, Long)]) =>
+        (_: Row, rows: Iterator[Row], state: GroupState[(Double, Long)]) =>
           var (sum, count) = if (state.exists) state.get else (0.0, 0L)
           val out = rows.toSeq.sortBy(ord).map { r =>
             sum += num(r); count += 1
@@ -678,43 +761,37 @@ object StatefulOps extends Serializable {
       StructField("sum", org.apache.spark.sql.types.DoubleType),
       StructField("count", org.apache.spark.sql.types.LongType),
       StructField("ttl_deadline", org.apache.spark.sql.types.LongType))))
-    implicit val keyEnc = Encoders.STRING
-    val keyIdx = keys.map(schema.fieldIndex)
     val tsIdx = eventTimeIndex(schema, tsCol)
-    val valIdx = schema.fieldIndex(valueCol)
-    val tieIdx = tieBreak.map(schema.fieldIndex)
     def micros(r: Row): Long = tsMicros(r, tsIdx)
-    def sortKey(r: Row): (Long, String) =
-      (micros(r), tieIdx.map(i => String.valueOf(r.get(i))).mkString("|"))
-    def num(r: Row): Double = r.get(valIdx) match {
-      case d: Double => d; case f: Float => f.toDouble
-      case l: Long => l.toDouble; case i: Int => i.toDouble
-      case b: java.math.BigDecimal => b.doubleValue(); case _ => 0.0
-    }
+    val order = Ordering.by(micros).orElse(tieOrdering(schema, tieBreak))
+    val num = numberAt(schema, valueCol)
     // r20: timely release — an event-time timer at the earliest pending
     // row's timestamp fires when the WATERMARK passes it, so a key that
     // goes quiet while other keys advance the watermark releases then,
     // not at TTL (the reference's row-time OVER functions register
     // exactly this per-timestamp timer). TTL purge keeps its semantics:
-    // the horizon (wm + ttl, refreshed on data only) rides in state.
+    // the horizon ([[StateTtl.deadline]], refreshed on data only) rides
+    // in state.
     val timeout =
       if (hasWatermark(df)) GroupStateTimeout.EventTimeTimeout
       else GroupStateTimeout.NoTimeout
-    df.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
+    val ttl = stateTtl(df, ttlSec)
+    keyed(df, keys)
       .flatMapGroupsWithState[Row, Row](
         OutputMode.Append, timeout) {
-        (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
+        (_: Row, rows: Iterator[Row], state: GroupState[Row]) =>
           val hadTimeout = state.hasTimedOut
           var (buf, sum, count, prevTtl) =
             if (state.exists)
               (state.get.getSeq[Row](0), state.get.getDouble(1),
                 state.get.getLong(2), state.get.getLong(3))
             else (Seq.empty[Row], 0.0, 0L, 0L)
-          if (!hadTimeout) buf = buf ++ rows
+          val incoming = if (hadTimeout) Seq.empty[Row] else rows.toSeq
+          buf = buf ++ incoming
           val wmMs = state.getCurrentWatermarkMs()
           val wmMicros = wmMs * 1000L
           val (ready, pending) = buf.partition(micros(_) <= wmMicros)
-          val out = ready.sortBy(sortKey).map { r =>
+          val out = ready.sorted(order).map { r =>
             sum += num(r); count += 1
             Row.fromSeq(r.toSeq ++ Seq[Any](sum, count))
           }
@@ -722,8 +799,7 @@ object StatefulOps extends Serializable {
             state.remove() // idle past TTL: releasable rows just emitted
           } else {
             val ttlDeadline =
-              if (!hadTimeout && ttlSec > 0 && wmMs > 0L) wmMs + ttlSec * 1000L
-              else prevTtl
+              if (hadTimeout) prevTtl else ttl.refreshed(prevTtl, wmMs, incoming)
             state.update(Row(pending, sum, count, ttlDeadline))
             if (timeout == GroupStateTimeout.EventTimeTimeout) {
               val nextRelease =
@@ -766,35 +842,28 @@ object StatefulOps extends Serializable {
       StructField("pending", org.apache.spark.sql.types.ArrayType(schema)),
       StructField("tail", org.apache.spark.sql.types.ArrayType(schema)),
       StructField("ttl_deadline", org.apache.spark.sql.types.LongType))))
-    implicit val keyEnc = Encoders.STRING
-    val keyIdx = keys.map(schema.fieldIndex)
     val tsIdx = eventTimeIndex(schema, tsCol)
-    val valIdx = schema.fieldIndex(valueCol)
-    val tieIdx = tieBreak.map(schema.fieldIndex)
     val rangeMicros = rangeSec * 1000000L
     def micros(r: Row): Long = tsMicros(r, tsIdx)
-    def sortKey(r: Row): (Long, String) =
-      (micros(r), tieIdx.map(i => String.valueOf(r.get(i))).mkString("|"))
-    def num(r: Row): Double = r.get(valIdx) match {
-      case d: Double => d; case f: Float => f.toDouble
-      case l: Long => l.toDouble; case i: Int => i.toDouble
-      case b: java.math.BigDecimal => b.doubleValue(); case _ => 0.0
-    }
+    val order = Ordering.by(micros).orElse(tieOrdering(schema, tieBreak))
+    val num = numberAt(schema, valueCol)
     // r20: timely release via an event-time timer at the earliest
     // pending row's timestamp (see runningAggEventTimeStreaming)
     val timeout =
       if (hasWatermark(df)) GroupStateTimeout.EventTimeTimeout
       else GroupStateTimeout.NoTimeout
-    df.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
+    val ttl = stateTtl(df, ttlSec)
+    keyed(df, keys)
       .flatMapGroupsWithState[Row, Row](
         OutputMode.Append, timeout) {
-        (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
+        (_: Row, rows: Iterator[Row], state: GroupState[Row]) =>
           val hadTimeout = state.hasTimedOut
           var (pending, tail, prevTtl) =
             if (state.exists)
               (state.get.getSeq[Row](0), state.get.getSeq[Row](1), state.get.getLong(2))
             else (Seq.empty[Row], Seq.empty[Row], 0L)
-          if (!hadTimeout) pending = pending ++ rows
+          val incoming = if (hadTimeout) Seq.empty[Row] else rows.toSeq
+          pending = pending ++ incoming
           val wmMs = state.getCurrentWatermarkMs()
           val wmMicros = wmMs * 1000L
           val (ready, stillPending) = pending.partition(micros(_) <= wmMicros)
@@ -807,7 +876,7 @@ object StatefulOps extends Serializable {
           val window = scala.collection.mutable.ArrayDeque.from(tail)
           var wSum = window.iterator.map(num).sum
           var wCount = window.size.toLong
-          val out = ready.sortBy(sortKey).map { r =>
+          val out = ready.sorted(order).map { r =>
             val ts = micros(r)
             window.append(r); wSum += num(r); wCount += 1
             while (window.nonEmpty && micros(window.head) < ts - rangeMicros) {
@@ -821,8 +890,7 @@ object StatefulOps extends Serializable {
             // rows older than watermark − range can't serve any future row
             val keepTail = window.dropWhile(w => micros(w) < wmMicros - rangeMicros).toSeq
             val ttlDeadline =
-              if (!hadTimeout && ttlSec > 0 && wmMs > 0L) wmMs + ttlSec * 1000L
-              else prevTtl
+              if (hadTimeout) prevTtl else ttl.refreshed(prevTtl, wmMs, incoming)
             state.update(Row(stillPending, keepTail, ttlDeadline))
             if (timeout == GroupStateTimeout.EventTimeTimeout) {
               val nextRelease =
@@ -912,8 +980,7 @@ object StatefulOps extends Serializable {
     val channel = Windows.procTimeChannel(df, heartbeatRowsPerSecond)
     val schema = channel.schema
     val tsIdx = schema.fieldIndex("__proctime")
-    val keyIdx = keys.map(schema.fieldIndex)
-    val valIdx = schema.fieldIndex(valueCol)
+    val num = numberAt(schema, valueCol)
     val outSchema = StructType(
       df.schema.fields ++ Seq(
         StructField("proctime", org.apache.spark.sql.types.TimestampType),
@@ -923,17 +990,11 @@ object StatefulOps extends Serializable {
     val stateEnc: ExpressionEncoder[Row] = rowEnc(StructType(Seq(
       StructField("pending", org.apache.spark.sql.types.ArrayType(schema)),
       StructField("tail", org.apache.spark.sql.types.ArrayType(schema)))))
-    implicit val keyEnc = Encoders.STRING
     def ms(r: Row): Long = r.getTimestamp(tsIdx).getTime
-    def num(r: Row): Double = r.get(valIdx) match {
-      case d: Double => d; case f: Float => f.toDouble
-      case l: Long => l.toDouble; case i: Int => i.toDouble
-      case b: java.math.BigDecimal => b.doubleValue(); case _ => 0.0
-    }
-    channel.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
+    keyed(channel, keys)
       .flatMapGroupsWithState[Row, Row](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
+        (_: Row, rows: Iterator[Row], state: GroupState[Row]) =>
           var (pending, tail) =
             if (state.exists) (state.get.getSeq[Row](0), state.get.getSeq[Row](1))
             else (Seq.empty[Row], Seq.empty[Row])
@@ -985,16 +1046,14 @@ object StatefulOps extends Serializable {
     val outSchema = StructType(schema.fields :+
       StructField("is_late", org.apache.spark.sql.types.BooleanType, nullable = false))
     implicit val outEnc: ExpressionEncoder[Row] = rowEnc(outSchema)
-    implicit val keyEnc = Encoders.STRING
-    val keyIdx = keys.map(schema.fieldIndex)
     val tsIdx = eventTimeIndex(schema, tsCol)
     def micros(r: Row): Long = tsMicros(r, tsIdx)
-    df.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
+    keyed(df, keys)
       .flatMapGroupsWithState[Long, Row](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         // Long state type only to satisfy the API — never updated, so
         // the state store stays empty
-        (_: String, rows: Iterator[Row], state: GroupState[Long]) =>
+        (_: Row, rows: Iterator[Row], state: GroupState[Long]) =>
           // watermark is 0 before the first trigger completes — nothing
           // can be late until a watermark exists
           val wmMicros = state.getCurrentWatermarkMs() * 1000L
@@ -1017,12 +1076,10 @@ object StatefulOps extends Serializable {
     val outSchema = StructType(schema.fields :+
       StructField("current_watermark", org.apache.spark.sql.types.TimestampType))
     implicit val outEnc: ExpressionEncoder[Row] = rowEnc(outSchema)
-    implicit val keyEnc = Encoders.STRING
-    val keyIdx = keys.map(schema.fieldIndex)
-    df.groupByKey(r => StatefulOps.encodeKey(r, keyIdx))
+    keyed(df, keys)
       .flatMapGroupsWithState[Long, Row](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Row], state: GroupState[Long]) =>
+        (_: Row, rows: Iterator[Row], state: GroupState[Long]) =>
           val wmMs = state.getCurrentWatermarkMs()
           val wm: Any = if (wmMs > 0L) new java.sql.Timestamp(wmMs) else null
           rows.map(r => Row.fromSeq(r.toSeq :+ wm)).toSeq.iterator
@@ -1054,67 +1111,50 @@ object StatefulOps extends Serializable {
     val pre = df.withColumn("__wstart",
       (floor(unix_millis(col(tsCol)) / wMs) * wMs).cast("long"))
     val schema = pre.schema
-    val groupIdx = (keys :+ "__wstart").map(schema.fieldIndex)
-    val keyFieldIdx = keys.map(schema.fieldIndex)
-    val wIdx = schema.fieldIndex("__wstart")
-    val valIdx = schema.fieldIndex(valueCol)
+    val num = numberAt(schema, valueCol)
     val outSchema = StructType(keys.map(k => schema(k)) ++ Seq(
       StructField("window_start", org.apache.spark.sql.types.LongType),
       StructField("cnt", org.apache.spark.sql.types.LongType),
       StructField("sum_val", org.apache.spark.sql.types.DoubleType),
       StructField("is_final", org.apache.spark.sql.types.BooleanType)))
     implicit val outEnc: ExpressionEncoder[Row] = rowEnc(outSchema)
-    // state carries the key/window values so the data-less final
-    // (timeout) invocation can still emit a complete row
-    val stateSchema = StructType(keys.map(k => schema(k)) ++ Seq(
-      StructField("wstart", org.apache.spark.sql.types.LongType),
+    val stateSchema = StructType(Seq(
       StructField("cnt", org.apache.spark.sql.types.LongType),
       StructField("sum", org.apache.spark.sql.types.DoubleType),
       StructField("last_emit", org.apache.spark.sql.types.LongType)))
     val stateEnc: ExpressionEncoder[Row] = rowEnc(stateSchema)
-    implicit val keyEnc = Encoders.STRING
-    def num(r: Row): Double = r.get(valIdx) match {
-      case n: java.lang.Number => n.doubleValue
-      case _ => 0.0
-    }
-    pre.groupByKey(r => encodeKey(r, groupIdx))
+    // the key is (keys..., window start): a result row is the key's
+    // values followed by the aggregate
+    keyed(pre, keys :+ "__wstart")
       .flatMapGroupsWithState[Row, Row](
         OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
+        (key: Row, rows: Iterator[Row], state: GroupState[Row]) =>
+          def result(cnt: Long, sum: Double, isFinal: Boolean): Row =
+            Row.fromSeq(key.toSeq ++ Seq[Any](cnt, sum, isFinal))
           if (state.hasTimedOut) {
             val s = state.get
-            val nKeys = keys.length
-            val out = Row.fromSeq((0 until nKeys).map(s.get) ++
-              Seq[Any](s.getLong(nKeys), s.getLong(nKeys + 1),
-                s.getDouble(nKeys + 2), true))
             state.remove()
-            Iterator(out)
+            Iterator(result(s.getLong(0), s.getDouble(1), isFinal = true))
           } else {
-            val it = rows.buffered
-            val keyVals = keyFieldIdx.map(it.head.get)
-            val wstart = it.head.getLong(wIdx)
-            val wend = wstart + wMs
+            val wend = key.getLong(keys.length) + wMs
             var (cnt, sum, lastEmit) =
               if (state.exists)
-                (state.get.getLong(keys.length + 1),
-                  state.get.getDouble(keys.length + 2),
-                  state.get.getLong(keys.length + 3))
+                (state.get.getLong(0), state.get.getDouble(1), state.get.getLong(2))
               else (0L, 0.0, 0L)
-            it.foreach { r => cnt += 1; sum += num(r) }
+            rows.foreach { r => cnt += 1; sum += num(r) }
             val wm = state.getCurrentWatermarkMs()
             if (wend <= wm) {
               // window already closed by the time the batch reached us:
               // late-but-admitted rows fold straight into the final
               state.remove()
-              Iterator(Row.fromSeq(keyVals ++ Seq[Any](wstart, cnt, sum, true)))
+              Iterator(result(cnt, sum, isFinal = true))
             } else {
               val now = state.getCurrentProcessingTimeMs()
               val fire = lastEmit == 0L || now - lastEmit >= earlyDelayMs
               if (fire) lastEmit = now
-              state.update(Row.fromSeq(keyVals ++ Seq[Any](wstart, cnt, sum, lastEmit)))
+              state.update(Row(cnt, sum, lastEmit))
               state.setTimeoutTimestamp(wend)
-              if (fire)
-                Iterator(Row.fromSeq(keyVals ++ Seq[Any](wstart, cnt, sum, false)))
+              if (fire) Iterator(result(cnt, sum, isFinal = false))
               else Iterator.empty
             }
           }
@@ -1160,9 +1200,8 @@ object StatefulOps extends Serializable {
     val pre = df.withColumn("__wstart",
       (floor(unix_millis(col(tsCol)) / wMs) * wMs).cast("long"))
     val schema = pre.schema
-    val keyIdx = keys.map(schema.fieldIndex)
     val wIdx = schema.fieldIndex("__wstart")
-    val valIdx = schema.fieldIndex(valueCol)
+    val num = numberAt(schema, valueCol)
     val outSchema = StructType(keys.map(k => schema(k)) ++ Seq(
       StructField("window_start", org.apache.spark.sql.types.LongType),
       StructField("cnt", org.apache.spark.sql.types.LongType),
@@ -1178,17 +1217,11 @@ object StatefulOps extends Serializable {
     val stateSchema = StructType(Seq(StructField("wins",
       org.apache.spark.sql.types.ArrayType(winStruct))))
     val stateEnc: ExpressionEncoder[Row] = rowEnc(stateSchema)
-    implicit val keyEnc = Encoders.STRING
-    def num(r: Row): Double = r.get(valIdx) match {
-      case n: java.lang.Number => n.doubleValue
-      case _ => 0.0
-    }
-    pre.groupByKey(r => encodeKey(r, keyIdx))
+    keyed(pre, keys)
       .flatMapGroupsWithState[Row, Row](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[Row], state: GroupState[Row]) =>
-          val it = rows.buffered
-          val keyVals = keyIdx.map(it.head.get)
+        (key: Row, rows: Iterator[Row], state: GroupState[Row]) =>
+          val keyVals = key.toSeq
           val wm = state.getCurrentWatermarkMs()
           var wins: Map[Long, (Long, Double, Boolean)] =
             state.getOption.map(_.getSeq[Row](0)
@@ -1201,7 +1234,7 @@ object StatefulOps extends Serializable {
           // the window), not end — so a row at wm == end + lateness - 1 is
           // already LATE in the reference. Same -1 on fire: EventTimeTrigger
           // fires when maxTimestamp <= watermark.
-          it.foreach { r =>
+          rows.foreach { r =>
             val ws = r.getLong(wIdx)
             if (ws + wMs - 1 + latenessMs <= wm) {
               // beyond allowedLateness: never admitted, only accounted
@@ -1320,25 +1353,22 @@ object StatefulOps extends Serializable {
         col(valueCol).cast("double").as("__val"))): _*)
     val unioned = branchW.unionByName(branchD)
     val inSchema = unioned.schema
-    val keyIdx = keys.map(inSchema.fieldIndex)
     val outSchema = StructType(keyFields ++ Seq(
       StructField("window_start", org.apache.spark.sql.types.LongType),
       StructField("cnt", org.apache.spark.sql.types.LongType),
       StructField("sum_val", org.apache.spark.sql.types.DoubleType),
       StructField("emit_kind", org.apache.spark.sql.types.StringType)))
     implicit val outEnc: ExpressionEncoder[Row] = rowEnc(outSchema)
-    implicit val keyEnc = Encoders.STRING
-    val stateSchema = StructType(keyFields.map(f => f.copy(name = "k_" + f.name)) :+
+    val stateSchema = StructType(Seq(
       StructField("wins", org.apache.spark.sql.types.ArrayType(StructType(Seq(
         StructField("ws", org.apache.spark.sql.types.LongType),
         StructField("cnt", org.apache.spark.sql.types.LongType),
         StructField("sum", org.apache.spark.sql.types.DoubleType),
-        StructField("fin", org.apache.spark.sql.types.BooleanType))))))
+        StructField("fin", org.apache.spark.sql.types.BooleanType)))))))
     val proc = new LateFireTimersProcessor(
-      inSchema, keyIdx, inSchema.fieldIndex("__tsms"), inSchema.fieldIndex("__val"),
-      wMs, latenessMs, stateSchema, outSchema)
-    unioned
-      .groupByKey { r: Row => encodeKey(r, keyIdx) }
+      inSchema.fieldIndex("__tsms"), inSchema.fieldIndex("__val"),
+      wMs, latenessMs, stateSchema)
+    keyed(unioned, keys)
       .transformWithState(proc,
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
         OutputMode.Append())(outEnc)
@@ -1411,23 +1441,26 @@ object StatefulOps extends Serializable {
     val outSchema = StructType(eSchema.fields ++
       vKeep.map(i => vSchema.fields(i).copy(nullable = true)))
     implicit val outEnc: ExpressionEncoder[Row] = rowEnc(outSchema)
-    implicit val keyEnc = Encoders.STRING
-    val eKeyIdx = Seq(eSchema.fieldIndex(eventKey))
-    val vKeyIdx = Seq(vSchema.fieldIndex(versionKey))
+    val Seq(keyType) = commonKeyTypes(Seq(eSchema(eventKey)), Seq(vSchema(versionKey)))
     val eTimeIdx = eventTimeIndex(eSchema, eventTime)
     val vTimeIdx = eventTimeIndex(vSchema, versionTime)
-    def micros(r: Row, i: Int): Long = tsMicros(r, i)
     val nulls: Seq[Any] = vKeep.map(_ => null)
-    events.groupByKey(r => encodeKey(r, eKeyIdx))(keyEnc)
-      .cogroup(versions.groupByKey(r => encodeKey(r, vKeyIdx))(keyEnc)) {
-        (_: String, es: Iterator[Row], vs: Iterator[Row]) =>
-          val evs = es.toArray.sortBy(micros(_, eTimeIdx))
-          val ver = vs.toArray.sortBy(micros(_, vTimeIdx))
+    // cogroup needs equal key schemas on both sides: one name, one
+    // type, and nullable (a `when` without `otherwise` always is)
+    def key(df: DataFrame, name: String): Column = {
+      val c = topCol(df, name)
+      when(c.isNotNull, c.cast(keyType)).as("__key")
+    }
+    keyedOn(events, Seq(key(events, eventKey)))
+      .cogroup(keyedOn(versions, Seq(key(versions, versionKey)))) {
+        (_: Row, es: Iterator[Row], vs: Iterator[Row]) =>
+          val evs = es.toArray.sortBy(tsMicros(_, eTimeIdx))
+          val ver = vs.toArray.sortBy(tsMicros(_, vTimeIdx))
           var j = 0
           var cur: Row = null
           evs.iterator.map { e =>
-            val et = micros(e, eTimeIdx)
-            while (j < ver.length && micros(ver(j), vTimeIdx) <= et) {
+            val et = tsMicros(e, eTimeIdx)
+            while (j < ver.length && tsMicros(ver(j), vTimeIdx) <= et) {
               cur = ver(j); j += 1
             }
             val tail = if (cur == null) nulls else vKeep.map(cur.get)
@@ -1455,20 +1488,18 @@ object StatefulOps extends Serializable {
   * (flink-streaming-java/.../windowing/WindowOperator.java:390
   * processElement / onEventTime) on transformWithState state + timers.
   *
-  * State per key: the original key values (needed for timer-only
-  * invocations, which carry no input rows) plus the key's open windows
-  * (ws, cnt, sum, final_emitted). One event-time timer is kept armed at
-  * (next boundary − 1) where the next boundary is the earliest pending
+  * State per key: the key's open windows (ws, cnt, sum,
+  * final_emitted); result rows lead with the key Row's values, which
+  * timer-only invocations receive too. One event-time timer is kept
+  * armed at (next boundary − 1) where the next boundary is the earliest pending
   * final (window maxTimestamp) or purge (maxTimestamp + lateness); the
   * handler is authoritative — it acts only on what the CURRENT watermark
   * justifies and re-arms otherwise, so firing is exact under either
   * timer-eviction boundary convention.
   */
 private[streaming] class LateFireTimersProcessor(
-    inSchema: StructType, keyIdx: Seq[Int], tsmsIdx: Int, valIdx: Int,
-    wMs: Long, latenessMs: Long,
-    stateSchema: StructType, outSchema: StructType)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[String, Row, Row] {
+    tsmsIdx: Int, valIdx: Int, wMs: Long, latenessMs: Long, stateSchema: StructType)
+    extends org.apache.spark.sql.streaming.StatefulProcessor[Row, Row, Row] {
   import org.apache.spark.sql.streaming._
 
   @transient private var st: ValueState[Row] = _
@@ -1479,14 +1510,13 @@ private[streaming] class LateFireTimersProcessor(
   }
 
   private def loadWins(s: Row): Map[Long, (Long, Double, Boolean)] =
-    s.getSeq[Row](keyIdx.length)
+    s.getSeq[Row](0)
       .map(w => w.getLong(0) -> ((w.getLong(1), w.getDouble(2), w.getBoolean(3))))
       .toMap
 
-  private def saveOrClear(keyVals: Seq[Any],
-      wins: Map[Long, (Long, Double, Boolean)]): Unit = {
+  private def saveOrClear(wins: Map[Long, (Long, Double, Boolean)]): Unit = {
     if (wins.isEmpty) st.clear()
-    else st.update(Row.fromSeq(keyVals :+ wins.toSeq.sortBy(_._1)
+    else st.update(Row(wins.toSeq.sortBy(_._1)
       .map { case (ws, (c, s, fin)) => Row(ws, c, s, fin) }))
     // one timer: the earliest pending boundary, armed 1 ms early (see
     // class doc); clear the rest so timers never accumulate
@@ -1526,19 +1556,14 @@ private[streaming] class LateFireTimersProcessor(
     fired.filter { case (ws, _) => ws + wMs - 1 + latenessMs > wm }
   }
 
-  override def handleInputRows(key: String, rows: Iterator[Row],
+  override def handleInputRows(key: Row, rows: Iterator[Row],
       tv: TimerValues): Iterator[Row] = {
-    val it = rows.buffered
-    val prior = if (st.exists()) Some(st.get()) else None
-    val keyVals: Seq[Any] = prior match {
-      case Some(s) => keyIdx.indices.map(s.get)
-      case None => keyIdx.map(it.head.get)
-    }
+    val keyVals = key.toSeq
     val wm = tv.getCurrentWatermarkInMs()
-    var wins = prior.map(loadWins).getOrElse(Map.empty[Long, (Long, Double, Boolean)])
+    var wins = if (st.exists()) loadWins(st.get()) else Map.empty[Long, (Long, Double, Boolean)]
     val touched = scala.collection.mutable.Set.empty[Long]
     var dropped = Map.empty[Long, (Long, Double)]
-    it.foreach { r =>
+    rows.foreach { r =>
       // null-safe like every sibling op's num(): a NULL value counts
       // as 0.0, and a NULL timestamp row is unwindowable — the window()
       // builtin the non-timer path aggregates through drops it too
@@ -1560,21 +1585,18 @@ private[streaming] class LateFireTimersProcessor(
     dropped.foreach { case (ws, (dc, dsum)) =>
       out += Row.fromSeq(keyVals ++ Seq[Any](ws, dc, dsum, "dropped_late"))
     }
-    saveOrClear(keyVals, wins)
+    saveOrClear(wins)
     out.iterator
   }
 
-  override def handleExpiredTimer(key: String, tv: TimerValues,
-      info: ExpiredTimerInfo): Iterator[Row] = {
-    (if (st.exists()) Some(st.get()) else None) match {
-      case None => Iterator.empty
-      case Some(s) =>
-        val keyVals: Seq[Any] = keyIdx.indices.map(s.get)
-        val wm = tv.getCurrentWatermarkInMs()
-        val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-        val wins = fireAndPurge(keyVals, loadWins(s), wm, Set.empty, out)
-        saveOrClear(keyVals, wins)
-        out.iterator
+  override def handleExpiredTimer(key: Row, tv: TimerValues,
+      info: ExpiredTimerInfo): Iterator[Row] =
+    if (!st.exists()) Iterator.empty
+    else {
+      val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+      val wins = fireAndPurge(key.toSeq, loadWins(st.get()), tv.getCurrentWatermarkInMs(),
+        Set.empty, out)
+      saveOrClear(wins)
+      out.iterator
     }
-  }
 }

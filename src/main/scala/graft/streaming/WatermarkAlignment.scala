@@ -68,27 +68,22 @@ object WatermarkAlignment {
   def partitionHeartbeats(df: DataFrame, partitionCol: String,
                           tsCol: String): DataFrame = {
     val schema = df.schema
-    val pIdx = schema.fieldIndex(partitionCol)
     val tsIdx = StatefulOps.eventTimeIndex(schema, tsCol)
     def millis(r: Row): Long = StatefulOps.timeMillis(r.get(tsIdx))
     implicit val outEnc: ExpressionEncoder[Row] = StatefulOps.rowEnc(heartbeatSchema)
-    implicit val keyEnc = Encoders.STRING
-    df.groupByKey(r => String.valueOf(r.get(pIdx)))
+    StatefulOps.keyed(df, Seq(partitionCol))
       .flatMapGroupsWithState[Long, Row](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (part: String, rows: Iterator[Row], _: GroupState[Long]) =>
+        (part: Row, rows: Iterator[Row], _: GroupState[Long]) =>
+          // the heartbeat schema pins partition non-null (and a NULL id
+          // would merge with a partition literally named "null" there)
+          require(!part.isNullAt(0),
+            s"partition column '$partitionCol' must be non-null — a null " +
+              "partition id cannot drive watermark alignment")
           var mx = Long.MinValue; var n = 0L
-          rows.foreach { r =>
-            // the heartbeat schema pins partition non-null; rejecting
-            // here also prevents a NULL id silently merging with a
-            // partition literally named "null" under String.valueOf
-            require(r.get(pIdx) != null,
-              s"partition column '$partitionCol' must be non-null — a null " +
-                "partition id cannot drive watermark alignment")
-            val m = millis(r); if (m > mx) mx = m; n += 1
-          }
+          rows.foreach { r => val m = millis(r); if (m > mx) mx = m; n += 1 }
           if (n == 0L) Iterator.empty
-          else Iterator.single(Row(part, mx, n))
+          else Iterator.single(Row(String.valueOf(part.get(0)), mx, n))
       }(Encoders.scalaLong, outEnc)
   }
 

@@ -109,6 +109,18 @@ class ChangelogJoinSpec extends AnyFunSuite {
       ("+I", "a", "l1", "r1")))
   }
 
+  test("keys of different widths join in their common type; no common type is rejected") {
+    val left = Seq(("+I", 1L, 5, "l1")).toDF("row_kind", "seq", "k", "lv")
+    val right = Seq(("+I", 2L, 5L, "r1")).toDF("row_kind", "seq", "rk", "rv")
+    val out = ChangelogJoin(left, Seq("k"), right, Seq("rk"), "seq")
+      .collect().map(r => (r.getString(0), r.getString(2), r.getString(4))).toList
+    assert(out == List(("+I", "l1", "r1")), "INT 5 and BIGINT 5 are one key")
+    val text = Seq(("+I", 2L, "5", "r1")).toDF("row_kind", "seq", "rk", "rv")
+    val e = intercept[IllegalArgumentException](
+      ChangelogJoin(left, Seq("k"), text, Seq("rk"), "seq"))
+    assert(e.getMessage.contains("have no common type"))
+  }
+
   test("streaming: state carries across micro-batches") {
     implicit val sc = spark.sqlContext
     val lin = MemoryStream[LRow]

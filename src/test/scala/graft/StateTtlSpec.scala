@@ -179,6 +179,34 @@ class StateTtlSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("a backlog spanning more event time than the TTL does not restart an event-time running aggregate") {
+    // The aggregate keeps its TTL horizon in state beside its release
+    // timers. Armed from the batch-start watermark (00:00) the horizon
+    // would be 00:01:40; the release timer that fires at wm 00:10 would
+    // then also purge u1, and its next row would start a fresh count.
+    implicit val sc = spark.sqlContext
+    val in = MemoryStream[Ev]
+    val out = StatefulOps.runningAggEventTimeStreaming(
+      in.toDF().withWatermark("ts", "0 seconds"), Seq("user"), "ts", "value", ttlSec = 100)
+    val q = out.writeStream.format("memory").queryName("ttl_backlog_agg")
+      .outputMode(OutputMode.Append).start()
+    try {
+      in.addData(Ev(ts("2024-01-01 00:00:00"), "u2", "a", 0.0))
+      q.processAllAvailable()
+      // one backlog: u1 from 00:00:10 to 00:10:00, ten minutes > TTL
+      in.addData(Ev(ts("2024-01-01 00:00:10"), "u1", "a", 1.0),
+        Ev(ts("2024-01-01 00:10:00"), "u1", "b", 1.0))
+      q.processAllAvailable()
+      in.addData(Ev(ts("2024-01-01 00:10:30"), "u1", "c", 1.0))
+      q.processAllAvailable()
+      in.addData(Ev(ts("2024-01-01 00:11:00"), "u3", "a", 0.0))
+      q.processAllAvailable()
+      val u1 = spark.sql("SELECT tpe, running_count FROM ttl_backlog_agg WHERE user = 'u1'")
+        .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toList
+      assert(u1 == List(("a", 1L), ("b", 2L), ("c", 3L)), s"u1's count restarted: $u1")
+    } finally q.stop()
+  }
+
   test("graft.exec.state.ttl session config drives the default TTL") {
     val before = StatefulOps.DefaultTtlSec
     assert(before == 86400L)

@@ -11,6 +11,7 @@ case class Ev(ts: Timestamp, user: String, tpe: String, value: Double)
 case class EvMs(ts: Timestamp, tsms: Long, user: String, tpe: String, value: Double)
 case class Up(kind: String, key: String, seq: Long, v: Double)
 case class TwoKey(k1: String, k2: String, ts: Timestamp, v: Double)
+case class TieEv(ts: Timestamp, n: Int)
 
 /** Structured-Streaming counterparts of the reference's stateful
   * operators, driven through MemoryStream exactly like Flink's
@@ -517,6 +518,14 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("runningAggStreaming rejects a non-numeric value column when the op is built") {
+    implicit val sc = spark.sqlContext
+    val in = MemoryStream[Ev]
+    val e = intercept[IllegalArgumentException](
+      StatefulOps.runningAggStreaming(in.toDF(), Seq("user"), "ts", "tpe"))
+    assert(e.getMessage.contains("value column 'tpe' is STRING"))
+  }
+
   test("lookupJoinStreaming probes the current dim version per batch") {
     implicit val sc = spark.sqlContext
     val dimDir = java.nio.file.Files.createTempDirectory("graft_dim").toString
@@ -748,6 +757,23 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()   // wm ≈ 00:09 → 'late' frozen too
       val got = spark.sql("SELECT tpe FROM tsort").collect().map(_.getString(0)).toList
       assert(got.startsWith(List("early", "late")))
+    } finally q.stop()
+  }
+
+  test("temporalSortStreaming breaks a timestamp tie by the typed tie column (INT 9 before 10)") {
+    implicit val sc = spark.sqlContext
+    val in = MemoryStream[TieEv]
+    val out = StatefulOps.temporalSortStreaming(
+      in.toDF().withWatermark("ts", "0 seconds"), "ts", tieBreak = Seq("n"))
+    val q = out.writeStream.format("memory").queryName("tsort_tie")
+      .outputMode(OutputMode.Append).start()
+    try {
+      in.addData(TieEv(ts("2024-01-01 00:01:00"), 10), TieEv(ts("2024-01-01 00:01:00"), 9))
+      q.processAllAvailable()
+      in.addData(TieEv(ts("2024-01-01 00:05:00"), 1))
+      q.processAllAvailable()
+      val got = spark.sql("SELECT n FROM tsort_tie").collect().map(_.getInt(0)).toList
+      assert(got.take(2) == List(9, 10), s"as strings \"10\" < \"9\"; got $got")
     } finally q.stop()
   }
 

@@ -50,6 +50,16 @@ class EventTimeTypesSpec extends AnyFunSuite {
     assert(got == List("d28", "d20", "d09", "d01"))
   }
 
+  test("banded near-dup rows keep the watermark's event time, so the bucket TTL reads it") {
+    implicit val sc = spark.sqlContext
+    import spark.implicits._
+    val docs = MemoryStream[(String, String, java.sql.Timestamp)].toDF()
+      .toDF("id", "text", "ts").withWatermark("ts", "0 seconds")
+    val banded = NearDupStreaming.bandedStream(docs, "id", "text", k = 8, bands = 2)
+    assert(banded.columns.toSeq == Seq("doc_id", "band", "bucket", "ts"))
+    assert(StatefulOps.stateTtl(banded, ttlSec = 60).eventMs.isDefined)
+  }
+
   test("NTZ and DATE decode in each op's unit") {
     val t = LocalDateTime.of(1970, 1, 1, 0, 0, 1, 2000)
     assert(StatefulOps.timeMillis(t) == 1000L)
