@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 import graft.Tables
 
 /** Round-5 training-data pipeline operators over `documents`:
@@ -159,17 +161,19 @@ object TextOps2 {
     // step of: count adjacent symbol pairs weighted by word frequency,
     // merge the argmax pair corpus-wide, re-segment, repeat. Scale
     // shape: the corpus collapses ONCE into the Zipf-bounded
-    // word-frequency table (one shuffle on word); every round after
-    // that touches only that bounded table — pair counts shuffle on
-    // ≤|vocab|² keys with map-side partial sums, the re-segmentation is
-    // a map-side higher-order fold, and the only driver collect per
-    // round is the single argmax row (the Ivf/Pq bounded-collect
-    // discipline). localCheckpoint per round kills the lineage blowup
-    // (the n54 pattern); on a cluster it would be checkpoint() for
-    // executor-loss tolerance. Greedy left-to-right non-overlapping
-    // merge semantics: the fold compares whole symbols, so "aaa" under
-    // (a,a) becomes [aa, a], never [aa, aa] — matching the reference
-    // BPE implementations.
+    // word-frequency table (one shuffle on word), persisted as an RDD;
+    // every round after that touches only that bounded table. One job
+    // counts every adjacent pair into a driver-side map (bounded by the
+    // vocabulary's distinct pairs, ≤ |alphabet|² for single chars plus
+    // one new symbol per round). Each round then takes the argmax on
+    // the driver and runs ONE job that re-segments the persisted table
+    // and returns per-partition count deltas of the words the merge
+    // changed (−wc per old pair, +wc per new one), so no round recounts
+    // the table or plans a new query: delta iteration, the top-1 kept
+    // under deltas. Greedy left-to-right non-overlapping merge
+    // semantics: the fold compares whole symbols, so "aaa" under (a,a)
+    // becomes [aa, a], never [aa, aa] — matching the reference BPE
+    // implementations.
     "t55_bpe_merges" -> ((s, dir) => {
       val (rules, _) = trainBpe(s, dir, 8)
       import s.implicits._
@@ -287,58 +291,91 @@ object TextOps2 {
     })
   )
 
+  /** A word of the BPE training table: its corpus frequency and its
+    * segmentation; `prev` is the segmentation before the last merge if
+    * that merge changed it, else null. */
+  private final case class BpeWord(w: String, wc: Long, syms: Array[String], prev: Array[String])
+
+  private type SymPair = (String, String)
+
+  private def symPairs(syms: Array[String]): Iterator[SymPair] =
+    Iterator.range(1, syms.length).map(i => (syms(i - 1), syms(i)))
+
+  /** The reference merge fold: a symbol equal to `r` that follows an
+    * accumulated `l` joins it, left to right, so "aaa" under (a, a) is
+    * [aa, a]. Returns `syms` itself when nothing merged. */
+  private def mergePair(syms: Array[String], l: String, r: String): Array[String] = {
+    val acc = scala.collection.mutable.ArrayBuffer.empty[String]
+    syms.foreach { x =>
+      if (acc.nonEmpty && acc.last == l && x == r) acc(acc.length - 1) = l + r
+      else acc += x
+    }
+    if (acc.length == syms.length) syms else acc.toArray
+  }
+
+  /** Spark's string order (UTF-8 bytes); `String.compareTo` orders
+    * UTF-16 units, which differs above U+FFFF. */
+  private val utf8Order: Ordering[String] =
+    (a, b) => UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
+
+  /** The next rule: `ORDER BY n DESC, lhs, rhs LIMIT 1` over the
+    * counts (all positive: a count that falls to 0 is removed). */
+  private def bestPair(counts: scala.collection.Map[SymPair, Long]): Option[(SymPair, Long)] =
+    counts.minByOption { case ((l, r), n) => (n, l, r) }(
+      Ordering.Tuple3(Ordering.Long.reverse, utf8Order, utf8Order))
+
   /** Shared distributed BPE trainer (t55/t57): returns the ordered
     * merge rules and the final per-word segmentation (w, wc, syms).
-    * See the t55 Scaladoc for the scale analysis; the per-round
-    * localCheckpoint keeps lineage flat, superseded checkpoints are
-    * released via Staging.checkpointWithHandles (Dataset.unpersist
-    * does not reach localCheckpoint blocks — r22).
+    * The pair counts live on the driver across rounds; each round
+    * re-segments the persisted word table in one job that also returns
+    * the count deltas of the words the merge changed (see the t55
+    * Scaladoc for the bounds).
     */
   private def trainBpe(s: SparkSession, dir: String, nMerges: Int)
       : (Seq[(Long, String, String, Long)], DataFrame) = {
+    import s.implicits._
     val d = Tables.load(s, dir, "documents")
-    // checkpointWithHandles (r22): Dataset.unpersist() never releases
-    // localCheckpoint blocks (see Staging) — the superseded-round
-    // release below now frees the real persisted RDDs.
-    val (words0, words0H) = Staging.checkpointWithHandles(
-      d.select(explode(tokens).as("w"))
-        .filter(col("w") =!= "")
-        .groupBy("w").agg(count(lit(1)).as("wc"))
-        .select(col("w"), col("wc"), expr("split(w, '')").as("syms")))
-    var words = words0
-    var prevH = words0H
+    var words = d.select(explode(tokens).as("w"))
+      .filter(col("w") =!= "")
+      .groupBy("w").agg(count(lit(1)).as("wc"))
+      .select(col("w"), col("wc"), expr("split(w, '')").as("syms"))
+      .as[(String, Long, Array[String])].rdd
+      .map { case (w, wc, syms) => BpeWord(w, wc, syms, null) }
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    var live = words
+    val counts = scala.collection.mutable.HashMap.empty[SymPair, Long]
+    counts ++= words.flatMap(x => symPairs(x.syms).map(_ -> x.wc)).reduceByKey(_ + _).collect()
     val rules = Seq.newBuilder[(Long, String, String, Long)]
-    // r21 note: folding the argmax into the resegment job (broadcast
-    // 1-row best-pair join + rule read-back from the checkpoint) was
-    // tried and MEASURED SLOWER (t55 1.03→1.47 s same-window 7-run
-    // medians): the broadcast build is its own job, and the rule
-    // read-back adds a third — the "merged" round pays 3 job barriers
-    // where this shape pays 2. Kept as-is.
-    for (rank <- 1 to nMerges) {
-      val best = words.filter(size(col("syms")) >= 2)
-        .select(col("wc"), explode(expr(
-          "transform(sequence(1, size(syms) - 1), " +
-            "i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r))")).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum("wc").as("n"))
-        .orderBy(desc("n"), asc("l"), asc("r"))
-        .limit(1).collect()(0)
-      val (l, r, n) = (best.getString(0), best.getString(1), best.getLong(2))
+    // once no pair is left, the remaining rounds find none either
+    for (rank <- 1 to nMerges; ((l, r), n) <- bestPair(counts)) {
       rules += ((rank.toLong, l, r, n))
-      val (ql, qr) = (l.replace("'", "''"), r.replace("'", "''"))
-      val (next, nextH) = Staging.checkpointWithHandles(
-        words.withColumn("syms", expr(
-          s"aggregate(syms, CAST(array() AS array<string>), (acc, x) -> " +
-            s"CASE WHEN size(acc) > 0 AND element_at(acc, -1) = '$ql' AND x = '$qr' " +
-            s"THEN concat(slice(acc, 1, size(acc) - 1), array('$ql$qr')) " +
-            s"ELSE concat(acc, array(x)) END)")))
-      Staging.releaseCheckpoint(prevH); prevH = nextH; words = next
+      words = words.map { x =>
+        val m = mergePair(x.syms, l, r)
+        BpeWord(x.w, x.wc, m, if (m eq x.syms) null else x.syms)
+      }
+      // the last merge is never counted: t57's consumer computes it
+      if (rank < nMerges) {
+        words.persist(StorageLevel.MEMORY_AND_DISK)
+        val deltas = words.mapPartitions { it =>
+          val m = scala.collection.mutable.HashMap.empty[SymPair, Long]
+          it.filter(_.prev != null).foreach { x =>
+            symPairs(x.prev).foreach(p => m(p) = m.getOrElse(p, 0L) - x.wc)
+            symPairs(x.syms).foreach(p => m(p) = m.getOrElse(p, 0L) + x.wc)
+          }
+          Iterator.single(m)
+        }.collect()
+        deltas.foreach(_.foreach { case (p, dn) =>
+          val v = counts.getOrElse(p, 0L) + dn
+          if (v > 0) counts(p) = v else counts -= p
+        })
+        live.unpersist(blocking = false)
+        live = words
+      }
     }
     // the final segmentation is consumed by the caller after this
-    // returns — hand its blocks to the supersede registry so the next
-    // trainBpe invocation frees them
-    Staging.supersedeHandles(s"$dir#bpe_words_$nMerges", prevH)
-    (rules.result(), words)
+    // returns — the next trainBpe invocation releases its blocks
+    Staging.supersedeHandles(s"$dir#bpe_words_$nMerges", Seq(live))
+    (rules.result(), words.map(x => (x.w, x.wc, x.syms)).toDF("w", "wc", "syms"))
   }
 
   /** DuckDB replay of the t55 training loop: 8 unrolled rounds, each

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StructField, StructType}
 
 /** Retractable Top-N over an UPDATING input — the reference's
   * RetractableTopNFunction (flink-table/flink-table-runtime/.../rank/
@@ -21,6 +21,12 @@ object RetractTopN {
 
   import Changelog.{Delete, Insert, KindCol, UpdateAfter, UpdateBefore}
 
+  /** The id as a map key: BINARY by content, every other type as is. */
+  private def idKey(v: Any): Any = v match {
+    case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
+    case o => o
+  }
+
   def apply(df: DataFrame, keys: Seq[String], idCol: String, scoreCol: String,
             n: Int, descending: Boolean = true,
             ttlSec: Long = StatefulOps.DefaultTtlSec): DataFrame = {
@@ -33,15 +39,17 @@ object RetractTopN {
     // the encoder is schema-derived (Flink's state-serializer
     // compatibility contract; java serialization is version-brittle).
     val stateSchema = StructType(Seq(StructField("entries", ArrayType(
-      StructType(Seq(StructField("id", StringType), StructField("row", schema)))))))
+      StructType(Seq(StructField("id", schema(idCol).dataType), StructField("row", schema)))))))
     val stateEnc: ExpressionEncoder[Row] =
       ExpressionEncoder(RowEncoder.encoderFor(stateSchema))
     val kindIdx = schema.fieldIndex(KindCol)
     val idIdx = schema.fieldIndex(idCol)
     val score = StatefulOps.numberAt(schema, scoreCol)
     val sign = if (descending) -1.0 else 1.0
-    def topOf(m: Map[String, Row]): Seq[(String, Row)] =
-      m.toSeq.sortBy { case (id, r) => (sign * score(r), id) }.take(n)
+    // score first, then the typed id (INT 9 before 10, BINARY unsigned)
+    val order = Ordering.by[Row, Double](r => sign * score(r))(Ordering.Double.TotalOrdering)
+      .orElse(StatefulOps.tieOrdering(schema, Seq(idCol)))
+    def topOf(m: Map[Any, Row]): Seq[(Any, Row)] = m.toSeq.sortBy(_._2)(order).take(n)
     def out(r: Row, kind: String, rank: Int): Row = {
       val vals = r.toSeq.toArray
       vals(kindIdx) = kind
@@ -53,13 +61,13 @@ object RetractTopN {
       .flatMapGroupsWithState[Row, Row](
         OutputMode.Append, ttl.timeout)(StatefulOps.withTtl(ttl) {
         (_: Row, rows: Iterator[Row], state: GroupState[Row]) =>
-          var m: Map[String, Row] =
+          var m: Map[Any, Row] =
             if (state.exists)
-              state.get.getSeq[Row](0).map(e => e.getString(0) -> e.getStruct(1)).toMap
-            else Map.empty[String, Row]
+              state.get.getSeq[Row](0).map(e => idKey(e.get(0)) -> e.getStruct(1)).toMap
+            else Map.empty[Any, Row]
           val before = topOf(m)
           rows.foreach { r =>
-            val id = String.valueOf(r.get(idIdx))
+            val id = idKey(r.get(idIdx))
             r.getString(kindIdx) match {
               // UPDATE_BEFORE is a retract message exactly like DELETE
               // (RetractableTopNFunction.java:148 gates on isAccumulateMsg,
@@ -71,7 +79,7 @@ object RetractTopN {
               case Insert | UpdateAfter | _ => m += id -> r
             }
           }
-          state.update(Row(m.toSeq.map { case (id, r) => Row(id, r) }))
+          state.update(Row(m.toSeq.map { case (_, r) => Row(r.get(idIdx), r) }))
           val after = topOf(m)
           val beforeRanked = before.zipWithIndex.map { case ((id, r), i) => (id, r, i + 1) }
           val afterRanked = after.zipWithIndex.map { case ((id, r), i) => (id, r, i + 1) }

@@ -1332,6 +1332,7 @@ object StatefulOps extends Serializable {
     require(!hasWatermark(df),
       "lateFireWindowAggTimers installs its own watermark — pass the raw stream")
     require(latenessMs >= 0)
+    numberAt(df.schema, valueCol) // plan-time numeric check, as in lateFireWindowAgg
     val wMs = windowSec * 1000L
     val keyFields = keys.map(k => df.schema(k))
     val farFuture = java.sql.Timestamp.valueOf("2999-01-01 00:00:00")

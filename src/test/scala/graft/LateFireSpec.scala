@@ -9,6 +9,7 @@ import graft.streaming.StatefulOps
 
 case class LfEv(k: String, ts: Timestamp, v: Double)
 case class LfEvN(k: String, ts: Timestamp, v: java.lang.Double)
+case class LfEvS(k: String, ts: Timestamp, v: String)
 
 /** allowedLateness + late-fire corrections (WindowedStream.allowedLateness,
   * EventTimeTrigger late firings): the window fires a final once the
@@ -300,5 +301,17 @@ class LateFireSpec extends AnyFunSuite {
         case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     }
+  }
+
+  test("timer op: a non-numeric value column is rejected when the op is built") {
+    implicit val sc = spark.sqlContext
+    implicit val enc = Encoders.product[LfEvS]
+    val in = MemoryStream[LfEvS]
+    val e = intercept[IllegalArgumentException] {
+      StatefulOps.lateFireWindowAggTimers(
+        in.toDF(), keys = Seq("k"), tsCol = "ts", valueCol = "v",
+        windowSec = 60L, latenessMs = 0L)
+    }
+    assert(e.getMessage.contains("value column 'v' is STRING"))
   }
 }

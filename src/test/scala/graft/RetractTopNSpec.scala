@@ -6,6 +6,8 @@ import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.RetractTopN
 
 case class Score(row_kind: String, grp: String, id: String, score: Double)
+case class BinScore(row_kind: String, grp: String, id: Array[Byte], score: Double)
+case class IntScore(row_kind: String, grp: String, id: Int, score: Double)
 
 class RetractTopNSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -95,6 +97,42 @@ class RetractTopNSpec extends AnyFunSuite {
       val third = emitted().diff(first ++ second)
       assert(third.toSet == Set(
         ("-D", "g1", "y", 3.0, 1), ("+I", "g1", "y", 9.0, 1)))
+    } finally q.stop()
+  }
+
+  test("a -D retracts the +I of an equal-content BINARY id") {
+    implicit val sc = spark.sqlContext
+    val in = MemoryStream[BinScore]
+    val out = RetractTopN(in.toDF(), keys = Seq("grp"), idCol = "id",
+      scoreCol = "score", n = 2)
+    val q = out.writeStream.format("memory").queryName("rtopn_bin")
+      .outputMode(OutputMode.Append).start()
+    def emitted() = spark.sql("SELECT row_kind, hex(id), rank_no FROM rtopn_bin")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toList
+    try {
+      in.addData(BinScore("+I", "g", Array[Byte](1, 2), 5), BinScore("+I", "g", Array[Byte](3), 1))
+      q.processAllAvailable()
+      // a new array with the same bytes, in a later micro-batch
+      in.addData(BinScore("-D", "g", Array[Byte](1, 2), 5))
+      q.processAllAvailable()
+      assert(emitted() == List(("+I", "0102", 1), ("+I", "03", 2),
+        ("-D", "0102", 1), ("-D", "03", 2), ("+I", "03", 1)))
+    } finally q.stop()
+  }
+
+  test("score ties rank by the typed id: INT 9 before 10") {
+    implicit val sc = spark.sqlContext
+    val in = MemoryStream[IntScore]
+    val out = RetractTopN(in.toDF(), keys = Seq("grp"), idCol = "id",
+      scoreCol = "score", n = 1)
+    val q = out.writeStream.format("memory").queryName("rtopn_int")
+      .outputMode(OutputMode.Append).start()
+    try {
+      in.addData(IntScore("+I", "g", 10, 7), IntScore("+I", "g", 9, 7))
+      q.processAllAvailable()
+      val got = spark.sql("SELECT row_kind, id, rank_no FROM rtopn_int")
+        .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toList
+      assert(got == List(("+I", 9, 1)))
     } finally q.stop()
   }
 }

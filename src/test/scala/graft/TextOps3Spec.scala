@@ -194,4 +194,58 @@ class TextOps3Spec extends AnyFunSuite {
       made += m
     }
   }
+
+  /** A `documents` table holding only `texts`, in its own temp dir. */
+  private def handCorpus(texts: String*): String = {
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft_bpe").toString
+    texts.zipWithIndex.map { case (t, i) => (i + 1L, t) }.toDF("doc_id", "text")
+      .coalesce(1).write.parquet(s"$d/documents.parquet")
+    d
+  }
+
+  // Word counts: aaa 4, ＡＡ 3, 😀😀 3, xyz 2, banana 1. Rules 1-2 pin the
+  // greedy non-overlapping merge ("aaa" under (a, a) is [aa, a], so the
+  // next pair is (aa, a) with 4); rules 3-4 pin the count tie between
+  // U+FF21 and U+1F600, broken in UTF-8 byte order (String.compareTo
+  // orders the UTF-16 surrogate of U+1F600 first).
+  private lazy val bpeDir = handCorpus(
+    "aaa aaa ＡＡ xyz", "aaa ＡＡ 😀😀 banana", "aaa  aaa 😀😀 ＡＡ", "xyz 😀😀")
+
+  test("t55: hand corpus pins merge order, greedy merge and UTF-8 tie order") {
+    val rules = SparkEntry.queries("t55_bpe_merges")(spark, bpeDir)
+      .orderBy("merge_rank").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
+    val (fw, emoji) = ("\uFF21", "\uD83D\uDE00")
+    assert(fw.compareTo(emoji) > 0) // the order the trainer must NOT use
+    assert(rules.toSeq == Seq(
+      (1L, "a", "a", "aa", 10L),
+      (2L, "aa", "a", "aaa", 5L),
+      (3L, fw, fw, fw + fw, 3L),
+      (4L, emoji, emoji, emoji + emoji, 3L),
+      (5L, "a", "n", "an", 2L),
+      (6L, "x", "y", "xy", 2L),
+      (7L, "xy", "z", "xyz", 2L),
+      (8L, "an", "a", "ana", 1L)))
+  }
+
+  test("t57: hand corpus per-doc counts follow the trained segmentation") {
+    val r = SparkEntry.queries("t57_bpe_encode")(spark, bpeDir)
+      .orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    // (doc_id, n_words, n_bpe_tokens, n_chars): every word is one token
+    // after the 8 rules except banana, which segments as [b, an, ana]
+    assert(r.toSeq == Seq((1L, 4L, 4L, 11L), (2L, 4L, 6L, 13L),
+      (3L, 4L, 4L, 10L), (4L, 2L, 2L, 5L)))
+  }
+
+  test("t55/t57: repeated training keeps no more persisted data than one run") {
+    val sc = spark.sparkContext
+    def t55() = SparkEntry.queries("t55_bpe_merges")(spark, dir).collect()
+    t55()
+    val first = sc.getPersistentRDDs.size
+    (2 to 5).foreach(_ => t55())
+    SparkEntry.queries("t57_bpe_encode")(spark, dir).collect()
+    assert(sc.getPersistentRDDs.size <= first)
+  }
 }
