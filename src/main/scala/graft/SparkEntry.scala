@@ -7,21 +7,24 @@ import graft.queries._
   *
   * `queries` is the operator inventory (one entry per implemented
   * operator from SURVEY.md §2); `oracleSql` holds the DuckDB-dialect
-  * equivalent for the driver's correctness gate. Query bodies live in
-  * `graft.queries.*` modules, grouped by the part of the surface they
-  * cover.
+  * equivalent for the driver's correctness gate. Both come from one
+  * registry: each `graft.queries` module declares a query's name, oracle
+  * and build together, grouped by the part of the surface they cover.
   */
 object SparkEntry {
+
+  private lazy val registry: Map[String, Query] = Query.byName(Seq(
+    Relational, Events, TextOps, VectorOps, NearDup, MultiModal, Functions2,
+    Relational2, Collections, Conversions, Functions3, TpcH, ScaleOps,
+    TextOps2, TextOps3, SqlSurface, TpcDs, TpcDs2).flatMap(_.declared))
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Events.queries ++ TextOps.queries ++
-      VectorOps.queries ++ NearDup.queries ++ MultiModal.queries ++ Functions2.queries ++ Relational2.queries ++ Collections.queries ++ Conversions.queries ++ Functions3.queries ++ TpcH.queries ++ ScaleOps.queries ++ TextOps2.queries ++ TextOps3.queries ++ SqlSurface.queries ++ TpcDs.queries ++ TpcDs2.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, q) => n -> q.build }
 
-  def oracleSql: Map[String, String] =
-    Relational.oracles ++ Events.oracles ++ TextOps.oracles ++
-      VectorOps.oracles ++ NearDup.oracles ++ MultiModal.oracles ++ Functions2.oracles ++ Relational2.oracles ++ Collections.oracles ++ Conversions.oracles ++ Functions3.oracles ++ TpcH.oracles ++ ScaleOps.oracles ++ TextOps2.oracles ++ TextOps3.oracles ++ SqlSurface.oracles ++ TpcDs.oracles ++ TpcDs2.oracles
+  lazy val oracleSql: Map[String, String] =
+    registry.map { case (n, q) => n -> q.oracle }
 }

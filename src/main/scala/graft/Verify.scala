@@ -47,12 +47,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // Side-table oracles stage parquet under /tmp/graft_oracle/<sf-basename>/;
-    // the SQL text carries a __SF__ token so the SAME oracle map is correct
-    // at every SF the driver runs (r10 hardcoded sf0.01 → 162/180 at sf0.1).
-    val sfName = new java.io.File(sfDir).getName
+    // Oracle SQL names the side-table directory __SIDE__, so the SAME
+    // oracle map is correct for every fixture directory the driver runs.
+    val side = graft.queries.Staging.sideDir(sfDir)
     val interpolated = SparkEntry.oracleSql
-      .map { case (k, v) => k -> v.replace("__SF__", sfName) }
+      .map { case (k, v) => k -> v.replace("__SIDE__", side) }
     // Self-healing sweep (r11's one red row): the DuckDB oracle phase runs
     // AFTER this JVM exits, so every side table an oracle references must
     // still be on disk NOW — not merely "was staged earlier this JVM". If
@@ -60,7 +59,7 @@ object Verify {
     // the owning queries: the Staging helpers see the missing files and
     // re-stage, and the engine output is rewritten from the same rows so
     // engine and oracle stay consistent.
-    val sideGlob = """'(/tmp/graft_oracle/[^']+)/\*\.parquet'""".r
+    val sideGlob = ("'(" + java.util.regex.Pattern.quote(side) + """/[^']+)/\*\.parquet'""").r
     def missingSide(): Seq[(String, String)] = interpolated.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
       .flatMap { case (name, sql) =>

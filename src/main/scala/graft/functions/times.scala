@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * matrix). Spark's native TIME surface (SPARK-51162 family, behind
   * `spark.sql.timeType.enabled`) covers string→TIME and TIME(p)→TIME(q)
   * casts but rejects TIMESTAMP operands (`CAST_WITHOUT_SUGGESTION` —
-  * probed in `tools/TimeProbe`). This expression is a
+  * recorded in BASELINE.md). This expression is a
   * `RuntimeReplaceable` that dispatches once the child resolves:
   *
   *  - TIMESTAMP / TIMESTAMP_NTZ → format the session-local (resp.
@@ -83,7 +83,7 @@ case class CastTime(
   * explicitFromFamily(DATETIME); runtime
   * `TimeToTimestampCastRule.java` — the time of day anchored on the
   * EPOCH DATE, `TIMESTAMP_FROM_EPOCH_MILLIS(millisOfDay)`). Spark
-  * rejects the cast (`TimeProbe`), so this dispatcher anchors a TIME
+  * rejects the cast (BASELINE.md), so this dispatcher anchors a TIME
   * operand via the native `MakeTimestampNTZ(DATE'1970-01-01', t)` and
   * falls back to Spark's own `Cast` for every other operand type —
   * byte-identical behavior for all previously-working casts. */

@@ -34,12 +34,12 @@ object Ivf {
     * nprobe = max(2, ⌈√cells / 4⌉) — so recall holds as the index
     * scales: with the standard cells ≈ √n sizing, a fixed nprobe
     * probes a vanishing fraction of the corpus as n grows (the r10
-    * RecallProbe measured exactly that: recall flat sf0.1→sf1 only
+    * recall probe in BASELINE.md measured exactly that: recall flat sf0.1→sf1 only
     * because nprobe=2 was already the floor at both scales). With
     * this default the probed FRACTION still shrinks (√cells/4 of
     * cells ≈ n^(1/4)/4 of the data) so search stays sub-linear, but
     * the probed cell count tracks the neighborhood spread of the
-    * coarse quantizer. NprobeSweep measured the regimes: in the
+    * coarse quantizer. BASELINE.md records the nprobe sweep: in the
     * dense regime (sf1 fixture, 20k vectors, near-dup structure) the
     * true neighbors share the query's cell and coverage is 1.0 from
     * nprobe=2 up; in the sparse isotropic regime (≤2k vectors,

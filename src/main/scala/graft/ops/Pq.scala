@@ -202,7 +202,7 @@ object Pq {
     * inter-dimension correlation, of which an isotropic fixture has
     * none by construction (rotation-invariant distribution), while
     * enlarging the candidate pool attacks quantization noise
-    * directly (RecallProbe sf1: plain ADC 0.453 → refined 1.000 at
+    * directly (BASELINE.md, sf1: plain ADC 0.453 → refined 1.000 at
     * refine=10; sf0.01: 0.533 → 0.967). Scale shape: the shortlist
     * is |Q|·topK·refine rows —
     * query-scale, not corpus-scale — so the rerank join reads a

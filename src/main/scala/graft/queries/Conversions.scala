@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -8,10 +7,21 @@ import graft.Tables
   * TRY_CAST) and the rest of the JSON row (EXISTS-style checks, array
   * lengths, nested construction).
   */
-object Conversions {
+object Conversions extends QueryModule {
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q48_casts" -> ((s, dir) => {
+  def declared: Seq[Query] = Seq(
+    Query("q48_casts",
+      """SELECT p_partkey,
+        |  CAST(p_partkey AS VARCHAR) AS key_str,
+        |  CAST(p_size AS DOUBLE) AS size_dbl,
+        |  CAST(trunc(p_retailprice) AS INT) AS price_int,
+        |  CAST(p_retailprice AS VARCHAR) AS price_str,
+        |  CAST(p_size > 25 AS INT) AS big_flag,
+        |  TRY_CAST(regexp_extract(p_brand, '(\d+)', 1) AS INT) AS brand_num,
+        |  TRY_CAST(p_type AS INT) AS bad_int,
+        |  TRY_CAST(p_size AS BOOLEAN) AS size_bool,
+        |  'k' || CAST(p_partkey AS VARCHAR) AS tagged
+        |FROM part""".stripMargin) { (s, dir) =>
       val p = Tables.load(s, dir, "part")
       p.select(
         col("p_partkey"),
@@ -24,10 +34,17 @@ object Conversions {
         expr("try_cast(p_type AS INT)").as("bad_int"),       // always null
         expr("try_cast(p_size AS BOOLEAN)").as("size_bool"),
         concat(lit("k"), col("p_partkey").cast("string")).as("tagged"))
-    }),
+    },
 
     // ---- HAVING + IN-subquery + null-handling functions ---------------
-    "q53_having_in" -> ((s, dir) => {
+    Query("q53_having_in",
+      """SELECT o_custkey, count(*) AS n,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+        |FROM orders
+        |WHERE o_custkey IN (SELECT c_custkey FROM customer
+        |                    WHERE c_mktsegment IN ('BUILDING', 'MACHINERY'))
+        |GROUP BY o_custkey
+        |HAVING count(*) >= 2""".stripMargin) { (s, dir) =>
       graft.Tables.registerAll(s, dir)
       s.sql(
         """SELECT o_custkey, count(*) AS n,
@@ -37,9 +54,20 @@ object Conversions {
           |                    WHERE c_mktsegment IN ('BUILDING', 'MACHINERY'))
           |GROUP BY o_custkey
           |HAVING count(*) >= 2""".stripMargin)
-    }),
+    },
 
-    "q54_null_logic" -> ((s, dir) => {
+    Query("q54_null_logic",
+      """WITH m AS (
+        |  SELECT c_custkey, max(o_totalprice) AS max_price
+        |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
+        |  GROUP BY c_custkey)
+        |SELECT c_custkey,
+        |  COALESCE(max_price, -1.0) AS price_or_neg,
+        |  max_price IS NULL AS no_orders,
+        |  NULLIF(COALESCE(max_price, 0.0), 0.0) AS null_if_zero,
+        |  CASE WHEN max_price IS NOT NULL THEN 'buyer' ELSE 'dormant' END AS status,
+        |  CAST(max_price AS DOUBLE) AS nan_guard
+        |FROM m""".stripMargin) { (s, dir) =>
       val c = Tables.load(s, dir, "customer")
       val o = Tables.load(s, dir, "orders")
       c.join(o, col("c_custkey") === col("o_custkey"), "left_outer")
@@ -52,12 +80,18 @@ object Conversions {
           nullif(coalesce(col("max_price"), lit(0.0)), lit(0.0)).as("null_if_zero"),
           nvl2(col("max_price"), lit("buyer"), lit("dormant")).as("status"),
           nanvl(col("max_price").cast("double"), lit(0.0)).as("nan_guard"))
-    }),
+    },
 
     // ---- SQL-text path: executeSql end-to-end through the gate --------
     // Correlated EXISTS + scalar subquery in Spark SQL dialect (the
     // reference's primary entry point, SURVEY §3.1), not DataFrame API.
-    "q51_sql_subqueries" -> ((s, dir) => {
+    Query("q51_sql_subqueries",
+      """SELECT c_custkey, c_name,
+        |  (SELECT count(*) FROM orders WHERE o_custkey = c_custkey) AS n_orders
+        |FROM customer
+        |WHERE EXISTS (SELECT 1 FROM orders
+        |              WHERE o_custkey = c_custkey AND o_totalprice > 200000)
+        |  AND c_acctbal > 0""".stripMargin) { (s, dir) =>
       graft.Tables.registerAll(s, dir)
       graft.sql.SqlEnv(s).executeSql(
         """SELECT c_custkey, c_name,
@@ -66,10 +100,20 @@ object Conversions {
           |WHERE EXISTS (SELECT 1 FROM orders
           |              WHERE o_custkey = c_custkey AND o_totalprice > 200000)
           |  AND c_acctbal > 0""".stripMargin)
-    }),
+    },
 
     // ---- Interval arithmetic + sub-day truncation — SURVEY §2.8 -------
-    "q50_timestamp_arith" -> ((s, dir) => {
+    Query("q50_timestamp_arith",
+      """SELECT event_id,
+        |  CAST(ts + INTERVAL 2 HOUR AS TIMESTAMP) AS plus_2h,
+        |  CAST(ts - INTERVAL 90 MINUTE AS TIMESTAMP) AS minus_90m,
+        |  CAST(ts + INTERVAL 1 DAY AS TIMESTAMP) AS plus_1d,
+        |  CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_start,
+        |  CAST(date_trunc('minute', ts) AS TIMESTAMP) AS minute_start,
+        |  EXTRACT(HOUR FROM ts) AS h,
+        |  EXTRACT(MINUTE FROM ts) AS m,
+        |  CAST(FLOOR(EXTRACT(SECOND FROM ts)) AS BIGINT) AS sec
+        |FROM events""".stripMargin) { (s, dir) =>
       val e = Tables.load(s, dir, "events")
       e.select(
         col("event_id"),
@@ -81,7 +125,7 @@ object Conversions {
         hour(col("ts")).as("h"),
         minute(col("ts")).as("m"),
         second(col("ts")).as("sec"))
-    }),
+    },
 
     // ---- TIME type (Flink TIME(p) WITHOUT TIME ZONE) -------------------
     // The reference's TIME columns (LogicalTypeRoot.TIME_WITHOUT_TIME_ZONE,
@@ -94,7 +138,16 @@ object Conversions {
     // so the tod derives via make_time(hour, minute, second) — the
     // seconds-truncated value DuckDB's date_trunc('second', ts)::TIME
     // also produces.
-    "q89_time_type" -> ((s, dir) => {
+    Query("q89_time_type",
+      """WITH t AS (
+        |  SELECT event_type, CAST(date_trunc('second', ts) AS TIME) AS tod
+        |  FROM events
+        |  WHERE CAST(date_trunc('second', ts) AS TIME) >= TIME '06:00:00'
+        |    AND CAST(date_trunc('second', ts) AS TIME) < TIME '18:00:00')
+        |SELECT event_type, count(1) AS n,
+        |  min(tod) AS first_tod, max(tod) AS last_tod,
+        |  min(tod) + INTERVAL 1 HOUR AS first_shift
+        |FROM t GROUP BY event_type""".stripMargin) { (s, dir) =>
       val e = Tables.load(s, dir, "events")
       e.withColumn("tod",
           expr("make_time(hour(ts), minute(ts), second(ts))"))
@@ -106,7 +159,7 @@ object Conversions {
           min(col("tod")).as("first_tod"),
           max(col("tod")).as("last_tod"),
           min(expr("tod + INTERVAL 1 HOUR")).as("first_shift"))
-    }),
+    },
 
     // ---- TIMESTAMP→TIME cast through the SQL-text dialect --------------
     // (r14 tail: closes the README "casts are not wired yet" delta.)
@@ -117,7 +170,13 @@ object Conversions {
     // Flink's TIME(0) seconds truncation; time_add_wrap pins the
     // wrap-modulo-24h arithmetic (DuckDB + INTERVAL wraps natively, so
     // it oracles directly).
-    "q90_time_cast" -> ((s, dir) => {
+    Query("q90_time_cast",
+      """SELECT event_id,
+        |  CAST(ts AS TIME) AS tod,
+        |  CAST(ts AS TIME) AS tod_try,
+        |  CAST(date_trunc('second', ts) AS TIME) AS tod_sec,
+        |  CAST(ts AS TIME) + INTERVAL 20 HOUR AS wrapped
+        |FROM events""".stripMargin) { (s, dir) =>
       val env = graft.sql.SqlEnv(s)
       Tables.load(s, dir, "events").createOrReplaceTempView("events_q90")
       env.executeSql("""
@@ -128,7 +187,7 @@ object Conversions {
           time_add_wrap(CAST(ts AS TIME(6)), INTERVAL '20' HOUR) AS wrapped
         FROM events_q90
       """)
-    }),
+    },
 
     // ---- native TIME ± interval through the dialect: midnight wrap -----
     // (late r14.) wrapTimeArithmetic swaps Spark's overflow-raising
@@ -136,7 +195,11 @@ object Conversions {
     // `+`/`-` operators wrap modulo 24 h exactly like DuckDB's native
     // TIME arithmetic — which oracles them directly, crossing midnight
     // in both directions on every row.
-    "q91_time_wrap_sql" -> ((s, dir) => {
+    Query("q91_time_wrap_sql",
+      """SELECT event_id,
+        |  CAST(ts AS TIME) + INTERVAL 20 HOUR AS wrap_fwd,
+        |  CAST(ts AS TIME) - INTERVAL 7 HOUR AS wrap_back
+        |FROM events""".stripMargin) { (s, dir) =>
       val env = graft.sql.SqlEnv(s)
       Tables.load(s, dir, "events").createOrReplaceTempView("events_q91")
       env.executeSql("""
@@ -145,9 +208,22 @@ object Conversions {
           CAST(ts AS TIME(6)) - INTERVAL '7' HOUR AS wrap_back
         FROM events_q91
       """)
-    }),
+    },
 
-    "q49_json2" -> ((s, dir) => {
+    Query("q49_json2",
+      """SELECT event_id,
+        |  json_extract_string(props, '$.k') IS NOT NULL AS has_k,
+        |  json_extract_string(props, '$.missing') IS NULL AS no_missing,
+        |  to_json(struct_pack(id := event_id,
+        |    "inner" := struct_pack(t := event_type, v := value),
+        |    ids := [user_id, user_id + 1])) AS built_json,
+        |  json_extract_string(to_json(struct_pack(id := event_id,
+        |    "inner" := struct_pack(t := event_type, v := value),
+        |    ids := [user_id, user_id + 1])), '$.inner.t') AS rt_type,
+        |  CAST(json_extract_string(to_json(struct_pack(id := event_id,
+        |    "inner" := struct_pack(t := event_type, v := value),
+        |    ids := [user_id, user_id + 1])), '$.ids[1]') AS BIGINT) AS rt_id2
+        |FROM events""".stripMargin) { (s, dir) =>
       val e = Tables.load(s, dir, "events")
       val built = to_json(struct(
         col("event_id").as("id"),
@@ -174,103 +250,6 @@ object Conversions {
           col("built_json"),
           get_json_object(col("built_json"), "$.inner.t").as("rt_type"),
           get_json_object(col("built_json"), "$.ids[1]").cast("bigint").as("rt_id2"))
-    })
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q48_casts" ->
-      """SELECT p_partkey,
-        |  CAST(p_partkey AS VARCHAR) AS key_str,
-        |  CAST(p_size AS DOUBLE) AS size_dbl,
-        |  CAST(trunc(p_retailprice) AS INT) AS price_int,
-        |  CAST(p_retailprice AS VARCHAR) AS price_str,
-        |  CAST(p_size > 25 AS INT) AS big_flag,
-        |  TRY_CAST(regexp_extract(p_brand, '(\d+)', 1) AS INT) AS brand_num,
-        |  TRY_CAST(p_type AS INT) AS bad_int,
-        |  TRY_CAST(p_size AS BOOLEAN) AS size_bool,
-        |  'k' || CAST(p_partkey AS VARCHAR) AS tagged
-        |FROM part""".stripMargin,
-
-    "q53_having_in" ->
-      """SELECT o_custkey, count(*) AS n,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-        |FROM orders
-        |WHERE o_custkey IN (SELECT c_custkey FROM customer
-        |                    WHERE c_mktsegment IN ('BUILDING', 'MACHINERY'))
-        |GROUP BY o_custkey
-        |HAVING count(*) >= 2""".stripMargin,
-
-    "q54_null_logic" ->
-      """WITH m AS (
-        |  SELECT c_custkey, max(o_totalprice) AS max_price
-        |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |  GROUP BY c_custkey)
-        |SELECT c_custkey,
-        |  COALESCE(max_price, -1.0) AS price_or_neg,
-        |  max_price IS NULL AS no_orders,
-        |  NULLIF(COALESCE(max_price, 0.0), 0.0) AS null_if_zero,
-        |  CASE WHEN max_price IS NOT NULL THEN 'buyer' ELSE 'dormant' END AS status,
-        |  CAST(max_price AS DOUBLE) AS nan_guard
-        |FROM m""".stripMargin,
-
-    "q51_sql_subqueries" ->
-      """SELECT c_custkey, c_name,
-        |  (SELECT count(*) FROM orders WHERE o_custkey = c_custkey) AS n_orders
-        |FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |              WHERE o_custkey = c_custkey AND o_totalprice > 200000)
-        |  AND c_acctbal > 0""".stripMargin,
-
-    "q89_time_type" ->
-      """WITH t AS (
-        |  SELECT event_type, CAST(date_trunc('second', ts) AS TIME) AS tod
-        |  FROM events
-        |  WHERE CAST(date_trunc('second', ts) AS TIME) >= TIME '06:00:00'
-        |    AND CAST(date_trunc('second', ts) AS TIME) < TIME '18:00:00')
-        |SELECT event_type, count(1) AS n,
-        |  min(tod) AS first_tod, max(tod) AS last_tod,
-        |  min(tod) + INTERVAL 1 HOUR AS first_shift
-        |FROM t GROUP BY event_type""".stripMargin,
-
-    "q91_time_wrap_sql" ->
-      """SELECT event_id,
-        |  CAST(ts AS TIME) + INTERVAL 20 HOUR AS wrap_fwd,
-        |  CAST(ts AS TIME) - INTERVAL 7 HOUR AS wrap_back
-        |FROM events""".stripMargin,
-
-    "q90_time_cast" ->
-      """SELECT event_id,
-        |  CAST(ts AS TIME) AS tod,
-        |  CAST(ts AS TIME) AS tod_try,
-        |  CAST(date_trunc('second', ts) AS TIME) AS tod_sec,
-        |  CAST(ts AS TIME) + INTERVAL 20 HOUR AS wrapped
-        |FROM events""".stripMargin,
-
-    "q50_timestamp_arith" ->
-      """SELECT event_id,
-        |  CAST(ts + INTERVAL 2 HOUR AS TIMESTAMP) AS plus_2h,
-        |  CAST(ts - INTERVAL 90 MINUTE AS TIMESTAMP) AS minus_90m,
-        |  CAST(ts + INTERVAL 1 DAY AS TIMESTAMP) AS plus_1d,
-        |  CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_start,
-        |  CAST(date_trunc('minute', ts) AS TIMESTAMP) AS minute_start,
-        |  EXTRACT(HOUR FROM ts) AS h,
-        |  EXTRACT(MINUTE FROM ts) AS m,
-        |  CAST(FLOOR(EXTRACT(SECOND FROM ts)) AS BIGINT) AS sec
-        |FROM events""".stripMargin,
-
-    "q49_json2" ->
-      """SELECT event_id,
-        |  json_extract_string(props, '$.k') IS NOT NULL AS has_k,
-        |  json_extract_string(props, '$.missing') IS NULL AS no_missing,
-        |  to_json(struct_pack(id := event_id,
-        |    "inner" := struct_pack(t := event_type, v := value),
-        |    ids := [user_id, user_id + 1])) AS built_json,
-        |  json_extract_string(to_json(struct_pack(id := event_id,
-        |    "inner" := struct_pack(t := event_type, v := value),
-        |    ids := [user_id, user_id + 1])), '$.inner.t') AS rt_type,
-        |  CAST(json_extract_string(to_json(struct_pack(id := event_id,
-        |    "inner" := struct_pack(t := event_type, v := value),
-        |    ids := [user_id, user_id + 1])), '$.ids[1]') AS BIGINT) AS rt_id2
-        |FROM events""".stripMargin
+    }
   )
 }

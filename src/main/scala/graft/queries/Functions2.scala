@@ -1,8 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 
 /** Second scalar/aggregate function battery — fills out SURVEY.md §2.8:
@@ -16,13 +15,25 @@ import graft.Tables
   * pre-rounding absorbs it far inside the driver's 1e-9 canonical
   * rounding.
   */
-object Functions2 {
+object Functions2 extends QueryModule {
 
-  private def dec6(c: Column): Column = c.cast(DecimalType(22, 6))
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def declared: Seq[Query] = Seq(
     // ---- Encodings + regexp + split ----------------------------------
-    "q18_string_functions2" -> ((s, dir) => {
+    Query("q18_string_functions2",
+      """SELECT p_partkey,
+        |  base64(encode(p_brand)) AS brand_b64,
+        |  ascii(p_name) AS first_cp,
+        |  chr(CAST(p_partkey % 26 AS INT) + 65) AS key_chr,
+        |  hex(p_size) AS size_hex,
+        |  bin(p_size) AS size_bin,
+        |  regexp_extract(p_brand, 'Brand#(\d+)', 1) AS brand_no,
+        |  split_part(p_type, ' ', 1) AS type_first,
+        |  translate(p_brand, '#B', '_b') AS brand_tr,
+        |  repeat(p_brand, 2) AS brand_x2,
+        |  levenshtein(p_brand, p_type) AS edit_dist,
+        |  instr(p_name, 'a') AS a_pos,
+        |  array_to_string((string_split(p_type, ' '))[1:2], ' ') AS type_first2
+        |FROM part""".stripMargin) { (s, dir) =>
       val p = Tables.load(s, dir, "part")
       p.select(
         col("p_partkey"),
@@ -38,82 +49,10 @@ object Functions2 {
         levenshtein(col("p_brand"), col("p_type")).as("edit_dist"),
         instr(col("p_name"), "a").as("a_pos"),
         substring_index(col("p_type"), " ", 2).as("type_first2"))
-    }),
+    },
 
     // ---- Math / trig / log -------------------------------------------
-    "q19_math_functions" -> ((s, dir) => {
-      val p = Tables.load(s, dir, "part")
-      val x = col("p_size").cast("double")
-      def r6(c: Column) = round(c, 6)
-      p.select(
-        col("p_partkey"),
-        signum(col("p_size") - 25).cast("int").as("sgn"),
-        r6(sin(x)).as("sin_x"), r6(cos(x)).as("cos_x"), r6(tan(x)).as("tan_x"),
-        r6(atan(x)).as("atan_x"), r6(atan2(x, lit(2.0))).as("atan2_x"),
-        r6(degrees(x)).as("deg_x"), r6(radians(x)).as("rad_x"),
-        r6(log(x + 1)).as("ln_x"), r6(log10(x + 1)).as("log10_x"),
-        r6(log2(x + 1)).as("log2_x"), r6(log(3.0, x + 1)).as("log3_x"),
-        r6(exp(x / 10)).as("exp_x"), r6(pow(x, 1.5)).as("pow_x"),
-        r6(cbrt(x)).as("cbrt_x"),
-        factorial(least(col("p_size"), lit(15)).cast("int")).as("fact_x"))
-    }),
-
-    // ---- Statistical aggregates + ordered LISTAGG --------------------
-    "q30_agg_stats" -> ((s, dir) => {
-      val li = Tables.load(s, dir, "lineitem")
-      li.groupBy(col("l_returnflag"))
-        .agg(
-          round(stddev_samp(col("l_quantity")), 6).as("sd_qty"),
-          round(var_samp(col("l_quantity")), 6).as("var_qty"),
-          round(stddev_pop(col("l_quantity")), 6).as("sdp_qty"),
-          round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("corr_qp"),
-          round(covar_samp(col("l_quantity"), col("l_discount")), 6).as("cov_qd"),
-          median(col("l_quantity")).as("med_qty"),
-          min(col("l_shipdate")).as("first_ship"),
-          max(col("l_shipdate")).as("last_ship"))
-    }),
-
-    "q32_listagg" -> ((s, dir) => {
-      val n = Tables.load(s, dir, "nation")
-      val r = Tables.load(s, dir, "region")
-      n.join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"))
-        .agg(concat_ws(",", array_sort(collect_list(col("n_name")))).as("nations"),
-             count(lit(1)).as("n_nations"))
-    }),
-
-    // ---- Lookup join — SURVEY §2.3 LookupJoin ------------------------
-    // Fact rows probe a keyed dim; on a cluster the dim is broadcast
-    // (or an external KV store per partition); Spark form: broadcast
-    // hash join, zero shuffle on the fact side.
-    "q33_lookup_join" -> ((s, dir) => {
-      val li = Tables.load(s, dir, "lineitem")
-      val p  = Tables.load(s, dir, "part")
-      li.join(broadcast(p), col("l_partkey") === col("p_partkey"), "left_outer")
-        .select(col("l_orderkey"), col("l_linenumber"), col("p_brand"),
-          dec6(col("l_extendedprice") - col("p_retailprice") * col("l_quantity"))
-            .cast("double").as("margin"))
-    })
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q18_string_functions2" ->
-      """SELECT p_partkey,
-        |  base64(encode(p_brand)) AS brand_b64,
-        |  ascii(p_name) AS first_cp,
-        |  chr(CAST(p_partkey % 26 AS INT) + 65) AS key_chr,
-        |  hex(p_size) AS size_hex,
-        |  bin(p_size) AS size_bin,
-        |  regexp_extract(p_brand, 'Brand#(\d+)', 1) AS brand_no,
-        |  split_part(p_type, ' ', 1) AS type_first,
-        |  translate(p_brand, '#B', '_b') AS brand_tr,
-        |  repeat(p_brand, 2) AS brand_x2,
-        |  levenshtein(p_brand, p_type) AS edit_dist,
-        |  instr(p_name, 'a') AS a_pos,
-        |  array_to_string((string_split(p_type, ' '))[1:2], ' ') AS type_first2
-        |FROM part""".stripMargin,
-
-    "q19_math_functions" ->
+    Query("q19_math_functions",
       """SELECT p_partkey,
         |  CAST(sign(p_size - 25) AS INT) AS sgn,
         |  round(sin(CAST(p_size AS DOUBLE)), 6) AS sin_x,
@@ -131,9 +70,25 @@ object Functions2 {
         |  round(pow(p_size, 1.5), 6) AS pow_x,
         |  round(cbrt(CAST(p_size AS DOUBLE)), 6) AS cbrt_x,
         |  CAST(factorial(CAST(LEAST(p_size, 15) AS INT)) AS BIGINT) AS fact_x
-        |FROM part""".stripMargin,
+        |FROM part""".stripMargin) { (s, dir) =>
+      val p = Tables.load(s, dir, "part")
+      val x = col("p_size").cast("double")
+      def r6(c: Column) = round(c, 6)
+      p.select(
+        col("p_partkey"),
+        signum(col("p_size") - 25).cast("int").as("sgn"),
+        r6(sin(x)).as("sin_x"), r6(cos(x)).as("cos_x"), r6(tan(x)).as("tan_x"),
+        r6(atan(x)).as("atan_x"), r6(atan2(x, lit(2.0))).as("atan2_x"),
+        r6(degrees(x)).as("deg_x"), r6(radians(x)).as("rad_x"),
+        r6(log(x + 1)).as("ln_x"), r6(log10(x + 1)).as("log10_x"),
+        r6(log2(x + 1)).as("log2_x"), r6(log(3.0, x + 1)).as("log3_x"),
+        r6(exp(x / 10)).as("exp_x"), r6(pow(x, 1.5)).as("pow_x"),
+        r6(cbrt(x)).as("cbrt_x"),
+        factorial(least(col("p_size"), lit(15)).cast("int")).as("fact_x"))
+    },
 
-    "q30_agg_stats" ->
+    // ---- Statistical aggregates + ordered LISTAGG --------------------
+    Query("q30_agg_stats",
       """SELECT l_returnflag,
         |  round(stddev_samp(l_quantity), 6) AS sd_qty,
         |  round(var_samp(l_quantity), 6) AS var_qty,
@@ -143,18 +98,48 @@ object Functions2 {
         |  median(l_quantity) AS med_qty,
         |  MIN(l_shipdate) AS first_ship,
         |  MAX(l_shipdate) AS last_ship
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin) { (s, dir) =>
+      val li = Tables.load(s, dir, "lineitem")
+      li.groupBy(col("l_returnflag"))
+        .agg(
+          round(stddev_samp(col("l_quantity")), 6).as("sd_qty"),
+          round(var_samp(col("l_quantity")), 6).as("var_qty"),
+          round(stddev_pop(col("l_quantity")), 6).as("sdp_qty"),
+          round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("corr_qp"),
+          round(covar_samp(col("l_quantity"), col("l_discount")), 6).as("cov_qd"),
+          median(col("l_quantity")).as("med_qty"),
+          min(col("l_shipdate")).as("first_ship"),
+          max(col("l_shipdate")).as("last_ship"))
+    },
 
-    "q32_listagg" ->
+    Query("q32_listagg",
       """SELECT r_name,
         |  string_agg(n_name, ',' ORDER BY n_name) AS nations,
         |  COUNT(*) AS n_nations
         |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name""".stripMargin,
+        |GROUP BY r_name""".stripMargin) { (s, dir) =>
+      val n = Tables.load(s, dir, "nation")
+      val r = Tables.load(s, dir, "region")
+      n.join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
+        .groupBy(col("r_name"))
+        .agg(concat_ws(",", array_sort(collect_list(col("n_name")))).as("nations"),
+             count(lit(1)).as("n_nations"))
+    },
 
-    "q33_lookup_join" ->
+    // ---- Lookup join — SURVEY §2.3 LookupJoin ------------------------
+    // Fact rows probe a keyed dim; on a cluster the dim is broadcast
+    // (or an external KV store per partition); Spark form: broadcast
+    // hash join, zero shuffle on the fact side.
+    Query("q33_lookup_join",
       """SELECT l_orderkey, l_linenumber, p_brand,
         |  CAST(CAST(l_extendedprice - p_retailprice * l_quantity AS DECIMAL(22,6)) AS DOUBLE) AS margin
-        |FROM lineitem LEFT JOIN part ON l_partkey = p_partkey""".stripMargin
+        |FROM lineitem LEFT JOIN part ON l_partkey = p_partkey""".stripMargin) { (s, dir) =>
+      val li = Tables.load(s, dir, "lineitem")
+      val p  = Tables.load(s, dir, "part")
+      li.join(broadcast(p), col("l_partkey") === col("p_partkey"), "left_outer")
+        .select(col("l_orderkey"), col("l_linenumber"), col("p_brand"),
+          dec6(col("l_extendedprice") - col("p_retailprice") * col("l_quantity"))
+            .cast("double").as("margin"))
+    }
   )
 }

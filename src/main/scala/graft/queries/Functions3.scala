@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Strings
@@ -16,47 +16,47 @@ import graft.functions.Strings
   * read it back, so the driver's oracle (plain SELECT on the parquet
   * table) verifies the whole encode→decode cycle value-exactly.
   */
-object Functions3 {
+object Functions3 extends QueryModule {
 
   private def roundtripDir(fmt: String, dir: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_rt_${fmt}_${math.abs(dir.hashCode)}"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def declared: Seq[Query] = Seq(
     // ---- CSV format roundtrip — flink-formats/flink-csv ---------------
-    "q57_csv_roundtrip" -> ((s, dir) => {
+    Query("q57_csv_roundtrip", "SELECT * FROM nation") { (s, dir) =>
       val n = Tables.load(s, dir, "nation")
       val out = roundtripDir("csv", dir)
       n.write.mode("overwrite").option("header", "true").csv(out)
       s.read.option("header", "true").schema(n.schema).csv(out)
-    }),
+    },
 
     // ---- JSON format roundtrip — flink-formats/flink-json -------------
-    "q58_json_roundtrip" -> ((s, dir) => {
+    Query("q58_json_roundtrip", "SELECT * FROM supplier") { (s, dir) =>
       val su = Tables.load(s, dir, "supplier")
       val out = roundtripDir("json", dir)
       su.write.mode("overwrite").json(out)
       s.read.schema(su.schema).json(out)
-    }),
+    },
 
     // ---- ORC format roundtrip — flink-formats/flink-orc ---------------
-    "q59_orc_roundtrip" -> ((s, dir) => {
+    Query("q59_orc_roundtrip", "SELECT * FROM region") { (s, dir) =>
       val r = Tables.load(s, dir, "region")
       val out = roundtripDir("orc", dir)
       r.write.mode("overwrite").orc(out)
       s.read.schema(r.schema).orc(out)
-    }),
+    },
 
     // ---- Parquet WRITE path roundtrip ----------------------------------
     // The write side of the filesystem connector (the reference's
     // FileSystemTableSink with parquet format): timestamps, decimals-
     // as-doubles, strings, and nulls all survive encode→decode
     // value-exactly against the oracle's read of the ORIGINAL file.
-    "q67_parquet_roundtrip" -> ((s, dir) => {
+    Query("q67_parquet_roundtrip", "SELECT * FROM orders") { (s, dir) =>
       val o = Tables.load(s, dir, "orders")
       val out = roundtripDir("parquet", dir)
       o.write.mode("overwrite").parquet(out)
       s.read.schema(o.schema).parquet(out)
-    }),
+    },
 
     // ---- Avro format roundtrip — flink-formats/flink-avro --------------
     // No spark-avro DataSource in the sandbox; graft.sources.Avro
@@ -64,12 +64,12 @@ object Functions3 {
     // the reference's own row↔record converters). Timestamps ride the
     // timestamp-micros logical type; the oracle reads the ORIGINAL
     // table, so the hash match proves write→read value fidelity.
-    "q68_avro_roundtrip" -> ((s, dir) => {
+    Query("q68_avro_roundtrip", "SELECT * FROM orders") { (s, dir) =>
       val o = Tables.load(s, dir, "orders")
       val out = roundtripDir("avro", dir)
       graft.sources.Avro.write(o, out)
       graft.sources.Avro.read(s, out)
-    }),
+    },
 
     // ---- Avro NESTED types: array + struct through the converter ------
     // (reference: AvroRowDataSerializationSchema's nested-row branch).
@@ -78,7 +78,8 @@ object Functions3 {
     // The array is serialized to JSON text for the comparison because
     // the driver's pandas comparator cannot sort array-typed cells —
     // to_json preserves element boundaries, so it is as strong a check.
-    "q73_avro_nested" -> ((s, dir) => {
+    Query("q73_avro_nested",
+      "SELECT doc_id, CAST(to_json(string_split(text, ' ')) AS VARCHAR) AS tokens_json, lang, n_chars FROM documents") { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           split(col("text"), " ").as("tokens"),
@@ -88,21 +89,28 @@ object Functions3 {
       graft.sources.Avro.read(s, out)
         .select(col("doc_id"), to_json(col("tokens")).as("tokens_json"),
           col("info.lang").as("lang"), col("info.n_chars").as("n_chars"))
-    }),
+    },
 
     // ---- TIME(p) through the formats (r15 directive #1) ----------------
     // The reference serializes TIME as ISO text in CSV/JSON
     // (RowDataToCsvConverters / RowDataToJsonConverters TIME branches)
     // and as Avro time-millis/micros logical types
     // (AvroSchemaConverter). Spark's CSV/JSON datasources reject
-    // TimeType outright (probed in tools/TimeProbe), so the text
+    // TimeType outright (recorded in BASELINE.md), so the text
     // formats go through sources.TimeFormats (same text-on-the-wire
     // contract); Avro gained the logical-type legs natively in
     // sources.Avro. The oracle derives the same TIME values from the
     // ORIGINAL parquet, so the hash match proves each encode→decode
     // cycle value-exact — TIME(6) exercises micros, TIME(0)/TIME(3)
     // the truncating precisions.
-    "q92_csv_time_roundtrip" -> ((s, dir) => {
+    // DuckDB's TIMESTAMP is wall-clock (NTZ), so CAST(ts AS TIME) is the
+    // same UTC time of day cast_time derives under the UTC session —
+    // the q90-proven pattern. date_trunc pins the truncating precisions.
+    Query("q92_csv_time_roundtrip",
+      """SELECT event_id, event_type,
+        |  CAST(ts AS TIME) AS tod_us,
+        |  CAST(date_trunc('second', ts) AS TIME) AS tod_s
+        |FROM events""".stripMargin) { (s, dir) =>
       graft.functions.functions.register(s)
       val e = Tables.load(s, dir, "events")
         .select(col("event_id"), col("event_type"),
@@ -111,8 +119,12 @@ object Functions3 {
       val out = roundtripDir("csvtime", dir)
       graft.sources.TimeFormats.writeCsv(e, out)
       graft.sources.TimeFormats.readCsv(s, out, e.schema)
-    }),
-    "q93_json_time_roundtrip" -> ((s, dir) => {
+    },
+    Query("q93_json_time_roundtrip",
+      """SELECT event_id, value,
+        |  CAST(ts AS TIME) AS tod_us,
+        |  CAST(date_trunc('second', ts) AS TIME) AS tod_s
+        |FROM events""".stripMargin) { (s, dir) =>
       graft.functions.functions.register(s)
       val e = Tables.load(s, dir, "events")
         .select(col("event_id"), col("value"),
@@ -121,8 +133,12 @@ object Functions3 {
       val out = roundtripDir("jsontime", dir)
       graft.sources.TimeFormats.writeJson(e, out)
       graft.sources.TimeFormats.readJson(s, out, e.schema)
-    }),
-    "q94_avro_time_roundtrip" -> ((s, dir) => {
+    },
+    Query("q94_avro_time_roundtrip",
+      """SELECT event_id,
+        |  CAST(ts AS TIME) AS tod_us,
+        |  CAST(date_trunc('millisecond', ts) AS TIME) AS tod_ms
+        |FROM events""".stripMargin) { (s, dir) =>
       graft.functions.functions.register(s)
       val e = Tables.load(s, dir, "events")
         .select(col("event_id"),
@@ -131,17 +147,22 @@ object Functions3 {
       val out = roundtripDir("avrotime", dir)
       graft.sources.Avro.write(e, out)
       graft.sources.Avro.read(s, out)
-    }),
+    },
 
     // ---- TIME(p) through ORC (r16 directive #3) -------------------------
     // The reference's ORC bridge writes TIME as an int column of
     // millis-of-day (flink-orc RowDataVectorizer.java:120); Spark's ORC
-    // datasource rejects TimeType (tools/TimeProbe), so TimeFormats
+    // datasource rejects TimeType (BASELINE.md), so TimeFormats
     // applies the same numeric wire around it — INT millis for p<=3
     // (reference-compatible bytes), BIGINT micros for p>3 (the Avro
     // time-micros extension). Encode/decode are codegen'd cast chains;
     // the oracle derives the same values from the ORIGINAL parquet.
-    "q96_orc_time_roundtrip" -> ((s, dir) => {
+    Query("q96_orc_time_roundtrip",
+      """SELECT event_id, event_type,
+        |  CAST(ts AS TIME) AS tod_us,
+        |  CAST(date_trunc('millisecond', ts) AS TIME) AS tod_ms,
+        |  CAST(date_trunc('second', ts) AS TIME) AS tod_s
+        |FROM events""".stripMargin) { (s, dir) =>
       graft.functions.functions.register(s)
       val e = Tables.load(s, dir, "events")
         .select(col("event_id"), col("event_type"),
@@ -151,19 +172,19 @@ object Functions3 {
       val out = roundtripDir("orctime", dir)
       graft.sources.TimeFormats.writeOrc(e, out)
       graft.sources.TimeFormats.readOrc(s, out, e.schema)
-    }),
+    },
 
     // ---- Compressed CSV roundtrip — flink-formats compress factory ----
     // (reference: flink-formats/.../CompressWriterFactory + the
     // filesystem connector's gzip auto-detection on read). Spark's
     // codec option covers write; read auto-detects by extension.
-    "q76_csv_gzip_roundtrip" -> ((s, dir) => {
+    Query("q76_csv_gzip_roundtrip", "SELECT * FROM customer") { (s, dir) =>
       val c = Tables.load(s, dir, "customer")
       val out = roundtripDir("csvgz", dir)
       c.write.mode("overwrite").option("header", "true")
         .option("compression", "gzip").csv(out)
       s.read.option("header", "true").schema(c.schema).csv(out)
-    }),
+    },
 
     // ---- Raw (single-column) format — flink-formats/flink-raw ---------
     // (RawFormatFactory: a topic/file of bare values ↔ one STRING/BYTES
@@ -171,12 +192,12 @@ object Functions3 {
     // document's text as one line, read back as a bare `value` column.
     // Line-safety: documents are single-line by construction (verified
     // in the oracle by the identical SELECT).
-    "q77_raw_text_roundtrip" -> ((s, dir) => {
+    Query("q77_raw_text_roundtrip", "SELECT text FROM documents") { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       val out = roundtripDir("rawtext", dir)
       d.select(col("text")).write.mode("overwrite").text(out)
       s.read.text(out).select(col("value").as("text"))
-    }),
+    },
 
     // ---- Hadoop SequenceFile roundtrip — flink sequence-file format ---
     // (reference: flink-formats/flink-sequence-file). No DataFrame
@@ -184,7 +205,7 @@ object Functions3 {
     // legitimate RDD seams (per-partition imperative I/O over a legacy
     // key-value container). Text-in/Text-out, then straight back to a
     // DataFrame; the oracle reads the original table.
-    "q78_sequence_file_roundtrip" -> ((s, dir) => {
+    Query("q78_sequence_file_roundtrip", "SELECT doc_id, text FROM documents") { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       val out = roundtripDir("seqfile", dir)
       val path = new org.apache.hadoop.fs.Path(out)
@@ -197,7 +218,7 @@ object Functions3 {
       s.sparkContext.sequenceFile[String, String](out)
         .toDF("k", "text")
         .select(col("k").cast("bigint").as("doc_id"), col("text"))
-    }),
+    },
 
     // ---- Flink DDL workflow under the oracle gate ----------------------
     // The reference user's CREATE TABLE ... WITH / INSERT INTO text,
@@ -206,7 +227,10 @@ object Functions3 {
     // sink back through its registered view. The oracle recomputes the
     // projection straight from the original table, so the hash match
     // proves the whole DDL parse → write → re-register → read cycle.
-    "q79_ddl_workflow" -> ((s, dir) => {
+    Query("q79_ddl_workflow",
+      """SELECT s_suppkey, s_name,
+        |  CAST(round(s_acctbal * 100) AS BIGINT) AS bal_cents
+        |FROM supplier WHERE s_nationkey < 13""".stripMargin) { (s, dir) =>
       val env = graft.sql.SqlEnv(s)
       val sink = roundtripDir("ddlsink", dir)
       env.executeSql(
@@ -236,7 +260,7 @@ object Functions3 {
           |       CAST(round(s_acctbal * 100) AS BIGINT) AS bal_cents
           |FROM ddl_supplier WHERE s_nationkey < 13""".stripMargin)
       env.executeSql("SELECT s_suppkey, s_name, bal_cents FROM ddl_sink")
-    }),
+    },
 
     // ---- Protobuf format roundtrip — flink-formats/flink-protobuf -----
     // (ProtoToRowConverter.java:53 / RowToProtoConverter.java). No
@@ -248,7 +272,15 @@ object Functions3 {
     // repeated string, and map<string,int64>; decode back and emit
     // scalars. The oracle recomputes the same values from the ORIGINAL
     // table, so the hash match proves the whole binary roundtrip.
-    "q75_proto_roundtrip" -> ((s, dir) => {
+    Query("q75_proto_roundtrip",
+      """SELECT o_orderkey, o_orderstatus,
+        |  CAST(o_totalprice AS DOUBLE) AS price,
+        |  (o_orderpriority = '1-URGENT') AS urgent,
+        |  CAST(o_orderkey % 7 - 3 AS INT) AS koff,
+        |  len(string_split(o_orderpriority, '-')) AS n_words,
+        |  string_split(o_orderpriority, '-')[1] AS first_word,
+        |  o_custkey
+        |FROM orders""".stripMargin) { (s, dir) =>
       import graft.functions.proto._
       import graft.sources.Proto._
       val msg = PbMessage(Seq(
@@ -277,7 +309,7 @@ object Functions3 {
           size(col("m.words")).cast("long").as("n_words"),
           element_at(col("m.words"), 1).as("first_word"),
           element_at(col("m.attrs"), "ck").as("o_custkey"))
-    }),
+    },
 
     // ---- CDC changelog decode — flink-json debezium format -------------
     // Debezium envelopes are CONSTRUCTED from orders (insert / update /
@@ -287,7 +319,21 @@ object Functions3 {
     // so envelope construction AND decode are both under the gate.
     // Scale: from_json + explode is a map-side projection — the only
     // Exchange is the final 4-group aggregate.
-    "q82_cdc_decode" -> ((s, dir) => {
+    Query("q82_cdc_decode",
+      """WITH base AS (
+        |  SELECT o_orderkey AS okey, o_totalprice AS price,
+        |    o_orderkey % 3 AS m
+        |  FROM orders
+        |), r AS (
+        |  SELECT '+I' AS row_kind, okey, price FROM base WHERE m = 0
+        |  UNION ALL SELECT '-U', okey, price FROM base WHERE m = 1
+        |  UNION ALL SELECT '+U', okey, price * 1.1 FROM base WHERE m = 1
+        |  UNION ALL SELECT '-D', okey, price FROM base WHERE m = 2
+        |)
+        |SELECT row_kind, count(*) AS n,
+        |  CAST(sum(okey) AS BIGINT) AS sum_key,
+        |  CAST(sum(CAST(price AS DECIMAL(22,6))) AS DOUBLE) AS sum_price
+        |FROM r GROUP BY row_kind""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.types._
       val rowS = StructType(Seq(
         StructField("okey", LongType), StructField("price", DoubleType)))
@@ -313,7 +359,7 @@ object Functions3 {
           sum(col("okey")).as("sum_key"),
           sum(col("price").cast(DecimalType(22, 6))).cast("double")
             .as("sum_price"))
-    }),
+    },
 
     // ---- CDC end-to-end: debezium → changelog → retract-aware agg ------
     // The reference's canonical CDC consumption path
@@ -330,7 +376,22 @@ object Functions3 {
     // map-side projection; the single Exchange is the 7-bucket agg with
     // map-side partial sums. The streaming form of the same path
     // (changelogNormalize + out-of-order -U/+U) is CdcPipelineSpec.
-    "q84_cdc_pipeline" -> ((s, dir) => {
+    Query("q84_cdc_pipeline",
+      """WITH base AS (
+        |  SELECT o_orderkey AS okey, o_totalprice AS price,
+        |    o_orderkey % 2 AS odd, o_orderkey % 5 AS five
+        |  FROM orders
+        |), r AS (
+        |  SELECT okey, price, 1 AS sign FROM base
+        |  UNION ALL SELECT okey, price, -1 FROM base WHERE odd = 1
+        |  UNION ALL SELECT okey, price * 1.1, 1 FROM base WHERE odd = 1
+        |  UNION ALL SELECT okey,
+        |    CASE WHEN odd = 1 THEN price * 1.1 ELSE price END, -1
+        |  FROM base WHERE five = 0
+        |)
+        |SELECT okey % 7 AS bucket, CAST(sum(sign) AS BIGINT) AS n_alive,
+        |  CAST(sum(CAST(price * sign AS DECIMAL(22,6))) AS DOUBLE) AS sum_price
+        |FROM r GROUP BY 1""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.types._
       val rowS = StructType(Seq(
         StructField("okey", LongType), StructField("price", DoubleType)))
@@ -357,10 +418,17 @@ object Functions3 {
         .agg(sum(sign).as("n_alive"),
           sum((col("price") * sign).cast(DecimalType(22, 6))).cast("double")
             .as("sum_price"))
-    }),
+    },
 
     // ---- PARSE_URL — SqlFunctionUtils parse_url ------------------------
-    "q60_url_functions" -> ((s, dir) => {
+    Query("q60_url_functions",
+      """SELECT p_partkey,
+        |  'shop.example.com' AS host,
+        |  '/part/' || p_partkey AS path,
+        |  'brand=' || replace(p_brand, '#', '-') || '&sz=' || p_size AS query,
+        |  replace(p_brand, '#', '-') AS brand_param,
+        |  'https' AS proto
+        |FROM part""".stripMargin) { (s, dir) =>
       val p = Tables.load(s, dir, "part")
       val url = concat(lit("https://shop.example.com/part/"),
         col("p_partkey").cast("string"),
@@ -373,10 +441,24 @@ object Functions3 {
         parse_url(url, lit("QUERY")).as("query"),
         parse_url(url, lit("QUERY"), lit("brand")).as("brand_param"),
         parse_url(url, lit("PROTOCOL")).as("proto"))
-    }),
+    },
 
     // ---- OVERLAY + SIMILAR TO + IS_* predicates ------------------------
-    "q61_string_predicates" -> ((s, dir) => {
+    Query("q61_string_predicates",
+      """SELECT p_partkey,
+        |  substr(p_brand, 1, 1) || 'XY' || substr(p_brand, 4) AS brand_ov,
+        |  regexp_matches(p_type, '^.*BRUSHED.*$') AS is_brushed,
+        |  regexp_matches(p_brand, '^Brand#..$') AS brand_2d,
+        |  regexp_matches(p_name, '^[A-Za-z]+$') AS name_alpha,
+        |  regexp_matches(regexp_extract(p_name, '^([A-Za-z]+)', 1),
+        |                 '^[A-Za-z]+$') AS name_word_alpha,
+        |  regexp_matches(regexp_extract(p_brand, '(\d+)', 1), '^[0-9]+$')
+        |    AS brand_num_digit,
+        |  regexp_matches(CAST(p_retailprice AS VARCHAR),
+        |    '^[+-]?([0-9]+(\.[0-9]*)?|\.[0-9]+)([eE][+-]?[0-9]+)?$') AS price_decimal,
+        |  regexp_matches(p_type,
+        |    '^[+-]?([0-9]+(\.[0-9]*)?|\.[0-9]+)([eE][+-]?[0-9]+)?$') AS type_decimal
+        |FROM part""".stripMargin) { (s, dir) =>
       val p = Tables.load(s, dir, "part")
       p.select(
         col("p_partkey"),
@@ -389,14 +471,25 @@ object Functions3 {
         Strings.isDigit(regexp_extract(col("p_brand"), "(\\d+)", 1)).as("brand_num_digit"),
         Strings.isDecimal(col("p_retailprice").cast("string")).as("price_decimal"),
         Strings.isDecimal(col("p_type")).as("type_decimal"))
-    }),
+    },
 
     // ---- SHA2 family, UUID shape, CONVERT_TZ, TEMPORAL_OVERLAPS --------
-    "q62_hash_tz" -> ((s, dir) => {
+    Query("q62_hash_tz",
+      """SELECT event_id,
+        |  md5(event_type) AS type_md5,
+        |  sha256(event_type) AS type_sha256,
+        |  true AS sha224_ok, true AS sha384_ok, true AS sha512_ok,
+        |  true AS uuid_ok,
+        |  CAST(ts + INTERVAL 5 HOUR AS TIMESTAMP) AS ts_plus5,
+        |  (LEAST(ts, ts + INTERVAL 30 MINUTE)
+        |     <= GREATEST(date_trunc('hour', ts), date_trunc('hour', ts) + INTERVAL 45 MINUTE)
+        |   AND LEAST(date_trunc('hour', ts), date_trunc('hour', ts) + INTERVAL 45 MINUTE)
+        |     <= GREATEST(ts, ts + INTERVAL 30 MINUTE)) AS overlaps_hour_head
+        |FROM events""".stripMargin) { (s, dir) =>
       val e = Tables.load(s, dir, "events")
       val ts = col("ts")
       p62(e, ts)
-    }),
+    },
 
     // ---- Values (inline relation) — SURVEY §2.2 Values -----------------
     // The reference's LogicalValues/BatchExecValues: a table from
@@ -412,7 +505,22 @@ object Functions3 {
     // renders its own type text). Rendering goes through explicit
     // date_format patterns on both sides so the hash compares VALUES,
     // not engine-default timestamp formatting.
-    "q99_misc_functions" -> ((s, dir) => {
+    // base64 legs via DuckDB's blob codec (same java.util.Base64
+    // alphabet); timestamp legs re-derived from epoch micros with
+    // explicit strftime patterns (%g = millis), so both engines render
+    // through pinned formats — the session is UTC on both sides.
+    Query("q99_misc_functions",
+      """SELECT c_custkey,
+        |  to_base64(CAST(c_mktsegment AS BLOB)) AS b64,
+        |  decode(from_base64(to_base64(CAST(c_name AS BLOB)))) AS name_rt,
+        |  strftime(make_timestamp(c_custkey * 1000 * 1000000), '%Y-%m-%d %H:%M:%S') AS futime,
+        |  strftime(make_timestamp(c_custkey * 1000 * 1000000), '%Y-%m-%d %H:%M:%S') AS ts0,
+        |  strftime(make_timestamp(c_custkey * 86400123 * 1000), '%Y-%m-%d %H:%M:%S.%g') AS ts3,
+        |  ifnull(nullif(c_mktsegment, 'BUILDING'), 'DEFAULT') AS ifn,
+        |  strftime(make_timestamp(c_custkey * 1000 * 1000000), '%Y-%m-%d %H:%M:%S') AS ts_parse,
+        |  strftime(make_timestamp(c_custkey * 1000 * 1000000), '%Y-%m-%d') AS d_parse,
+        |  c_name AS enc_rt
+        |FROM customer""".stripMargin) { (s, dir) =>
       graft.functions.functions.register(s)
       Tables.load(s, dir, "customer")
         .select(col("c_custkey"),
@@ -427,21 +535,31 @@ object Functions3 {
           expr("date_format(to_timestamp(from_unixtime(c_custkey * 1000)), 'yyyy-MM-dd HH:mm:ss')").as("ts_parse"),
           expr("CAST(to_date(from_unixtime(c_custkey * 1000)) AS STRING)").as("d_parse"),
           expr("decode(encode(c_name, 'UTF-8'), 'UTF-8')").as("enc_rt"))
-    }),
+    },
 
-    "q65_values" -> ((s, _) => s.sql(
+    Query("q65_values",
+      """SELECT id, name, CAST(price AS DOUBLE) AS price,
+        |       CAST(price * 2 AS DOUBLE) AS doubled
+        |FROM (VALUES (1, 'alpha', 1.5), (2, 'beta', 2.5), (3, 'gamma', 0.0))
+        |  t(id, name, price)
+        |WHERE id <= 3""".stripMargin) { (s, _) => s.sql(
       """SELECT id, name, CAST(price AS DOUBLE) AS price,
         |       CAST(price * 2 AS DOUBLE) AS doubled
         |FROM VALUES (1, 'alpha', 1.5), (2, 'beta', 2.5), (3, 'gamma', 0.0)
         |  AS t(id, name, price)
-        |WHERE id <= 3""".stripMargin)),
+        |WHERE id <= 3""".stripMargin) },
 
     // ---- APPROX_COUNT_DISTINCT — HyperLogLogPlusPlus.java:26 -----------
     // Sketch values differ across engines by construction; the gate
     // checks the reference's contract instead: estimate within 5% of
     // exact (HLL++ default rsd is 5%), alongside exact counts DuckDB
     // verifies value-exactly.
-    "q63_approx_distinct" -> ((s, dir) => {
+    Query("q63_approx_distinct",
+      """SELECT l_returnflag,
+        |  COUNT(DISTINCT l_partkey) AS exact_parts,
+        |  COUNT(*) AS n_rows,
+        |  true AS acd_ok
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin) { (s, dir) =>
       val li = Tables.load(s, dir, "lineitem")
       li.groupBy(col("l_returnflag"))
         .agg(countDistinct(col("l_partkey")).as("exact_parts"),
@@ -449,7 +567,7 @@ object Functions3 {
              (abs(approx_count_distinct(col("l_partkey")).cast("double") -
                   countDistinct(col("l_partkey")).cast("double")) /
               countDistinct(col("l_partkey")).cast("double") < 0.05).as("acd_ok"))
-    })
+    }
   )
 
   private def p62(e: DataFrame, ts: org.apache.spark.sql.Column): DataFrame =
@@ -468,155 +586,4 @@ object Functions3 {
       Strings.temporalOverlaps(ts, ts + expr("INTERVAL 30 MINUTES"),
         date_trunc("hour", ts), date_trunc("hour", ts) + expr("INTERVAL 45 MINUTES"))
         .as("overlaps_hour_head"))
-
-  def oracles: Map[String, String] = Map(
-    // base64 legs via DuckDB's blob codec (same java.util.Base64
-    // alphabet); timestamp legs re-derived from epoch micros with
-    // explicit strftime patterns (%g = millis), so both engines render
-    // through pinned formats — the session is UTC on both sides.
-    "q99_misc_functions" ->
-      """SELECT c_custkey,
-        |  to_base64(CAST(c_mktsegment AS BLOB)) AS b64,
-        |  decode(from_base64(to_base64(CAST(c_name AS BLOB)))) AS name_rt,
-        |  strftime(make_timestamp(c_custkey * 1000 * 1000000), '%Y-%m-%d %H:%M:%S') AS futime,
-        |  strftime(make_timestamp(c_custkey * 1000 * 1000000), '%Y-%m-%d %H:%M:%S') AS ts0,
-        |  strftime(make_timestamp(c_custkey * 86400123 * 1000), '%Y-%m-%d %H:%M:%S.%g') AS ts3,
-        |  ifnull(nullif(c_mktsegment, 'BUILDING'), 'DEFAULT') AS ifn,
-        |  strftime(make_timestamp(c_custkey * 1000 * 1000000), '%Y-%m-%d %H:%M:%S') AS ts_parse,
-        |  strftime(make_timestamp(c_custkey * 1000 * 1000000), '%Y-%m-%d') AS d_parse,
-        |  c_name AS enc_rt
-        |FROM customer""".stripMargin,
-    "q57_csv_roundtrip" -> "SELECT * FROM nation",
-    "q58_json_roundtrip" -> "SELECT * FROM supplier",
-    "q59_orc_roundtrip" -> "SELECT * FROM region",
-    "q67_parquet_roundtrip" -> "SELECT * FROM orders",
-    "q68_avro_roundtrip" -> "SELECT * FROM orders",
-    "q76_csv_gzip_roundtrip" -> "SELECT * FROM customer",
-    // DuckDB's TIMESTAMP is wall-clock (NTZ), so CAST(ts AS TIME) is the
-    // same UTC time of day cast_time derives under the UTC session —
-    // the q90-proven pattern. date_trunc pins the truncating precisions.
-    "q92_csv_time_roundtrip" ->
-      """SELECT event_id, event_type,
-        |  CAST(ts AS TIME) AS tod_us,
-        |  CAST(date_trunc('second', ts) AS TIME) AS tod_s
-        |FROM events""".stripMargin,
-    "q93_json_time_roundtrip" ->
-      """SELECT event_id, value,
-        |  CAST(ts AS TIME) AS tod_us,
-        |  CAST(date_trunc('second', ts) AS TIME) AS tod_s
-        |FROM events""".stripMargin,
-    "q94_avro_time_roundtrip" ->
-      """SELECT event_id,
-        |  CAST(ts AS TIME) AS tod_us,
-        |  CAST(date_trunc('millisecond', ts) AS TIME) AS tod_ms
-        |FROM events""".stripMargin,
-    "q96_orc_time_roundtrip" ->
-      """SELECT event_id, event_type,
-        |  CAST(ts AS TIME) AS tod_us,
-        |  CAST(date_trunc('millisecond', ts) AS TIME) AS tod_ms,
-        |  CAST(date_trunc('second', ts) AS TIME) AS tod_s
-        |FROM events""".stripMargin,
-    "q77_raw_text_roundtrip" -> "SELECT text FROM documents",
-    "q78_sequence_file_roundtrip" -> "SELECT doc_id, text FROM documents",
-    "q79_ddl_workflow" ->
-      """SELECT s_suppkey, s_name,
-        |  CAST(round(s_acctbal * 100) AS BIGINT) AS bal_cents
-        |FROM supplier WHERE s_nationkey < 13""".stripMargin,
-    "q75_proto_roundtrip" ->
-      """SELECT o_orderkey, o_orderstatus,
-        |  CAST(o_totalprice AS DOUBLE) AS price,
-        |  (o_orderpriority = '1-URGENT') AS urgent,
-        |  CAST(o_orderkey % 7 - 3 AS INT) AS koff,
-        |  len(string_split(o_orderpriority, '-')) AS n_words,
-        |  string_split(o_orderpriority, '-')[1] AS first_word,
-        |  o_custkey
-        |FROM orders""".stripMargin,
-    "q73_avro_nested" ->
-      "SELECT doc_id, CAST(to_json(string_split(text, ' ')) AS VARCHAR) AS tokens_json, lang, n_chars FROM documents",
-
-    "q82_cdc_decode" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS okey, o_totalprice AS price,
-        |    o_orderkey % 3 AS m
-        |  FROM orders
-        |), r AS (
-        |  SELECT '+I' AS row_kind, okey, price FROM base WHERE m = 0
-        |  UNION ALL SELECT '-U', okey, price FROM base WHERE m = 1
-        |  UNION ALL SELECT '+U', okey, price * 1.1 FROM base WHERE m = 1
-        |  UNION ALL SELECT '-D', okey, price FROM base WHERE m = 2
-        |)
-        |SELECT row_kind, count(*) AS n,
-        |  CAST(sum(okey) AS BIGINT) AS sum_key,
-        |  CAST(sum(CAST(price AS DECIMAL(22,6))) AS DOUBLE) AS sum_price
-        |FROM r GROUP BY row_kind""".stripMargin,
-
-    "q84_cdc_pipeline" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS okey, o_totalprice AS price,
-        |    o_orderkey % 2 AS odd, o_orderkey % 5 AS five
-        |  FROM orders
-        |), r AS (
-        |  SELECT okey, price, 1 AS sign FROM base
-        |  UNION ALL SELECT okey, price, -1 FROM base WHERE odd = 1
-        |  UNION ALL SELECT okey, price * 1.1, 1 FROM base WHERE odd = 1
-        |  UNION ALL SELECT okey,
-        |    CASE WHEN odd = 1 THEN price * 1.1 ELSE price END, -1
-        |  FROM base WHERE five = 0
-        |)
-        |SELECT okey % 7 AS bucket, CAST(sum(sign) AS BIGINT) AS n_alive,
-        |  CAST(sum(CAST(price * sign AS DECIMAL(22,6))) AS DOUBLE) AS sum_price
-        |FROM r GROUP BY 1""".stripMargin,
-
-    "q60_url_functions" ->
-      """SELECT p_partkey,
-        |  'shop.example.com' AS host,
-        |  '/part/' || p_partkey AS path,
-        |  'brand=' || replace(p_brand, '#', '-') || '&sz=' || p_size AS query,
-        |  replace(p_brand, '#', '-') AS brand_param,
-        |  'https' AS proto
-        |FROM part""".stripMargin,
-
-    "q61_string_predicates" ->
-      """SELECT p_partkey,
-        |  substr(p_brand, 1, 1) || 'XY' || substr(p_brand, 4) AS brand_ov,
-        |  regexp_matches(p_type, '^.*BRUSHED.*$') AS is_brushed,
-        |  regexp_matches(p_brand, '^Brand#..$') AS brand_2d,
-        |  regexp_matches(p_name, '^[A-Za-z]+$') AS name_alpha,
-        |  regexp_matches(regexp_extract(p_name, '^([A-Za-z]+)', 1),
-        |                 '^[A-Za-z]+$') AS name_word_alpha,
-        |  regexp_matches(regexp_extract(p_brand, '(\d+)', 1), '^[0-9]+$')
-        |    AS brand_num_digit,
-        |  regexp_matches(CAST(p_retailprice AS VARCHAR),
-        |    '^[+-]?([0-9]+(\.[0-9]*)?|\.[0-9]+)([eE][+-]?[0-9]+)?$') AS price_decimal,
-        |  regexp_matches(p_type,
-        |    '^[+-]?([0-9]+(\.[0-9]*)?|\.[0-9]+)([eE][+-]?[0-9]+)?$') AS type_decimal
-        |FROM part""".stripMargin,
-
-    "q62_hash_tz" ->
-      """SELECT event_id,
-        |  md5(event_type) AS type_md5,
-        |  sha256(event_type) AS type_sha256,
-        |  true AS sha224_ok, true AS sha384_ok, true AS sha512_ok,
-        |  true AS uuid_ok,
-        |  CAST(ts + INTERVAL 5 HOUR AS TIMESTAMP) AS ts_plus5,
-        |  (LEAST(ts, ts + INTERVAL 30 MINUTE)
-        |     <= GREATEST(date_trunc('hour', ts), date_trunc('hour', ts) + INTERVAL 45 MINUTE)
-        |   AND LEAST(date_trunc('hour', ts), date_trunc('hour', ts) + INTERVAL 45 MINUTE)
-        |     <= GREATEST(ts, ts + INTERVAL 30 MINUTE)) AS overlaps_hour_head
-        |FROM events""".stripMargin,
-
-    "q65_values" ->
-      """SELECT id, name, CAST(price AS DOUBLE) AS price,
-        |       CAST(price * 2 AS DOUBLE) AS doubled
-        |FROM (VALUES (1, 'alpha', 1.5), (2, 'beta', 2.5), (3, 'gamma', 0.0))
-        |  t(id, name, price)
-        |WHERE id <= 3""".stripMargin,
-
-    "q63_approx_distinct" ->
-      """SELECT l_returnflag,
-        |  COUNT(DISTINCT l_partkey) AS exact_parts,
-        |  COUNT(*) AS n_rows,
-        |  true AS acd_ok
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin
-  )
 }

@@ -39,7 +39,7 @@ import graft.functions.functions.{minhash, simhash, hamming64, sig_agree, token_
   * the minhash computation itself is verified, not just the banding
   * downstream of it.
   */
-object NearDup {
+object NearDup extends QueryModule {
 
   val K = 128       // minhash permutations
   val BANDS = 16    // LSH bands → 8 rows per band
@@ -51,14 +51,6 @@ object NearDup {
   // comfortably above any LSH near-dup cluster's diameter, and a
   // divergence surfaces as poison rows, never as a silent pass)
   val OracleLpRounds = 12
-
-  /** Deterministic side-path for oracle-shared signature tables,
-    * keyed by SF directory name so scales don't clobber each other.
-    * The static oracle SQL references the sf0.01 instance (the
-    * driver's correctness SF).
-    */
-  private def sideDir(dir: String): String =
-    s"/tmp/graft_oracle/${new java.io.File(dir).getName}"
 
   private def tokens = array_distinct(split(col("text"), " "))
 
@@ -73,7 +65,7 @@ object NearDup {
 
   /** Write-then-read-back of the minhash signature table. */
   private def sigsTable(s: SparkSession, dir: String): DataFrame = {
-    val p = Staging.parquetOnce(s"$dir#sigs", s"${sideDir(dir)}/minhash_sigs") { p0 =>
+    val p = Staging.parquetOnce(s"$dir#sigs", s"${Staging.sideDir(dir)}/minhash_sigs") { p0 =>
       Tables.load(s, dir, "documents")
         .select(col("doc_id"), minhash(tokens, K).as("sig"))
         .write.mode("overwrite").parquet(p0)
@@ -86,7 +78,7 @@ object NearDup {
     * so the oracle bands the exact same rows.
     */
   private def bandedTable(s: SparkSession, dir: String): DataFrame = {
-    val p = Staging.parquetOnce(s"$dir#banded", s"${sideDir(dir)}/minhash_banded") { p0 =>
+    val p = Staging.parquetOnce(s"$dir#banded", s"${Staging.sideDir(dir)}/minhash_banded") { p0 =>
       sigsTable(s, dir)
         .select(col("doc_id"),
           explode(expr(s"transform(sequence(0, ${BANDS - 1}), " +
@@ -99,7 +91,7 @@ object NearDup {
 
   /** Write-then-read-back of the simhash signature table. */
   private def simhashTable(s: SparkSession, dir: String): DataFrame = {
-    val p = Staging.parquetOnce(s"$dir#simhash", s"${sideDir(dir)}/simhash_sigs") { p0 =>
+    val p = Staging.parquetOnce(s"$dir#simhash", s"${Staging.sideDir(dir)}/simhash_sigs") { p0 =>
       Tables.load(s, dir, "documents")
         .select(col("doc_id"), simhash(split(col("text"), " ")).as("sig"))
         .write.mode("overwrite").parquet(p0)
@@ -107,14 +99,34 @@ object NearDup {
     s.read.parquet(p)
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def declared: Seq[Query] = Seq(
     // ---- MinHash signatures (per-doc, deterministic) ------------------
     // One row per (doc, permutation index) — pure scalars, because the
     // driver's pandas-based comparator cannot sort array-typed cells.
     // The side table holds the per-token base hashes the oracle folds
     // the permutations over.
-    "n50_minhash_signatures" -> ((s, dir) => {
-      Staging.parquetOnce(s"$dir#tokhash", s"${sideDir(dir)}/token_hashes") { p =>
+    Query("n50_minhash_signatures", s"""
+        WITH th AS (SELECT * FROM read_parquet('__SIDE__/token_hashes/*.parquet')),
+        coef(j, a_hi, a_lo, b_hi, b_lo) AS (VALUES
+          $coefRows),
+        hu AS (SELECT doc_id,
+                 CASE WHEN h < 0 THEN CAST(h AS HUGEINT) + 18446744073709551616
+                      ELSE CAST(h AS HUGEINT) END AS hq
+               FROM th),
+        v AS (SELECT doc_id, j,
+                ((CAST(a_lo AS HUGEINT) * (hq % 4294967296)
+                  + (((CAST(a_lo AS HUGEINT) * (hq // 4294967296)
+                       + CAST(a_hi AS HUGEINT) * (hq % 4294967296)) % 4294967296) * 4294967296)
+                 ) % 18446744073709551616
+                 + (CAST(b_hi AS HUGEINT) * 4294967296 + CAST(b_lo AS HUGEINT))
+                ) % 18446744073709551616 AS v
+              FROM hu, coef),
+        m AS (SELECT doc_id, j, min(v) AS mv FROM v GROUP BY doc_id, j)
+        SELECT doc_id, CAST(j AS INT) AS sig_idx,
+          CAST(CASE WHEN mv >= 9223372036854775808
+                    THEN mv - 18446744073709551616 ELSE mv END AS BIGINT) AS sig_val
+        FROM m""") { (s, dir) =>
+      Staging.parquetOnce(s"$dir#tokhash", s"${Staging.sideDir(dir)}/token_hashes") { p =>
         Tables.load(s, dir, "documents")
           .select(col("doc_id"), explode(token_hashes(tokens)).as("h"))
           .write.mode("overwrite").parquet(p)
@@ -123,14 +135,22 @@ object NearDup {
         .select(col("doc_id"), posexplode(minhash(tokens, K)))
         .withColumnRenamed("pos", "sig_idx")
         .withColumnRenamed("col", "sig_val")
-    }),
+    },
 
     // ---- MinHash-LSH dedup clusters (linear in corpus size) -----------
     // Each doc's cluster representative = the smallest doc_id it shares
     // any band bucket with (one union-find hop — iterate for full
     // transitive closure if needed). Output size = corpus size
     // regardless of how degenerate the duplicate structure is.
-    "n51_minhash_dedup_clusters" -> ((s, dir) => {
+    Query("n51_minhash_dedup_clusters", s"""
+        WITH b AS (SELECT * FROM $banded),
+        rep AS (SELECT band, bucket, min(doc_id) AS bucket_rep, count(*) AS bucket_size
+                FROM b GROUP BY band, bucket)
+        SELECT doc_id, min(bucket_rep) AS cluster_rep,
+               max(bucket_size - 1) AS max_collisions,
+               (min(bucket_rep) = doc_id) AS is_canonical
+        FROM b JOIN rep USING (band, bucket)
+        GROUP BY doc_id""") { (s, dir) =>
       val b = bandedTable(s, dir)
       val bucketRep = b.groupBy(col("band"), col("bucket"))
         .agg(min(col("doc_id")).as("bucket_rep"), count(lit(1)).as("bucket_size"))
@@ -139,10 +159,23 @@ object NearDup {
         .agg(min(col("bucket_rep")).as("cluster_rep"),
              max(col("bucket_size") - 1).as("max_collisions"))
         .withColumn("is_canonical", col("cluster_rep") === col("doc_id"))
-    }),
+    },
 
     // ---- MinHash-LSH near-dup pairs (bucket-capped) -------------------
-    "n53_minhash_lsh_pairs" -> ((s, dir) => {
+    Query("n53_minhash_lsh_pairs", s"""
+        WITH b AS (SELECT * FROM $banded),
+        sized AS (SELECT *, count(*) OVER (PARTITION BY band, bucket) AS bucket_size FROM b),
+        f AS (SELECT * FROM sized WHERE bucket_size <= $MaxBucketSize),
+        pairs AS (SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
+                  FROM f l JOIN f r USING (band, bucket)
+                  WHERE l.doc_id < r.doc_id),
+        s AS (SELECT * FROM $sigs)
+        SELECT doc_a, doc_b,
+          CAST(len(list_filter(range(1, ${K + 1}), i -> sa.sig[i] = sb.sig[i])) AS DOUBLE) / $K AS est_jaccard
+        FROM pairs
+        JOIN s sa ON sa.doc_id = doc_a
+        JOIN s sb ON sb.doc_id = doc_b
+        WHERE CAST(len(list_filter(range(1, ${K + 1}), i -> sa.sig[i] = sb.sig[i])) AS DOUBLE) / $K >= 0.5""") { (s, dir) =>
       val b = bandedTable(s, dir)
       val sized = b.withColumn("bucket_size",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
@@ -163,10 +196,19 @@ object NearDup {
         .select(col("doc_a"), col("doc_b"),
           (sig_agree(col("sig_a"), col("sig_b")).cast("double") / K).as("est_jaccard"))
         .filter(col("est_jaccard") >= 0.5)
-    }),
+    },
 
     // ---- SimHash dedup: exact-signature groups + banded near-pairs ----
-    "n52_simhash_pairs" -> ((s, dir) => {
+    Query("n52_simhash_pairs", s"""
+        WITH s AS (SELECT * FROM $simsigs),
+        chunks AS (SELECT doc_id, sig, c AS chunk, (sig >> (CAST(c AS INT) * 16)) & 65535 AS ck
+                   FROM s, range(0, 4) t(c)),
+        sized AS (SELECT *, count(*) OVER (PARTITION BY chunk, ck) AS bucket_size FROM chunks),
+        f AS (SELECT * FROM sized WHERE bucket_size <= $MaxBucketSize)
+        SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
+               bit_count(xor(l.sig, r.sig)) AS hamming
+        FROM f l JOIN f r USING (chunk, ck)
+        WHERE l.doc_id < r.doc_id AND bit_count(xor(l.sig, r.sig)) <= 16""") { (s, dir) =>
       val sigs = simhashTable(s, dir)
       // 4 × 16-bit chunks: near-dups (hamming ≤ 3) share ≥1 exact chunk
       val chunks = sigs.select(col("doc_id"), col("sig"),
@@ -186,7 +228,7 @@ object NearDup {
           hamming64(col("sig_a"), col("sig_b")).as("hamming"))
         .distinct()
         .filter(col("hamming") <= 16)
-    }),
+    },
 
     // ---- Full connected components over the LSH bucket graph ----------
     // n51 is ONE union-find hop (doc → min over its buckets); chained
@@ -205,7 +247,51 @@ object NearDup {
     // blowup); checkpointing truncates the lineage so round N plans
     // against a leaf. On a cluster this would be checkpoint() to
     // reliable storage for executor-loss tolerance.
-    "n54_connected_components" -> ((s, dir) => {
+    // Unrolled bucket-min label propagation (NOT a recursive-CTE
+    // transitive closure: that materializes reachability PAIRS, which
+    // goes quadratic the moment the fixture has a dense near-dup
+    // cluster — at sf0.1 one hub bucket holds 1771 docs and the
+    // closure runs for hours). Each round is two corpus-linear
+    // aggregations — the same algorithm the engine runs, re-derived
+    // independently in SQL. A final extra round guards convergence:
+    // if any label still moves after $OracleLpRounds rounds, poison
+    // rows (doc_id = -1) make the hash mismatch loud instead of
+    // silently comparing non-converged labels.
+    //
+    // Every CTE is MATERIALIZED: DuckDB (1.0) inlines CTEs by
+    // default, and each l_i is referenced twice per round, so the
+    // inlined plan doubles every round — 2^12 scan expansions. That
+    // blowup is what actually redded r11's n54 row: the binder died
+    // with a *spurious* "No files found … minhash_banded/*.parquet"
+    // while the staged files were on disk the whole time (bisect:
+    // 6 rounds 0.4 s, 8 rounds 6.7 s, 10 rounds 137 s, 12 rounds =
+    // the IO error). Materialized, the whole closure binds and runs
+    // in ~0.1 s at sf0.01.
+    Query("n54_connected_components", {
+      val rounds = (0 until OracleLpRounds).map { i =>
+          s"""bm$i AS MATERIALIZED (SELECT band, bucket, min(l.label) AS bmin
+               FROM b JOIN l$i l USING (doc_id) GROUP BY band, bucket),
+           dm$i AS MATERIALIZED (SELECT b.doc_id, min(bm.bmin) AS mn
+               FROM b JOIN bm$i bm USING (band, bucket) GROUP BY b.doc_id),
+           l${i + 1} AS MATERIALIZED (SELECT l.doc_id, least(l.label, coalesce(m.mn, l.label)) AS label
+               FROM l$i l LEFT JOIN dm$i m USING (doc_id))"""
+      }.mkString(",\n        ")
+      val n = OracleLpRounds
+      s"""
+        WITH
+        b AS MATERIALIZED (SELECT * FROM $banded),
+        l0 AS MATERIALIZED (SELECT DISTINCT doc_id, doc_id AS label FROM b),
+        $rounds,
+        moved AS (SELECT count(*) AS n FROM l${n - 1} p JOIN l$n q USING (doc_id)
+                  WHERE p.label <> q.label),
+        comp AS (SELECT doc_id, label AS component FROM l$n)
+        SELECT doc_id, component,
+          count(*) OVER (PARTITION BY component) AS component_size,
+          doc_id = component AS is_canonical
+        FROM comp
+        UNION ALL
+        SELECT -1, -1, n, false FROM moved WHERE n > 0"""
+    }) { (s, dir) =>
       // r21: the banded table feeds TWO joins per round — keyed on
       // doc_id and on (band, bucket) — and the old loop re-scanned the
       // parquet and re-shuffled it for BOTH joins in EVERY round.
@@ -290,7 +376,7 @@ object NearDup {
         .select(col("doc_id"), col("label").as("component"),
           col("component_size"),
           (col("doc_id") === col("label")).as("is_canonical"))
-    })
+    }
   )
 
   /** Oracles for everything downstream of the custom hash Expressions,
@@ -302,117 +388,14 @@ object NearDup {
     * values land in [0, 2⁶⁴) so plain numeric min is unsigned min —
     * mapped back to the signed bigint Spark emits.
     */
-  def oracles: Map[String, String] = {
-    val banded = "read_parquet('/tmp/graft_oracle/__SF__/minhash_banded/*.parquet')"
-    val sigs = "read_parquet('/tmp/graft_oracle/__SF__/minhash_sigs/*.parquet')"
-    val simsigs = "read_parquet('/tmp/graft_oracle/__SF__/simhash_sigs/*.parquet')"
+  private val banded = "read_parquet('__SIDE__/minhash_banded/*.parquet')"
+  private val sigs = "read_parquet('__SIDE__/minhash_sigs/*.parquet')"
+  private val simsigs = "read_parquet('__SIDE__/simhash_sigs/*.parquet')"
+  private val coefRows = {
     val (cas, cbs) = graft.functions.MinHashSignature.coefficients(K)
-    val coefRows = (0 until K).map { j =>
+    (0 until K).map { j =>
       s"(${j}, ${cas(j) >>> 32}, ${cas(j) & 0xFFFFFFFFL}, " +
         s"${cbs(j) >>> 32}, ${cbs(j) & 0xFFFFFFFFL})"
     }.mkString(",\n          ")
-    Map(
-      "n50_minhash_signatures" -> s"""
-        WITH th AS (SELECT * FROM read_parquet('/tmp/graft_oracle/__SF__/token_hashes/*.parquet')),
-        coef(j, a_hi, a_lo, b_hi, b_lo) AS (VALUES
-          $coefRows),
-        hu AS (SELECT doc_id,
-                 CASE WHEN h < 0 THEN CAST(h AS HUGEINT) + 18446744073709551616
-                      ELSE CAST(h AS HUGEINT) END AS hq
-               FROM th),
-        v AS (SELECT doc_id, j,
-                ((CAST(a_lo AS HUGEINT) * (hq % 4294967296)
-                  + (((CAST(a_lo AS HUGEINT) * (hq // 4294967296)
-                       + CAST(a_hi AS HUGEINT) * (hq % 4294967296)) % 4294967296) * 4294967296)
-                 ) % 18446744073709551616
-                 + (CAST(b_hi AS HUGEINT) * 4294967296 + CAST(b_lo AS HUGEINT))
-                ) % 18446744073709551616 AS v
-              FROM hu, coef),
-        m AS (SELECT doc_id, j, min(v) AS mv FROM v GROUP BY doc_id, j)
-        SELECT doc_id, CAST(j AS INT) AS sig_idx,
-          CAST(CASE WHEN mv >= 9223372036854775808
-                    THEN mv - 18446744073709551616 ELSE mv END AS BIGINT) AS sig_val
-        FROM m""",
-      "n51_minhash_dedup_clusters" -> s"""
-        WITH b AS (SELECT * FROM $banded),
-        rep AS (SELECT band, bucket, min(doc_id) AS bucket_rep, count(*) AS bucket_size
-                FROM b GROUP BY band, bucket)
-        SELECT doc_id, min(bucket_rep) AS cluster_rep,
-               max(bucket_size - 1) AS max_collisions,
-               (min(bucket_rep) = doc_id) AS is_canonical
-        FROM b JOIN rep USING (band, bucket)
-        GROUP BY doc_id""",
-
-      "n53_minhash_lsh_pairs" -> s"""
-        WITH b AS (SELECT * FROM $banded),
-        sized AS (SELECT *, count(*) OVER (PARTITION BY band, bucket) AS bucket_size FROM b),
-        f AS (SELECT * FROM sized WHERE bucket_size <= $MaxBucketSize),
-        pairs AS (SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
-                  FROM f l JOIN f r USING (band, bucket)
-                  WHERE l.doc_id < r.doc_id),
-        s AS (SELECT * FROM $sigs)
-        SELECT doc_a, doc_b,
-          CAST(len(list_filter(range(1, ${K + 1}), i -> sa.sig[i] = sb.sig[i])) AS DOUBLE) / $K AS est_jaccard
-        FROM pairs
-        JOIN s sa ON sa.doc_id = doc_a
-        JOIN s sb ON sb.doc_id = doc_b
-        WHERE CAST(len(list_filter(range(1, ${K + 1}), i -> sa.sig[i] = sb.sig[i])) AS DOUBLE) / $K >= 0.5""",
-
-      "n52_simhash_pairs" -> s"""
-        WITH s AS (SELECT * FROM $simsigs),
-        chunks AS (SELECT doc_id, sig, c AS chunk, (sig >> (CAST(c AS INT) * 16)) & 65535 AS ck
-                   FROM s, range(0, 4) t(c)),
-        sized AS (SELECT *, count(*) OVER (PARTITION BY chunk, ck) AS bucket_size FROM chunks),
-        f AS (SELECT * FROM sized WHERE bucket_size <= $MaxBucketSize)
-        SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b,
-               bit_count(xor(l.sig, r.sig)) AS hamming
-        FROM f l JOIN f r USING (chunk, ck)
-        WHERE l.doc_id < r.doc_id AND bit_count(xor(l.sig, r.sig)) <= 16""",
-
-      // Unrolled bucket-min label propagation (NOT a recursive-CTE
-      // transitive closure: that materializes reachability PAIRS, which
-      // goes quadratic the moment the fixture has a dense near-dup
-      // cluster — at sf0.1 one hub bucket holds 1771 docs and the
-      // closure runs for hours). Each round is two corpus-linear
-      // aggregations — the same algorithm the engine runs, re-derived
-      // independently in SQL. A final extra round guards convergence:
-      // if any label still moves after $OracleLpRounds rounds, poison
-      // rows (doc_id = -1) make the hash mismatch loud instead of
-      // silently comparing non-converged labels.
-      //
-      // Every CTE is MATERIALIZED: DuckDB (1.0) inlines CTEs by
-      // default, and each l_i is referenced twice per round, so the
-      // inlined plan doubles every round — 2^12 scan expansions. That
-      // blowup is what actually redded r11's n54 row: the binder died
-      // with a *spurious* "No files found … minhash_banded/*.parquet"
-      // while the staged files were on disk the whole time (bisect:
-      // 6 rounds 0.4 s, 8 rounds 6.7 s, 10 rounds 137 s, 12 rounds =
-      // the IO error). Materialized, the whole closure binds and runs
-      // in ~0.1 s at sf0.01.
-      "n54_connected_components" -> {
-        val rounds = (0 until OracleLpRounds).map { i =>
-          s"""bm$i AS MATERIALIZED (SELECT band, bucket, min(l.label) AS bmin
-               FROM b JOIN l$i l USING (doc_id) GROUP BY band, bucket),
-           dm$i AS MATERIALIZED (SELECT b.doc_id, min(bm.bmin) AS mn
-               FROM b JOIN bm$i bm USING (band, bucket) GROUP BY b.doc_id),
-           l${i + 1} AS MATERIALIZED (SELECT l.doc_id, least(l.label, coalesce(m.mn, l.label)) AS label
-               FROM l$i l LEFT JOIN dm$i m USING (doc_id))"""
-        }.mkString(",\n        ")
-        val n = OracleLpRounds
-        s"""
-        WITH
-        b AS MATERIALIZED (SELECT * FROM $banded),
-        l0 AS MATERIALIZED (SELECT DISTINCT doc_id, doc_id AS label FROM b),
-        $rounds,
-        moved AS (SELECT count(*) AS n FROM l${n - 1} p JOIN l$n q USING (doc_id)
-                  WHERE p.label <> q.label),
-        comp AS (SELECT doc_id, label AS component FROM l$n)
-        SELECT doc_id, component,
-          count(*) OVER (PARTITION BY component) AS component_size,
-          doc_id = component AS is_canonical
-        FROM comp
-        UNION ALL
-        SELECT -1, -1, n, false FROM moved WHERE n > 0"""
-      })
   }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -34,10 +34,7 @@ import graft.Tables
   * handling ≈ adaptive batch scheduler docs, percentiles ≈
   * PERCENT_RANK/approx aggs in the BuiltInFunctionDefinitions.
   */
-object ScaleOps {
-
-  private def sideDir(dir: String): String =
-    s"/tmp/graft_oracle/${new java.io.File(dir).getName}"
+object ScaleOps extends QueryModule {
 
   /** DECIMAL(12,2) sum emitted as DOUBLE — the oracle-parity shape for
     * sums of 2-dp money/quantity columns (see Relational.scala). */
@@ -51,8 +48,8 @@ object ScaleOps {
     */
   private val bucketedStaged = scala.collection.concurrent.TrieMap[String, Boolean]()
   private def bucketedTables(s: SparkSession, dir: String): String = {
-    val sf = new java.io.File(dir).getName.replace('.', '_')
-    val base = s"${sideDir(dir)}/bucketed"
+    val sf = new java.io.File(Staging.sideDir(dir)).getName.replace('.', '_')
+    val base = s"${Staging.sideDir(dir)}/bucketed"
     // A cache hit is only a hit if the catalog entries AND the external
     // parquet files are both still present (Staging discipline): a /tmp
     // cleaner between runs would otherwise fail every later bucketed read.
@@ -80,13 +77,18 @@ object ScaleOps {
     sf
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def declared: Seq[Query] = Seq(
     // ---- Bucketed co-located join -------------------------------------
     // The bucketed layout is written ONCE per (JVM, SF dir) — bucketing
     // is a write-time investment amortized over every later join; the
     // query itself is the production read path: join + same-key groupBy
     // with zero non-broadcast Exchange.
-    "q69_bucketed_join" -> ((s, dir) => {
+    Query("q69_bucketed_join",
+      """SELECT o_orderkey, o_orderdate, count(*) AS n_items,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
+        |  CAST(max(o_totalprice) AS DOUBLE) AS total_price
+        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |GROUP BY o_orderkey, o_orderdate""".stripMargin) { (s, dir) =>
       val sf = bucketedTables(s, dir)
       s.table(s"bkt_orders_$sf")
         .join(s.table(s"bkt_lineitem_$sf"), col("o_orderkey") === col("l_orderkey"))
@@ -94,10 +96,14 @@ object ScaleOps {
         .agg(count(lit(1)).as("n_items"),
           moneySum("l_quantity").as("sum_qty"),
           max(col("o_totalprice").cast("double")).as("total_price"))
-    }),
+    },
 
     // ---- Salted skew join ---------------------------------------------
-    "q70_salted_join" -> ((s, dir) => {
+    Query("q70_salted_join",
+      """SELECT s_nationkey, count(*) AS n_items,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
+        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+        |GROUP BY s_nationkey""".stripMargin) { (s, dir) =>
       val l = Tables.load(s, dir, "lineitem")
         .select(col("l_suppkey"), col("l_quantity"))
       val sup = Tables.load(s, dir, "supplier")
@@ -106,7 +112,7 @@ object ScaleOps {
         .groupBy(col("s_nationkey"))
         .agg(count(lit(1)).as("n_items"),
           moneySum("l_quantity").as("sum_qty"))
-    }),
+    },
 
     // ---- Small-file compaction ----------------------------------------
     // Fragment lineitem into 64 tiny files, compact to ~4 MB targets
@@ -114,9 +120,13 @@ object ScaleOps {
     // preservation (per-flag aggregate over the compacted copy equals
     // the same aggregate over the original table); CompactionSpec
     // asserts the file-count mechanics.
-    "q72_compaction" -> ((s, dir) => {
-      val in = s"${sideDir(dir)}/compact_in"
-      val out = s"${sideDir(dir)}/compact_out"
+    Query("q72_compaction",
+      """SELECT l_returnflag, count(*) AS n_rows,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_price,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin) { (s, dir) =>
+      val in = s"${Staging.sideDir(dir)}/compact_in"
+      val out = s"${Staging.sideDir(dir)}/compact_out"
       // r21: fragment by HASH on the uniform orderkey instead of
       // keyless round-robin — a keyless repartition(n) pays a local
       // sort of its whole input so retried tasks reproduce the same
@@ -135,10 +145,13 @@ object ScaleOps {
         .agg(count(lit(1)).as("n_rows"),
           moneySum("l_extendedprice").as("sum_price"),
           moneySum("l_quantity").as("sum_qty"))
-    }),
+    },
 
     // ---- Approximate percentiles (one-pass, no global sort) -----------
-    "q71_approx_quantiles" -> ((s, dir) => {
+    Query("q71_approx_quantiles",
+      """SELECT l_returnflag, count(*) AS n,
+        |  true AS ok_p50, true AS ok_p95
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin) { (s, dir) =>
       val l = Tables.load(s, dir, "lineitem")
       val x = col("l_extendedprice").cast("double")
       val ap = l.groupBy(col("l_returnflag"))
@@ -153,32 +166,6 @@ object ScaleOps {
         .select(col("l_returnflag"), col("n"),
           (col("f50") >= 0.48 && col("f50") <= 0.52).as("ok_p50"),
           (col("f95") >= 0.93 && col("f95") <= 0.97).as("ok_p95"))
-    })
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q69_bucketed_join" ->
-      """SELECT o_orderkey, o_orderdate, count(*) AS n_items,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(max(o_totalprice) AS DOUBLE) AS total_price
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY o_orderkey, o_orderdate""".stripMargin,
-
-    "q70_salted_join" ->
-      """SELECT s_nationkey, count(*) AS n_items,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_nationkey""".stripMargin,
-
-    "q71_approx_quantiles" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |  true AS ok_p50, true AS ok_p95
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q72_compaction" ->
-      """SELECT l_returnflag, count(*) AS n_rows,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_price,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin
+    }
   )
 }

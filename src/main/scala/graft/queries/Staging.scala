@@ -21,6 +21,13 @@ package graft.queries
 object Staging {
   private val staged = scala.collection.concurrent.TrieMap[String, String]()
 
+  /** The directory holding every side table staged for fixture directory
+    * `sfDir`: its basename plus a hash of the whole path, so two fixture
+    * directories with one basename never share (or overwrite) side
+    * tables. Oracle SQL names this directory `__SIDE__`. */
+  def sideDir(sfDir: String): String =
+    s"/tmp/graft_oracle/${new java.io.File(sfDir).getName}_${Integer.toHexString(sfDir.hashCode)}"
+
   /** True iff `path` is a directory holding at least one non-empty
     * parquet part file — i.e. both Spark and DuckDB can read it. */
   def hasParquet(path: String): Boolean = {

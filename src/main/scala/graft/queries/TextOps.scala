@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -18,7 +18,7 @@ import graft.functions.functions.kgram_hashes
   * graft.functions.MinHash) so the cross product never materializes
   * globally.
   */
-object TextOps {
+object TextOps extends QueryModule {
 
   private val tokens: Column = split(col("text"), " ")
 
@@ -27,9 +27,6 @@ object TextOps {
   val KGram = 8
   val WinnowW = 4
 
-  private def sideDir(dir: String): String =
-    s"/tmp/graft_oracle/${new java.io.File(dir).getName}"
-
   /** Deterministic md5-prefix threshold over a salted key — the
     * sampling primitive: reproducible across engines, executors and
     * reruns, and cheap (one hash per row, no shuffle).
@@ -37,9 +34,19 @@ object TextOps {
   private def saltedMd5(salt: String): Column =
     md5(concat(lit(salt), col("doc_id").cast("string")))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def declared: Seq[Query] = Seq(
     // ---- Token counting + length stats --------------------------------
-    "t30_token_stats" -> ((s, dir) => {
+    Query("t30_token_stats",
+      """SELECT doc_id,
+        |  len(string_split(text, ' ')) AS n_tokens,
+        |  LENGTH(text) AS text_len,
+        |  LENGTH(regexp_replace(text, '\s+', '', 'g')) AS n_nonspace,
+        |  CAST(LENGTH(regexp_replace(text, '\s+', '', 'g')) AS DOUBLE)
+        |    / len(string_split(text, ' ')) AS avg_token_len,
+        |  len(list_distinct(string_split(text, ' '))) AS n_unique_tokens,
+        |  CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
+        |    / len(string_split(text, ' ')) AS ttr
+        |FROM documents""".stripMargin) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       d.select(
         col("doc_id"),
@@ -50,10 +57,22 @@ object TextOps {
           size(tokens)).as("avg_token_len"),
         size(array_distinct(tokens)).as("n_unique_tokens"),
         (size(array_distinct(tokens)).cast("double") / size(tokens)).as("ttr"))
-    }),
+    },
 
     // ---- Quality scoring: stopword ratio, repetition, length bucket ---
-    "t31_quality_score" -> ((s, dir) => {
+    Query("t31_quality_score",
+      """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents)
+        |SELECT doc_id, lang,
+        |  len(toks) AS n_tokens,
+        |  len(list_filter(toks, x -> x IN ('the','a','of','and','to','in'))) AS n_stopwords,
+        |  CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','to','in'))) AS DOUBLE)
+        |    / len(toks) AS stop_ratio,
+        |  CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks) AS ttr,
+        |  CASE WHEN len(toks) < 20 THEN 'too_short'
+        |       WHEN CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks) < 0.2
+        |         THEN 'repetitive'
+        |       ELSE 'ok' END AS quality_class
+        |FROM t""".stripMargin) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       val stop = array(Seq("the", "a", "of", "and", "to", "in").map(lit): _*)
       val nStop = size(filter(tokens, t => array_contains(stop, t)))
@@ -68,10 +87,29 @@ object TextOps {
         when(nTok < 20, "too_short")
           .when(ttr < 0.2, "repetitive")
           .otherwise("ok").as("quality_class"))
-    }),
+    },
 
     // ---- Language-ID heuristic: marker-token scores + CJK ratio -------
-    "t32_lang_id" -> ((s, dir) => {
+    Query("t32_lang_id",
+      """WITH t AS (
+        |  SELECT doc_id, lang, string_split(text, ' ') AS toks,
+        |    LENGTH(text) - LENGTH(regexp_replace(text, '[\x{4e00}-\x{9fff}]', '', 'g')) AS n_cjk
+        |  FROM documents
+        |), s AS (
+        |  SELECT doc_id, lang, n_cjk,
+        |    len(list_filter(toks, x -> x IN ('the','a','of','and'))) AS s_en,
+        |    len(list_filter(toks, x -> x IN ('el','la','de','que'))) AS s_es,
+        |    len(list_filter(toks, x -> x IN ('der','die','das','und'))) AS s_de,
+        |    len(list_filter(toks, x -> x IN ('le','les','des','et'))) AS s_fr
+        |  FROM t
+        |)
+        |SELECT doc_id, lang AS labeled_lang, s_en, s_es, s_de, s_fr, n_cjk,
+        |  CASE WHEN n_cjk > 0 THEN 'zh'
+        |       WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
+        |       WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
+        |       WHEN s_de >= s_fr THEN 'de'
+        |       ELSE 'fr' END AS predicted_lang
+        |FROM s""".stripMargin) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       def score(words: Seq[String]): Column = {
         val set = array(words.map(lit): _*)
@@ -92,39 +130,58 @@ object TextOps {
           .when(es >= de && es >= fr, "es")
           .when(de >= fr, "de")
           .otherwise("fr").as("predicted_lang"))
-    }),
+    },
 
     // ---- Exact dedup: normalize → fingerprint → group -----------------
     // Hash-groupBy dedup; at 100 TB this is a single shuffle on the
     // 128-bit fingerprint (no skew: fingerprints are uniform).
-    "t33_exact_dedup" -> ((s, dir) => {
+    Query("t33_exact_dedup",
+      """SELECT md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fingerprint,
+        |  MIN(doc_id) AS canonical_id, COUNT(*) AS n_copies
+        |FROM documents
+        |GROUP BY 1""".stripMargin) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       val norm = lower(trim(regexp_replace(col("text"), "\\s+", " ")))
       d.select(col("doc_id"), md5(norm).as("fingerprint"))
         .groupBy(col("fingerprint"))
         .agg(min(col("doc_id")).as("canonical_id"), count(lit(1)).as("n_copies"))
-    }),
+    },
 
     // ---- Bag-of-words fingerprint (order-insensitive dedup key) -------
-    "t34_bag_fingerprint" -> ((s, dir) => {
+    Query("t34_bag_fingerprint",
+      """SELECT doc_id,
+        |  md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS bag_fp,
+        |  len(list_distinct(string_split(text, ' '))) AS bag_size
+        |FROM documents""".stripMargin) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       d.select(
         col("doc_id"),
         md5(concat_ws(" ", array_sort(array_distinct(tokens)))).as("bag_fp"),
         size(array_distinct(tokens)).as("bag_size"))
-    }),
+    },
 
     // ---- Word-3-gram shingles (distinct count per doc) ----------------
     // Single-pass exact distinct count over token-tuple shingles — no
     // shingle strings or intermediate arrays are materialized.
-    "t35_shingles" -> ((s, dir) => {
+    Query("t35_shingles",
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+        |sh AS (
+        |  SELECT doc_id,
+        |    CASE WHEN len(toks) >= 3 THEN
+        |      list_transform(generate_series(1, len(toks) - 2),
+        |        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
+        |    ELSE [] END AS shingles
+        |  FROM t)
+        |SELECT doc_id, len(shingles) AS n_shingles,
+        |  len(list_distinct(shingles)) AS n_unique_shingles
+        |FROM sh""".stripMargin) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       val toks = tokens
       d.select(col("doc_id"),
         greatest(size(toks) - 2, lit(0)).as("n_shingles"),
         graft.functions.ArrayFns.distinct_shingle_count(toks, 3)
           .as("n_unique_shingles"))
-    }),
+    },
 
     // ---- N-gram Jaccard near-dup pairs (within-lang blocking) ---------
     // Per-pair |∩| via the codegen'd sorted-merge expression, computed
@@ -134,7 +191,18 @@ object TextOps {
     // would otherwise inline it ~5× — measured 2× slower — and an
     // inverted-index join is worse still on this tiny-vocab corpus).
     // The shuffle after the barrier carries only (lang, ids, 3 ints).
-    "t36_jaccard_pairs" -> ((s, dir) => {
+    Query("t36_jaccard_pairs",
+      """WITH bags AS (
+        |  SELECT lang, doc_id, list_distinct(string_split(text, ' ')) AS bag
+        |  FROM documents)
+        |SELECT a.lang, a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |  len(list_intersect(a.bag, b.bag)) AS n_inter,
+        |  len(a.bag) + len(b.bag) - len(list_intersect(a.bag, b.bag)) AS n_union,
+        |  CAST(len(list_intersect(a.bag, b.bag)) AS DOUBLE)
+        |    / (len(a.bag) + len(b.bag) - len(list_intersect(a.bag, b.bag))) AS jaccard
+        |FROM bags a JOIN bags b ON a.lang = b.lang AND a.doc_id < b.doc_id
+        |WHERE CAST(len(list_intersect(a.bag, b.bag)) AS DOUBLE)
+        |    / (len(a.bag) + len(b.bag) - len(list_intersect(a.bag, b.bag))) >= 0.8""".stripMargin) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       val bags = d.select(col("lang"), col("doc_id"),
         array_sort(array_distinct(tokens)).as("bag"))
@@ -151,7 +219,7 @@ object TextOps {
         .filter(col("jaccard") >= 0.8)
         .select(col("lang"), col("doc_a"), col("doc_b"),
                 col("n_inter"), col("n_union"), col("jaccard"))
-    }),
+    },
 
     // ---- Winnowing fingerprints (MOSS) --------------------------------
     // Rolling k-gram hashes (codegen'd Rabin-Karp expression), then the
@@ -165,8 +233,22 @@ object TextOps {
     // discipline (a production 100 TB run writes k-gram hashes once and
     // every downstream fingerprint/match stage reads them); re-runs
     // measure the winnowing selection, not the hash re-derivation.
-    "t37_winnow_fingerprints" -> ((s, dir) => {
-      val p = Staging.parquetOnce(s"$dir#kgram", s"${sideDir(dir)}/kgram_hashes") { p0 =>
+    Query("t37_winnow_fingerprints",
+      s"""WITH kg AS (SELECT * FROM read_parquet('__SIDE__/kgram_hashes/*.parquet')),
+        |win AS (
+        |  SELECT doc_id, pos AS p,
+        |    min(h) OVER (PARTITION BY doc_id ORDER BY pos
+        |                 ROWS BETWEEN CURRENT ROW AND ${WinnowW - 1} FOLLOWING) AS wmin,
+        |    count(*) OVER (PARTITION BY doc_id) AS cnt
+        |  FROM kg),
+        |w2 AS (SELECT * FROM win WHERE p <= greatest(cnt - $WinnowW, 0)),
+        |sel AS (
+        |  SELECT w.doc_id, w.p, w.wmin, max(k.pos) AS fp_pos
+        |  FROM w2 w JOIN kg k ON k.doc_id = w.doc_id AND k.h = w.wmin
+        |                     AND k.pos BETWEEN w.p AND w.p + ${WinnowW - 1}
+        |  GROUP BY w.doc_id, w.p, w.wmin)
+        |SELECT DISTINCT doc_id, fp_pos, wmin AS fp_hash FROM sel""".stripMargin) { (s, dir) =>
+      val p = Staging.parquetOnce(s"$dir#kgram", s"${Staging.sideDir(dir)}/kgram_hashes") { p0 =>
         Tables.load(s, dir, "documents")
           .select(col("doc_id"),
             posexplode(kgram_hashes(col("text"), KGram)).as(Seq("pos", "h")))
@@ -198,7 +280,7 @@ object TextOps {
         .filter(col("wend").isNotNull || col("pos") === 0)
         .select(col("doc_id"), col("fp_pos"), col("fp_hash"))
         .distinct()
-    }),
+    },
 
     // ---- Deterministic sampling / split / shuffle ---------------------
     // The training-data selection family, all as salted-md5 threshold
@@ -207,7 +289,16 @@ object TextOps {
     // deterministic shuffle key (sort by it downstream — no global
     // window here, a single-partition row_number would not scale).
     // Every column is reproducible on any engine that has md5.
-    "t38_sample_split" -> ((s, dir) => {
+    Query("t38_sample_split",
+      """SELECT doc_id, lang,
+        |  CASE WHEN substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 2) < 'cd' THEN 'train'
+        |       WHEN substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 2) < 'e6' THEN 'val'
+        |       ELSE 'test' END AS split,
+        |  substr(md5('sample:' || CAST(doc_id AS VARCHAR)), 1, 2) < '1a' AS in_10pct_sample,
+        |  substr(md5('strat:' || CAST(doc_id AS VARCHAR)), 1, 2) <
+        |    (CASE WHEN lang = 'en' THEN '34' ELSE '0d' END) AS in_strat_sample,
+        |  md5('shuffle:' || CAST(doc_id AS VARCHAR)) AS shuffle_key
+        |FROM documents""".stripMargin) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       val s2 = substring(saltedMd5("split:"), 1, 2)
       d.select(col("doc_id"), col("lang"),
@@ -216,14 +307,22 @@ object TextOps {
         (substring(saltedMd5("strat:"), 1, 2) <
           when(col("lang") === "en", "34").otherwise("0d")).as("in_strat_sample"),
         saltedMd5("shuffle:").as("shuffle_key"))
-    }),
+    },
 
     // ---- BPE-ish regex tokenization -----------------------------------
     // The GPT-2-style pre-tokenizer shape, restricted to constructs
     // RE2 (DuckDB) and java.util.regex agree on (no lookahead):
     // contraction suffixes, letter runs, digit runs, punctuation runs.
     // Per-row expression → scales like every other map-side op.
-    "t39_bpe_tokens" -> ((s, dir) => {
+    Query("t39_bpe_tokens", {
+      val pat = BpePattern.replace("'", "''")
+      s"""WITH t AS (SELECT doc_id, regexp_extract_all(text, '$pat') AS toks
+        |           FROM documents)
+        |SELECT doc_id, len(toks) AS n_bpe_tokens,
+        |  len(list_distinct(toks)) AS n_unique_bpe,
+        |  toks[1] AS first_tok, toks[-1] AS last_tok
+        |FROM t""".stripMargin
+    }) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       val toks = regexp_extract_all(col("text"),
         lit(BpePattern), lit(0))
@@ -232,7 +331,7 @@ object TextOps {
         size(array_distinct(toks)).as("n_unique_bpe"),
         element_at(toks, 1).as("first_tok"),
         element_at(toks, -1).as("last_tok"))
-    }),
+    },
 
     // ---- Weighted multi-source mixing ---------------------------------
     // Training mixes re-weight corpora (e.g. wiki ×2, crawl ×0.25).
@@ -240,7 +339,24 @@ object TextOps {
     // order is a deterministic interleave key. Up-weighting (>1×)
     // would be explode(sequence(1, ceil(w))) + per-copy salt — same
     // primitive. One hash per row, no shuffle, reproducible.
-    "t40_weighted_mix" -> ((s, dir) => {
+    Query("t40_weighted_mix",
+      """WITH d AS (
+        |  SELECT doc_id, source, lang,
+        |    CAST(regexp_extract(source, 'src(\d+)', 1) AS INT) AS src_num,
+        |    substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 2) AS accept_hash,
+        |    md5('interleave:' || CAST(doc_id AS VARCHAR)) AS interleave_key
+        |  FROM documents)
+        |SELECT doc_id, source, lang,
+        |  CASE WHEN src_num % 4 = 0 THEN 'zz'
+        |       WHEN src_num % 4 = 1 THEN '80'
+        |       WHEN src_num % 4 = 2 THEN '40'
+        |       ELSE '20' END AS keep_below,
+        |  accept_hash, interleave_key
+        |FROM d
+        |WHERE accept_hash < (CASE WHEN src_num % 4 = 0 THEN 'zz'
+        |                          WHEN src_num % 4 = 1 THEN '80'
+        |                          WHEN src_num % 4 = 2 THEN '40'
+        |                          ELSE '20' END)""".stripMargin) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       val srcNum = regexp_extract(col("source"), "src(\\d+)", 1).cast("int")
       val threshold = when(srcNum % 4 === 0, "zz") // 1.0: every hex prefix
@@ -252,7 +368,7 @@ object TextOps {
           substring(saltedMd5("mix:"), 1, 2).as("accept_hash"),
           saltedMd5("interleave:").as("interleave_key"))
         .filter(col("accept_hash") < col("keep_below"))
-    }),
+    },
 
     // ---- End-to-end curation pipeline ---------------------------------
     // The stages composed the way a production training-data run
@@ -263,7 +379,33 @@ object TextOps {
     // materialized so the oracle replays the identical cluster logic;
     // everything else (quality, md5 fingerprints, split) is plain SQL
     // on both engines.
-    "t42_curation_pipeline" -> ((s, dir) => {
+    Query("t42_curation_pipeline",
+      """WITH toks AS (
+        |  SELECT doc_id, lang, text, string_split(text, ' ') AS t FROM documents),
+        |quality AS (
+        |  SELECT doc_id, lang, text FROM toks
+        |  WHERE len(t) >= 20
+        |    AND CAST(len(list_distinct(t)) AS DOUBLE) / len(t) >= 0.2),
+        |exact AS (
+        |  SELECT doc_id, lang FROM (
+        |    SELECT doc_id, lang,
+        |      ROW_NUMBER() OVER (
+        |        PARTITION BY md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
+        |        ORDER BY doc_id) AS rn
+        |    FROM quality) WHERE rn = 1),
+        |banded AS (SELECT * FROM read_parquet('__SIDE__/pipeline_banded/*.parquet')),
+        |rep AS (SELECT band, bucket, min(doc_id) AS bucket_rep
+        |        FROM banded GROUP BY band, bucket),
+        |cluster AS (SELECT doc_id, min(bucket_rep) AS cluster_rep
+        |            FROM banded JOIN rep USING (band, bucket) GROUP BY doc_id),
+        |canonical AS (
+        |  SELECT e.doc_id, e.lang FROM exact e
+        |  JOIN cluster c ON c.doc_id = e.doc_id AND c.cluster_rep = e.doc_id)
+        |SELECT doc_id, lang,
+        |  CASE WHEN substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 2) < 'cd' THEN 'train'
+        |       WHEN substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 2) < 'e6' THEN 'val'
+        |       ELSE 'test' END AS split
+        |FROM canonical""".stripMargin) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       val toks = split(col("text"), " ")
       val ttr = size(array_distinct(toks)).cast("double") / size(toks)
@@ -277,7 +419,7 @@ object TextOps {
       // derived signature index (NearDup's bandedTable discipline);
       // per-run cost keeps the quality gate, exact dedup, and the
       // cluster joins, which all recompute every run.
-      val p = Staging.parquetOnce(s"$dir#pipeband", s"${sideDir(dir)}/pipeline_banded") { p0 =>
+      val p = Staging.parquetOnce(s"$dir#pipeband", s"${Staging.sideDir(dir)}/pipeline_banded") { p0 =>
         exact.select(col("doc_id"),
             graft.functions.functions.minhash(
               array_distinct(toks), NearDup.K).as("sig"))
@@ -299,20 +441,26 @@ object TextOps {
       val s2 = substring(saltedMd5("split:"), 1, 2)
       canonical.select(col("doc_id"), col("lang"),
         when(s2 < "cd", "train").when(s2 < "e6", "val").otherwise("test").as("split"))
-    }),
+    },
 
     // ---- Per-group deterministic k-sample -----------------------------
     // "3 docs per lang" for eval sets: rank by salted md5 inside each
     // group — the shuffle is per-group (window partition), nothing
     // global, and the pick is stable across runs and engines.
-    "t41_per_group_sample" -> ((s, dir) => {
+    Query("t41_per_group_sample",
+      """SELECT doc_id, lang, source, pick_rank FROM (
+        |  SELECT doc_id, lang, source,
+        |    ROW_NUMBER() OVER (PARTITION BY lang
+        |      ORDER BY md5('pick:' || CAST(doc_id AS VARCHAR)), doc_id) AS pick_rank
+        |  FROM documents)
+        |WHERE pick_rank <= 3""".stripMargin) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       val w = Window.partitionBy(col("lang"))
         .orderBy(saltedMd5("pick:"), col("doc_id"))
       d.select(col("doc_id"), col("lang"), col("source"))
         .withColumn("pick_rank", row_number().over(w))
         .filter(col("pick_rank") <= 3)
-    }),
+    },
 
     // ---- Benchmark decontamination (n-gram overlap) --------------------
     // The standard pretraining hygiene op: drop/flag corpus documents
@@ -323,57 +471,7 @@ object TextOps {
     // map-side; the only shuffle is the per-doc count aggregation.
     // At 100 TB the benchmark stays broadcast-sized by construction
     // (eval sets are fixed), so the scan never reshuffles.
-    "t43_decontamination" -> ((s, dir) => {
-      val d = Tables.load(s, dir, "documents")
-      // ngram_hashes → 8-byte long keys, no gram-string allocation, and
-      // short docs (<4 tokens) yield an empty array that explode drops —
-      // the same rows the oracle's len >= 4 guard keeps. The hash is
-      // engine-internal (join key + countDistinct only), so the DuckDB
-      // oracle keeps its own md5 keys.
-      def grams5(df: org.apache.spark.sql.DataFrame) = df
-        .select(col("doc_id"),
-          explode(graft.functions.functions.ngram_hashes(tokens, 4)).as("h"))
-      val bench = grams5(d.filter(col("doc_id") % 50 === 0))
-        .select("h").distinct()
-      val corpus = grams5(d.filter(col("doc_id") % 50 =!= 0))
-      corpus.join(broadcast(bench), "h")
-        .groupBy("doc_id")
-        .agg(countDistinct(col("h")).as("n_hit_shingles"),
-             count(lit(1)).as("n_hits"))
-    }),
-
-    // ---- Gopher-style repetition metrics -------------------------------
-    // Quality signals from repeated n-grams (Rae et al., Gopher §A1.1):
-    // fraction of all word-2-grams accounted for by the MOST FREQUENT
-    // 2-gram, and the fraction of 3-gram occurrences that are
-    // duplicates. Entirely MAP-SIDE: top_shingle_count and
-    // distinct_shingle_count are one-pass expressions over the token
-    // array, so the whole metric set is a single projection — ZERO
-    // shuffles at any scale (the explode→groupBy→groupBy formulation
-    // costs two; the oracle keeps it as the independent check).
-    "t44_repetition_metrics" -> ((s, dir) => {
-      val d = Tables.load(s, dir, "documents")
-      val n2 = greatest(size(tokens) - 1, lit(0))
-      val n3 = greatest(size(tokens) - 2, lit(0))
-      d.select(col("doc_id"),
-          when(n2 > 0, graft.functions.ArrayFns.top_shingle_count(tokens, 2)
-            .cast("double") / n2).as("top_2gram_frac"),
-          when(n3 > 0, lit(1.0) -
-            graft.functions.ArrayFns.distinct_shingle_count(tokens, 3)
-              .cast("double") / n3)
-            .otherwise(lit(0.0)).as("dup_3gram_frac"))
-        .withColumn("repetition_flagged",
-          coalesce(col("top_2gram_frac"), lit(0.0)) > 0.20 ||
-          col("dup_3gram_frac") > 0.30)
-    })
-  )
-
-  /** RE2-and-java.util.regex-identical pre-tokenizer pattern. */
-  val BpePattern: String =
-    "'(?:[sdmt]|ll|ve|re)|[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]+"
-
-  def oracles: Map[String, String] = Map(
-    "t43_decontamination" ->
+    Query("t43_decontamination",
       """WITH g AS (
         |  SELECT doc_id,
         |    CASE WHEN len(string_split(text, ' ')) >= 4 THEN
@@ -392,9 +490,35 @@ object TextOps {
         |  count(*) AS n_hits
         |FROM e JOIN bench USING (h)
         |WHERE e.doc_id % 50 <> 0
-        |GROUP BY e.doc_id""".stripMargin,
+        |GROUP BY e.doc_id""".stripMargin) { (s, dir) =>
+      val d = Tables.load(s, dir, "documents")
+      // ngram_hashes → 8-byte long keys, no gram-string allocation, and
+      // short docs (<4 tokens) yield an empty array that explode drops —
+      // the same rows the oracle's len >= 4 guard keeps. The hash is
+      // engine-internal (join key + countDistinct only), so the DuckDB
+      // oracle keeps its own md5 keys.
+      def grams5(df: org.apache.spark.sql.DataFrame) = df
+        .select(col("doc_id"),
+          explode(graft.functions.functions.ngram_hashes(tokens, 4)).as("h"))
+      val bench = grams5(d.filter(col("doc_id") % 50 === 0))
+        .select("h").distinct()
+      val corpus = grams5(d.filter(col("doc_id") % 50 =!= 0))
+      corpus.join(broadcast(bench), "h")
+        .groupBy("doc_id")
+        .agg(countDistinct(col("h")).as("n_hit_shingles"),
+             count(lit(1)).as("n_hits"))
+    },
 
-    "t44_repetition_metrics" ->
+    // ---- Gopher-style repetition metrics -------------------------------
+    // Quality signals from repeated n-grams (Rae et al., Gopher §A1.1):
+    // fraction of all word-2-grams accounted for by the MOST FREQUENT
+    // 2-gram, and the fraction of 3-gram occurrences that are
+    // duplicates. Entirely MAP-SIDE: top_shingle_count and
+    // distinct_shingle_count are one-pass expressions over the token
+    // array, so the whole metric set is a single projection — ZERO
+    // shuffles at any scale (the explode→groupBy→groupBy formulation
+    // costs two; the oracle keeps it as the independent check).
+    Query("t44_repetition_metrics",
       """WITH toks AS (
         |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
         |), g2 AS (
@@ -423,183 +547,24 @@ object TextOps {
         |SELECT tri.doc_id, top2.top_2gram_frac, tri.dup_3gram_frac,
         |  (COALESCE(top2.top_2gram_frac, 0.0) > 0.20
         |   OR tri.dup_3gram_frac > 0.30) AS repetition_flagged
-        |FROM tri LEFT JOIN top2 USING (doc_id)""".stripMargin,
-
-    "t30_token_stats" ->
-      """SELECT doc_id,
-        |  len(string_split(text, ' ')) AS n_tokens,
-        |  LENGTH(text) AS text_len,
-        |  LENGTH(regexp_replace(text, '\s+', '', 'g')) AS n_nonspace,
-        |  CAST(LENGTH(regexp_replace(text, '\s+', '', 'g')) AS DOUBLE)
-        |    / len(string_split(text, ' ')) AS avg_token_len,
-        |  len(list_distinct(string_split(text, ' '))) AS n_unique_tokens,
-        |  CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-        |    / len(string_split(text, ' ')) AS ttr
-        |FROM documents""".stripMargin,
-
-    "t31_quality_score" ->
-      """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents)
-        |SELECT doc_id, lang,
-        |  len(toks) AS n_tokens,
-        |  len(list_filter(toks, x -> x IN ('the','a','of','and','to','in'))) AS n_stopwords,
-        |  CAST(len(list_filter(toks, x -> x IN ('the','a','of','and','to','in'))) AS DOUBLE)
-        |    / len(toks) AS stop_ratio,
-        |  CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks) AS ttr,
-        |  CASE WHEN len(toks) < 20 THEN 'too_short'
-        |       WHEN CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks) < 0.2
-        |         THEN 'repetitive'
-        |       ELSE 'ok' END AS quality_class
-        |FROM t""".stripMargin,
-
-    "t32_lang_id" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang, string_split(text, ' ') AS toks,
-        |    LENGTH(text) - LENGTH(regexp_replace(text, '[\x{4e00}-\x{9fff}]', '', 'g')) AS n_cjk
-        |  FROM documents
-        |), s AS (
-        |  SELECT doc_id, lang, n_cjk,
-        |    len(list_filter(toks, x -> x IN ('the','a','of','and'))) AS s_en,
-        |    len(list_filter(toks, x -> x IN ('el','la','de','que'))) AS s_es,
-        |    len(list_filter(toks, x -> x IN ('der','die','das','und'))) AS s_de,
-        |    len(list_filter(toks, x -> x IN ('le','les','des','et'))) AS s_fr
-        |  FROM t
-        |)
-        |SELECT doc_id, lang AS labeled_lang, s_en, s_es, s_de, s_fr, n_cjk,
-        |  CASE WHEN n_cjk > 0 THEN 'zh'
-        |       WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
-        |       WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
-        |       WHEN s_de >= s_fr THEN 'de'
-        |       ELSE 'fr' END AS predicted_lang
-        |FROM s""".stripMargin,
-
-    "t33_exact_dedup" ->
-      """SELECT md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fingerprint,
-        |  MIN(doc_id) AS canonical_id, COUNT(*) AS n_copies
-        |FROM documents
-        |GROUP BY 1""".stripMargin,
-
-    "t34_bag_fingerprint" ->
-      """SELECT doc_id,
-        |  md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS bag_fp,
-        |  len(list_distinct(string_split(text, ' '))) AS bag_size
-        |FROM documents""".stripMargin,
-
-    "t35_shingles" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) >= 3 THEN
-        |      list_transform(generate_series(1, len(toks) - 2),
-        |        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-        |    ELSE [] END AS shingles
-        |  FROM t)
-        |SELECT doc_id, len(shingles) AS n_shingles,
-        |  len(list_distinct(shingles)) AS n_unique_shingles
-        |FROM sh""".stripMargin,
-
-    "t36_jaccard_pairs" ->
-      """WITH bags AS (
-        |  SELECT lang, doc_id, list_distinct(string_split(text, ' ')) AS bag
-        |  FROM documents)
-        |SELECT a.lang, a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  len(list_intersect(a.bag, b.bag)) AS n_inter,
-        |  len(a.bag) + len(b.bag) - len(list_intersect(a.bag, b.bag)) AS n_union,
-        |  CAST(len(list_intersect(a.bag, b.bag)) AS DOUBLE)
-        |    / (len(a.bag) + len(b.bag) - len(list_intersect(a.bag, b.bag))) AS jaccard
-        |FROM bags a JOIN bags b ON a.lang = b.lang AND a.doc_id < b.doc_id
-        |WHERE CAST(len(list_intersect(a.bag, b.bag)) AS DOUBLE)
-        |    / (len(a.bag) + len(b.bag) - len(list_intersect(a.bag, b.bag))) >= 0.8""".stripMargin,
-
-    "t37_winnow_fingerprints" ->
-      s"""WITH kg AS (SELECT * FROM read_parquet('/tmp/graft_oracle/__SF__/kgram_hashes/*.parquet')),
-        |win AS (
-        |  SELECT doc_id, pos AS p,
-        |    min(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |                 ROWS BETWEEN CURRENT ROW AND ${WinnowW - 1} FOLLOWING) AS wmin,
-        |    count(*) OVER (PARTITION BY doc_id) AS cnt
-        |  FROM kg),
-        |w2 AS (SELECT * FROM win WHERE p <= greatest(cnt - $WinnowW, 0)),
-        |sel AS (
-        |  SELECT w.doc_id, w.p, w.wmin, max(k.pos) AS fp_pos
-        |  FROM w2 w JOIN kg k ON k.doc_id = w.doc_id AND k.h = w.wmin
-        |                     AND k.pos BETWEEN w.p AND w.p + ${WinnowW - 1}
-        |  GROUP BY w.doc_id, w.p, w.wmin)
-        |SELECT DISTINCT doc_id, fp_pos, wmin AS fp_hash FROM sel""".stripMargin,
-
-    "t38_sample_split" ->
-      """SELECT doc_id, lang,
-        |  CASE WHEN substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 2) < 'cd' THEN 'train'
-        |       WHEN substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 2) < 'e6' THEN 'val'
-        |       ELSE 'test' END AS split,
-        |  substr(md5('sample:' || CAST(doc_id AS VARCHAR)), 1, 2) < '1a' AS in_10pct_sample,
-        |  substr(md5('strat:' || CAST(doc_id AS VARCHAR)), 1, 2) <
-        |    (CASE WHEN lang = 'en' THEN '34' ELSE '0d' END) AS in_strat_sample,
-        |  md5('shuffle:' || CAST(doc_id AS VARCHAR)) AS shuffle_key
-        |FROM documents""".stripMargin,
-
-    "t39_bpe_tokens" -> {
-      val pat = BpePattern.replace("'", "''")
-      s"""WITH t AS (SELECT doc_id, regexp_extract_all(text, '$pat') AS toks
-        |           FROM documents)
-        |SELECT doc_id, len(toks) AS n_bpe_tokens,
-        |  len(list_distinct(toks)) AS n_unique_bpe,
-        |  toks[1] AS first_tok, toks[-1] AS last_tok
-        |FROM t""".stripMargin
-    },
-
-    "t40_weighted_mix" ->
-      """WITH d AS (
-        |  SELECT doc_id, source, lang,
-        |    CAST(regexp_extract(source, 'src(\d+)', 1) AS INT) AS src_num,
-        |    substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 2) AS accept_hash,
-        |    md5('interleave:' || CAST(doc_id AS VARCHAR)) AS interleave_key
-        |  FROM documents)
-        |SELECT doc_id, source, lang,
-        |  CASE WHEN src_num % 4 = 0 THEN 'zz'
-        |       WHEN src_num % 4 = 1 THEN '80'
-        |       WHEN src_num % 4 = 2 THEN '40'
-        |       ELSE '20' END AS keep_below,
-        |  accept_hash, interleave_key
-        |FROM d
-        |WHERE accept_hash < (CASE WHEN src_num % 4 = 0 THEN 'zz'
-        |                          WHEN src_num % 4 = 1 THEN '80'
-        |                          WHEN src_num % 4 = 2 THEN '40'
-        |                          ELSE '20' END)""".stripMargin,
-
-    "t41_per_group_sample" ->
-      """SELECT doc_id, lang, source, pick_rank FROM (
-        |  SELECT doc_id, lang, source,
-        |    ROW_NUMBER() OVER (PARTITION BY lang
-        |      ORDER BY md5('pick:' || CAST(doc_id AS VARCHAR)), doc_id) AS pick_rank
-        |  FROM documents)
-        |WHERE pick_rank <= 3""".stripMargin,
-
-    "t42_curation_pipeline" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lang, text, string_split(text, ' ') AS t FROM documents),
-        |quality AS (
-        |  SELECT doc_id, lang, text FROM toks
-        |  WHERE len(t) >= 20
-        |    AND CAST(len(list_distinct(t)) AS DOUBLE) / len(t) >= 0.2),
-        |exact AS (
-        |  SELECT doc_id, lang FROM (
-        |    SELECT doc_id, lang,
-        |      ROW_NUMBER() OVER (
-        |        PARTITION BY md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))
-        |        ORDER BY doc_id) AS rn
-        |    FROM quality) WHERE rn = 1),
-        |banded AS (SELECT * FROM read_parquet('/tmp/graft_oracle/__SF__/pipeline_banded/*.parquet')),
-        |rep AS (SELECT band, bucket, min(doc_id) AS bucket_rep
-        |        FROM banded GROUP BY band, bucket),
-        |cluster AS (SELECT doc_id, min(bucket_rep) AS cluster_rep
-        |            FROM banded JOIN rep USING (band, bucket) GROUP BY doc_id),
-        |canonical AS (
-        |  SELECT e.doc_id, e.lang FROM exact e
-        |  JOIN cluster c ON c.doc_id = e.doc_id AND c.cluster_rep = e.doc_id)
-        |SELECT doc_id, lang,
-        |  CASE WHEN substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 2) < 'cd' THEN 'train'
-        |       WHEN substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 2) < 'e6' THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM canonical""".stripMargin
+        |FROM tri LEFT JOIN top2 USING (doc_id)""".stripMargin) { (s, dir) =>
+      val d = Tables.load(s, dir, "documents")
+      val n2 = greatest(size(tokens) - 1, lit(0))
+      val n3 = greatest(size(tokens) - 2, lit(0))
+      d.select(col("doc_id"),
+          when(n2 > 0, graft.functions.ArrayFns.top_shingle_count(tokens, 2)
+            .cast("double") / n2).as("top_2gram_frac"),
+          when(n3 > 0, lit(1.0) -
+            graft.functions.ArrayFns.distinct_shingle_count(tokens, 3)
+              .cast("double") / n3)
+            .otherwise(lit(0.0)).as("dup_3gram_frac"))
+        .withColumn("repetition_flagged",
+          coalesce(col("top_2gram_frac"), lit(0.0)) > 0.20 ||
+          col("dup_3gram_frac") > 0.30)
+    }
   )
+
+  /** RE2-and-java.util.regex-identical pre-tokenizer pattern. */
+  val BpePattern: String =
+    "'(?:[sdmt]|ll|ve|re)|[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]+"
 }

@@ -16,11 +16,11 @@ import graft.Tables
   * C4-style blocklist filtering (Raffel et al. 2020 §2.2's "bad words"
   * page filter).
   */
-object TextOps2 {
+object TextOps2 extends QueryModule {
 
   private val tokens: Column = split(col("text"), " ")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def declared: Seq[Query] = Seq(
     // ---- Cross-document duplicated 4-gram spans -----------------------
     // Per doc: how many of its 4-gram positions also occur in ANOTHER
     // document. Scale path: explode to (gram-hash, doc) rows via the
@@ -36,7 +36,19 @@ object TextOps2 {
     // external eval set, this one is corpus-internal. The hash is
     // engine-internal (never output), so the DuckDB oracle keeps its
     // own md5 keys — counts agree regardless of hash choice.
-    "t45_dup_ngram_spans" -> ((s, dir) => {
+    Query("t45_dup_ngram_spans",
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+        |g AS (
+        |  SELECT doc_id,
+        |    unnest(list_transform(generate_series(1, len(toks) - 3),
+        |      i -> substring(md5(array_to_string(toks[i:i+3], ' ')), 1, 16))) AS h
+        |  FROM t WHERE len(toks) >= 4
+        |), d AS (SELECT h, count(DISTINCT doc_id) AS nd FROM g GROUP BY h)
+        |SELECT g.doc_id, count(*) AS n_grams,
+        |  CAST(sum(CASE WHEN d.nd >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_grams,
+        |  CAST(sum(CASE WHEN d.nd >= 2 THEN 1 ELSE 0 END) AS DOUBLE) / count(*) AS dup_frac
+        |FROM g JOIN d USING (h)
+        |GROUP BY g.doc_id""".stripMargin) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       val gc = d.select(col("doc_id"),
           explode(graft.functions.functions.ngram_hashes(tokens, 4)).as("h"))
@@ -54,7 +66,7 @@ object TextOps2 {
           sum(when(col("nd") >= 2, col("c")).otherwise(0L)).as("n_dup_grams"))
         .withColumn("dup_frac",
           col("n_dup_grams").cast("double") / col("n_grams"))
-    }),
+    },
 
     // ---- Token-budget sequence packing --------------------------------
     // Concat-and-chunk: documents are laid out in doc_id order within
@@ -64,7 +76,22 @@ object TextOps2 {
     // Scale: the running sum partitions by source — each shard packs
     // independently, so there is no global sort; at 100 TB the
     // partition key would be (source, file-split) with identical code.
-    "t46_sequence_packing" -> ((s, dir) => {
+    Query("t46_sequence_packing",
+      """WITH t AS (
+        |  SELECT source, doc_id, len(string_split(text, ' ')) AS n_tok
+        |  FROM documents
+        |), c AS (
+        |  SELECT *, sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
+        |    ROWS UNBOUNDED PRECEDING) AS cum
+        |  FROM t
+        |), s AS (SELECT *,
+        |  CAST((cum - n_tok) // 256 AS BIGINT) AS seq_id FROM c)
+        |SELECT source, seq_id, count(*) AS n_docs,
+        |  CAST(sum(n_tok) AS BIGINT) AS seq_tokens,
+        |  CAST(min(doc_id) AS BIGINT) AS first_doc,
+        |  CAST(max(doc_id) AS BIGINT) AS last_doc,
+        |  CAST(round(sum(n_tok) * 1000000.0 / 256) AS BIGINT) AS fill_ratio_ppm
+        |FROM s GROUP BY source, seq_id""".stripMargin) { (s, dir) =>
       val budget = 256
       val d = Tables.load(s, dir, "documents")
       // Frame pinned to ROWS (not Spark's default RANGE): on a tie in
@@ -84,7 +111,7 @@ object TextOps2 {
           max(col("doc_id")).cast("long").as("last_doc"))
         .withColumn("fill_ratio_ppm",
           round(col("seq_tokens") * lit(1000000L) / budget).cast("long"))
-    }),
+    },
 
     // ---- C4-style blocklist filter ------------------------------------
     // Documents containing any blocklisted token are flagged (C4 drops
@@ -92,14 +119,20 @@ object TextOps2 {
     // lambda runs inside whole-stage codegen over the token array —
     // zero shuffles at any scale; the blocklist (in production: the
     // ~400-entry badwords list) rides in the plan like a broadcast.
-    "t47_blocklist_filter" -> ((s, dir) => {
+    Query("t47_blocklist_filter",
+      """SELECT doc_id, source,
+        |  len(list_filter(string_split(text, ' '),
+        |      t -> t IN ('slow', 'dup'))) AS n_blocked_tokens,
+        |  len(list_filter(string_split(text, ' '),
+        |      t -> t IN ('slow', 'dup'))) > 0 AS blocked
+        |FROM documents""".stripMargin) { (s, dir) =>
       val blocklist = Seq("slow", "dup")
       val d = Tables.load(s, dir, "documents")
       d.select(col("doc_id"), col("source"),
           size(filter(tokens, t => t.isin(blocklist: _*)))
             .as("n_blocked_tokens"))
         .withColumn("blocked", col("n_blocked_tokens") > 0)
-    }),
+    },
 
     // ---- C4-style line-level dedup across the corpus ------------------
     // (Raffel et al. 2020 §2.2 deduplicate "three-sentence spans";
@@ -113,7 +146,23 @@ object TextOps2 {
     // line-keyed shuffle (the earlier row_number window shuffled every
     // corpus line full-width with no partial aggregation); shuffle 2
     // keys on doc_id for reassembly — linear, no pair joins.
-    "t48_line_dedup" -> ((s, dir) => {
+    Query("t48_line_dedup",
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+        |lines0 AS (
+        |  SELECT doc_id, unnest(list_transform(range((len(toks) + 3) // 4),
+        |    i -> struct_pack(pos := i,
+        |      line := array_to_string(list_slice(toks, i * 4 + 1, i * 4 + 4), ' ')))) AS s
+        |  FROM t),
+        |lines AS (SELECT doc_id, s.pos AS pos, s.line AS line FROM lines0),
+        |ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY line
+        |  ORDER BY doc_id, pos) AS rn FROM lines),
+        |kept AS (SELECT doc_id, count(*) AS n_kept,
+        |  string_agg(line, ' ' ORDER BY pos) AS dedup_text
+        |  FROM ranked WHERE rn = 1 GROUP BY doc_id)
+        |SELECT t.doc_id, (len(t.toks) + 3) // 4 AS n_chunks,
+        |  coalesce(k.n_kept, 0) AS n_kept,
+        |  coalesce(k.dedup_text, '') AS dedup_text
+        |FROM t LEFT JOIN kept k ON t.doc_id = k.doc_id""".stripMargin) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       val lines = d.select(col("doc_id"),
         posexplode(expr(
@@ -134,7 +183,7 @@ object TextOps2 {
         .select(col("doc_id"), col("n_chunks"),
           coalesce(col("n_kept"), lit(0L)).as("n_kept"),
           coalesce(col("dedup_text"), lit("")).as("dedup_text"))
-    }),
+    },
 
     // ---- BPE merge-pair counting (tokenizer training step) ------------
     // The first iteration of BPE training (Sennrich et al. 2016;
@@ -145,7 +194,17 @@ object TextOps2 {
     // the DISTINCT word table (not the corpus), one shuffle on pair
     // (≤ alphabet² keys) with map-side partial sums. This is exactly
     // how distributed tokenizer training parallelizes.
-    "t49_bpe_pair_counts" -> ((s, dir) => {
+    Query("t49_bpe_pair_counts",
+      """WITH w AS (
+        |  SELECT w, count(*) AS wc FROM (
+        |    SELECT unnest(string_split(text, ' ')) AS w FROM documents)
+        |  GROUP BY w),
+        |p AS (
+        |  SELECT wc, unnest(list_transform(range(1, length(w)),
+        |    i -> substr(w, CAST(i AS INT), 2))) AS pair
+        |  FROM w WHERE length(w) >= 2)
+        |SELECT pair, CAST(sum(wc) AS BIGINT) AS n
+        |FROM p GROUP BY pair ORDER BY n DESC, pair LIMIT 50""".stripMargin) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       val words = d.select(explode(tokens).as("w"))
         .groupBy("w").agg(count(lit(1)).as("wc"))
@@ -154,7 +213,7 @@ object TextOps2 {
           "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")).as("pair"))
         .groupBy("pair").agg(sum("wc").as("n"))
         .orderBy(desc("n"), asc("pair")).limit(50)
-    }),
+    },
 
     // ---- Iterative BPE merge training (Sennrich et al. 2016) ----------
     // The full distributed tokenizer-training loop t49 only took one
@@ -174,13 +233,13 @@ object TextOps2 {
     // semantics: the fold compares whole symbols, so "aaa" under (a,a)
     // becomes [aa, a], never [aa, aa] — matching the reference BPE
     // implementations.
-    "t55_bpe_merges" -> ((s, dir) => {
+    Query("t55_bpe_merges", t55Oracle(8)) { (s, dir) =>
       val (rules, _) = trainBpe(s, dir, 8)
       import s.implicits._
       rules.toDF("merge_rank", "lhs", "rhs", "pair_count")
         .select(col("merge_rank"), col("lhs"), col("rhs"),
           concat(col("lhs"), col("rhs")).as("merged"), col("pair_count"))
-    }),
+    },
 
     // ---- BPE tokenizer APPLICATION (the train→apply loop closed) ------
     // Segment the corpus with the t55-trained merges and report per-doc
@@ -189,7 +248,7 @@ object TextOps2 {
     // trained segmentation is a VOCAB-bounded (word → n_subtokens)
     // table broadcast onto one corpus explode; one doc_id regroup.
     // All-integer output surface.
-    "t57_bpe_encode" -> ((s, dir) => {
+    Query("t57_bpe_encode", t57Oracle(8)) { (s, dir) =>
       val (_, seg) = trainBpe(s, dir, 8)
       val wordTokens = seg.select(col("w"), size(col("syms")).cast("long").as("n_bpe"))
       val d = Tables.load(s, dir, "documents")
@@ -200,7 +259,7 @@ object TextOps2 {
         .agg(count(lit(1)).as("n_words"),
           sum(col("n_bpe")).as("n_bpe_tokens"),
           sum(length(col("w")).cast("long")).as("n_chars"))
-    }),
+    },
 
     // ---- URL canonicalization + URL-level dedup -----------------------
     // The C4/RefinedWeb first pass: canonicalize each page's URL
@@ -213,7 +272,22 @@ object TextOps2 {
     // shuffle on the canonical-URL hash for the keep-first rank;
     // regex canonicalization is map-side codegen. Patterns stay in the
     // RE2 ∩ java.util.regex subset (t39 discipline).
-    "t58_url_dedup" -> ((s, dir) => {
+    Query("t58_url_dedup",
+      """WITH u AS (
+        |  SELECT doc_id,
+        |    'https://Site' || (doc_id % 40) || '.Example.COM/p/' || (doc_id % 120)
+        |      || CASE doc_id % 3 WHEN 0 THEN '?utm_source=feed'
+        |                         WHEN 1 THEN '/' ELSE '' END AS url
+        |  FROM documents),
+        |c AS (
+        |  SELECT doc_id, url,
+        |    lower(regexp_replace(regexp_replace(url, '\?utm_[^#]*$', ''),
+        |                         '/+$', '')) AS canon_url
+        |  FROM u)
+        |SELECT doc_id, url, canon_url,
+        |  ROW_NUMBER() OVER (PARTITION BY canon_url ORDER BY doc_id) = 1 AS kept,
+        |  CAST(count(*) OVER (PARTITION BY canon_url) AS BIGINT) AS n_variants
+        |FROM c""".stripMargin) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       val url = concat(lit("https://Site"), (col("doc_id") % 40).cast("string"),
         lit(".Example.COM/p/"), (col("doc_id") % 120).cast("string"),
@@ -227,7 +301,7 @@ object TextOps2 {
           row_number().over(wFirst) === 1)
         .withColumn("n_variants",
           count(lit(1)).over(Window.partitionBy(col("canon_url"))).cast("long"))
-    }),
+    },
 
     // ---- Exact-substring duplicate-span REMOVAL -----------------------
     // Lee et al. 2021 ("Deduplicating Training Data Makes Language
@@ -242,7 +316,33 @@ object TextOps2 {
     // you'd switch the g-keyed shuffles to the 64-bit `ngram_hashes`
     // keys (t45's trick) and accept the birthday-bounded collision
     // rate, as the reference pipeline does.
-    "t59_exact_substr_removal" -> ((s, dir) => {
+    Query("t59_exact_substr_removal",
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+        |occ AS (
+        |  SELECT doc_id, i AS pos, array_to_string(toks[CAST(i AS INT):CAST(i + 3 AS INT)], ' ') AS g
+        |  FROM t, UNNEST(range(1, len(toks) - 2)) AS u(i)
+        |  WHERE len(toks) >= 4),
+        |gi AS (SELECT g, count(DISTINCT doc_id) AS nd, min(doc_id) AS fd
+        |       FROM occ GROUP BY g),
+        |gi2 AS (SELECT gi.g, gi.nd, gi.fd, min(o.pos) AS fp
+        |        FROM gi JOIN occ o ON o.g = gi.g AND o.doc_id = gi.fd
+        |        GROUP BY gi.g, gi.nd, gi.fd),
+        |rem AS (
+        |  SELECT DISTINCT o.doc_id, o.pos + k AS p
+        |  FROM occ o JOIN gi2 ON o.g = gi2.g, UNNEST(range(0, 4)) AS r(k)
+        |  WHERE gi2.nd >= 2 AND NOT (o.doc_id = gi2.fd AND o.pos = gi2.fp)),
+        |tok AS (
+        |  SELECT doc_id, i AS p, toks[CAST(i AS INT)] AS w
+        |  FROM t, UNNEST(range(1, len(toks) + 1)) AS u(i)),
+        |kc AS (
+        |  SELECT tok.doc_id, count(*) AS n_kept,
+        |    string_agg(tok.w, ' ' ORDER BY tok.p) AS cleaned_text
+        |  FROM tok LEFT JOIN rem ON tok.doc_id = rem.doc_id AND tok.p = rem.p
+        |  WHERE rem.p IS NULL GROUP BY tok.doc_id)
+        |SELECT t.doc_id, CAST(len(t.toks) AS BIGINT) AS n_tokens,
+        |  CAST(len(t.toks) - coalesce(kc.n_kept, 0) AS BIGINT) AS n_removed,
+        |  coalesce(kc.cleaned_text, '') AS cleaned_text
+        |FROM t LEFT JOIN kc ON t.doc_id = kc.doc_id""".stripMargin) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
         .select(col("doc_id"), tokens.as("toks"))
       val occ = d.filter(size(col("toks")) >= 4)
@@ -288,7 +388,7 @@ object TextOps2 {
         .select(col("doc_id"), size(col("toks")).cast("long").as("n_tokens"),
           (size(col("toks")) - size(col("kept"))).cast("long").as("n_removed"),
           concat_ws(" ", col("kept")).as("cleaned_text"))
-    })
+    }
   )
 
   /** A word of the BPE training table: its corpus frequency and its
@@ -384,7 +484,9 @@ object TextOps2 {
     * chr(31)-delimited accumulator (DuckDB's reduce accumulates the
     * element type, so the symbol list rides as a delimited string and
     * splits back per round) — same greedy left-to-right
-    * non-overlapping semantics as the engine's `aggregate` fold.
+    * non-overlapping semantics as the engine's `aggregate` fold. A round
+    * with no pair left (a corpus with fewer mergeable pairs than rounds)
+    * joins a NULL pair and keeps the segmentation, as the engine does.
     */
   private def bpeChain(nMerges: Int): String = {
     val base =
@@ -404,7 +506,7 @@ object TextOps2 {
          |s$k AS (SELECT w, wc, string_split(list_reduce(syms, (acc, x) ->
          |    CASE WHEN x = b.rhs AND (acc = b.lhs OR acc LIKE '%' || chr(31) || b.lhs)
          |    THEN acc || x ELSE acc || chr(31) || x END), chr(31)) AS syms
-         |  FROM s${k - 1}, b$k b)""".stripMargin
+         |  FROM s${k - 1} LEFT JOIN b$k b ON true)""".stripMargin
     }.mkString(",\n")
     s"$base,\n$rounds"
   }
@@ -427,122 +529,4 @@ object TextOps2 {
        |JOIN s$nMerges s ON d.w = s.w
        |WHERE d.w <> ''
        |GROUP BY d.doc_id""".stripMargin
-
-  def oracles: Map[String, String] = Map(
-    "t48_line_dedup" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |lines0 AS (
-        |  SELECT doc_id, unnest(list_transform(range((len(toks) + 3) // 4),
-        |    i -> struct_pack(pos := i,
-        |      line := array_to_string(list_slice(toks, i * 4 + 1, i * 4 + 4), ' ')))) AS s
-        |  FROM t),
-        |lines AS (SELECT doc_id, s.pos AS pos, s.line AS line FROM lines0),
-        |ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY line
-        |  ORDER BY doc_id, pos) AS rn FROM lines),
-        |kept AS (SELECT doc_id, count(*) AS n_kept,
-        |  string_agg(line, ' ' ORDER BY pos) AS dedup_text
-        |  FROM ranked WHERE rn = 1 GROUP BY doc_id)
-        |SELECT t.doc_id, (len(t.toks) + 3) // 4 AS n_chunks,
-        |  coalesce(k.n_kept, 0) AS n_kept,
-        |  coalesce(k.dedup_text, '') AS dedup_text
-        |FROM t LEFT JOIN kept k ON t.doc_id = k.doc_id""".stripMargin,
-
-    "t49_bpe_pair_counts" ->
-      """WITH w AS (
-        |  SELECT w, count(*) AS wc FROM (
-        |    SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-        |  GROUP BY w),
-        |p AS (
-        |  SELECT wc, unnest(list_transform(range(1, length(w)),
-        |    i -> substr(w, CAST(i AS INT), 2))) AS pair
-        |  FROM w WHERE length(w) >= 2)
-        |SELECT pair, CAST(sum(wc) AS BIGINT) AS n
-        |FROM p GROUP BY pair ORDER BY n DESC, pair LIMIT 50""".stripMargin,
-
-    "t55_bpe_merges" -> t55Oracle(8),
-    "t57_bpe_encode" -> t57Oracle(8),
-
-    "t58_url_dedup" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    'https://Site' || (doc_id % 40) || '.Example.COM/p/' || (doc_id % 120)
-        |      || CASE doc_id % 3 WHEN 0 THEN '?utm_source=feed'
-        |                         WHEN 1 THEN '/' ELSE '' END AS url
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, url,
-        |    lower(regexp_replace(regexp_replace(url, '\?utm_[^#]*$', ''),
-        |                         '/+$', '')) AS canon_url
-        |  FROM u)
-        |SELECT doc_id, url, canon_url,
-        |  ROW_NUMBER() OVER (PARTITION BY canon_url ORDER BY doc_id) = 1 AS kept,
-        |  CAST(count(*) OVER (PARTITION BY canon_url) AS BIGINT) AS n_variants
-        |FROM c""".stripMargin,
-
-    "t59_exact_substr_removal" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |occ AS (
-        |  SELECT doc_id, i AS pos, array_to_string(toks[CAST(i AS INT):CAST(i + 3 AS INT)], ' ') AS g
-        |  FROM t, UNNEST(range(1, len(toks) - 2)) AS u(i)
-        |  WHERE len(toks) >= 4),
-        |gi AS (SELECT g, count(DISTINCT doc_id) AS nd, min(doc_id) AS fd
-        |       FROM occ GROUP BY g),
-        |gi2 AS (SELECT gi.g, gi.nd, gi.fd, min(o.pos) AS fp
-        |        FROM gi JOIN occ o ON o.g = gi.g AND o.doc_id = gi.fd
-        |        GROUP BY gi.g, gi.nd, gi.fd),
-        |rem AS (
-        |  SELECT DISTINCT o.doc_id, o.pos + k AS p
-        |  FROM occ o JOIN gi2 ON o.g = gi2.g, UNNEST(range(0, 4)) AS r(k)
-        |  WHERE gi2.nd >= 2 AND NOT (o.doc_id = gi2.fd AND o.pos = gi2.fp)),
-        |tok AS (
-        |  SELECT doc_id, i AS p, toks[CAST(i AS INT)] AS w
-        |  FROM t, UNNEST(range(1, len(toks) + 1)) AS u(i)),
-        |kc AS (
-        |  SELECT tok.doc_id, count(*) AS n_kept,
-        |    string_agg(tok.w, ' ' ORDER BY tok.p) AS cleaned_text
-        |  FROM tok LEFT JOIN rem ON tok.doc_id = rem.doc_id AND tok.p = rem.p
-        |  WHERE rem.p IS NULL GROUP BY tok.doc_id)
-        |SELECT t.doc_id, CAST(len(t.toks) AS BIGINT) AS n_tokens,
-        |  CAST(len(t.toks) - coalesce(kc.n_kept, 0) AS BIGINT) AS n_removed,
-        |  coalesce(kc.cleaned_text, '') AS cleaned_text
-        |FROM t LEFT JOIN kc ON t.doc_id = kc.doc_id""".stripMargin,
-    "t45_dup_ngram_spans" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |g AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(generate_series(1, len(toks) - 3),
-        |      i -> substring(md5(array_to_string(toks[i:i+3], ' ')), 1, 16))) AS h
-        |  FROM t WHERE len(toks) >= 4
-        |), d AS (SELECT h, count(DISTINCT doc_id) AS nd FROM g GROUP BY h)
-        |SELECT g.doc_id, count(*) AS n_grams,
-        |  CAST(sum(CASE WHEN d.nd >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_grams,
-        |  CAST(sum(CASE WHEN d.nd >= 2 THEN 1 ELSE 0 END) AS DOUBLE) / count(*) AS dup_frac
-        |FROM g JOIN d USING (h)
-        |GROUP BY g.doc_id""".stripMargin,
-
-    "t46_sequence_packing" ->
-      """WITH t AS (
-        |  SELECT source, doc_id, len(string_split(text, ' ')) AS n_tok
-        |  FROM documents
-        |), c AS (
-        |  SELECT *, sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-        |    ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM t
-        |), s AS (SELECT *,
-        |  CAST((cum - n_tok) // 256 AS BIGINT) AS seq_id FROM c)
-        |SELECT source, seq_id, count(*) AS n_docs,
-        |  CAST(sum(n_tok) AS BIGINT) AS seq_tokens,
-        |  CAST(min(doc_id) AS BIGINT) AS first_doc,
-        |  CAST(max(doc_id) AS BIGINT) AS last_doc,
-        |  CAST(round(sum(n_tok) * 1000000.0 / 256) AS BIGINT) AS fill_ratio_ppm
-        |FROM s GROUP BY source, seq_id""".stripMargin,
-
-    "t47_blocklist_filter" ->
-      """SELECT doc_id, source,
-        |  len(list_filter(string_split(text, ' '),
-        |      t -> t IN ('slow', 'dup'))) AS n_blocked_tokens,
-        |  len(list_filter(string_split(text, ' '),
-        |      t -> t IN ('slow', 'dup'))) > 0 AS blocked
-        |FROM documents""".stripMargin
-  )
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -18,7 +18,7 @@ import graft.Tables
   * SAME pattern text — no backrefs, no lookaround, no possessive
   * quantifiers.
   */
-object TextOps3 {
+object TextOps3 extends QueryModule {
 
   private val tokens: Column = split(col("text"), " ")
 
@@ -45,14 +45,31 @@ object TextOps3 {
   private val B = 0.75
   private val QueryTerms = Seq("spark", "join", "merge")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def declared: Seq[Query] = Seq(
     // ---- PII detection + redaction ------------------------------------
     // Entirely map-side: three codegen'd regex counts and a chained
     // regexp_replace per row — zero shuffles at any corpus size. At
     // 100 TB this is the cheapest pass in the pipeline (pure scan
     // throughput); the regexes are pre-compiled once per task by
     // Spark's regexp expressions.
-    "t50_pii_redaction" -> ((s, dir) => {
+    Query("t50_pii_redaction",
+      s"""WITH e AS (
+        |  SELECT doc_id,
+        |    text || ' contact user' || CAST(doc_id AS VARCHAR)
+        |      || '@example.com ip 10.' || CAST(doc_id % 256 AS VARCHAR)
+        |      || '.' || CAST(doc_id % 100 AS VARCHAR)
+        |      || '.7 phone 555-'
+        |      || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS et
+        |  FROM documents)
+        |SELECT doc_id,
+        |  len(regexp_extract_all(et, '$EmailRe')) AS n_email,
+        |  len(regexp_extract_all(et, '$Ipv4Re')) AS n_ip,
+        |  len(regexp_extract_all(et, '$PhoneRe')) AS n_phone,
+        |  regexp_replace(regexp_replace(regexp_replace(et,
+        |    '$EmailRe', '<EMAIL>', 'g'),
+        |    '$Ipv4Re', '<IP>', 'g'),
+        |    '$PhoneRe', '<PHONE>', 'g') AS redacted
+        |FROM e""".stripMargin) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
       d.select(col("doc_id"), enriched.as("et"))
         .select(col("doc_id"),
@@ -64,7 +81,7 @@ object TextOps3 {
               regexp_replace(col("et"), EmailRe, "<EMAIL>"),
               Ipv4Re, "<IP>"),
             PhoneRe, "<PHONE>").as("redacted"))
-    }),
+    },
 
     // ---- BM25 scoring against a fixed query ---------------------------
     // Scale shape: the term filter lands BEFORE the tf shuffle, so
@@ -72,7 +89,23 @@ object TextOps3 {
     // ever leave the scan stage; df and the corpus stats are
     // broadcast back (df has |query| rows, stats has 1). The only
     // data-scale shuffle keys on doc_id for the final per-doc sum.
-    "t51_bm25" -> ((s, dir) => {
+    Query("t51_bm25",
+      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+        |dl AS (SELECT doc_id, len(toks) AS dl FROM t),
+        |st AS (SELECT avg(dl) AS avgdl, count(*) AS n_docs FROM dl),
+        |tf AS (
+        |  SELECT doc_id, term, count(*) AS tf FROM (
+        |    SELECT doc_id, unnest(toks) AS term FROM t)
+        |  WHERE term IN (${QueryTerms.map("'" + _ + "'").mkString(", ")})
+        |  GROUP BY doc_id, term),
+        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY term)
+        |SELECT tf.doc_id,
+        |  sum(ln((st.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0)
+        |      * (tf.tf * ${K1 + 1.0})
+        |      / (tf.tf + $K1 * (1.0 - $B + $B * dl.dl / st.avgdl))) AS bm25,
+        |  count(*) AS n_matched
+        |FROM tf JOIN df USING (term) JOIN dl ON tf.doc_id = dl.doc_id, st
+        |GROUP BY tf.doc_id""".stripMargin) { (s, dir) =>
       val d = Tables.load(s, dir, "documents")
         .select(col("doc_id"), tokens.as("toks"))
       val dl = d.select(col("doc_id"), size(col("toks")).as("dl"))
@@ -100,7 +133,7 @@ object TextOps3 {
         .groupBy(col("doc_id"))
         .agg(sum(col("score_t")).as("bm25"),
           count(lit(1)).as("n_matched"))
-    }),
+    },
 
     // ---- DSIR hashed-n-gram importance weights ------------------------
     // Features: word unigrams + bigrams hashed into 4096 buckets (3
@@ -113,7 +146,27 @@ object TextOps3 {
     // big the corpus is, so it joins back as a broadcast; the corpus
     // only flows through a bucket-keyed agg (bounded cardinality) and
     // one doc_id-keyed agg. No data-scale join edges.
-    "t52_dsir_weights" -> ((s, dir) => {
+    Query("t52_dsir_weights",
+      """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
+        |g0 AS (
+        |  SELECT doc_id, lang, unnest(
+        |    list_concat(toks,
+        |      CASE WHEN len(toks) >= 2 THEN
+        |        list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])
+        |      ELSE CAST([] AS VARCHAR[]) END)) AS g
+        |  FROM t),
+        |g AS (SELECT doc_id, lang, substring(md5(g), 1, 3) AS bucket FROM g0),
+        |c AS (SELECT bucket, count(*) AS raw_cnt,
+        |        sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS tgt_cnt
+        |      FROM g GROUP BY bucket),
+        |tot AS (SELECT sum(raw_cnt) AS raw_tot, sum(tgt_cnt) AS tgt_tot FROM c),
+        |w AS (SELECT bucket,
+        |        ln((tgt_cnt + 0.5) / (tgt_tot + 0.5 * 4096))
+        |          - ln((raw_cnt + 0.5) / (raw_tot + 0.5 * 4096)) AS w
+        |      FROM c, tot)
+        |SELECT g.doc_id, count(*) AS n_grams, avg(w.w) AS importance
+        |FROM g JOIN w USING (bucket)
+        |GROUP BY g.doc_id""".stripMargin) { (s, dir) =>
       val nBuckets = 4096
       val alpha = 0.5
       val d = Tables.load(s, dir, "documents")
@@ -153,7 +206,7 @@ object TextOps3 {
         .groupBy(col("doc_id"))
         .agg(sum(col("n")).as("n_grams"),
           (sum(col("w") * col("n")) / sum(col("n")).cast("double")).as("importance"))
-    }),
+    },
 
     // ---- Gopher quality rules (Rae et al. 2021, Appendix A) -----------
     // The full rule battery every modern corpus pass applies (Gopher,
@@ -167,7 +220,34 @@ object TextOps3 {
     // one natural stopword): word-count floor 25 (Gopher: 50) and
     // stopword floor 1 (Gopher: 2). Everything else is the paper's
     // constant.
-    "t53_gopher_rules" -> ((s, dir) => {
+    Query("t53_gopher_rules",
+      """WITH t AS (
+        |  SELECT doc_id, text, string_split(text, ' ') AS toks,
+        |         string_split(text, chr(10)) AS lines,
+        |         len(string_split(text, ' ')) AS n_words
+        |  FROM documents),
+        |m AS (
+        |  SELECT doc_id, n_words,
+        |    CAST(list_aggregate(list_transform(toks, w -> length(w)), 'sum')
+        |         AS DOUBLE) / n_words AS mean_word_len,
+        |    CAST(length(text) - length(replace(text, '#', ''))
+        |         + (length(text) - length(replace(text, '...', ''))) // 3
+        |         AS DOUBLE) / n_words AS symbol_ratio,
+        |    CAST(len(list_filter(lines, l -> l LIKE '- %' OR l LIKE '* %'))
+        |         AS DOUBLE) / len(lines) AS bullet_line_frac,
+        |    CAST(len(list_filter(lines, l -> l LIKE '%...'))
+        |         AS DOUBLE) / len(lines) AS ellipsis_line_frac,
+        |    CAST(len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]')))
+        |         AS DOUBLE) / n_words AS alpha_word_frac,
+        |    len(list_filter(['the','be','to','of','and','that','have','with'],
+        |        s -> list_contains(toks, s))) AS n_stopwords
+        |  FROM t)
+        |SELECT *,
+        |  (n_words BETWEEN 25 AND 100000 AND mean_word_len BETWEEN 3.0 AND 10.0
+        |   AND symbol_ratio <= 0.1 AND bullet_line_frac <= 0.9
+        |   AND ellipsis_line_frac <= 0.3 AND alpha_word_frac >= 0.8
+        |   AND n_stopwords >= 1) AS passes
+        |FROM m""".stripMargin) { (s, dir) =>
       val stop = Seq("the", "be", "to", "of", "and", "that", "have", "with")
       val d = Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("text"), tokens.as("toks"),
@@ -199,7 +279,7 @@ object TextOps3 {
             col("ellipsis_line_frac") <= 0.3 &&
             col("alpha_word_frac") >= 0.8 &&
             col("n_stopwords") >= 1)
-    }),
+    },
 
     // ---- Count-min-sketch heavy hitters -------------------------------
     // The third sketch next to HLL (q63) and approx-percentiles (q71):
@@ -213,7 +293,19 @@ object TextOps3 {
     // bucket count, which can only OVERestimate (spec-gated). At
     // 100 TB you materialize the sketch once and probe it for any key
     // without touching the corpus again.
-    "t54_heavy_hitters" -> ((s, dir) => {
+    Query("t54_heavy_hitters",
+      """WITH toks AS (
+        |  SELECT unnest(string_split(text, ' ')) AS token FROM documents),
+        |hashed AS (
+        |  SELECT token, r AS hrow,
+        |    substring(md5(CAST(r AS VARCHAR) || ':' || token), 1, 3) AS bucket
+        |  FROM toks, range(0, 4) t(r)),
+        |sketch AS (SELECT hrow, bucket, count(*) AS cnt
+        |           FROM hashed GROUP BY hrow, bucket),
+        |cand AS (SELECT DISTINCT token, hrow, bucket FROM hashed),
+        |est AS (SELECT token, min(cnt) AS est
+        |        FROM cand JOIN sketch USING (hrow, bucket) GROUP BY token)
+        |SELECT token, est FROM est ORDER BY est DESC, token LIMIT 50""".stripMargin) { (s, dir) =>
       val dRows = 4
       val d = Tables.load(s, dir, "documents")
       val toks = d.select(explode(tokens).as("token"))
@@ -238,7 +330,7 @@ object TextOps3 {
         .groupBy(col("token"))
         .agg(min(col("cnt")).as("est"))
       est.orderBy(col("est").desc, col("token")).limit(50)
-    }),
+    },
 
     // ---- CCNet-style n-gram LM perplexity filter ----------------------
     // (Wenzek et al. 2020 "CCNet": score web documents by the
@@ -254,7 +346,31 @@ object TextOps3 {
     // pipeline ships KenLM files to every worker — same shape).
     // log determinism: Spark log ≡ java Math.log vs DuckDB ln agree
     // within 1e-9 rounding at these magnitudes (t52 precedent).
-    "t56_lm_perplexity" -> ((s, dir) => {
+    Query("t56_lm_perplexity",
+      """WITH t AS (
+        |  SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents
+        |  WHERE len(string_split(text, ' ')) >= 2),
+        |p0 AS (
+        |  SELECT doc_id, lang, unnest(list_transform(range(1, len(toks)),
+        |    i -> struct_pack(w1 := toks[CAST(i AS INT)],
+        |                     w2 := toks[CAST(i AS INT) + 1]))) AS p
+        |  FROM t),
+        |p AS (SELECT doc_id, lang, p.w1 AS w1, p.w2 AS w2 FROM p0),
+        |tgt AS (SELECT w1, w2 FROM p WHERE lang = 'en'),
+        |uni AS (SELECT w1, count(*) AS c1 FROM tgt GROUP BY w1),
+        |bi AS (SELECT w1, w2, count(*) AS c2 FROM tgt GROUP BY w1, w2),
+        |v AS (SELECT count(DISTINCT w1) AS v FROM tgt),
+        |lp AS (
+        |  SELECT p.doc_id,
+        |    ln((coalesce(bi.c2, 0) + 0.5) /
+        |       (coalesce(uni.c1, 0) + 0.5 * (v.v + 1))) AS lp
+        |  FROM p
+        |  LEFT JOIN bi ON p.w1 = bi.w1 AND p.w2 = bi.w2
+        |  LEFT JOIN uni ON p.w1 = uni.w1
+        |  CROSS JOIN v)
+        |SELECT doc_id, count(*) AS n_pairs, avg(lp) AS avg_logprob,
+        |  -avg(lp) AS cross_entropy, -avg(lp) < 7.0 AS keep
+        |FROM lp GROUP BY doc_id""".stripMargin) { (s, dir) =>
       val alpha = 0.5
       val d = Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("lang"), tokens.as("toks"))
@@ -286,7 +402,7 @@ object TextOps3 {
           avg(col("lp")).as("avg_logprob"))
         .withColumn("cross_entropy", -col("avg_logprob"))
         .withColumn("keep", col("cross_entropy") < 7.0)
-    }),
+    },
 
     // ---- Output sharding + per-shard manifest -------------------------
     // The write-out step of a training-data pipeline: every document is
@@ -297,7 +413,19 @@ object TextOps3 {
     // Scale: one map-side hash + one 16-key agg with map-side partials;
     // in production the same frame is `write.partitionBy(shard)` and
     // the manifest is the bookkeeping table. All-integer surface.
-    "t60_shard_manifest" -> ((s, dir) => {
+    Query("t60_shard_manifest",
+      """WITH t AS (
+        |  SELECT CAST(('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 4))
+        |           AS BIGINT) % 16 AS shard,
+        |    doc_id, len(string_split(text, ' ')) AS n_tok,
+        |    length(text) AS n_chars
+        |  FROM documents)
+        |SELECT shard, count(*) AS n_docs,
+        |  CAST(sum(n_tok) AS BIGINT) AS total_tokens,
+        |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
+        |  CAST(min(doc_id) AS BIGINT) AS min_doc,
+        |  CAST(max(doc_id) AS BIGINT) AS max_doc
+        |FROM t GROUP BY shard""".stripMargin) { (s, dir) =>
       val nShards = 16
       val d = Tables.load(s, dir, "documents")
       val shard = (conv(substring(
@@ -311,7 +439,7 @@ object TextOps3 {
           sum(col("n_chars")).as("total_chars"),
           min(col("doc_id")).as("min_doc"),
           max(col("doc_id")).as("max_doc"))
-    }),
+    },
 
     // ---- Token-budget mixture selection -------------------------------
     // "Build me a 20k-token training mix at these source weights" — the
@@ -324,7 +452,20 @@ object TextOps3 {
     // source partition (source cardinality = mixture size, each
     // partition's scan is sequential exactly like the file order a
     // real packer reads); all-integer surface.
-    "t61_token_budget_mix" -> ((s, dir) => {
+    Query("t61_token_budget_mix",
+      """WITH t AS (
+        |  SELECT source, doc_id, len(string_split(text, ' ')) AS n_tok,
+        |    (CASE source WHEN 'src0' THEN 4 WHEN 'src1' THEN 2
+        |                 WHEN 'src2' THEN 1 WHEN 'src3' THEN 1
+        |                 WHEN 'src4' THEN 1 WHEN 'src5' THEN 1
+        |                 ELSE 0 END) * 3000 // 10 AS quota
+        |  FROM documents),
+        |c AS (SELECT *, sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
+        |        ROWS UNBOUNDED PRECEDING) AS cum FROM t)
+        |SELECT source, count(*) AS n_docs_sel,
+        |  CAST(sum(n_tok) AS BIGINT) AS tokens_sel,
+        |  CAST(min(quota) AS BIGINT) AS quota
+        |FROM c WHERE cum - n_tok < quota GROUP BY source""".stripMargin) { (s, dir) =>
       val budget = 3000L
       val d = Tables.load(s, dir, "documents")
       val weights = Seq("src0" -> 4L, "src1" -> 2L, "src2" -> 1L,
@@ -344,165 +485,6 @@ object TextOps3 {
         .agg(count(lit(1)).as("n_docs_sel"),
           sum(col("n_tok")).as("tokens_sel"),
           first(col("quota")).as("quota"))
-    })
-  )
-
-  def oracles: Map[String, String] = Map(
-    "t50_pii_redaction" ->
-      s"""WITH e AS (
-        |  SELECT doc_id,
-        |    text || ' contact user' || CAST(doc_id AS VARCHAR)
-        |      || '@example.com ip 10.' || CAST(doc_id % 256 AS VARCHAR)
-        |      || '.' || CAST(doc_id % 100 AS VARCHAR)
-        |      || '.7 phone 555-'
-        |      || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS et
-        |  FROM documents)
-        |SELECT doc_id,
-        |  len(regexp_extract_all(et, '$EmailRe')) AS n_email,
-        |  len(regexp_extract_all(et, '$Ipv4Re')) AS n_ip,
-        |  len(regexp_extract_all(et, '$PhoneRe')) AS n_phone,
-        |  regexp_replace(regexp_replace(regexp_replace(et,
-        |    '$EmailRe', '<EMAIL>', 'g'),
-        |    '$Ipv4Re', '<IP>', 'g'),
-        |    '$PhoneRe', '<PHONE>', 'g') AS redacted
-        |FROM e""".stripMargin,
-
-    "t51_bm25" ->
-      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |dl AS (SELECT doc_id, len(toks) AS dl FROM t),
-        |st AS (SELECT avg(dl) AS avgdl, count(*) AS n_docs FROM dl),
-        |tf AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(toks) AS term FROM t)
-        |  WHERE term IN (${QueryTerms.map("'" + _ + "'").mkString(", ")})
-        |  GROUP BY doc_id, term),
-        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY term)
-        |SELECT tf.doc_id,
-        |  sum(ln((st.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0)
-        |      * (tf.tf * ${K1 + 1.0})
-        |      / (tf.tf + $K1 * (1.0 - $B + $B * dl.dl / st.avgdl))) AS bm25,
-        |  count(*) AS n_matched
-        |FROM tf JOIN df USING (term) JOIN dl ON tf.doc_id = dl.doc_id, st
-        |GROUP BY tf.doc_id""".stripMargin,
-
-    "t52_dsir_weights" ->
-      """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
-        |g0 AS (
-        |  SELECT doc_id, lang, unnest(
-        |    list_concat(toks,
-        |      CASE WHEN len(toks) >= 2 THEN
-        |        list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])
-        |      ELSE CAST([] AS VARCHAR[]) END)) AS g
-        |  FROM t),
-        |g AS (SELECT doc_id, lang, substring(md5(g), 1, 3) AS bucket FROM g0),
-        |c AS (SELECT bucket, count(*) AS raw_cnt,
-        |        sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS tgt_cnt
-        |      FROM g GROUP BY bucket),
-        |tot AS (SELECT sum(raw_cnt) AS raw_tot, sum(tgt_cnt) AS tgt_tot FROM c),
-        |w AS (SELECT bucket,
-        |        ln((tgt_cnt + 0.5) / (tgt_tot + 0.5 * 4096))
-        |          - ln((raw_cnt + 0.5) / (raw_tot + 0.5 * 4096)) AS w
-        |      FROM c, tot)
-        |SELECT g.doc_id, count(*) AS n_grams, avg(w.w) AS importance
-        |FROM g JOIN w USING (bucket)
-        |GROUP BY g.doc_id""".stripMargin,
-
-    "t53_gopher_rules" ->
-      """WITH t AS (
-        |  SELECT doc_id, text, string_split(text, ' ') AS toks,
-        |         string_split(text, chr(10)) AS lines,
-        |         len(string_split(text, ' ')) AS n_words
-        |  FROM documents),
-        |m AS (
-        |  SELECT doc_id, n_words,
-        |    CAST(list_aggregate(list_transform(toks, w -> length(w)), 'sum')
-        |         AS DOUBLE) / n_words AS mean_word_len,
-        |    CAST(length(text) - length(replace(text, '#', ''))
-        |         + (length(text) - length(replace(text, '...', ''))) // 3
-        |         AS DOUBLE) / n_words AS symbol_ratio,
-        |    CAST(len(list_filter(lines, l -> l LIKE '- %' OR l LIKE '* %'))
-        |         AS DOUBLE) / len(lines) AS bullet_line_frac,
-        |    CAST(len(list_filter(lines, l -> l LIKE '%...'))
-        |         AS DOUBLE) / len(lines) AS ellipsis_line_frac,
-        |    CAST(len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]')))
-        |         AS DOUBLE) / n_words AS alpha_word_frac,
-        |    len(list_filter(['the','be','to','of','and','that','have','with'],
-        |        s -> list_contains(toks, s))) AS n_stopwords
-        |  FROM t)
-        |SELECT *,
-        |  (n_words BETWEEN 25 AND 100000 AND mean_word_len BETWEEN 3.0 AND 10.0
-        |   AND symbol_ratio <= 0.1 AND bullet_line_frac <= 0.9
-        |   AND ellipsis_line_frac <= 0.3 AND alpha_word_frac >= 0.8
-        |   AND n_stopwords >= 1) AS passes
-        |FROM m""".stripMargin,
-
-    "t54_heavy_hitters" ->
-      """WITH toks AS (
-        |  SELECT unnest(string_split(text, ' ')) AS token FROM documents),
-        |hashed AS (
-        |  SELECT token, r AS hrow,
-        |    substring(md5(CAST(r AS VARCHAR) || ':' || token), 1, 3) AS bucket
-        |  FROM toks, range(0, 4) t(r)),
-        |sketch AS (SELECT hrow, bucket, count(*) AS cnt
-        |           FROM hashed GROUP BY hrow, bucket),
-        |cand AS (SELECT DISTINCT token, hrow, bucket FROM hashed),
-        |est AS (SELECT token, min(cnt) AS est
-        |        FROM cand JOIN sketch USING (hrow, bucket) GROUP BY token)
-        |SELECT token, est FROM est ORDER BY est DESC, token LIMIT 50""".stripMargin,
-
-    "t56_lm_perplexity" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 2),
-        |p0 AS (
-        |  SELECT doc_id, lang, unnest(list_transform(range(1, len(toks)),
-        |    i -> struct_pack(w1 := toks[CAST(i AS INT)],
-        |                     w2 := toks[CAST(i AS INT) + 1]))) AS p
-        |  FROM t),
-        |p AS (SELECT doc_id, lang, p.w1 AS w1, p.w2 AS w2 FROM p0),
-        |tgt AS (SELECT w1, w2 FROM p WHERE lang = 'en'),
-        |uni AS (SELECT w1, count(*) AS c1 FROM tgt GROUP BY w1),
-        |bi AS (SELECT w1, w2, count(*) AS c2 FROM tgt GROUP BY w1, w2),
-        |v AS (SELECT count(DISTINCT w1) AS v FROM tgt),
-        |lp AS (
-        |  SELECT p.doc_id,
-        |    ln((coalesce(bi.c2, 0) + 0.5) /
-        |       (coalesce(uni.c1, 0) + 0.5 * (v.v + 1))) AS lp
-        |  FROM p
-        |  LEFT JOIN bi ON p.w1 = bi.w1 AND p.w2 = bi.w2
-        |  LEFT JOIN uni ON p.w1 = uni.w1
-        |  CROSS JOIN v)
-        |SELECT doc_id, count(*) AS n_pairs, avg(lp) AS avg_logprob,
-        |  -avg(lp) AS cross_entropy, -avg(lp) < 7.0 AS keep
-        |FROM lp GROUP BY doc_id""".stripMargin,
-
-    "t60_shard_manifest" ->
-      """WITH t AS (
-        |  SELECT CAST(('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 4))
-        |           AS BIGINT) % 16 AS shard,
-        |    doc_id, len(string_split(text, ' ')) AS n_tok,
-        |    length(text) AS n_chars
-        |  FROM documents)
-        |SELECT shard, count(*) AS n_docs,
-        |  CAST(sum(n_tok) AS BIGINT) AS total_tokens,
-        |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
-        |  CAST(min(doc_id) AS BIGINT) AS min_doc,
-        |  CAST(max(doc_id) AS BIGINT) AS max_doc
-        |FROM t GROUP BY shard""".stripMargin,
-
-    "t61_token_budget_mix" ->
-      """WITH t AS (
-        |  SELECT source, doc_id, len(string_split(text, ' ')) AS n_tok,
-        |    (CASE source WHEN 'src0' THEN 4 WHEN 'src1' THEN 2
-        |                 WHEN 'src2' THEN 1 WHEN 'src3' THEN 1
-        |                 WHEN 'src4' THEN 1 WHEN 'src5' THEN 1
-        |                 ELSE 0 END) * 3000 // 10 AS quota
-        |  FROM documents),
-        |c AS (SELECT *, sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-        |        ROWS UNBOUNDED PRECEDING) AS cum FROM t)
-        |SELECT source, count(*) AS n_docs_sel,
-        |  CAST(sum(n_tok) AS BIGINT) AS tokens_sel,
-        |  CAST(min(quota) AS BIGINT) AS quota
-        |FROM c WHERE cum - n_tok < quota GROUP BY source""".stripMargin
+    }
   )
 }

@@ -40,10 +40,8 @@ import graft.Tables
   * both engines so hashes match bit-for-bit; counts stay BIGINT on
   * both sides (DuckDB sum(int) is HUGEINT → always CAST AS BIGINT).
   */
-object TpcDs {
+object TpcDs extends QueryModule {
 
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 4))
-  private def dec6(c: Column): Column = c.cast(DecimalType(22, 6))
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
   private def net: Column = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
@@ -75,38 +73,22 @@ object TpcDs {
        |         quarter(o_orderdate) AS d_qtr
        |  FROM lineitem l JOIN orders o ON l_orderkey = o_orderkey)""".stripMargin
 
-  /** d02 in both plan shapes — results are identical because the
-    * three remainder classes partition lineitem. `singleScan = false`
-    * is TPC-DS q5's literal shape (three per-channel scans union'd —
-    * in real TPC-DS the channels are three DIFFERENT fact tables, so
-    * the triple scan is inherent); `singleScan = true` derives the
-    * channel as a column and reads the fact ONCE — the shape to
-    * prefer when channels live in one table, as in this fixture.
-    * D02Probe measures the two at sf1; BASELINE.md records the
-    * adjudication.
+  /** d02 in TPC-DS q5's literal shape: three per-channel scans union'd
+    * (in real TPC-DS the channels are three DIFFERENT fact tables, so
+    * the triple scan is inherent). Deriving the channel as a column and
+    * reading the fact once gives the same rows; BASELINE.md records the
+    * sf1 measurement of both shapes.
     */
-  private[graft] def d02Shape(s: SparkSession, dir: String,
-                              singleScan: Boolean): DataFrame = {
+  private def d02Shape(s: SparkSession, dir: String): DataFrame = {
     val p = t(s, dir, "part")
-    val tagged =
-      if (singleScan)
-        t(s, dir, "lineitem").withColumn("channel", channel)
-          .join(p, col("l_partkey") === col("p_partkey"))
-          .select(col("channel"), col("p_brand"),
-            dec6(net).as("sales_dec"),
-            when(col("l_returnflag") === "R", dec6(net))
-              .otherwise(lit(0).cast(DecimalType(22, 6))).as("returns_dec"))
-      else {
-        def chan(rem: Int, name: String) =
-          t(s, dir, "lineitem").filter(col("l_linenumber") % 3 === rem)
-            .join(p, col("l_partkey") === col("p_partkey"))
-            .select(lit(name).as("channel"), col("p_brand"),
-              dec6(net).as("sales_dec"),
-              when(col("l_returnflag") === "R", dec6(net))
-                .otherwise(lit(0).cast(DecimalType(22, 6))).as("returns_dec"))
-        chan(1, "store").unionAll(chan(2, "catalog")).unionAll(chan(0, "web"))
-      }
-    tagged
+    def chan(rem: Int, name: String) =
+      t(s, dir, "lineitem").filter(col("l_linenumber") % 3 === rem)
+        .join(p, col("l_partkey") === col("p_partkey"))
+        .select(lit(name).as("channel"), col("p_brand"),
+          dec6(net).as("sales_dec"),
+          when(col("l_returnflag") === "R", dec6(net))
+            .otherwise(lit(0).cast(DecimalType(22, 6))).as("returns_dec"))
+    chan(1, "store").unionAll(chan(2, "catalog")).unionAll(chan(0, "web"))
       // two-phase rollup (see d05): grain-aggregate the fact once,
       // Expand multiplies only the |channel x brand| frame
       .groupBy(col("channel"), col("p_brand"))
@@ -117,13 +99,19 @@ object TpcDs {
            (sum(col("g_sales")) - sum(col("g_returns"))).cast("double").as("profit"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def declared: Seq[Query] = Seq(
 
     // ---- d01: star join + year/brand agg (TPC-DS q3 shape) -----------
     // fact ⋈ date_dim ⋈ item with an item attribute filter; the filter
     // reaches the part scan (pushed), the join shuffles on l_partkey
     // only after part is pre-filtered (AQE broadcasts it).
-    "d01_brand_year_revenue" -> ((s, dir) => {
+    Query("d01_brand_year_revenue", s"""
+      WITH $salesSql
+      SELECT d_year, p_brand,
+        CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(22,6))) AS DOUBLE) AS sum_agg
+      FROM sales JOIN part ON l_partkey = p_partkey
+      WHERE p_type = 'STANDARD'
+      GROUP BY d_year, p_brand""") { (s, dir) =>
       // r22 (§3.2 reduce-before-the-exchange): p_type = 'STANDARD'
       // keeps 1/6 of parts, so the filtered part join runs FIRST and
       // prunes ~5/6 of lineitem before the orderkey exchange against
@@ -137,15 +125,40 @@ object TpcDs {
         .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
         .groupBy(year(col("o_orderdate")).as("d_year"), col("p_brand"))
         .agg(sum(dec6(net)).cast("double").as("sum_agg"))
-    }),
+    },
 
     // ---- d02: multi-channel union + ROLLUP (TPC-DS q5 shape) ---------
     // Three disjoint channel scans union'd, then ROLLUP(channel, brand)
     // with sales / returns / profit — the q5 per-channel P&L roll-up.
-    "d02_channel_rollup" -> ((s, dir) => d02Shape(s, dir, singleScan = false)),
+    Query("d02_channel_rollup", s"""
+      WITH chan AS (
+        SELECT CASE WHEN l_linenumber % 3 = 1 THEN 'store'
+                    WHEN l_linenumber % 3 = 2 THEN 'catalog' ELSE 'web' END AS channel,
+               p_brand,
+               CAST(l_extendedprice*(1-l_discount) AS DECIMAL(22,6)) AS sales_dec,
+               CASE WHEN l_returnflag = 'R'
+                    THEN CAST(l_extendedprice*(1-l_discount) AS DECIMAL(22,6))
+                    ELSE CAST(0 AS DECIMAL(22,6)) END AS returns_dec
+        FROM lineitem JOIN part ON l_partkey = p_partkey)
+      SELECT channel, p_brand,
+        CAST(sum(sales_dec) AS DOUBLE) AS sales,
+        CAST(sum(returns_dec) AS DOUBLE) AS returns,
+        CAST(sum(sales_dec) - sum(returns_dec) AS DOUBLE) AS profit
+      FROM chan GROUP BY ROLLUP (channel, p_brand)""") (d02Shape),
 
     // ---- d03: star with multi-dim filters + avgs (TPC-DS q7 shape) ---
-    "d03_star_averages" -> ((s, dir) => {
+    Query("d03_star_averages", s"""
+      WITH $salesSql
+      SELECT p_brand,
+        CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)/count(*) AS agg1,
+        CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)/count(*) AS agg2,
+        CAST(sum(CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE)/count(*) AS agg3,
+        count(*) AS cnt
+      FROM sales
+        JOIN customer ON o_custkey = c_custkey
+        JOIN part ON l_partkey = p_partkey
+      WHERE c_mktsegment = 'AUTOMOBILE' AND o_orderpriority = '1-URGENT'
+      GROUP BY p_brand""") { (s, dir) =>
       sales(s, dir)
         .join(t(s, dir, "customer").filter(col("c_mktsegment") === "AUTOMOBILE"),
           col("o_custkey") === col("c_custkey"))
@@ -156,13 +169,22 @@ object TpcDs {
              (sum(dec(col("l_extendedprice"))).cast("double") / count(lit(1))).as("agg2"),
              (sum(dec(col("l_discount"))).cast("double") / count(lit(1))).as("agg3"),
              count(lit(1)).as("cnt"))
-    }),
+    },
 
     // ---- d04: scalar-subquery cross join ×8 (TPC-DS q88 shape) -------
     // Eight independent bucket counts assembled as a single wide row.
     // Each is a 1-row aggregate → the 8-way join is 7 broadcast joins
     // of 1-row frames; at any SF this is 8 parallel scans + no shuffle.
-    "d04_bucket_counts" -> ((s, dir) => {
+    Query("d04_bucket_counts", """
+      SELECT * FROM
+        (SELECT count(*) AS h1 FROM lineitem WHERE l_quantity BETWEEN 1 AND 6 AND l_linestatus='O') a,
+        (SELECT count(*) AS h2 FROM lineitem WHERE l_quantity BETWEEN 7 AND 12 AND l_linestatus='O') b,
+        (SELECT count(*) AS h3 FROM lineitem WHERE l_quantity BETWEEN 13 AND 18 AND l_linestatus='O') c,
+        (SELECT count(*) AS h4 FROM lineitem WHERE l_quantity BETWEEN 19 AND 24 AND l_linestatus='O') d,
+        (SELECT count(*) AS h5 FROM lineitem WHERE l_quantity BETWEEN 1 AND 6 AND l_linestatus='F') e,
+        (SELECT count(*) AS h6 FROM lineitem WHERE l_quantity BETWEEN 7 AND 12 AND l_linestatus='F') f,
+        (SELECT count(*) AS h7 FROM lineitem WHERE l_quantity BETWEEN 13 AND 18 AND l_linestatus='F') g,
+        (SELECT count(*) AS h8 FROM lineitem WHERE l_quantity BETWEEN 19 AND 24 AND l_linestatus='F') h""") { (s, dir) =>
       val li = t(s, dir, "lineitem")
       def bucket(lo: Int, hi: Int, status: String, as: String) =
         li.filter(col("l_quantity").between(lo, hi) && col("l_linestatus") === status)
@@ -171,7 +193,7 @@ object TpcDs {
         .crossJoin(bucket(13, 18, "O", "h3")).crossJoin(bucket(19, 24, "O", "h4"))
         .crossJoin(bucket(1, 6, "F", "h5")).crossJoin(bucket(7, 12, "F", "h6"))
         .crossJoin(bucket(13, 18, "F", "h7")).crossJoin(bucket(19, 24, "F", "h8"))
-    }),
+    },
 
     // ---- d05: ROLLUP + GROUPING() + rank within parent (q36 shape) ---
     // Gross-discount-margin hierarchy over region → nation with
@@ -179,7 +201,23 @@ object TpcDs {
     // (level, parent) — the canonical q36 "rank within parent" idiom.
     // The window runs over ≤ 31 aggregated rows — driver-side-tiny at
     // any SF because rollup output is bounded by the dim cardinality.
-    "d05_margin_rollup_rank" -> ((s, dir) => {
+    Query("d05_margin_rollup_rank", """
+      WITH agg AS (
+        SELECT CAST(sum(CAST(l_extendedprice*l_discount AS DECIMAL(22,6))) AS DOUBLE)
+                 / CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS gross_margin,
+               r_name, n_name,
+               CAST(GROUPING(r_name) + GROUPING(n_name) AS INT) AS lochierarchy
+        FROM lineitem
+          JOIN supplier ON l_suppkey = s_suppkey
+          JOIN nation ON s_nationkey = n_nationkey
+          JOIN region ON n_regionkey = r_regionkey
+        GROUP BY ROLLUP (r_name, n_name))
+      SELECT gross_margin, r_name, n_name, lochierarchy,
+        RANK() OVER (
+          PARTITION BY lochierarchy, CASE WHEN lochierarchy = 0 THEN r_name END
+          ORDER BY gross_margin ASC, coalesce(n_name,'') ASC, coalesce(r_name,'') ASC
+        ) AS rank_within_parent
+      FROM agg""") { (s, dir) =>
       // Two-phase rollup: Spark's Expand would stream the FACT table 3x
       // (one copy per grouping set) through the aggregate. Aggregate at
       // the finest grain first — decimal sums re-aggregate exactly — and
@@ -215,10 +253,21 @@ object TpcDs {
                  coalesce(col("r_name"), lit("")).asc)
       agg.select(col("gross_margin"), col("r_name"), col("n_name"),
                  col("lochierarchy"), rank().over(w).as("rank_within_parent"))
-    }),
+    },
 
     // ---- d06: ROLLUP + per-category top-N (TPC-DS q67 shape) ---------
-    "d06_rollup_topn" -> ((s, dir) => {
+    Query("d06_rollup_topn", """
+      WITH agg AS (
+        SELECT p_brand, p_type,
+          CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
+        FROM lineitem JOIN part ON l_partkey = p_partkey
+        GROUP BY ROLLUP (p_brand, p_type))
+      SELECT * FROM (
+        SELECT p_brand, p_type, sum_qty,
+          RANK() OVER (PARTITION BY p_brand
+                       ORDER BY sum_qty DESC, coalesce(p_type,'~') ASC) AS rk
+        FROM agg) t
+      WHERE rk <= 3""") { (s, dir) =>
       // Same two-phase rollup as d05: finest-grain aggregate first, so
       // Expand's 3x multiplication hits |brand x type| rows, not the fact.
       val agg = t(s, dir, "lineitem")
@@ -230,10 +279,17 @@ object TpcDs {
       val w = Window.partitionBy(col("p_brand"))
         .orderBy(col("sum_qty").desc, coalesce(col("p_type"), lit("~")).asc)
       agg.withColumn("rk", rank().over(w)).filter(col("rk") <= 3)
-    }),
+    },
 
     // ---- d07: per-order line-count buckets + HAVING (q34 shape) ------
-    "d07_order_line_buckets" -> ((s, dir) => {
+    Query("d07_order_line_buckets", """
+      WITH oc AS (
+        SELECT o_orderkey, o_custkey, count(*) AS cnt
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        GROUP BY o_orderkey, o_custkey
+        HAVING count(*) BETWEEN 6 AND 7)
+      SELECT c_name, o_orderkey, cnt
+      FROM oc JOIN customer ON o_custkey = c_custkey""") { (s, dir) =>
       val oc = t(s, dir, "lineitem")
         .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderkey"), col("o_custkey"))
@@ -241,10 +297,22 @@ object TpcDs {
         .filter(col("cnt").between(6, 7))
       oc.join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
         .select(col("c_name"), col("o_orderkey"), col("cnt"))
-    }),
+    },
 
     // ---- d08: month-over-month self-join ratio (TPC-DS q59 shape) ----
-    "d08_mom_revenue_ratio" -> ((s, dir) => {
+    Query("d08_mom_revenue_ratio", s"""
+      WITH $salesSql,
+      rev AS (
+        SELECT n_name, d_year, d_month,
+          CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(22,6))) AS DOUBLE) AS rev
+        FROM sales
+          JOIN customer ON o_custkey = c_custkey
+          JOIN nation ON c_nationkey = n_nationkey
+        GROUP BY n_name, d_year, d_month)
+      SELECT y1.n_name, y1.d_month, y1.rev AS rev1996, y2.rev AS rev1997,
+             y2.rev / y1.rev AS ratio
+      FROM rev y1 JOIN rev y2 ON y1.n_name = y2.n_name AND y1.d_month = y2.d_month
+      WHERE y1.d_year = 1996 AND y2.d_year = 1997""") { (s, dir) =>
       // r21: the two year slices were two references to `rev` — Spark
       // planned the sales⋈customer⋈nation subtree TWICE (the d12
       // disease). One conditional-sum pass per (nation, month) is the
@@ -271,12 +339,20 @@ object TpcDs {
                 col("s96").cast("double").as("rev1996"),
                 col("s97").cast("double").as("rev1997"),
                 (col("s97").cast("double") / col("s96").cast("double")).as("ratio"))
-    }),
+    },
 
     // ---- d09: correlated EXISTS chain (TPC-DS q54 shape) -------------
     // Customers who bought PROMO parts in 1996 AND placed an urgent
     // order — two stacked semi joins, counted by segment.
-    "d09_exists_chain" -> ((s, dir) => {
+    Query("d09_exists_chain", s"""
+      WITH $salesSql
+      SELECT c_mktsegment, count(*) AS cnt
+      FROM customer
+      WHERE EXISTS (SELECT 1 FROM sales JOIN part ON l_partkey = p_partkey
+                    WHERE o_custkey = c_custkey AND p_type = 'PROMO' AND d_year = 1996)
+        AND EXISTS (SELECT 1 FROM orders
+                    WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
+      GROUP BY c_mktsegment""") { (s, dir) =>
       val promoBuyers = sales(s, dir)
         .join(t(s, dir, "part").filter(col("p_type") === "PROMO"),
           col("l_partkey") === col("p_partkey"))
@@ -290,13 +366,20 @@ object TpcDs {
         .join(urgent, col("c_custkey") === col("u_custkey"), "left_semi")
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("cnt"))
-    }),
+    },
 
     // ---- d10: EXISTS + NOT EXISTS channel mix (q10/q35 shape) --------
     // Customers active in the store channel but absent from the web
     // channel; conditional count on acctbal (the q10 demographic
     // breakdown) — semi + anti join, both shuffling on custkey.
-    "d10_exists_not_exists" -> ((s, dir) => {
+    Query("d10_exists_not_exists", s"""
+      WITH $salesSql
+      SELECT c_mktsegment, count(*) AS cnt,
+        CAST(sum(CASE WHEN c_acctbal > 5000 THEN 1 ELSE 0 END) AS BIGINT) AS n_rich
+      FROM customer
+      WHERE EXISTS (SELECT 1 FROM sales WHERE o_custkey = c_custkey AND channel = 'store')
+        AND NOT EXISTS (SELECT 1 FROM sales WHERE o_custkey = c_custkey AND channel = 'web')
+      GROUP BY c_mktsegment""") { (s, dir) =>
       val storeCust = sales(s, dir).filter(col("channel") === "store").select(col("o_custkey"))
       val webCust = sales(s, dir).filter(col("channel") === "web")
         .select(col("o_custkey").as("w_custkey"))
@@ -306,13 +389,27 @@ object TpcDs {
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("cnt"),
              sum(when(col("c_acctbal") > 5000, 1L).otherwise(0L)).cast("long").as("n_rich"))
-    }),
+    },
 
     // ---- d11: frequent items ∩ best customers (TPC-DS q23 shape) -----
     // "Frequent" parts (>35 lineitems) and "best" customers (spend >
     // 1.3× the average per-customer spend, a broadcast 1-row scalar);
     // total cross-channel sales restricted to both sets.
-    "d11_frequent_best" -> ((s, dir) => {
+    Query("d11_frequent_best", s"""
+      WITH $salesSql,
+      freq AS (SELECT l_partkey FROM lineitem GROUP BY l_partkey HAVING count(*) > 35),
+      spend AS (SELECT o_custkey, sum(CAST(o_totalprice AS DECIMAL(18,4))) AS spend_dec
+                FROM orders GROUP BY o_custkey),
+      best AS (SELECT o_custkey FROM spend
+               WHERE CAST(spend_dec AS DOUBLE) >
+                 1.3 * (SELECT CAST(sum(spend_dec) AS DOUBLE)/count(*) FROM spend))
+      SELECT channel,
+        CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(22,6))) AS DOUBLE) AS total_sales,
+        count(*) AS n_lines
+      FROM sales
+      WHERE l_partkey IN (SELECT l_partkey FROM freq)
+        AND o_custkey IN (SELECT o_custkey FROM best)
+      GROUP BY channel""") { (s, dir) =>
       val freqParts = t(s, dir, "lineitem")
         .groupBy(col("l_partkey")).agg(count(lit(1)).as("pc"))
         .filter(col("pc") > 35).select(col("l_partkey").as("f_partkey"))
@@ -334,12 +431,30 @@ object TpcDs {
         .groupBy(col("channel"))
         .agg(sum(dec6(net)).cast("double").as("total_sales"),
              count(lit(1)).as("n_lines"))
-    }),
+    },
 
     // ---- d12: quarter-over-quarter two-channel growth (q31 shape) ----
     // Nations where the web channel grew faster than the store channel
     // from 1996Q1 to 1996Q2 — four aggregated frames joined on nation.
-    "d12_qoq_channel_growth" -> ((s, dir) => {
+    Query("d12_qoq_channel_growth", s"""
+      WITH $salesSql,
+      rev AS (
+        SELECT n_name, channel, d_qtr,
+          CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(22,6))) AS DOUBLE) AS rev
+        FROM sales
+          JOIN customer ON o_custkey = c_custkey
+          JOIN nation ON c_nationkey = n_nationkey
+        WHERE d_year = 1996 AND d_qtr IN (1, 2)
+        GROUP BY n_name, channel, d_qtr)
+      SELECT ss1.n_name AS n_name, ss1.rev AS ss1, ss2.rev AS ss2,
+             ws1.rev AS ws1, ws2.rev AS ws2,
+             ss2.rev / ss1.rev AS store_ratio, ws2.rev / ws1.rev AS web_ratio
+      FROM rev ss1, rev ss2, rev ws1, rev ws2
+      WHERE ss1.channel = 'store' AND ss1.d_qtr = 1
+        AND ss2.channel = 'store' AND ss2.d_qtr = 2 AND ss2.n_name = ss1.n_name
+        AND ws1.channel = 'web' AND ws1.d_qtr = 1 AND ws1.n_name = ss1.n_name
+        AND ws2.channel = 'web' AND ws2.d_qtr = 2 AND ws2.n_name = ss1.n_name
+        AND ws2.rev / ws1.rev > ss2.rev / ss1.rev""") { (s, dir) =>
       // r22 (the d05/d08 int-key discipline): aggregate by the INT
       // c_nationkey and join nation onto the ≤|nation|·3·2-row frame —
       // same equivalence as d08 (n_name unique per nationkey,
@@ -369,178 +484,10 @@ object TpcDs {
         .select(col("n_name"), col("ss1"), col("ss2"), col("ws1"), col("ws2"),
                 (col("ss2") / col("ss1")).as("store_ratio"),
                 (col("ws2") / col("ws1")).as("web_ratio"))
-    }),
+    },
 
     // ---- d13: three-channel union → re-aggregate (q33/q56 shape) -----
-    "d13_union_brand_total" -> ((s, dir) => {
-      val p = t(s, dir, "part").filter(col("p_size").isin(5, 10, 15, 20, 25))
-      def chan(ch: String) = sales(s, dir).filter(col("channel") === ch)
-        .join(p, col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand")).agg(sum(dec6(net)).as("amt_dec"))
-      chan("store").unionAll(chan("catalog")).unionAll(chan("web"))
-        .groupBy(col("p_brand"))
-        .agg(sum(col("amt_dec")).cast("double").as("total_sales"))
-    }))
-
-  def oracles: Map[String, String] = Map(
-    "d01_brand_year_revenue" -> s"""
-      WITH $salesSql
-      SELECT d_year, p_brand,
-        CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(22,6))) AS DOUBLE) AS sum_agg
-      FROM sales JOIN part ON l_partkey = p_partkey
-      WHERE p_type = 'STANDARD'
-      GROUP BY d_year, p_brand""",
-
-    "d02_channel_rollup" -> s"""
-      WITH chan AS (
-        SELECT CASE WHEN l_linenumber % 3 = 1 THEN 'store'
-                    WHEN l_linenumber % 3 = 2 THEN 'catalog' ELSE 'web' END AS channel,
-               p_brand,
-               CAST(l_extendedprice*(1-l_discount) AS DECIMAL(22,6)) AS sales_dec,
-               CASE WHEN l_returnflag = 'R'
-                    THEN CAST(l_extendedprice*(1-l_discount) AS DECIMAL(22,6))
-                    ELSE CAST(0 AS DECIMAL(22,6)) END AS returns_dec
-        FROM lineitem JOIN part ON l_partkey = p_partkey)
-      SELECT channel, p_brand,
-        CAST(sum(sales_dec) AS DOUBLE) AS sales,
-        CAST(sum(returns_dec) AS DOUBLE) AS returns,
-        CAST(sum(sales_dec) - sum(returns_dec) AS DOUBLE) AS profit
-      FROM chan GROUP BY ROLLUP (channel, p_brand)""",
-
-    "d03_star_averages" -> s"""
-      WITH $salesSql
-      SELECT p_brand,
-        CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)/count(*) AS agg1,
-        CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)/count(*) AS agg2,
-        CAST(sum(CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE)/count(*) AS agg3,
-        count(*) AS cnt
-      FROM sales
-        JOIN customer ON o_custkey = c_custkey
-        JOIN part ON l_partkey = p_partkey
-      WHERE c_mktsegment = 'AUTOMOBILE' AND o_orderpriority = '1-URGENT'
-      GROUP BY p_brand""",
-
-    "d04_bucket_counts" -> """
-      SELECT * FROM
-        (SELECT count(*) AS h1 FROM lineitem WHERE l_quantity BETWEEN 1 AND 6 AND l_linestatus='O') a,
-        (SELECT count(*) AS h2 FROM lineitem WHERE l_quantity BETWEEN 7 AND 12 AND l_linestatus='O') b,
-        (SELECT count(*) AS h3 FROM lineitem WHERE l_quantity BETWEEN 13 AND 18 AND l_linestatus='O') c,
-        (SELECT count(*) AS h4 FROM lineitem WHERE l_quantity BETWEEN 19 AND 24 AND l_linestatus='O') d,
-        (SELECT count(*) AS h5 FROM lineitem WHERE l_quantity BETWEEN 1 AND 6 AND l_linestatus='F') e,
-        (SELECT count(*) AS h6 FROM lineitem WHERE l_quantity BETWEEN 7 AND 12 AND l_linestatus='F') f,
-        (SELECT count(*) AS h7 FROM lineitem WHERE l_quantity BETWEEN 13 AND 18 AND l_linestatus='F') g,
-        (SELECT count(*) AS h8 FROM lineitem WHERE l_quantity BETWEEN 19 AND 24 AND l_linestatus='F') h""",
-
-    "d05_margin_rollup_rank" -> """
-      WITH agg AS (
-        SELECT CAST(sum(CAST(l_extendedprice*l_discount AS DECIMAL(22,6))) AS DOUBLE)
-                 / CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS gross_margin,
-               r_name, n_name,
-               CAST(GROUPING(r_name) + GROUPING(n_name) AS INT) AS lochierarchy
-        FROM lineitem
-          JOIN supplier ON l_suppkey = s_suppkey
-          JOIN nation ON s_nationkey = n_nationkey
-          JOIN region ON n_regionkey = r_regionkey
-        GROUP BY ROLLUP (r_name, n_name))
-      SELECT gross_margin, r_name, n_name, lochierarchy,
-        RANK() OVER (
-          PARTITION BY lochierarchy, CASE WHEN lochierarchy = 0 THEN r_name END
-          ORDER BY gross_margin ASC, coalesce(n_name,'') ASC, coalesce(r_name,'') ASC
-        ) AS rank_within_parent
-      FROM agg""",
-
-    "d06_rollup_topn" -> """
-      WITH agg AS (
-        SELECT p_brand, p_type,
-          CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-        GROUP BY ROLLUP (p_brand, p_type))
-      SELECT * FROM (
-        SELECT p_brand, p_type, sum_qty,
-          RANK() OVER (PARTITION BY p_brand
-                       ORDER BY sum_qty DESC, coalesce(p_type,'~') ASC) AS rk
-        FROM agg) t
-      WHERE rk <= 3""",
-
-    "d07_order_line_buckets" -> """
-      WITH oc AS (
-        SELECT o_orderkey, o_custkey, count(*) AS cnt
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        GROUP BY o_orderkey, o_custkey
-        HAVING count(*) BETWEEN 6 AND 7)
-      SELECT c_name, o_orderkey, cnt
-      FROM oc JOIN customer ON o_custkey = c_custkey""",
-
-    "d08_mom_revenue_ratio" -> s"""
-      WITH $salesSql,
-      rev AS (
-        SELECT n_name, d_year, d_month,
-          CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(22,6))) AS DOUBLE) AS rev
-        FROM sales
-          JOIN customer ON o_custkey = c_custkey
-          JOIN nation ON c_nationkey = n_nationkey
-        GROUP BY n_name, d_year, d_month)
-      SELECT y1.n_name, y1.d_month, y1.rev AS rev1996, y2.rev AS rev1997,
-             y2.rev / y1.rev AS ratio
-      FROM rev y1 JOIN rev y2 ON y1.n_name = y2.n_name AND y1.d_month = y2.d_month
-      WHERE y1.d_year = 1996 AND y2.d_year = 1997""",
-
-    "d09_exists_chain" -> s"""
-      WITH $salesSql
-      SELECT c_mktsegment, count(*) AS cnt
-      FROM customer
-      WHERE EXISTS (SELECT 1 FROM sales JOIN part ON l_partkey = p_partkey
-                    WHERE o_custkey = c_custkey AND p_type = 'PROMO' AND d_year = 1996)
-        AND EXISTS (SELECT 1 FROM orders
-                    WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-      GROUP BY c_mktsegment""",
-
-    "d10_exists_not_exists" -> s"""
-      WITH $salesSql
-      SELECT c_mktsegment, count(*) AS cnt,
-        CAST(sum(CASE WHEN c_acctbal > 5000 THEN 1 ELSE 0 END) AS BIGINT) AS n_rich
-      FROM customer
-      WHERE EXISTS (SELECT 1 FROM sales WHERE o_custkey = c_custkey AND channel = 'store')
-        AND NOT EXISTS (SELECT 1 FROM sales WHERE o_custkey = c_custkey AND channel = 'web')
-      GROUP BY c_mktsegment""",
-
-    "d11_frequent_best" -> s"""
-      WITH $salesSql,
-      freq AS (SELECT l_partkey FROM lineitem GROUP BY l_partkey HAVING count(*) > 35),
-      spend AS (SELECT o_custkey, sum(CAST(o_totalprice AS DECIMAL(18,4))) AS spend_dec
-                FROM orders GROUP BY o_custkey),
-      best AS (SELECT o_custkey FROM spend
-               WHERE CAST(spend_dec AS DOUBLE) >
-                 1.3 * (SELECT CAST(sum(spend_dec) AS DOUBLE)/count(*) FROM spend))
-      SELECT channel,
-        CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(22,6))) AS DOUBLE) AS total_sales,
-        count(*) AS n_lines
-      FROM sales
-      WHERE l_partkey IN (SELECT l_partkey FROM freq)
-        AND o_custkey IN (SELECT o_custkey FROM best)
-      GROUP BY channel""",
-
-    "d12_qoq_channel_growth" -> s"""
-      WITH $salesSql,
-      rev AS (
-        SELECT n_name, channel, d_qtr,
-          CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(22,6))) AS DOUBLE) AS rev
-        FROM sales
-          JOIN customer ON o_custkey = c_custkey
-          JOIN nation ON c_nationkey = n_nationkey
-        WHERE d_year = 1996 AND d_qtr IN (1, 2)
-        GROUP BY n_name, channel, d_qtr)
-      SELECT ss1.n_name AS n_name, ss1.rev AS ss1, ss2.rev AS ss2,
-             ws1.rev AS ws1, ws2.rev AS ws2,
-             ss2.rev / ss1.rev AS store_ratio, ws2.rev / ws1.rev AS web_ratio
-      FROM rev ss1, rev ss2, rev ws1, rev ws2
-      WHERE ss1.channel = 'store' AND ss1.d_qtr = 1
-        AND ss2.channel = 'store' AND ss2.d_qtr = 2 AND ss2.n_name = ss1.n_name
-        AND ws1.channel = 'web' AND ws1.d_qtr = 1 AND ws1.n_name = ss1.n_name
-        AND ws2.channel = 'web' AND ws2.d_qtr = 2 AND ws2.n_name = ss1.n_name
-        AND ws2.rev / ws1.rev > ss2.rev / ss1.rev""",
-
-    "d13_union_brand_total" -> s"""
+    Query("d13_union_brand_total", s"""
       WITH $salesSql,
       per_chan AS (
         SELECT channel, p_brand,
@@ -549,5 +496,14 @@ object TpcDs {
         WHERE p_size IN (5, 10, 15, 20, 25)
         GROUP BY channel, p_brand)
       SELECT p_brand, CAST(sum(amt_dec) AS DOUBLE) AS total_sales
-      FROM per_chan GROUP BY p_brand""")
+      FROM per_chan GROUP BY p_brand""") { (s, dir) =>
+      val p = t(s, dir, "part").filter(col("p_size").isin(5, 10, 15, 20, 25))
+      def chan(ch: String) = sales(s, dir).filter(col("channel") === ch)
+        .join(p, col("l_partkey") === col("p_partkey"))
+        .groupBy(col("p_brand")).agg(sum(dec6(net)).as("amt_dec"))
+      chan("store").unionAll(chan("catalog")).unionAll(chan("web"))
+        .groupBy(col("p_brand"))
+        .agg(sum(col("amt_dec")).cast("double").as("total_sales"))
+    }
+  )
 }

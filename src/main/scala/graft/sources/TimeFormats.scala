@@ -10,8 +10,8 @@ import org.apache.spark.sql.types._
   * flink-json `RowDataToJsonConverters` / `JsonToRowDataConverters`
   * TIME_WITHOUT_TIME_ZONE branch). Spark 4.1's CSV and JSON
   * datasources reject TimeType outright
-  * (UNSUPPORTED_DATA_TYPE_FOR_DATASOURCE — probed in
-  * [[graft.tools.TimeProbe]]), so this shim applies the same
+  * (UNSUPPORTED_DATA_TYPE_FOR_DATASOURCE — recorded in
+  * BASELINE.md), so this shim applies the same
   * text-on-the-wire contract around the native datasources:
   *
   *  - write: every TIME(p) column casts to its canonical
@@ -157,8 +157,8 @@ object TimeFormats {
   }
 
   // ---- ORC numeric wire --------------------------------------------------
-  // Spark's ORC datasource rejects TimeType like CSV/JSON do (probed in
-  // tools/TimeProbe), but the reference's ORC bridge writes TIME as an
+  // Spark's ORC datasource rejects TimeType like CSV/JSON do (recorded in
+  // BASELINE.md), but the reference's ORC bridge writes TIME as an
   // int-typed column of MILLIS-OF-DAY (flink-orc RowDataVectorizer.java:120
   // shares the INTEGER vectorizer branch). The shim applies the same
   // numeric wire around Spark's native ORC datasource: TIME(p<=3) rides

@@ -242,8 +242,7 @@ object Ddl {
   }
 
   /** Split statements on top-level semicolons (quote- and
-    * paren-aware) — the STATEMENT SET body separator (also used by
-    * the [[graft.tools.SqlPlan]] CLI).
+    * paren-aware) — the STATEMENT SET body separator.
     */
   private[graft] def splitTopLevelSemi(s: String): Seq[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]

@@ -766,7 +766,7 @@ class SqlEnv private (val spark: SparkSession) {
       // their stats land in the session catalog (DESC EXTENDED
       // Statistics / per-column stats). Graft DDL tables are TEMP
       // VIEWS, which Spark's analyzer only accepts CACHED and only
-      // through the FOR COLUMNS form (probed in tools/AnalyzeProbe) —
+      // through the FOR COLUMNS form (BASELINE.md, "Spark 4.1 surface probes") —
       // so the dialect caches the view and upgrades a bare COMPUTE
       // STATISTICS to FOR ALL COLUMNS; the stats then live on the
       // cached relation (optimizedPlan.stats rowCount/attributeStats),
@@ -786,7 +786,7 @@ class SqlEnv private (val spark: SparkSession) {
           catch { case _: Throwable => false }
         if (isTempView) {
           // Spark's analyzer accepts cached temp views only through the
-          // FOR COLUMNS form (AnalyzeProbe): NOSCAN and PARTITION(...)
+          // FOR COLUMNS form (BASELINE.md): NOSCAN and PARTITION(...)
           // would fail with a raw Spark error, so reject them here with
           // the graft-level recipe instead.
           // exact NOSCAN spelling only — a FOR COLUMNS list may contain
@@ -1009,7 +1009,7 @@ class SqlEnv private (val spark: SparkSession) {
 
   /** FlinkSQL `CAST(x AS TIME[(p)])` / `TRY_CAST(x AS TIME[(p)])` →
     * `cast_time(x, p)` / `try_cast_time(x, p)` (graft.functions.times).
-    * Spark 4.1's native Cast rejects TIMESTAMP→TIME (`TimeProbe`), and
+    * Spark 4.1's native Cast rejects TIMESTAMP→TIME (BASELINE.md), and
     * at string-rewrite time the operand type is unknown, so every
     * TIME-targeted cast routes through the RuntimeReplaceable
     * `CastTime`, which dispatches on the RESOLVED operand type: the
@@ -1342,8 +1342,8 @@ class SqlEnv private (val spark: SparkSession) {
   // [[validateSpecTail]], not by a `(PARTITION...)+` repetition: the
   // java.util.regex engine recurses per repetition element, so a bulk
   // statement naming thousands of partitions — routine at catalog
-  // scale, and exactly what PartitionsProbe drives — would
-  // StackOverflow in the matcher before the handler ever ran.
+  // scale, and exactly what BASELINE.md's partition-statement probe
+  // drove — would StackOverflow in the matcher before the handler ran.
   private val alterAddPartRe =
     ("""(?is)^\s*ALTER\s+TABLE\s+`?([\w.]+)`?\s+ADD\s+(IF\s+NOT\s+EXISTS\s+)?""" +
       """(PARTITION\b.+?);?\s*$""").r

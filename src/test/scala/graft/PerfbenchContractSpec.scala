@@ -18,4 +18,12 @@ class PerfbenchContractSpec extends AnyFunSuite {
     assert(names.nonEmpty)
     assert(names.filterNot(SparkEntry.queries.contains).isEmpty)
   }
+
+  // The harness attributes a query's build time to `sql.build_s` when its
+  // name is in `SqlSurface.queries.keySet`.
+  test("the SQL-surface queries batch_light times are in SqlSurface.queries") {
+    val sqlNames: Set[String] = graft.queries.SqlSurface.queries.keySet
+    assert(sqlNames("q98_plan_lifecycle"))
+    assert(sqlNames("q85_sql_json"))
+  }
 }

@@ -9,8 +9,8 @@ import org.apache.spark.sql.expressions.Window
   * exact-re-rank search must hold recall@3 ≥ 0.6 with the battery's
   * m=16/k=64 config, for both the flat-PQ and the IVF-PQ
   * (auto-nprobe) paths, and refinement must never lower recall vs
-  * the plain ADC search. RecallProbe reports the same metrics at
-  * larger SFs for the scale artifact; this spec is the regression
+  * the plain ADC search. BASELINE.md records the same metrics at
+  * larger SFs; this spec is the regression
   * net that keeps the recall claim from silently rotting.
   */
 class RecallSpec extends AnyFunSuite {
@@ -54,7 +54,7 @@ class RecallSpec extends AnyFunSuite {
 
   test("refined IVF-PQ holds recall@3 >= 0.6 in the sparse isotropic regime") {
     // 500 isotropic vectors: true neighbors are genuinely non-local
-    // (refined recall == probe coverage — NprobeSweep: 0.47@2,
+    // (refined recall == probe coverage — nprobe sweep: 0.47@2,
     // 0.57@4, 0.77@8), so the sparse regime passes nprobe explicitly.
     val cells = math.max(4, math.ceil(math.sqrt(e.count().toDouble)).toInt)
     val idx = ops.IvfPq.build(e, "vec_id", "embedding",
@@ -70,7 +70,7 @@ class RecallSpec extends AnyFunSuite {
     // per base vector), built in-memory so the spec is self-contained:
     // true neighbors are near-clones that share the query's cell, so
     // auto-nprobe coverage is total and the exact rerank recovers the
-    // ordering ADC quantization noise scrambles (NprobeSweep at the
+    // ordering ADC quantization noise scrambles (BASELINE.md, nprobe sweep at the
     // real sf1: coverage = refined recall = 1.000 from nprobe=2 up).
     val maxVec = e.agg(max(col("vec_id").cast("long"))).head.getLong(0) + 1
     val dense = e.withColumn("rep", explode(sequence(lit(0L), lit(9L))))

@@ -11,7 +11,7 @@ import graft.queries.Staging
 class StagingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sfDir = TestSpark.sfDir
-  val sideBase = s"/tmp/graft_oracle/${new java.io.File(sfDir).getName}"
+  val sideBase = Staging.sideDir(sfDir)
 
   private def rmrf(p: java.io.File): Unit = {
     if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rmrf))
@@ -70,6 +70,35 @@ class StagingSpec extends AnyFunSuite {
     val n53 = SparkEntry.queries("n53_minhash_lsh_pairs")(spark, sfDir)
     assert(n53.count() >= 0)
     assert(Staging.hasParquet(s"$sideBase/minhash_sigs"))
+  }
+
+  test("fixture dirs that share a basename never share side tables") {
+    import java.nio.file.{Files, Path}
+    val root = Files.createTempDirectory("graft_same_base")
+    val name = new java.io.File(sfDir).getName
+    def fixture(parent: String): Path = {
+      val d = Files.createDirectories(root.resolve(parent).resolve(name))
+      new java.io.File(sfDir).listFiles().filter(_.getName != "documents.parquet")
+        .foreach(f => Files.copy(f.toPath, d.resolve(f.getName)))
+      d
+    }
+    val a = fixture("a")
+    val b = fixture("b")
+    Files.copy(Path.of(sfDir, "documents.parquet"), a.resolve("documents.parquet"))
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    docs.orderBy("doc_id").limit((docs.count() / 2).toInt).coalesce(1)
+      .write.parquet(b.resolve("documents.parquet").toString)
+
+    def n51(d: Path): Seq[String] =
+      SparkEntry.queries("n51_minhash_dedup_clusters")(spark, d.toString)
+        .collect().map(_.toString).toSeq.sorted
+    val first = n51(a)
+    if (n51(b) == first) fail("half the corpus must cluster differently")
+    val third = n51(a)
+    if (third != first) fail("A read the side tables staged for B: " +
+      s"${third.size} rows, ${first.size} on the first run")
+    Seq(a, b).foreach(d => rmrf(new java.io.File(Staging.sideDir(d.toString))))
+    rmrf(root.toFile)
   }
 
   // ---- r22: localCheckpoint block release -----------------------------

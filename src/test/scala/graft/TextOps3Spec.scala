@@ -52,7 +52,7 @@ class TextOps3Spec extends AnyFunSuite {
     val comp = SparkEntry.queries("n54_connected_components")(spark, dir)
     // rebuild the banded table the query materialized
     val banded = spark.read.parquet(
-      s"/tmp/graft_oracle/${new java.io.File(dir).getName}/minhash_banded")
+      s"${graft.queries.Staging.sideDir(dir)}/minhash_banded")
     val perBucket = banded.join(comp, "doc_id")
       .groupBy("band", "bucket")
       .agg(countDistinct(col("component")).as("nc"))

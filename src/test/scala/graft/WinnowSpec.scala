@@ -14,8 +14,7 @@ class WinnowSpec extends AnyFunSuite {
   test("t37: coverage + rightmost-min properties on real docs") {
     val fps = queries.TextOps.queries("t37_winnow_fingerprints")(spark, TestSpark.sfDir)
       .cache()
-    val sfName = new java.io.File(TestSpark.sfDir).getName
-    val kg = spark.read.parquet(s"/tmp/graft_oracle/$sfName/kgram_hashes")
+    val kg = spark.read.parquet(s"${queries.Staging.sideDir(TestSpark.sfDir)}/kgram_hashes")
     assert(fps.count() > 0)
 
     // fingerprint hash must be the kg hash at its position
