@@ -161,10 +161,9 @@ object Ddl {
     val up = t.toUpperCase
     lazy val paren = """\((\d+)\s*(?:,\s*(\d+))?\)""".r.findFirstMatchIn(t)
     if (up.startsWith("ARRAY<")) ArrayType(flinkType(t.substring(6, t.length - 1)))
-    else if (up.startsWith("MAP<")) {
-      val inner = t.substring(4, t.length - 1)
-      val comma = topLevelComma(inner)
-      MapType(flinkType(inner.substring(0, comma)), flinkType(inner.substring(comma + 1)))
+    else if (up.startsWith("MAP<")) splitTopLevel(t.substring(4, t.length - 1)) match {
+      case Seq(k, v) => MapType(flinkType(k), flinkType(v))
+      case _ => throw new IllegalArgumentException(s"expected MAP<key type, value type>: $t")
     } else if (up.startsWith("ROW<")) {
       val inner = t.substring(4, t.length - 1)
       StructType(splitTopLevel(inner).map { f =>
@@ -199,66 +198,52 @@ object Ddl {
     }
   }
 
-  private def topLevelComma(s: String): Int = {
-    var depth = 0
-    s.indices.foreach { i =>
+  /** Split column items on top-level commas. Literals, quoted names and
+    * comments are not code ([[SqlText]]). Angle brackets only count as
+    * type-nesting when they read like generics (`ARRAY<INT>`: `<` glued
+    * to the preceding identifier, `>` glued to what it closes) — a spaced
+    * `a > b` comparison inside a computed-column expression is an
+    * operator, not a bracket.
+    */
+  private[sql] def splitTopLevel(s: String): Seq[String] = {
+    val t = SqlText(s)
+    val cuts = Seq.newBuilder[Int]
+    var paren = 0; var angle = 0
+    for (i <- s.indices; if t.isCode(i)) {
+      val prev = if (i == 0) ' ' else s.charAt(i - 1)
       s.charAt(i) match {
-        case '<' | '(' => depth += 1
-        case '>' | ')' => depth -= 1
-        case ',' if depth == 0 => return i
+        case '(' => paren += 1
+        case ')' => paren -= 1
+        case '<' if prev.isLetterOrDigit || prev == '_' => angle += 1
+        case '>' if angle > 0 && prev != ' ' && prev != '=' && prev != '-' => angle -= 1
+        case ',' if paren == 0 && angle == 0 => cuts += i
         case _ =>
       }
     }
-    throw new IllegalArgumentException(s"expected top-level comma in: $s")
+    t.pieces(cuts.result()).filter(_.nonEmpty)
   }
 
-  /** Split column items on top-level commas. Angle brackets only count
-    * as type-nesting when they read like generics (`ARRAY<INT>`: `<`
-    * glued to the preceding identifier, `>` glued to what it closes) —
-    * a spaced `a > b` comparison inside a computed-column expression is
-    * an operator, not a bracket.
-    */
-  private[sql] def splitTopLevel(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var paren = 0; var angle = 0; var inStr = false; var prev = ' '
-    s.foreach { c =>
-      c match {
-        case '\'' => inStr = !inStr; cur += '\''
-        case '(' if !inStr => paren += 1; cur += c
-        case ')' if !inStr => paren -= 1; cur += c
-        case '<' if !inStr && (prev.isLetterOrDigit || prev == '_') =>
-          angle += 1; cur += c
-        case '>' if !inStr && angle > 0 && prev != ' ' && prev != '=' && prev != '-' =>
-          angle -= 1; cur += c
-        case ',' if paren == 0 && angle == 0 && !inStr =>
-          out += cur.toString; cur.clear()
-        case _ => cur += c
-      }
-      prev = c
+  /** A comma-separated list of column (or module) names, back-quotes
+    * dropped; a comma inside back-quotes belongs to the name. */
+  private[sql] def nameList(txt: String): Seq[String] =
+    SqlText(txt).splitTopLevel(',').filter(_.nonEmpty).map(_.stripPrefix("`").stripSuffix("`"))
+
+  /** Parse `k = 'v'[, k2 = v2]` partition-spec text into ordered pairs
+    * (quote-aware item split — a quoted value may contain commas; a
+    * doubled quote inside a quoted value is SQL's escaped quote). */
+  private[sql] def parsePartSpec(txt: String): Seq[(String, String)] =
+    splitTopLevel(txt).map { kv =>
+      val eq = kv.indexOf('=')
+      require(eq > 0, s"cannot parse partition spec item: '$kv' (expected k = 'v')")
+      val k = kv.substring(0, eq).trim.stripPrefix("`").stripSuffix("`")
+      val raw = kv.substring(eq + 1).trim
+      val v =
+        if (raw.length >= 2 && raw.startsWith("'") && raw.endsWith("'"))
+          raw.substring(1, raw.length - 1).replace("''", "'")
+        else raw
+      require(k.nonEmpty && v.nonEmpty, s"cannot parse partition spec item: '$kv'")
+      (k, v)
     }
-    if (cur.nonEmpty) out += cur.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** Split statements on top-level semicolons (quote- and
-    * paren-aware) — the STATEMENT SET body separator.
-    */
-  private[graft] def splitTopLevelSemi(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0; var inStr = false
-    s.foreach {
-      case '\'' => inStr = !inStr; cur += '\''
-      case c@'(' if !inStr => depth += 1; cur += c
-      case c@')' if !inStr => depth -= 1; cur += c
-      case ';' if depth == 0 && !inStr => out += cur.toString; cur.clear()
-      case c => cur += c
-    }
-    if (cur.nonEmpty) out += cur.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
-
   // ---- CREATE TABLE ----------------------------------------------------
 
   def parseCreateTable(sql: String): TableDef = {
@@ -266,10 +251,8 @@ object Ddl {
       throw new IllegalArgumentException(s"not a CREATE TABLE: $sql"))
     val name = m.group(1)
     val body = m.group(2)
-    val partitioned = Option(m.group(3))
-      .map(_.split(",").map(_.trim.stripPrefix("`").stripSuffix("`")).toSeq)
-      .getOrElse(Nil)
-    val opts = parseOptions(m.group(4))
+    val partitioned = Option(m.group(3)).map(nameList).getOrElse(Nil)
+    val opts = parseOptionPairs(m.group(4))
 
     var watermark: Option[(String, String)] = None
     var pk: Seq[String] = Nil
@@ -288,14 +271,9 @@ object Ddl {
           .findFirstMatchIn(item).getOrElse(throw new IllegalArgumentException(
             s"unsupported WATERMARK clause: $item (expected ts - INTERVAL 'n' unit)"))
         watermark = Some((wm.group(1), s"${wm.group(2)} ${wm.group(3).toLowerCase}s"))
-      } else if (up.startsWith("PRIMARY KEY")) {
-        pk = """\(([^)]*)\)""".r.findFirstMatchIn(item)
-          .map(_.group(1).split(",").map(_.trim.stripPrefix("`").stripSuffix("`")).toSeq)
-          .getOrElse(Nil)
-      } else if (up.startsWith("CONSTRAINT ")) {
-        // named constraint — only PK supported, same extraction
-        pk = """\(([^)]*)\)""".r.findFirstMatchIn(item)
-          .map(_.group(1).split(",").map(_.trim.stripPrefix("`").stripSuffix("`")).toSeq)
+      } else if (up.startsWith("PRIMARY KEY") || up.startsWith("CONSTRAINT ")) {
+        // a named constraint can only be the primary key
+        pk = """\(([^)]*)\)""".r.findFirstMatchIn(item).map(m => nameList(m.group(1)))
           .getOrElse(pk)
       } else item match {
         case computedRe(rawName, exprText) =>
@@ -321,17 +299,21 @@ object Ddl {
       computed.toSeq, metaCols.toSeq, order.toSeq)
   }
 
-  private def parseOptions(txt: String): Map[String, String] =
-    """'([^']*)'\s*=\s*'([^']*)'""".r.findAllMatchIn(txt)
-      .map(m => m.group(1) -> m.group(2)).toMap
-
-  /** Public option-pair parser for ALTER TABLE SET / table property
-    * lists (same quoting rules as the CREATE TABLE WITH clause). */
-  def parseOptionPairs(txt: String): Map[String, String] = parseOptions(txt)
+  /** `'k' = 'v'` option pairs of a WITH clause, ALTER TABLE SET or a
+    * property list, read from the lexer's string-literal tokens. A
+    * doubled quote is one quote; backslashes stay literal, as in Flink. */
+  def parseOptionPairs(txt: String): Map[String, String] = {
+    def pairs(lits: List[(Int, Int, String)]): List[(String, String)] = lits match {
+      case (_, ke, k) :: (vs, _, v) :: rest if txt.substring(ke, vs).trim == "=" =>
+        (k -> v) :: pairs(rest)
+      case _ :: rest => pairs(rest)
+      case Nil => Nil
+    }
+    pairs(SqlText(txt).quoted('\'').toList).toMap
+  }
 
   /** Quoted key list for ALTER TABLE RESET: ('k1', 'k2'). */
-  def parseOptionKeys(txt: String): Seq[String] =
-    """'([^']*)'""".r.findAllMatchIn(txt).map(_.group(1)).toSeq
+  def parseOptionKeys(txt: String): Seq[String] = SqlText(txt).quoted('\'').map(_._3)
 
   /** Execute the CREATE TABLE: build the source DataFrame (if readable
     * now) and register it. Returns true if registered, false if
@@ -635,12 +617,7 @@ object Ddl {
     // OVERWRITE with a static spec replaces only the touched
     // partitions (Spark's dynamic partitionOverwriteMode), like the
     // reference's filesystem sink.
-    val staticParts: Seq[(String, String)] = Option(m.group(3)).toSeq.flatMap(
-      _.split(",").map(_.trim).filter(_.nonEmpty).map { kv =>
-        val eq = kv.indexOf('=')
-        require(eq > 0, s"cannot parse static partition: $kv")
-        (kv.substring(0, eq).trim, kv.substring(eq + 1).trim.stripPrefix("'").stripSuffix("'"))
-      })
+    val staticParts = Option(m.group(3)).toSeq.flatMap(parsePartSpec)
     staticParts.foreach { case (k, _) => require(d.partitionedBy.contains(k),
       s"static partition column '$k' is not in PARTITIONED BY (${d.partitionedBy.mkString(", ")})") }
     val data0 = runSql(m.group(4))

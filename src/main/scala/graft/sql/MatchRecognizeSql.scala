@@ -50,35 +50,32 @@ object MatchRecognizeSql {
     * view over the executed pattern match; returns the spliced SQL.
     */
   def rewrite(spark: SparkSession, sql: String, nextView: () => String): String = {
-    val m = mrKeyword.findFirstMatchIn(sql) match {
+    // keyword, table and alias are searched in code only (SqlText)
+    val t = SqlText(sql)
+    val m = mrKeyword.findFirstMatchIn(t.code) match {
       case None => return sql
       case Some(found) => found
     }
     // table name = last identifier before the keyword
-    val before = sql.substring(0, m.start)
+    val before = t.code.substring(0, m.start)
     val tableRe = """([\w.]+)\s*$""".r
     val tableMatch = tableRe.findFirstMatchIn(before).getOrElse(
       throw new IllegalArgumentException("MATCH_RECOGNIZE: no table before keyword"))
     val table = tableMatch.group(1)
     // body = balanced-paren block after the keyword
-    val open = sql.indexOf('(', m.end)
+    val open = t.code.indexOf('(', m.end)
     require(open >= 0, "MATCH_RECOGNIZE: expected (")
-    var depth = 0; var i = open
-    while ({ // scan to the matching close paren
-      if (sql.charAt(i) == '(') depth += 1
-      else if (sql.charAt(i) == ')') depth -= 1
-      depth != 0
-    }) i += 1
-    val body = sql.substring(open + 1, i)
+    val close = t.pairedParen(open)
+    require(close > 0, "MATCH_RECOGNIZE: unbalanced parentheses")
+    val body = sql.substring(open + 1, close)
     // optional trailing alias
     val aliasRe = """(?is)^\s*(?:AS\s+)?(\w+)""".r
-    val after = sql.substring(i + 1)
-    val (alias, rest) = aliasRe.findFirstMatchIn(after) match {
+    val (alias, rest) = aliasRe.findFirstMatchIn(t.code.substring(close + 1)) match {
       case Some(am) if !Set("WHERE", "GROUP", "ORDER", "LIMIT", "HAVING", "UNION",
         "JOIN", "ON", "LEFT", "RIGHT", "FULL", "INNER", "CROSS")
         .contains(am.group(1).toUpperCase) =>
-        (Some(am.group(1)), after.substring(am.end))
-      case _ => (None, after)
+        (Some(am.group(1)), sql.substring(close + 1 + am.end))
+      case _ => (None, sql.substring(close + 1))
     }
 
     val df = compile(spark, spark.table(table), body)
@@ -86,7 +83,7 @@ object MatchRecognizeSql {
     df.createOrReplaceTempView(view)
     // splice: original text before the table name + view + rest (recurse
     // for multiple MATCH_RECOGNIZE occurrences)
-    val spliced = before.substring(0, tableMatch.start) +
+    val spliced = sql.substring(0, tableMatch.start) +
       view + alias.map(" AS " + _).getOrElse("") + rest
     rewrite(spark, spliced, nextView)
   }
@@ -102,10 +99,8 @@ object MatchRecognizeSql {
       throw new IllegalArgumentException("MATCH_RECOGNIZE: ORDER BY required"))
     val patternTxt = clause("""(?is)PATTERN\s*\(([^)]*)\)""").getOrElse(
       throw new IllegalArgumentException("MATCH_RECOGNIZE: PATTERN required"))
-    val withinSec = clause("""(?is)WITHIN\s+INTERVAL\s*'(\d+)'\s*(SECOND|MINUTE|HOUR|DAY)S?""")
-      .map { _ =>
-        val wm = """(?is)WITHIN\s+INTERVAL\s*'(\d+)'\s*(SECOND|MINUTE|HOUR|DAY)S?""".r
-          .findFirstMatchIn(body).get
+    val withinSec = """(?is)WITHIN\s+INTERVAL\s*'(\d+)'\s*(SECOND|MINUTE|HOUR|DAY)S?""".r
+      .findFirstMatchIn(body).map { wm =>
         wm.group(1).toLong * (wm.group(2).toUpperCase match {
           case "SECOND" => 1L; case "MINUTE" => 60L
           case "HOUR" => 3600L; case "DAY" => 86400L
@@ -124,7 +119,7 @@ object MatchRecognizeSql {
     // DEFINE: split on top-level commas; conditions may contain parens
     val defines: Map[String, String] =
       clause("""(?is)DEFINE\s+(.*)$""").map { txt =>
-        splitTopLevel(txt).map { item =>
+        SqlText(txt).splitTopLevel(',').filter(_.nonEmpty).map { item =>
           val am = """(?is)^\s*(\w+)\s+AS\s+(.*)$""".r.findFirstMatchIn(item).getOrElse(
             throw new IllegalArgumentException(s"DEFINE entry: $item"))
           am.group(1).toLowerCase -> am.group(2).trim
@@ -200,21 +195,5 @@ object MatchRecognizeSql {
     // keep: partition col, start/end, aliases (engine internals dropped)
     val keep = Seq(partitionBy, "match_start_ts", "match_end_ts") ++ measures.map(_._4)
     renamed.select(keep.map(col): _*)
-  }
-
-  /** Split on commas not nested inside parentheses or quotes. */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0; var inStr = false
-    s.foreach {
-      case '\'' => inStr = !inStr; cur += '\''
-      case '(' if !inStr => depth += 1; cur += '('
-      case ')' if !inStr => depth -= 1; cur += ')'
-      case ',' if depth == 0 && !inStr => out += cur.toString; cur.clear()
-      case c => cur += c
-    }
-    if (cur.nonEmpty) out += cur.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
   }
 }

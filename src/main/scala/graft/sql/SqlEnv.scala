@@ -37,8 +37,12 @@ class SqlEnv private (val spark: SparkSession) {
     *    [[graft.streaming.Windows]];
     *  - `MATCH_RECOGNIZE (...)` (CommonExecMatch.java:82) onto
     *    [[graft.streaming.Cep]] via [[MatchRecognizeSql]].
+    * Comments never decide a statement's kind: they are blanked to
+    * spaces of the same length before dispatch ([[SqlText]]; hints are
+    * not comments to Spark's lexer, so they stay).
     */
-  def executeSql(sql: String): DataFrame = {
+  def executeSql(statement: String): DataFrame = {
+    val sql = SqlText(statement).withoutComments
     // Interactive statement-set mode — `BEGIN STATEMENT SET;` ...
     // INSERTs/CTAS buffered ... `END;` (dml/SqlBeginStatementSet /
     // SqlEndStatementSet; session semantics per the SQL client,
@@ -56,16 +60,11 @@ class SqlEnv private (val spark: SparkSession) {
         case _ if Ddl.isInsert(sql) || ctasRe.matches(sql) =>
           statementSetBuffer += sql
           return spark.emptyDataFrame
-        // unsupported CTAS forms fail at statement time with the CTAS
-        // messages (the CLI parses each buffered statement too), not a
-        // misleading insert-only rejection or a deferred END failure
-        case _ if ctasTempRe.matches(sql) =>
-          throw new IllegalArgumentException(
-            "CREATE TABLE AS SELECT syntax does not support to create temporary table yet.")
-        case _ if ctasColsRe.matches(sql) =>
-          throw new IllegalArgumentException(
-            "CREATE TABLE AS SELECT syntax does not support to specify explicit columns yet.")
         case _ =>
+          // unsupported CTAS forms fail at statement time with the CTAS
+          // messages (the CLI parses each buffered statement too), not a
+          // misleading insert-only rejection or a deferred END failure
+          rejectUnsupportedCtas(sql)
           throw new IllegalArgumentException(
             "Only INSERT statement is allowed in Statement Set.")
       }
@@ -110,10 +109,7 @@ class SqlEnv private (val spark: SparkSession) {
       // temp views; each sink is its own job (micro-batch sinks would
       // each own their trigger, like the reference's per-sink chains).
       case stmtSetRe(body) =>
-        val stmts = Ddl.splitTopLevelSemi(body).filter(_.nonEmpty)
-        require(stmts.nonEmpty && stmts.forall(Ddl.isInsert),
-          "STATEMENT SET supports INSERT statements only")
-        stmts.foreach(executeSql)
+        statementSetInserts(body).foreach(executeSql)
         return spark.emptyDataFrame
       // SHOW TABLES [FROM|IN db] [[NOT] LIKE 'p'] (SqlShowTables'
       // optional database + SQL-LIKE pattern, parserImpls.ftl:475) /
@@ -391,8 +387,7 @@ class SqlEnv private (val spark: SparkSession) {
             s"ALTER TABLE: '$name' was not created via CREATE TABLE"))
         require(d.primaryKey.isEmpty,
           s"ALTER TABLE ADD PRIMARY KEY: '$name' already has one (drop it first)")
-        val pk = cols.split(",").map(_.trim.stripPrefix("`").stripSuffix("`"))
-          .filter(_.nonEmpty).toSeq
+        val pk = Ddl.nameList(cols)
         val unknown = pk.filterNot(d.schema.fieldNames.contains)
         require(unknown.isEmpty,
           s"ALTER TABLE ADD PRIMARY KEY: unknown columns ${unknown.mkString(", ")}")
@@ -425,7 +420,7 @@ class SqlEnv private (val spark: SparkSession) {
         // `PARTITION (spec) COMPACT` targets the matching leaves only —
         // PARTIAL specs legal, keys validated with the reference's
         // messages (convertAlterTableCompact:644-663)
-        val compactSpec = Option(specTxt).map(parsePartSpec).getOrElse(Nil)
+        val compactSpec = Option(specTxt).map(Ddl.parsePartSpec).getOrElse(Nil)
         if (compactSpec.nonEmpty)
           Partitions.validatePartialSpec(name, d.partitionedBy, compactSpec)
         // the reference option is a MemorySize ('128mb') — parse the
@@ -478,7 +473,7 @@ class SqlEnv private (val spark: SparkSession) {
           s"ALTER TABLE ADD PARTITION: '$name' is not a partitioned table")
         validateSpecTail(tail, "ALTER TABLE ADD PARTITION")
         val specs = partSpecRe.findAllMatchIn(tail)
-          .map(m => (parsePartSpec(m.group(1)), Option(m.group(2)))).toSeq
+          .map(m => (Ddl.parsePartSpec(m.group(1)), Option(m.group(2)))).toSeq
         require(specs.nonEmpty, "ALTER TABLE ADD PARTITION: no PARTITION (...) spec")
         val added = Partitions.add(spark, d.path, d.partitionedBy,
           specs.map(_._1), ifNotExists != null)
@@ -518,7 +513,7 @@ class SqlEnv private (val spark: SparkSession) {
         validateSpecTail(tail, "ALTER TABLE DROP PARTITION")
         require(partSpecRe.findAllMatchIn(tail).forall(_.group(2) == null),
           "ALTER TABLE DROP PARTITION does not take WITH (...) properties")
-        val specs = partSpecRe.findAllMatchIn(tail).map(m => parsePartSpec(m.group(1))).toSeq
+        val specs = partSpecRe.findAllMatchIn(tail).map(m => Ddl.parsePartSpec(m.group(1))).toSeq
         require(specs.nonEmpty, "ALTER TABLE DROP PARTITION: no PARTITION (...) spec")
         val dropped = Partitions.drop(spark, d.path, d.partitionedBy,
           specs, ifExists != null)
@@ -541,7 +536,7 @@ class SqlEnv private (val spark: SparkSession) {
           s"SHOW PARTITIONS: '$name' is not a partitioned table")
         // optional PARTIAL spec filters the listing (SqlShowPartitions'
         // partitionSpec; keys validated like the compact converter)
-        val showSpec = Option(specTxt).map(parsePartSpec).getOrElse(Nil)
+        val showSpec = Option(specTxt).map(Ddl.parsePartSpec).getOrElse(Nil)
         if (showSpec.nonEmpty)
           Partitions.validatePartialSpec(name, d.partitionedBy, showSpec)
         // filesystem tables list the on-disk Hive leaves — the
@@ -590,7 +585,7 @@ class SqlEnv private (val spark: SparkSession) {
         // restore user functions FIRST (a restored view body may call
         // one, and CREATE VIEW analyzes the body): create-only —
         // IF NOT EXISTS semantics, an existing registration wins.
-        // r21 review finding: the plan file is user-editable on disk
+        // The plan file is user-editable on disk
         // and these values are interpolated into SQL text — validate
         // the shapes (identifier / dotted Java class name) so a
         // crafted envelope cannot smuggle statements through the
@@ -655,7 +650,7 @@ class SqlEnv private (val spark: SparkSession) {
         return spark.emptyDataFrame
       case useModulesRe(list) if list.trim.nonEmpty &&
           list.split(",").forall(_.trim.matches("`?[\\w.]+`?")) =>
-        val names = list.split(",").map(_.trim.stripPrefix("`").stripSuffix("`")).toSeq
+        val names = Ddl.nameList(list)
         names.foreach(n => require(modules.contains(n),
           s"USE MODULES: module '$n' is not loaded"))
         modules.clear(); names.distinct.foreach(modules.add)
@@ -826,10 +821,7 @@ class SqlEnv private (val spark: SparkSession) {
         // nothing executed
         trimmed match {
           case stmtSetRe(setBody) =>
-            val stmts = Ddl.splitTopLevelSemi(setBody).filter(_.nonEmpty)
-            require(stmts.nonEmpty && stmts.forall(Ddl.isInsert),
-              "STATEMENT SET supports INSERT statements only")
-            return Seq(stmts.zipWithIndex.map { case (s, i) =>
+            return Seq(statementSetInserts(setBody).zipWithIndex.map { case (s, i) =>
               s"== Statement ${i + 1} ==\n${explainOne(s, details)}"
             }.mkString("\n\n")).toDF("result")
           case _ =>
@@ -871,12 +863,7 @@ class SqlEnv private (val spark: SparkSession) {
     // group would otherwise swallow the AS tail and silently drop the
     // query. The reference's validate() rejections are reproduced with
     // its messages.
-    if (ctasTempRe.matches(sql))
-      throw new IllegalArgumentException(
-        "CREATE TABLE AS SELECT syntax does not support to create temporary table yet.")
-    if (ctasColsRe.matches(sql))
-      throw new IllegalArgumentException(
-        "CREATE TABLE AS SELECT syntax does not support to specify explicit columns yet.")
+    rejectUnsupportedCtas(sql)
     ctasRe.findFirstMatchIn(sql).foreach { m =>
       val ifNotExists = m.group(1) != null
       val name = m.group(2)
@@ -1055,99 +1042,71 @@ class SqlEnv private (val spark: SparkSession) {
     *  - `JSON_OBJECTAGG/JSON_ARRAYAGG(...)` likewise
     *  - `<col|'str'|(expr)|fn(...)> IS [NOT] JSON` → `[NOT] is_json(x)`
     */
-  private[sql] def rewriteJsonSyntax(sql: String): String = {
+  private[graft] def rewriteJsonSyntax(sql: String): String = {
     if (!"""(?is).*(JSON_(OBJECT|ARRAY)|IS\s+(NOT\s+)?JSON\b).*""".r
           .matches(sql)) return sql
-    var s = rewriteIsJson(sql)
-    val callRe = """(?i)\bJSON_(OBJECTAGG|OBJECT|ARRAYAGG|ARRAY)\s*\(""".r
-    // right-to-left so earlier offsets stay valid; inner calls first
-    for (m <- callRe.findAllMatchIn(s).toList.reverse) {
-      val open = s.indexOf('(', m.start)
-      val close = matchingParen(s, open)
-      if (close > open) {
-        var inner = s.substring(open + 1, close)
-        inner = """(?is)\bKEY\s+(.+?)\s+VALUE\s+""".r.replaceAllIn(inner,
-          mm => java.util.regex.Matcher.quoteReplacement(mm.group(1) + ", "))
-        var behavior: String = null
-        inner = """(?is)\s+(NULL|ABSENT)\s+ON\s+NULL\s*$""".r
-          .replaceAllIn(inner, mm => { behavior = mm.group(1).toUpperCase; "" })
-        val target = m.group(1).toUpperCase match {
-          case "OBJECT" =>
-            if (behavior == "ABSENT") "json_object_absent" else "json_object"
-          case "ARRAY" =>
-            if (behavior == "NULL") "json_array_null" else "json_array"
-          case "OBJECTAGG" => "json_objectagg"
-          case "ARRAYAGG" => "json_arrayagg"
-        }
-        s = s.substring(0, m.start) + target + "(" + inner + ")" +
-          s.substring(close + 1)
-      }
-    }
-    s
+    rewriteJsonCalls(rewriteIsJson(sql))
   }
+
+  private val jsonCalls = Set("JSON_OBJECT", "JSON_OBJECTAGG", "JSON_ARRAY", "JSON_ARRAYAGG")
+  private val keyValueRe = """(?is)\bKEY\s+(.+?)\s+VALUE\s+""".r
+  private val onNullRe = """(?is)\s+(NULL|ABSENT)\s+ON\s+NULL\s*$""".r
+
+  /** `JSON_*(...)` calls onto the registered names; inner calls first. */
+  private def rewriteJsonCalls(sql: String): String =
+    rewriteCalls(sql, jsonCalls) { (name, _, orig) =>
+      val args = SqlText(rewriteJsonCalls(orig.substring(orig.indexOf('(') + 1, orig.length - 1)))
+      val pairs = SqlText(args.replaceAll(keyValueRe)(m => args.source(m, 1) + ", "))
+      var behavior: String = null
+      val inner = pairs.replaceAll(onNullRe) { m => behavior = m.group(1).toUpperCase; "" }
+      val target = name match {
+        case "JSON_OBJECT" =>
+          if (behavior == "ABSENT") "json_object_absent" else "json_object"
+        case "JSON_ARRAY" =>
+          if (behavior == "NULL") "json_array_null" else "json_array"
+        case other => other.toLowerCase
+      }
+      s"$target($inner)"
+    }
+
+  private val isJsonRe = """(?is)\bIS\s+(NOT\s+)?JSON\b""".r
 
   /** `<operand> IS [NOT] JSON` → `[NOT] is_json(<operand>)`.
     *
     * The operand is captured by scanning backwards from the predicate:
-    * a 'string', a dotted identifier, a parenthesized expression, or a
-    * call `ident( ... )` with arbitrarily nested parens (the shape the
-    * old single-level regex mangled into `upper is_json((doc))`).
-    * Matches inside string literals are left alone; an operand shape
-    * the scanner cannot capture raises a clear error instead of
-    * leaking `IS JSON` to Spark's parser.
+    * a string literal, a dotted (possibly back-quoted) identifier, a
+    * parenthesized expression, or a call `ident( ... )` with arbitrarily
+    * nested parens. Predicates inside literals and comments are left
+    * alone; an operand shape the scanner cannot capture raises a clear
+    * error instead of leaking `IS JSON` to Spark's parser.
     */
   private[sql] def rewriteIsJson(s0: String): String = {
-    val re = """(?is)\bIS\s+(NOT\s+)?JSON\b""".r
-    val ms = re.findAllMatchIn(s0).toList
+    val t = SqlText(s0)
+    val ms = isJsonRe.findAllMatchIn(t.code).toList
     if (ms.isEmpty) return s0
-    // lit(k): char k belongs to a '...' literal, delimiting quotes
-    // included; adjacent-quote escapes ('don''t') coalesce into one
-    // run. Drives (a) skipping matches inside literals, (b) ignoring
-    // parens inside literals during the backward operand scan, and
-    // (c) finding a literal operand's opening quote.
-    val lit = new Array[Boolean](s0.length)
-    locally {
-      var inStr = false
-      var k = 0
-      while (k < s0.length) {
-        if (s0.charAt(k) == '\'') { lit(k) = true; inStr = !inStr }
-        else lit(k) = inStr
-        k += 1
-      }
+    def identChar(k: Int): Boolean = t.isQuotedIdentifier(k) || t.isCode(k) && {
+      val c = s0.charAt(k); c.isLetterOrDigit || c == '_' || c == '.' }
+    def identStart(e: Int, last: Int): Int = {
+      var b = e
+      while (b > last && identChar(b - 1)) b -= 1
+      b
     }
-    def identChar(c: Char): Boolean =
-      c.isLetterOrDigit || c == '_' || c == '.' || c == '`'
     // java.lang.StringBuilder: scala's lacks append(CharSequence,Int,Int)
-    // and silently auto-tuples the three arguments (r7 regression).
+    // and silently auto-tuples the three arguments.
     val sb = new java.lang.StringBuilder
     var last = 0
-    for (m <- ms; if m.start >= last && !lit(m.start)) {
+    for (m <- ms; if m.start >= last) {
       var e = m.start
-      while (e > last && s0.charAt(e - 1).isWhitespace) e -= 1
-      var b = e
-      if (b > last) s0.charAt(b - 1) match {
-        case ')' =>
-          var depth = 0; var k = b - 1; var found = -1
-          while (k >= last && found < 0) {
-            if (!lit(k)) {
-              val c = s0.charAt(k)
-              if (c == ')') depth += 1
-              else if (c == '(') { depth -= 1; if (depth == 0) found = k }
-            }
-            k -= 1
-          }
-          if (found >= 0) {
-            b = found
-            while (b > last && identChar(s0.charAt(b - 1))) b -= 1
-          }
-        case '\'' =>
-          var k = b - 1
-          while (k > last && lit(k - 1)) k -= 1
-          b = k
-        case c if identChar(c) =>
-          while (b > last && identChar(s0.charAt(b - 1))) b -= 1
-        case _ =>
-      }
+      while (e > last && (t.isComment(e - 1) ||
+          t.isCode(e - 1) && s0.charAt(e - 1).isWhitespace)) e -= 1
+      val b =
+        if (e == last) e
+        else if (t.isCode(e - 1) && s0.charAt(e - 1) == ')') {
+          val open = t.pairedParen(e - 1, last)
+          if (open < 0) e else identStart(open, last)
+        } else if (identChar(e - 1)) identStart(e, last)
+        else if (!t.isCode(e - 1)) t.tokenStart(e - 1)
+        else e
       if (b == e)
         throw new IllegalArgumentException(
           "unsupported IS JSON operand near: '" +
@@ -1159,22 +1118,6 @@ class SqlEnv private (val spark: SparkSession) {
     }
     sb.append(s0, last, s0.length)
     sb.toString
-  }
-
-  /** Index of the `)` matching the `(` at `open` (skips '...' strings). */
-  private def matchingParen(s: String, open: Int): Int = {
-    var depth = 0; var inStr = false; var i = open
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\'' => inStr = !inStr
-        case '(' if !inStr => depth += 1
-        case ')' if !inStr =>
-          depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
   }
 
   /** CREATE TABLE definitions by name (drives INSERT routing). */
@@ -1192,9 +1135,9 @@ class SqlEnv private (val spark: SparkSession) {
   private def refreshDirty(sql: String): Unit =
     if (!dirtyTables.isEmpty) {
       import scala.jdk.CollectionConverters._
+      val text = SqlText(sql)
       dirtyTables.asScala.toSeq.foreach { t =>
-        if (("""(?i)\b""" + java.util.regex.Pattern.quote(t) + """\b""").r
-              .findFirstIn(sql).isDefined) {
+        if (mentions(t, text)) {
           dirtyTables.remove(t)
           Option(tableDefs.get(t)).foreach(Ddl.executeCreate(spark, _))
         }
@@ -1218,6 +1161,13 @@ class SqlEnv private (val spark: SparkSession) {
     """(?is)^\s*DROP\s+(?:TEMPORARY\s+)?(?:TABLE|VIEW)\s+(?:IF\s+EXISTS\s+)?([\w.]+)\s*;?\s*$""".r
   private val stmtSetRe =
     """(?is)^\s*(?:EXECUTE\s+)?STATEMENT\s+SET\s+BEGIN\s+(.+?)\s*;?\s*END\s*;?\s*$""".r
+  /** The statements of a STATEMENT SET body, cut at top-level `;`. */
+  private def statementSetInserts(body: String): Seq[String] = {
+    val stmts = SqlText(body).splitTopLevel(';').filter(_.nonEmpty)
+    require(stmts.nonEmpty && stmts.forall(Ddl.isInsert),
+      "STATEMENT SET supports INSERT statements only")
+    stmts
+  }
   private val showRe =
     """(?is)^\s*SHOW\s+(TABLES|VIEWS|FUNCTIONS)\s*;?\s*$""".r
   // SHOW TABLES [FROM|IN db] [[NOT] LIKE 'p'] (SqlShowTables:475)
@@ -1276,6 +1226,11 @@ class SqlEnv private (val spark: SparkSession) {
     """(?is)^\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?`?[\w.]+`?\s*\(.*\)\s*(?:WITH\s*\(.*?\)\s*)?AS\s+(?:SELECT|VALUES|WITH|TABLE)\b.*$""".r
   private val ctasTempRe =
     """(?is)^\s*CREATE\s+TEMPORARY\s+TABLE\s+.*\bAS\s+(?:SELECT|VALUES|WITH|TABLE)\b.*$""".r
+  private def rejectUnsupportedCtas(sql: String): Unit =
+    if (ctasTempRe.matches(sql)) throw new IllegalArgumentException(
+      "CREATE TABLE AS SELECT syntax does not support to create temporary table yet.")
+    else if (ctasColsRe.matches(sql)) throw new IllegalArgumentException(
+      "CREATE TABLE AS SELECT syntax does not support to specify explicit columns yet.")
   // Catalog database DDL (reference: flink-sql-parser ddl/
   // SqlCreateDatabase.java, SqlDropDatabase.java, SqlAlterDatabase.java)
   private val createDbRe =
@@ -1362,22 +1317,6 @@ class SqlEnv private (val spark: SparkSession) {
     require(residue.isEmpty,
       s"$stmt: malformed PARTITION spec list near '${residue.take(40)}'")
   }
-  /** Parse `k = 'v'[, k2 = v2]` partition-spec text into ordered pairs
-    * (quote-aware item split — a quoted value may contain commas; a
-    * doubled quote inside a quoted value is SQL's escaped quote). */
-  private def parsePartSpec(txt: String): Seq[(String, String)] =
-    Ddl.splitTopLevel(txt).map { kv =>
-      val eq = kv.indexOf('=')
-      require(eq > 0, s"cannot parse partition spec item: '$kv' (expected k = 'v')")
-      val k = kv.substring(0, eq).trim.stripPrefix("`").stripSuffix("`")
-      val raw = kv.substring(eq + 1).trim
-      val v =
-        if (raw.length >= 2 && raw.startsWith("'") && raw.endsWith("'"))
-          raw.substring(1, raw.length - 1).replace("''", "'")
-        else raw
-      require(k.nonEmpty && v.nonEmpty, s"cannot parse partition spec item: '$kv'")
-      (k, v)
-    }
   /** ADD PARTITION ... WITH (...) properties (table/partition-name →
     * props) — the reference's CatalogPartition properties; the
     * filesystem layout has no metadata sidecar, so they live here. */
@@ -1447,63 +1386,25 @@ class SqlEnv private (val spark: SparkSession) {
       tables.map { case (t, d) => t -> Ddl.showCreate(d) }, views, functions)
   }
 
-  /** Replace the contents of quoted string literals ('..' with ''
-    * escapes, ".." identifiers-as-strings), `-- line` and slash-star
-    * block comments with spaces, so the closure scan below never
-    * matches a registry name INSIDE a literal or comment (a table
-    * named in a log-message literal must not bloat the envelope).
-    * Quote characters themselves are kept so token boundaries hold.
-    */
-  private def stripLiteralsAndComments(text: String): String = {
-    val out = new java.lang.StringBuilder(text.length)
-    var i = 0
-    val n = text.length
-    while (i < n) {
-      val c = text.charAt(i)
-      if (c == '\'' || c == '"') {
-        out.append(c); i += 1
-        // Backslash escapes (r21 review finding): Spark's default
-        // dialect accepts \' inside a single-quoted literal — skipping
-        // the escaped char keeps the literal tracking aligned (an
-        // unhandled \' would flip blanked/unblanked for the rest of
-        // the statement and could blank a genuinely referenced name
-        // out of the closure scan).
-        while (i < n && text.charAt(i) != c) {
-          if (text.charAt(i) == '\\' && i + 1 < n) { out.append("  "); i += 2 }
-          else { out.append(' '); i += 1 }
-        }
-        if (i < n) { out.append(c); i += 1 }
-        // SQL '' escape: the re-opened literal is consumed by the next
-        // loop pass identically, which is exactly the blanking we want
-      } else if (c == '-' && i + 1 < n && text.charAt(i + 1) == '-') {
-        while (i < n && text.charAt(i) != '\n') { out.append(' '); i += 1 }
-      } else if (c == '/' && i + 1 < n && text.charAt(i + 1) == '*') {
-        out.append("  "); i += 2
-        while (i < n && !(text.charAt(i) == '*' && i + 1 < n && text.charAt(i + 1) == '/')) {
-          out.append(if (text.charAt(i) == '\n') '\n' else ' '); i += 1
-        }
-        if (i < n) { out.append("  "); i += 2 }
-      } else { out.append(c); i += 1 }
-    }
-    out.toString
-  }
+  /** Whether the statement names `name` in code, as a word or as a
+    * back-quoted identifier — never inside a literal or comment. */
+  private def mentions(name: String, t: SqlText): Boolean =
+    ("""(?i)\b""" + java.util.regex.Pattern.quote(name) + """\b""").r
+      .findFirstIn(t.code).isDefined || t.quoted('`').exists(_._3.equalsIgnoreCase(name))
 
   /** Transitive (tables, views, functions) closure of a statement's
     * text through the view + function registries — views in DISCOVERY
     * order (statement first, then each view body as it is reached).
-    * Names are matched against the literal-and-comment-stripped text
-    * (see [[stripLiteralsAndComments]]). */
+    * Names are matched in code only, never inside a literal or
+    * comment (see [[mentions]]). */
   private def planClosure(stmt: String)
       : (Map[String, Ddl.TableDef], Seq[(String, String)], Seq[(String, String)]) = {
     import scala.jdk.CollectionConverters._
     val tables = scala.collection.mutable.LinkedHashMap.empty[String, Ddl.TableDef]
     val views = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val functions = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def mentions(name: String, text: String): Boolean =
-      ("""(?i)\b""" + java.util.regex.Pattern.quote(name) + """\b""").r
-        .findFirstIn(text).isDefined
     def scan(raw: String): Unit = {
-      val text = stripLiteralsAndComments(raw)
+      val text = SqlText(raw)
       asScala.foreach { case (t, d) =>
         if (!tables.contains(t) && mentions(t, text)) tables += t -> d
       }
@@ -1676,7 +1577,8 @@ class SqlEnv private (val spark: SparkSession) {
   // TUMBLE(TABLE t, DESCRIPTOR(c), INTERVAL '15' MINUTE)
   // HOP(TABLE t, DESCRIPTOR(c), INTERVAL slide, INTERVAL size)
   // CUMULATE(TABLE t, DESCRIPTOR(c), INTERVAL step, INTERVAL max)
-  // Intervals carry no parentheses, so `[^()]+` safely spans the tail.
+  // Intervals carry no parentheses, so `[^()]+` safely spans the tail
+  // (matched in the code view, where a literal is an opaque quote run).
   private val tvfRe =
     """(?i)\b(TUMBLE|HOP|CUMULATE)\s*\(\s*TABLE\s+([\w.]+)\s*,\s*DESCRIPTOR\s*\(\s*(\w+)\s*\)\s*,([^()]+)\)""".r
   private val intervalRe =
@@ -1701,12 +1603,13 @@ class SqlEnv private (val spark: SparkSession) {
     * assignment, so the SQL-text path and the DataFrame path share one
     * implementation — and one physical plan.
     */
-  private[sql] def rewriteWindowTvfs(sql: String): String =
-    tvfRe.replaceAllIn(sql, m => {
+  private[sql] def rewriteWindowTvfs(sql: String): String = {
+    val t = SqlText(sql)
+    t.replaceAll(tvfRe) { m =>
       val fn = m.group(1).toUpperCase
       val table = m.group(2)
       val ts = col(m.group(3))
-      val ivals = m.group(4).split(",").map(intervalSec)
+      val ivals = t.splitTopLevel(',', m.start(4), m.end(4)).map(intervalSec)
       val base = spark.table(table)
       val withWin = fn match {
         case "TUMBLE" =>
@@ -1726,8 +1629,9 @@ class SqlEnv private (val spark: SparkSession) {
         .drop("window")
       val view = s"__graft_tvf_${viewCounter.incrementAndGet()}"
       out.createOrReplaceTempView(view)
-      scala.util.matching.Regex.quoteReplacement(view)
-    })
+      view
+    }
+  }
 
   // ---- legacy group-window text support --------------------------------
 
@@ -1741,142 +1645,32 @@ class SqlEnv private (val spark: SparkSession) {
   // grouped column `window` for window() and `session_window` for
   // session_window(). _ROWTIME is the window's event-time attribute
   // (end − 1ms), like the TVF rewrite's window_time.
-  // The rewrite scans for the legacy calls with PAREN-BALANCED argument
-  // capture (round 13): a regex `[^()]+` argument body cannot see a
-  // dynamic gap like `CASE WHEN ... THEN INTERVAL '45' MINUTE ... END`
-  // whose branches carry their own function calls, and the reference's
-  // SessionWindowTimeGapExtractor analog (q87) needs exactly that shape
-  // through the SQL-text surface.
+  // Calls are captured paren-balanced, so a dynamic gap like `CASE WHEN
+  // ... THEN INTERVAL '45' MINUTE ... END` (the SessionWindowTimeGap-
+  // Extractor analog, q87) passes through the SQL-text surface whole.
 
-  /** Split a call's argument text at TOP-LEVEL commas only (commas inside
-    * nested parens or single-quoted literals belong to the argument). */
-  private def splitTopLevelArgs(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0; var inStr = false
-    s.foreach { c =>
-      if (inStr) { cur += c; if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true; cur += c
-        case '(' => depth += 1; cur += c
-        case ')' => depth -= 1; cur += c
-        case ',' if depth == 0 => out += cur.toString; cur.clear()
-        case _ => cur += c
-      }
-    }
-    out += cur.toString
-    out.map(_.trim).toSeq
-  }
-
-  /** Rewrite every `NAME(args...)` call whose upper-cased NAME is in
-    * `names`, balancing parentheses and skipping quoted literals and SQL
-    * comments (`-- …\n` and nested `/* … */` — Spark parses bracketed
-    * comments as nesting, so the scanner tracks depth the same way). An
-    * unquoted apostrophe inside a comment must NOT flip the string state
-    * (r13 advice: `-- don't` would otherwise swallow the next call). `f`
-    * receives (NAME, topLevelArgs, originalCallText) and returns the
-    * replacement — returning the original text leaves the call alone. */
+  /** Rewrite every `NAME(args...)` call in code whose upper-cased NAME
+    * is in `names`. `f` receives (NAME, topLevelArgs, originalCallText)
+    * and returns the replacement; the original text leaves it alone. */
   private def rewriteCalls(sql: String, names: Set[String])(
       f: (String, Seq[String], String) => String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '\'') { // copy string literals verbatim
-        val j = sql.indexOf('\'', i + 1)
-        val end = if (j < 0) sql.length - 1 else j
-        sb.append(sql.substring(i, end + 1)); i = end + 1
-      } else if (c == '-' && i + 1 < sql.length && sql.charAt(i + 1) == '-') {
-        val j = sql.indexOf('\n', i) // copy line comments verbatim
-        val end = if (j < 0) sql.length else j + 1
-        sb.append(sql.substring(i, end)); i = end
-      } else if (c == '/' && i + 1 < sql.length && sql.charAt(i + 1) == '*') {
-        var depth = 0; var m = i; var end = -1 // nested bracketed comment
-        while (m < sql.length && end < 0) {
-          if (m + 1 < sql.length && sql.charAt(m) == '/' && sql.charAt(m + 1) == '*') {
-            depth += 1; m += 2
-          } else if (m + 1 < sql.length && sql.charAt(m) == '*' && sql.charAt(m + 1) == '/') {
-            depth -= 1; m += 2; if (depth == 0) end = m
-          } else m += 1
-        }
-        val e = if (end < 0) sql.length else end
-        sb.append(sql.substring(i, e)); i = e
-      } else if (Character.isLetter(c) || c == '_') {
-        var j = i
-        while (j < sql.length &&
-          (Character.isLetterOrDigit(sql.charAt(j)) || sql.charAt(j) == '_')) j += 1
-        val word = sql.substring(i, j)
-        var k = j
-        while (k < sql.length && Character.isWhitespace(sql.charAt(k))) k += 1
-        if (names.contains(word.toUpperCase) && k < sql.length && sql.charAt(k) == '(') {
-          var depth = 0; var m = k; var inStr = false; var endIdx = -1
-          while (m < sql.length && endIdx < 0) {
-            val ch = sql.charAt(m)
-            if (inStr) { if (ch == '\'') inStr = false; m += 1 }
-            else if (ch == '-' && m + 1 < sql.length && sql.charAt(m + 1) == '-') {
-              val j = sql.indexOf('\n', m); m = if (j < 0) sql.length else j + 1
-            } else if (ch == '/' && m + 1 < sql.length && sql.charAt(m + 1) == '*') {
-              var d = 0; var p = m; var e = -1
-              while (p < sql.length && e < 0) {
-                if (p + 1 < sql.length && sql.charAt(p) == '/' && sql.charAt(p + 1) == '*') { d += 1; p += 2 }
-                else if (p + 1 < sql.length && sql.charAt(p) == '*' && sql.charAt(p + 1) == '/') { d -= 1; p += 2; if (d == 0) e = p }
-                else p += 1
-              }
-              m = if (e < 0) sql.length else e
-            } else {
-              ch match {
-                case '\'' => inStr = true
-                case '(' => depth += 1
-                case ')' => depth -= 1; if (depth == 0) endIdx = m
-                case _ =>
-              }
-              m += 1
-            }
-          }
-          require(endIdx > 0, s"unbalanced parentheses after $word in: $sql")
-          val argsStr = sql.substring(k + 1, endIdx)
-          val orig = sql.substring(i, endIdx + 1)
-          sb.append(f(word.toUpperCase, splitTopLevelArgs(argsStr), orig))
-          i = endIdx + 1
-        } else { sb.append(word); i = j }
-      } else { sb.append(c); i += 1 }
+    val t = SqlText(sql)
+    val sb = new java.lang.StringBuilder
+    var last = 0
+    for (m <- callRe.findAllMatchIn(t.code); name = m.group(1).toUpperCase
+         if m.start >= last && names(name)) {
+      val close = t.pairedParen(m.end - 1)
+      require(close > 0, s"unbalanced parentheses after $name in: $sql")
+      sb.append(sql, last, m.start)
+        .append(f(name, t.splitTopLevel(',', m.end, close), sql.substring(m.start, close + 1)))
+      last = close + 1
     }
-    sb.toString
+    if (last == 0) sql else sb.append(sql, last, sql.length).toString
   }
+  private val callRe = """(?U)\b(\w+)\s*\(""".r
 
-  /** Rewrite ANSI `INTERVAL '<n>' <unit>` literals to the canonical
-    * `'<n> seconds'` string form session_window() accepts, leaving
-    * single-quoted regions untouched. */
-  private def substIntervalsOutsideQuotes(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '\'') { // copy quoted region verbatim
-        val j = s.indexOf('\'', i + 1)
-        val end = if (j < 0) s.length - 1 else j
-        sb.append(s.substring(i, end + 1)); i = end + 1
-      } else {
-        var j = s.indexOf('\'', i)
-        if (j < 0) j = s.length
-        // INTERVAL literals carry their own quotes ('45'), so substitute
-        // on a window widened to swallow that inner quote pair: match
-        // from here up to the next quote, and if the regex match ENDS at
-        // the boundary quote, extend. Simpler and correct: run the regex
-        // over the whole remaining string but only accept matches
-        // starting before j, then jump past the replacement.
-        val seg = s.substring(i)
-        intervalRe.findFirstMatchIn(seg) match {
-          case Some(mm) if i + mm.start < j =>
-            sb.append(seg.substring(0, mm.start))
-            sb.append(s"'${intervalSec(mm.matched)} seconds'")
-            i = i + mm.end
-          case _ =>
-            sb.append(s.substring(i, j)); i = j
-        }
-      }
-    }
-    sb.toString
-  }
+  // an INTERVAL literal as the code view shows it (its count a quote run)
+  private val intervalCodeRe = """(?i)INTERVAL\s*'+\s*(?:SECOND|MINUTE|HOUR|DAY)S?""".r
 
   private val legacyAuxNames = Set(
     "TUMBLE_START", "TUMBLE_END", "TUMBLE_ROWTIME",
@@ -1889,7 +1683,7 @@ class SqlEnv private (val spark: SparkSession) {
     // can be validated against them: Flink resolves SESSION_START(a, b)
     // only when (a, b) textually repeats a SESSION(a, b) group clause —
     // a mismatched aux silently mapping to the grouped struct would
-    // return the wrong window (r13 advice). Validation is existential
+    // return the wrong window. Validation is existential
     // (some assigner of the same family matches) so multi-subquery SQL
     // with different windows per subquery still passes.
     def norm(s: String) = s.replaceAll("\\s+", " ").trim.toUpperCase
@@ -1968,10 +1762,17 @@ class SqlEnv private (val spark: SparkSession) {
                 // INTERVAL '45' MINUTE is DayTimeIntervalType, which the
                 // SessionWindowing analyzer rejects — the string form is
                 // what the DataFrame path (q87) passes too.
-                // Substitute only OUTSIDE single-quoted regions: an
-                // INTERVAL-shaped substring inside a string literal in the
-                // gap expression must survive verbatim (r13 advice).
-                s"session_window($ts, ${substIntervalsOutsideQuotes(args(1))})"
+                // Substitute only in code: an INTERVAL-shaped substring
+                // inside a string literal in the gap expression must
+                // survive verbatim.
+                val gap = SqlText(args(1))
+                val canonical = gap.replaceAll(intervalCodeRe) { m =>
+                  gap.source(m) match {
+                    case lit @ intervalRe(_, _) => s"'${intervalSec(lit)} seconds'"
+                    case other => other
+                  }
+                }
+                s"session_window($ts, $canonical)"
             }
         }
       }

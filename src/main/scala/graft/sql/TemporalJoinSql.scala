@@ -35,7 +35,7 @@ object TemporalJoinSql {
 
   def rewrite(spark: SparkSession, defs: Map[String, Ddl.TableDef],
               sql: String, nextView: () => String): String = {
-    val m = re.findFirstMatchIn(sql) match {
+    val m = re.findFirstMatchIn(SqlText(sql).code) match {
       case None => return sql
       case Some(found) => found
     }
@@ -68,10 +68,8 @@ object TemporalJoinSql {
     joined.createOrReplaceTempView(view)
     val spliced = sql.substring(0, m.start) +
       s"FROM $view $factAlias" + sql.substring(m.end)
-    // both sides live in one view now: re-qualify the dim alias
-    rewrite(spark, defs,
-      spliced.replaceAll("\\b" + java.util.regex.Pattern.quote(dimAlias) + "\\.",
-        factAlias + "."),
-      nextView)
+    // both sides live in one view now: re-qualify the dim alias in code
+    val dimRef = ("\\b" + java.util.regex.Pattern.quote(dimAlias) + "\\.").r
+    rewrite(spark, defs, SqlText(spliced).replaceAll(dimRef)(_ => factAlias + "."), nextView)
   }
 }

@@ -37,14 +37,24 @@ class RewriteFuzzSpec extends AnyFunSuite {
   private val legacyWord: Gen[String] =
     Gen.oneOf("SESSION", "TUMBLE", "HOP", "SESSION_START", "TUMBLE_END",
       "HOP_ROWTIME", "session", "Session")
-  // Single-quoted literal; embedded quotes arrive SQL-doubled. May
-  // contain legacy words, parens, commas, comment openers.
+  // Single-quoted literal; embedded quotes arrive SQL-doubled or
+  // backslash-escaped. May contain legacy words, parens, commas,
+  // comment openers.
   private val quoted: Gen[String] = for {
     bodyBits <- Gen.listOfN(3, Gen.oneOf(
-      Gen.const("don''t"), legacyWord.map(w => s"$w(x, y"), Gen.const("-- no"),
-      Gen.const("/* nope"), Gen.const("a,b)("), Gen.const("INTERVAL '5' MINUTE"),
-      ident))
+      Gen.const("don''t"), Gen.const("it\\'s"), legacyWord.map(w => s"$w(x, y"),
+      Gen.const("-- no"), Gen.const("/* nope"), Gen.const("a,b)("),
+      Gen.const("INTERVAL '5' MINUTE"), ident))
   } yield "'" + bodyBits.mkString(" ") + "'"
+  // The other lexical shapes Spark's lexer reads as one non-code token:
+  // a double-quoted string, a raw string ending in a backslash, a
+  // back-quoted identifier and a doubly nested block comment — each
+  // holding an apostrophe, a legacy call or an unbalanced paren.
+  private val lexicalShape: Gen[String] = Gen.oneOf(
+    legacyWord.map(w => s"\"it's $w(ts\""),
+    Gen.const("R'C:\\dir\\'"),
+    legacyWord.map(w => s"`$w(`"),
+    legacyWord.map(w => s"/* a /* b's $w(x /* c */ ) */ d */"))
   private val lineComment: Gen[String] = for {
     bodyBits <- Gen.listOfN(2, Gen.oneOf(
       Gen.const("don't"), legacyWord.map(w => s"$w(ts, INTERVAL '1' HOUR)"),
@@ -61,7 +71,7 @@ class RewriteFuzzSpec extends AnyFunSuite {
     inner <- Gen.listOfN(2, Gen.oneOf(ident, quoted, Gen.const("1 + 2")))
   } yield "coalesce(" + inner.mkString(", ") + ")"
   private val neutralFragment: Gen[String] =
-    Gen.oneOf(ident, quoted, lineComment, blockComment, parenGroup,
+    Gen.oneOf(ident, quoted, lineComment, blockComment, parenGroup, lexicalShape,
       Gen.oneOf("SELECT", "FROM", "WHERE", "GROUP BY", ",", " ", "\n",
         "1.5", "= 3", "sessions", "TUMBLED", "HOPS"))
   private val noise: Gen[String] =
@@ -189,6 +199,71 @@ class RewriteFuzzSpec extends AnyFunSuite {
       val preSafe = if (pre.contains("--") && !pre.endsWith("\n")) pre + "\n" else pre
       val once = env.rewriteTimeCasts(s"$preSafe $call $post")
       val twice = env.rewriteTimeCasts(once)
+      assert(twice == once, s"sample #$i not idempotent:\n1: $once\n2: $twice")
+    }
+  }
+
+  // ---- rewriteJsonSyntax (IS [NOT] JSON, JSON_OBJECT/JSON_ARRAY) -------
+
+  // Neutral w.r.t. the JSON rewrite: JSON syntax only inside literals,
+  // quoted identifiers and comments, plus JSON-ish names that are not
+  // rewrite targets.
+  private val jsonNeutralFragment: Gen[String] = Gen.oneOf(
+    Gen.const("'x IS JSON'"),
+    Gen.const("-- doc's IS JSON\n"),
+    Gen.const("/* JSON_OBJECT(KEY 'a' VALUE 1) */"),
+    Gen.const("\"it's IS NOT JSON\""),
+    Gen.const("`is json`"),
+    Gen.const("json_value(doc, '$.a')"),
+    Gen.const("is_json(doc)"),
+    Gen.const("JSONX"),
+    neutralFragment)
+  private val jsonNoise: Gen[String] =
+    Gen.choose(0, 8).flatMap(n => Gen.listOfN(n, jsonNeutralFragment))
+      .map(_.mkString(" "))
+
+  // IS JSON on identifier, call and literal operands, and the
+  // KEY..VALUE / ON NULL constructor forms, with their rewrites.
+  private val jsonSyntax: Gen[(String, String)] = Gen.oneOf[(String, String)](
+    ("doc IS JSON", "is_json(doc)"),
+    ("t.doc IS NOT JSON", "NOT is_json(t.doc)"),
+    ("`my doc` IS JSON", "is_json(`my doc`)"),
+    ("upper(doc) IS JSON", "is_json(upper(doc))"),
+    ("concat(upper('{'), ')') IS JSON", "is_json(concat(upper('{'), ')'))"),
+    ("'{\"a\":1}' IS JSON", "is_json('{\"a\":1}')"),
+    ("'it''s' IS NOT JSON", "NOT is_json('it''s')"),
+    ("JSON_OBJECT(KEY 'a' VALUE 1, KEY 'b' VALUE x ABSENT ON NULL)",
+      "json_object_absent('a', 1, 'b', x)"),
+    ("JSON_OBJECT(KEY 'k' VALUE 'KEY x VALUE y')", "json_object('k', 'KEY x VALUE y')"),
+    ("JSON_OBJECT(KEY 'o' VALUE JSON_OBJECT(KEY 'i' VALUE 1))",
+      "json_object('o', json_object('i', 1))"),
+    ("JSON_ARRAY(1, 'ABSENT ON NULL', 3 NULL ON NULL)",
+      "json_array_null(1, 'ABSENT ON NULL', 3)"))
+
+  test("json preservation: neutral input round-trips byte-identical (400 samples)") {
+    samples(jsonNoise, 400).zipWithIndex.foreach { case (s, i) =>
+      val out = env.rewriteJsonSyntax(s)
+      assert(out == s, s"sample #$i mutated:\nIN : $s\nOUT: $out")
+    }
+  }
+
+  test("json transparency: noise-wrapped JSON syntax rewrites like the bare syntax (300 samples)") {
+    val gen = for { pre <- jsonNoise; js <- jsonSyntax; post <- jsonNoise } yield (pre, js, post)
+    samples(gen, 300).zipWithIndex.foreach { case ((pre, (call, expect), post), i) =>
+      val preSafe = if (pre.contains("--") && !pre.endsWith("\n")) pre + "\n" else pre
+      val in = s"$preSafe $call $post"
+      val out = env.rewriteJsonSyntax(in)
+      assert(out == s"$preSafe $expect $post",
+        s"sample #$i:\nIN : $in\nOUT: $out\nEXP: $preSafe $expect $post")
+    }
+  }
+
+  test("json idempotence: rewriting the rewritten output is identity (300 samples)") {
+    val gen = for { pre <- jsonNoise; js <- jsonSyntax; post <- jsonNoise } yield (pre, js, post)
+    samples(gen, 300).zipWithIndex.foreach { case ((pre, (call, _), post), i) =>
+      val preSafe = if (pre.contains("--") && !pre.endsWith("\n")) pre + "\n" else pre
+      val once = env.rewriteJsonSyntax(s"$preSafe $call $post")
+      val twice = env.rewriteJsonSyntax(once)
       assert(twice == once, s"sample #$i not idempotent:\n1: $once\n2: $twice")
     }
   }

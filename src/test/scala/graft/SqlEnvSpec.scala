@@ -2415,4 +2415,104 @@ class SqlEnvSpec extends AnyFunSuite {
     env.executeSql("ANALYZE TABLE an_ins_t COMPUTE STATISTICS FOR COLUMNS id")
     try spark.catalog.uncacheTable("an_ins_t") catch { case _: Throwable => () }
   }
+
+  test("lexical decoys: a literal, escape or comment never changes a statement's answer") {
+    val env = SqlEnv(spark).registerTestdata(TestSpark.sfDir)
+    env.registerTable("lex_jd",
+      spark.sql("""SELECT * FROM VALUES ('{"a":1}'), ('nope') AS t(doc)"""))
+    val dir = java.nio.file.Files.createTempDirectory("graft_lex_decoy").toString
+    val sinks = Seq(
+      "DROP TABLE IF EXISTS lex_a", "DROP TABLE IF EXISTS lex_b",
+      s"""CREATE TABLE lex_a (k INT) WITH ('connector' = 'filesystem',
+         |  'path' = '$dir/a', 'format' = 'parquet')""".stripMargin,
+      s"""CREATE TABLE lex_b (k INT) WITH ('connector' = 'filesystem',
+         |  'path' = '$dir/b', 'format' = 'parquet')""".stripMargin)
+    val readSinks = "SELECT 'a' AS t, k FROM lex_a UNION ALL SELECT 'b', k FROM lex_b"
+    val mrBody = "PARTITION BY user_id ORDER BY ts MEASURES COUNT(b.*) AS n " +
+      "PATTERN (a b+) WITHIN INTERVAL '1' HOUR DEFINE a AS a.event_type = 'signup'"
+    val tvf = "SELECT window_start, COUNT(1) AS n " +
+      "FROM TUMBLE(TABLE events, DESCRIPTOR(ts), INTERVAL '15' MINUTE) "
+    val sessionAgg = "SESSION_START(ts, INTERVAL '30' MINUTE) AS s, COUNT(1) AS n " +
+      "FROM events GROUP BY SESSION(ts, INTERVAL '30' MINUTE), user_id"
+    val timeCast = "CAST(TIMESTAMP '2024-01-01 10:11:12' AS TIME) AS t"
+    // (what, statement with its decoy, the same statement minus the
+    // decoy, statements run before each, the query read back after)
+    case class Pin(what: String, decoyed: String, plain: String,
+                   setup: Seq[String] = Nil, readBack: Option[String] = None)
+    val pins = Seq(
+      Pin("IS JSON after a line comment holding an apostrophe",
+        "SELECT doc, -- the doc's check\n doc IS JSON AS ok FROM lex_jd",
+        "SELECT doc,\n doc IS JSON AS ok FROM lex_jd"),
+      Pin("IS JSON after a double-quoted string holding an apostrophe",
+        """SELECT length("it's") AS q, doc IS JSON AS ok FROM lex_jd""",
+        "SELECT 4 AS q, doc IS JSON AS ok FROM lex_jd"),
+      Pin("IS JSON after a backslash-escaped literal",
+        """SELECT length('it\'s') AS q, doc IS JSON AS ok FROM lex_jd""",
+        "SELECT 4 AS q, doc IS JSON AS ok FROM lex_jd"),
+      Pin("MATCH_RECOGNIZE inside a string literal",
+        "SELECT 'MATCH_RECOGNIZE' AS s FROM lex_jd",
+        "SELECT concat('MATCH_', 'RECOGNIZE') AS s FROM lex_jd"),
+      Pin("MATCH_RECOGNIZE inside a line comment",
+        "SELECT doc FROM lex_jd -- no MATCH_RECOGNIZE here",
+        "SELECT doc FROM lex_jd"),
+      Pin("a MATCH_RECOGNIZE DEFINE whose literal is ')'",
+        s"SELECT user_id, n FROM events MATCH_RECOGNIZE ($mrBody AND ')' <> '(')",
+        s"SELECT user_id, n FROM events MATCH_RECOGNIZE ($mrBody)"),
+      Pin("a commented-out window TVF naming a missing table",
+        tvf + "/* was: TUMBLE(TABLE gone_t, DESCRIPTOR(ts), INTERVAL '5' MINUTE) */ " +
+          "GROUP BY window_start",
+        tvf + "GROUP BY window_start"),
+      Pin("a backslash-escaped literal before a legacy SESSION_START/SESSION pair",
+        s"SELECT user_id, length('it\\'s') AS q, $sessionAgg",
+        s"SELECT user_id, 4 AS q, $sessionAgg"),
+      Pin("a backslash-escaped literal before CAST(... AS TIME)",
+        s"SELECT length('a\\'b') AS q, $timeCast",
+        s"SELECT 3 AS q, $timeCast"),
+      Pin("a line comment before CREATE TABLE ... WITH",
+        "-- sink\nCREATE TABLE lex_c (k INT) WITH ('connector' = 'blackhole')",
+        "CREATE TABLE lex_c (k INT) WITH ('connector' = 'blackhole')",
+        setup = Seq("DROP TABLE IF EXISTS lex_c"), readBack = Some("SHOW CREATE TABLE lex_c")),
+      Pin("a STATEMENT SET with ';' inside a line comment",
+        "EXECUTE STATEMENT SET BEGIN\nINSERT OVERWRITE lex_a SELECT 1; -- first; then b\n" +
+          "INSERT OVERWRITE lex_b SELECT 2;\nEND",
+        "EXECUTE STATEMENT SET BEGIN\nINSERT OVERWRITE lex_a SELECT 1;\n" +
+          "INSERT OVERWRITE lex_b SELECT 2;\nEND",
+        setup = sinks, readBack = Some(readSinks)),
+      Pin("a STATEMENT SET with an apostrophe inside a block comment",
+        "EXECUTE STATEMENT SET BEGIN\nINSERT OVERWRITE lex_a SELECT 1 /* c's */;\n" +
+          "INSERT OVERWRITE lex_b SELECT 2;\nEND",
+        "EXECUTE STATEMENT SET BEGIN\nINSERT OVERWRITE lex_a SELECT 1;\n" +
+          "INSERT OVERWRITE lex_b SELECT 2;\nEND",
+        setup = sinks, readBack = Some(readSinks)))
+    def answer(p: Pin, stmt: String): Seq[String] = {
+      p.setup.foreach(env.executeSql)
+      val out = env.executeSql(stmt)
+      p.readBack.fold(out)(env.executeSql).collect().map(_.toString).toSeq.sorted
+    }
+    val failures = pins.flatMap { p =>
+      scala.util.Try {
+        val (got, want) = (answer(p, p.decoyed), answer(p, p.plain))
+        assert(want.nonEmpty, s"${p.what}: the plain statement returned no rows")
+        assert(got == want, s"${p.what}: $got != $want")
+      }.failed.toOption.map(e => s"${p.what}: " +
+        e.getMessage.linesIterator.map(_.trim).find(_.nonEmpty).getOrElse(e.toString))
+    }
+    assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
+  }
+
+  test("WITH option values read string tokens: a doubled quote is one quote") {
+    val env = SqlEnv(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft_lex_opts").toString
+    env.executeSql("DROP TABLE IF EXISTS lex_q")
+    env.executeSql(
+      s"""CREATE TABLE lex_q (k INT) WITH ('connector' = 'filesystem',
+         |  'path' = '$dir/it''s', 'format' = 'parquet')""".stripMargin)
+    env.executeSql("INSERT INTO lex_q SELECT 7")
+    assert(new java.io.File(s"$dir/it's").isDirectory && !new java.io.File(s"$dir/it").exists,
+      s"files must land under it's: ${new java.io.File(dir).list().mkString(", ")}")
+    val ddl = env.executeSql("SHOW CREATE TABLE lex_q").collect()(0).getString(0)
+    assert(ddl.contains(s"'path' = '$dir/it''s'"), ddl)
+    assert(env.executeSql("SELECT k FROM lex_q").collect().map(_.getInt(0)).toSeq == Seq(7))
+    env.executeSql("DROP TABLE lex_q")
+  }
 }
