@@ -1,7 +1,10 @@
 package graft
 
+import java.lang.ref.WeakReference
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.{SessionCatalog, TemporaryViewRelation}
 import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
@@ -40,8 +43,7 @@ object Tables {
     * schema inferred from them). A changed fingerprint replaces the
     * entry; concurrent misses may both infer, and either result stands.
     */
-  private val catalog =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[Any], StructType)]()
+  private val catalog = new ConcurrentHashMap[String, (Seq[Any], StructType)]()
 
   /** Name, length and modification time of every file under `path`,
     * plus the inference settings in force.
@@ -58,7 +60,8 @@ object Tables {
     b.result()
   }
 
-  private def read(spark: SparkSession, path: String): DataFrame = {
+  /** The table at `path` and the fingerprint it was read under. */
+  private def read(spark: SparkSession, path: String): (DataFrame, Seq[Any]) = {
     val fp = fingerprint(spark, path)
     val schema = catalog.get(path) match {
       case (`fp`, s) => s
@@ -67,10 +70,19 @@ object Tables {
         catalog.put(path, (fp, s))
         s
     }
-    spark.read.schema(schema).parquet(path)
+    (spark.read.schema(schema).parquet(path), fp)
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    loadWithFingerprint(spark, dir, name)._1
+
+  /** events.ts may be INT64 nanos, readable only behind this setting,
+    * which is one of the inference settings. */
+  private def readNanosAsLong(spark: SparkSession): Unit =
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+  private def loadWithFingerprint(spark: SparkSession, dir: String, name: String)
+      : (DataFrame, Seq[Any]) =
     if (name == "events") {
       // The driver has shipped events.ts under three parquet physical
       // types across fixture generations: TIMESTAMP(NANOS) (readable only
@@ -80,9 +92,9 @@ object Tables {
       // query at analysis time again.
       import org.apache.spark.sql.functions.{col, expr}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = read(spark, s"$dir/$name.parquet")
-      raw.schema("ts").dataType match {
+      readNanosAsLong(spark)
+      val (raw, fp) = read(spark, s"$dir/$name.parquet")
+      val df = raw.schema("ts").dataType match {
         case LongType => // int64 nanos; µs-granular data, truncation lossless
           raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
         case TimestampNTZType => // session TZ is UTC, so values match the oracle
@@ -92,9 +104,40 @@ object Tables {
           throw new IllegalStateException(
             s"events.ts has unexpected type $other — adapt Tables.load")
       }
+      (df, fp)
     } else read(spark, s"$dir/$name.parquet")
 
-  /** Register all tables as temp views so `spark.sql` works too. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
+  /** Per session catalog: view name → the fingerprint of the files the
+    * view was loaded from and the view registered. Weak keys, and views
+    * held weakly (a view's plan reaches its session), so a stopped
+    * session stays collectable; a view the session still holds stays
+    * reachable through it.
+    */
+  private val views = new java.util.WeakHashMap[SessionCatalog,
+    ConcurrentHashMap[String, (Seq[Any], WeakReference[TemporaryViewRelation])]]()
+
+  /** Register all tables as temp views so `spark.sql` works too. A view
+    * is left as it is while the session still holds the exact view
+    * registered here and its files and inference settings are
+    * unchanged; a view the user dropped or replaced, or one whose files
+    * changed, is registered again.
+    */
+  def registerAll(spark: SparkSession, dir: String): Unit = {
+    // set before any table is fingerprinted, or loading events would
+    // change the fingerprints of the tables read before it
+    readNanosAsLong(spark)
+    val sessionCatalog = spark.sessionState.catalog
+    val mine = views.synchronized(views.computeIfAbsent(sessionCatalog, _ => new ConcurrentHashMap()))
+    names.foreach { n =>
+      val held = sessionCatalog.getRawTempView(n)
+      val unchanged = Option(mine.get(n)).exists { case (fp, view) =>
+        held.exists(_ eq view.get) && fp == fingerprint(spark, s"$dir/$n.parquet")
+      }
+      if (!unchanged) {
+        val (df, fp) = loadWithFingerprint(spark, dir, n)
+        df.createOrReplaceTempView(n)
+        sessionCatalog.getRawTempView(n).foreach(v => mine.put(n, (fp, new WeakReference(v))))
+      }
+    }
+  }
 }

@@ -628,8 +628,37 @@ object functions {
       .otherwise(dot / (normA * normB))
   }
 
-  /** Register SQL names (idempotent) so `spark.sql` can use them. */
+  /** Per session function registry: the registration [[install]] left
+    * under each name it touched. Weak keys keep a stopped session's
+    * registry collectable; the values hold only names and strings.
+    */
+  private val installed = new java.util.WeakHashMap[
+    org.apache.spark.sql.catalyst.analysis.FunctionRegistry,
+    Map[org.apache.spark.sql.catalyst.FunctionIdentifier, ExpressionInfo]]()
+
+  /** Register SQL names so `spark.sql` can use them. The registration
+    * is skipped while every name graft installed in this session still
+    * resolves to that exact registration (compared by identity); a name
+    * the user dropped or replaced makes it run again, restoring graft's.
+    * The map-key policy default of [[jsonfns.mapKeyPolicy]] is applied
+    * every time.
+    */
   def register(spark: SparkSession): Unit = {
+    jsonfns.mapKeyPolicy(spark)
+    val reg = spark.sessionState.functionRegistry
+    val mine = installed.synchronized(Option(installed.get(reg)))
+    if (!mine.exists(_.forall { case (id, info) => reg.lookupFunction(id).exists(_ eq info) })) {
+      def registrations = reg.listFunction().flatMap(id => reg.lookupFunction(id).map(id -> _)).toMap
+      val before = registrations
+      install(spark)
+      // every registration creates a new ExpressionInfo, so the names
+      // install touched are those whose info changed
+      val touched = registrations.filter { case (id, info) => !before.get(id).exists(_ eq info) }
+      installed.synchronized(installed.put(reg, touched))
+    }
+  }
+
+  private def install(spark: SparkSession): Unit = {
     jsonfns.register(spark)
     times.register(spark)
     val reg = spark.sessionState.functionRegistry

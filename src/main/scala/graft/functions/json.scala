@@ -55,6 +55,18 @@ import org.apache.spark.sql.types._
   */
 object jsonfns {
 
+  /** mapKeyDedupPolicy=LAST_WIN: json_objectagg's map_from_entries over
+    * the ascending-sorted entries then keeps the greatest value per key —
+    * exactly the documented duplicate-key upsert contract
+    * (JsonObjectAggFunction last-wins under the deterministic sorted
+    * order). The session default moves to the reference's upsert
+    * semantics, but a spark.sql.mapKeyDedupPolicy the USER set
+    * explicitly wins.
+    */
+  def mapKeyPolicy(spark: SparkSession): Unit =
+    if (!spark.conf.getAll.contains("spark.sql.mapKeyDedupPolicy"))
+      spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+
   private def fn(name: String, args: Expression*): Expression =
     UnresolvedFunction(name, args.toSeq, false)
 
@@ -81,18 +93,10 @@ object jsonfns {
       es => StructsToJson(Map.empty, CreateArray(es.toSeq)), "built-in")
 
     // ---- aggregates (deterministic order: sorted entries) ----------
-    // mapKeyDedupPolicy=LAST_WIN: map_from_entries over the
-    // ascending-sorted entries then keeps the greatest value per key —
-    // exactly the documented duplicate-key upsert contract
-    // (JsonObjectAggFunction last-wins under the deterministic sorted
-    // order). The r7 per-element filter lambda embedded the whole
-    // sort_array(collect_list(...)) subtree twice, re-materializing the
-    // sorted array per element — O(g²·log g) per group (87× on q86).
-    // ...but never override a policy the USER set explicitly: the
-    // session default moves to the reference's upsert semantics, an
-    // explicit spark.sql.mapKeyDedupPolicy choice wins (r18 review)
-    if (!spark.conf.getAll.contains("spark.sql.mapKeyDedupPolicy"))
-      spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+    // json_objectagg relies on [[mapKeyPolicy]]. The r7 per-element
+    // filter lambda embedded the whole sort_array(collect_list(...))
+    // subtree twice, re-materializing the sorted array per element —
+    // O(g²·log g) per group (87× on q86).
     reg.createOrReplaceTempFunction("json_objectagg", es => {
       val entries = fn("sort_array", fn("collect_list",
         CreateNamedStruct(Seq(Literal("k"), es(0), Literal("v"), es(1)))))

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 import graft.Tables
 
@@ -216,20 +215,20 @@ object TextOps2 extends QueryModule {
     },
 
     // ---- Iterative BPE merge training (Sennrich et al. 2016) ----------
-    // The full distributed tokenizer-training loop t49 only took one
-    // step of: count adjacent symbol pairs weighted by word frequency,
-    // merge the argmax pair corpus-wide, re-segment, repeat. Scale
-    // shape: the corpus collapses ONCE into the Zipf-bounded
-    // word-frequency table (one shuffle on word), persisted as an RDD;
-    // every round after that touches only that bounded table. One job
-    // counts every adjacent pair into a driver-side map (bounded by the
-    // vocabulary's distinct pairs, ≤ |alphabet|² for single chars plus
-    // one new symbol per round). Each round then takes the argmax on
-    // the driver and runs ONE job that re-segments the persisted table
-    // and returns per-partition count deltas of the words the merge
-    // changed (−wc per old pair, +wc per new one), so no round recounts
-    // the table or plans a new query: delta iteration, the top-1 kept
-    // under deltas. Greedy left-to-right non-overlapping merge
+    // The full tokenizer-training loop t49 only took one step of: count
+    // adjacent symbol pairs weighted by word frequency, merge the argmax
+    // pair corpus-wide, re-segment, repeat. Scale shape: the corpus
+    // collapses ONCE, in one Spark job, into the Zipf-bounded
+    // word-frequency table (one shuffle on word), which is collected to
+    // the driver; every round runs there, with no Spark job. The pair
+    // counts are a driver-side map (bounded by the vocabulary's
+    // distinct pairs, ≤ |alphabet|² for single chars plus one new
+    // symbol per round); each round takes the argmax and applies the
+    // count deltas of the words the merge changed (−wc per old pair,
+    // +wc per new one), so no round recounts the table: delta
+    // iteration, the top-1 kept under deltas. The driver holds the word
+    // table, which is the memory limit t57 already has: it broadcasts
+    // the same table. Greedy left-to-right non-overlapping merge
     // semantics: the fold compares whole symbols, so "aaa" under (a,a)
     // becomes [aa, a], never [aa, aa] — matching the reference BPE
     // implementations.
@@ -391,11 +390,6 @@ object TextOps2 extends QueryModule {
     }
   )
 
-  /** A word of the BPE training table: its corpus frequency and its
-    * segmentation; `prev` is the segmentation before the last merge if
-    * that merge changed it, else null. */
-  private final case class BpeWord(w: String, wc: Long, syms: Array[String], prev: Array[String])
-
   private type SymPair = (String, String)
 
   private def symPairs(syms: Array[String]): Iterator[SymPair] =
@@ -424,58 +418,41 @@ object TextOps2 extends QueryModule {
     counts.minByOption { case ((l, r), n) => (n, l, r) }(
       Ordering.Tuple3(Ordering.Long.reverse, utf8Order, utf8Order))
 
-  /** Shared distributed BPE trainer (t55/t57): returns the ordered
-    * merge rules and the final per-word segmentation (w, wc, syms).
-    * The pair counts live on the driver across rounds; each round
-    * re-segments the persisted word table in one job that also returns
-    * the count deltas of the words the merge changed (see the t55
-    * Scaladoc for the bounds).
+  /** Shared BPE trainer (t55/t57): returns the ordered merge rules and
+    * the final per-word segmentation (w, wc, syms) as a local DataFrame.
+    * One job collects the word table; every round then runs on the
+    * driver, updating the pair counts by the deltas of the words the
+    * merge changed (see the t55 Scaladoc for the bounds).
     */
   private def trainBpe(s: SparkSession, dir: String, nMerges: Int)
       : (Seq[(Long, String, String, Long)], DataFrame) = {
     import s.implicits._
-    val d = Tables.load(s, dir, "documents")
-    var words = d.select(explode(tokens).as("w"))
+    val words = Tables.load(s, dir, "documents")
+      .select(explode(tokens).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("wc"))
       .select(col("w"), col("wc"), expr("split(w, '')").as("syms"))
-      .as[(String, Long, Array[String])].rdd
-      .map { case (w, wc, syms) => BpeWord(w, wc, syms, null) }
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var live = words
+      .as[(String, Long, Array[String])].rdd.collect()
     val counts = scala.collection.mutable.HashMap.empty[SymPair, Long]
-    counts ++= words.flatMap(x => symPairs(x.syms).map(_ -> x.wc)).reduceByKey(_ + _).collect()
+    def add(syms: Array[String], dn: Long): Unit = symPairs(syms).foreach { p =>
+      val v = counts.getOrElse(p, 0L) + dn
+      if (v > 0) counts(p) = v else counts -= p
+    }
+    words.foreach { case (_, wc, syms) => add(syms, wc) }
     val rules = Seq.newBuilder[(Long, String, String, Long)]
     // once no pair is left, the remaining rounds find none either
     for (rank <- 1 to nMerges; ((l, r), n) <- bestPair(counts)) {
       rules += ((rank.toLong, l, r, n))
-      words = words.map { x =>
-        val m = mergePair(x.syms, l, r)
-        BpeWord(x.w, x.wc, m, if (m eq x.syms) null else x.syms)
-      }
-      // the last merge is never counted: t57's consumer computes it
-      if (rank < nMerges) {
-        words.persist(StorageLevel.MEMORY_AND_DISK)
-        val deltas = words.mapPartitions { it =>
-          val m = scala.collection.mutable.HashMap.empty[SymPair, Long]
-          it.filter(_.prev != null).foreach { x =>
-            symPairs(x.prev).foreach(p => m(p) = m.getOrElse(p, 0L) - x.wc)
-            symPairs(x.syms).foreach(p => m(p) = m.getOrElse(p, 0L) + x.wc)
-          }
-          Iterator.single(m)
-        }.collect()
-        deltas.foreach(_.foreach { case (p, dn) =>
-          val v = counts.getOrElse(p, 0L) + dn
-          if (v > 0) counts(p) = v else counts -= p
-        })
-        live.unpersist(blocking = false)
-        live = words
+      words.indices.foreach { i =>
+        val (w, wc, syms) = words(i)
+        val m = mergePair(syms, l, r)
+        if (m ne syms) {
+          add(syms, -wc); add(m, wc)
+          words(i) = (w, wc, m)
+        }
       }
     }
-    // the final segmentation is consumed by the caller after this
-    // returns — the next trainBpe invocation releases its blocks
-    Staging.supersedeHandles(s"$dir#bpe_words_$nMerges", Seq(live))
-    (rules.result(), words.map(x => (x.w, x.wc, x.syms)).toDF("w", "wc", "syms"))
+    (rules.result(), words.toSeq.toDF("w", "wc", "syms"))
   }
 
   /** DuckDB replay of the t55 training loop: 8 unrolled rounds, each

@@ -68,26 +68,26 @@ object Ddl {
       else schema.fieldNames.toSeq ++ metaCols.map(_.name) ++ computed.map(_.name)
   }
 
-  // Column list is LAZY so a trailing `PARTITIONED BY (...)` clause is
-  // not swallowed by the column group (backtracking still steps over
-  // nested parens inside DECIMAL(p,s)/ROW<...> because the tail must
-  // match `[PARTITIONED BY] WITH (...)`).
-  private val createRe =
-    """(?is)^\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?`?([\w.]+)`?\s*\((.*?)\)\s*(?:PARTITIONED\s+BY\s*\(([^)]*)\)\s*)?WITH\s*\((.*)\)\s*$""".r
+  // Both patterns run over the code view ([[StatementRe]]), so a `)` in
+  // a literal never closes the PARTITIONED BY or PARTITION list. Column
+  // list is LAZY so a trailing `PARTITIONED BY (...)` clause is not
+  // swallowed by the column group (backtracking still steps over nested
+  // parens inside DECIMAL(p,s)/ROW<...> because the tail must match
+  // `[PARTITIONED BY] WITH (...)`).
+  private val createRe = new StatementRe(
+    """(?is)^\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?`?([\w.]+)`?\s*\((.*?)\)\s*(?:PARTITIONED\s+BY\s*\(([^)]*)\)\s*)?WITH\s*\((.*)\)\s*$""")
   // Optional static partition spec (RichSqlInsert.getStaticPartitions:71):
   // INSERT INTO/OVERWRITE t [PARTITION (k='v', ...)] SELECT ...
-  private val insertRe =
-    """(?is)^\s*INSERT\s+(INTO|OVERWRITE)\s+([\w.]+)\s*(?:PARTITION\s*\(([^)]*)\)\s*)?\s+(SELECT\b.*|VALUES\b.*)$""".r
+  private val insertRe = new StatementRe(
+    """(?is)^\s*INSERT\s+(INTO|OVERWRITE)\s+([\w.]+)\s*(?:PARTITION\s*\(([^)]*)\)\s*)?\s+(SELECT\b.*|VALUES\b.*)$""")
 
-  def isCreateTable(sql: String): Boolean = createRe.findFirstIn(sql).isDefined
-  def isInsert(sql: String): Boolean = insertRe.findFirstIn(sql).isDefined
+  def isCreateTable(sql: String): Boolean = createRe.matches(sql)
+  def isInsert(sql: String): Boolean = insertRe.matches(sql)
   /** Target table of an INSERT statement, if it is one. */
-  def insertTarget(sql: String): Option[String] =
-    insertRe.findFirstMatchIn(sql).map(_.group(2))
+  def insertTarget(sql: String): Option[String] = insertRe.unapplySeq(sql).map(_(1))
   /** Source query (SELECT/VALUES tail) of an INSERT statement, if it
     * is one — lets EXPLAIN plan the source without running the sink. */
-  def insertSource(sql: String): Option[String] =
-    insertRe.findFirstMatchIn(sql).map(_.group(4))
+  def insertSource(sql: String): Option[String] = insertRe.unapplySeq(sql).map(_(3))
 
   // ---- SHOW CREATE TABLE ----------------------------------------------
 
@@ -247,12 +247,12 @@ object Ddl {
   // ---- CREATE TABLE ----------------------------------------------------
 
   def parseCreateTable(sql: String): TableDef = {
-    val m = createRe.findFirstMatchIn(sql).getOrElse(
-      throw new IllegalArgumentException(s"not a CREATE TABLE: $sql"))
-    val name = m.group(1)
-    val body = m.group(2)
-    val partitioned = Option(m.group(3)).map(nameList).getOrElse(Nil)
-    val opts = parseOptionPairs(m.group(4))
+    val (name, body, partitionList, withBody) = sql match {
+      case createRe(n, b, p, w) => (n, b, p, w)
+      case _ => throw new IllegalArgumentException(s"not a CREATE TABLE: $sql")
+    }
+    val partitioned = Option(partitionList).map(nameList).getOrElse(Nil)
+    val opts = parseOptionPairs(withBody)
 
     var watermark: Option[(String, String)] = None
     var pk: Seq[String] = Nil
@@ -607,9 +607,8 @@ object Ddl {
     */
   def executeInsert(spark: SparkSession, defs: Map[String, TableDef],
                     sql: String, runSql: String => DataFrame): DataFrame = {
-    val m = insertRe.findFirstMatchIn(sql).get
-    val mode = if (m.group(1).equalsIgnoreCase("OVERWRITE")) "overwrite" else "append"
-    val name = m.group(2)
+    val (kind, name, spec, source) = sql match { case insertRe(k, n, p, q) => (k, n, p, q) }
+    val mode = if (kind.equalsIgnoreCase("OVERWRITE")) "overwrite" else "append"
     val d = defs.getOrElse(name, throw new IllegalArgumentException(
       s"INSERT target '$name' was not defined via CREATE TABLE"))
     // Static partitions (RichSqlInsert.getStaticPartitions:71): values
@@ -617,10 +616,10 @@ object Ddl {
     // OVERWRITE with a static spec replaces only the touched
     // partitions (Spark's dynamic partitionOverwriteMode), like the
     // reference's filesystem sink.
-    val staticParts = Option(m.group(3)).toSeq.flatMap(parsePartSpec)
+    val staticParts = Option(spec).toSeq.flatMap(parsePartSpec)
     staticParts.foreach { case (k, _) => require(d.partitionedBy.contains(k),
       s"static partition column '$k' is not in PARTITIONED BY (${d.partitionedBy.mkString(", ")})") }
-    val data0 = runSql(m.group(4))
+    val data0 = runSql(source)
     // The SELECT list omits the static partition columns (reference
     // semantics), so rename its output positionally to the declared
     // NON-static columns, add the static literals, then restore

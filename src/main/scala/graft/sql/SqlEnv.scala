@@ -21,9 +21,12 @@ import org.apache.spark.sql.functions.{col, expr}
   * }}}
   * The SQL dialect is Spark SQL (no custom parser — SURVEY §7.1);
   * graft's extra functions (minhash/simhash/hamming64/cosine_sim/…)
-  * are registered on construction so they work in SQL text.
+  * are registered on construction so they work in SQL text. The
+  * registration is skipped while the session still holds every function
+  * graft installed in it ([[graft.functions.functions.register]]).
   */
 class SqlEnv private (val spark: SparkSession) {
+  import StatementRe.{lit, lit1}
 
   graft.functions.functions.register(spark)
 
@@ -655,12 +658,13 @@ class SqlEnv private (val spark: SparkSession) {
           s"USE MODULES: module '$n' is not loaded"))
         modules.clear(); names.distinct.foreach(modules.add)
         return spark.emptyDataFrame
-      // jars: ADD JAR passes through to Spark's own (the executor-side
-      // distribution is real); REMOVE JAR is rejected — a JVM cannot
-      // unload classes from a live classloader, and Spark has no
-      // LIST-remove either (documented narrowing)
+      // jars: ADD JAR passes the path to the loader Spark's own ADD JAR
+      // uses, not back through SQL text (the executor-side distribution
+      // is real); REMOVE JAR is rejected — a JVM cannot unload classes
+      // from a live classloader, and Spark has no LIST-remove either
+      // (documented narrowing)
       case addJarRe(path) =>
-        spark.sql(s"ADD JAR '$path'")
+        spark.sessionState.resourceLoader.addJar(path)
         addedJars.add(path)
         return spark.emptyDataFrame
       case showJarsRe() =>
@@ -1152,9 +1156,9 @@ class SqlEnv private (val spark: SparkSession) {
 
   // ---- command statements (SET / views / statement sets) ---------------
 
-  private val setKvRe = """(?is)^\s*SET\s+'([^']+)'\s*=\s*'([^']*)'\s*;?\s*$""".r
+  private val setKvRe = new StatementRe(raw"""(?is)^\s*SET\s+$lit1\s*=\s*$lit\s*;?\s*$$""")
   private val setListRe = """(?is)^\s*SET\s*;?\s*$""".r
-  private val resetRe = """(?is)^\s*RESET\s+'([^']+)'\s*;?\s*$""".r
+  private val resetRe = new StatementRe(raw"""(?is)^\s*RESET\s+$lit1\s*;?\s*$$""")
   private val createViewRe =
     """(?is)^\s*CREATE\s+(?:TEMPORARY\s+)?VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s+AS\s+(.+)$""".r
   private val dropRe =
@@ -1172,8 +1176,8 @@ class SqlEnv private (val spark: SparkSession) {
     """(?is)^\s*SHOW\s+(TABLES|VIEWS|FUNCTIONS)\s*;?\s*$""".r
   // SHOW TABLES [FROM|IN db] [[NOT] LIKE 'p'] (SqlShowTables:475)
   private val showTablesRe =
-    ("""(?is)^\s*SHOW\s+TABLES\s*(?:(?:FROM|IN)\s+`?([\w.]+)`?\s*)?""" +
-      """(?:(NOT\s+)?LIKE\s+'([^']*)'\s*)?;?\s*$""").r
+    new StatementRe(raw"""(?is)^\s*SHOW\s+TABLES\s*(?:(?:FROM|IN)\s+`?([\w.]+)`?\s*)?""" +
+      raw"""(?:(NOT\s+)?LIKE\s+$lit\s*)?;?\s*$$""")
   private val showUserFnRe =
     """(?is)^\s*SHOW\s+USER\s+FUNCTIONS\s*;?\s*$""".r
   /** SQL-LIKE predicate for the SHOW ... LIKE legs (% = any run,
@@ -1209,8 +1213,8 @@ class SqlEnv private (val spark: SparkSession) {
   private val createLikeRe =
     """(?is)^\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?`?([\w.]+)`?\s*(?:\((.*?)\)\s*)?(?:WITH\s*\((.*?)\)\s*)?LIKE\s+`?([\w.]+)`?\s*(?:\(\s*([^)]*)\)\s*)?;?\s*$""".r
   private val showColumnsRe =
-    ("""(?is)^\s*SHOW\s+COLUMNS\s+(?:FROM|IN)\s+([\w.]+)\s*""" +
-      """(?:(NOT\s+)?LIKE\s+'([^']*)'\s*)?;?\s*$""").r
+    new StatementRe(raw"""(?is)^\s*SHOW\s+COLUMNS\s+(?:FROM|IN)\s+([\w.]+)\s*""" +
+      raw"""(?:(NOT\s+)?LIKE\s+$lit\s*)?;?\s*$$""")
   private val useCatalogRe = """(?is)^\s*USE\s+CATALOG\s+([\w.]+)\s*;?\s*$""".r
   private val useDbRe = """(?is)^\s*USE\s+(?!CATALOG\b)([\w.]+)\s*;?\s*$""".r
   private val showCatalogsRe = """(?is)^\s*SHOW\s+CATALOGS\s*;?\s*$""".r
@@ -1263,14 +1267,14 @@ class SqlEnv private (val spark: SparkSession) {
   // CREATE [TEMPORARY] [SYSTEM] FUNCTION f AS 'class' [LANGUAGE ...]
   // (ddl/SqlCreateFunction.java — USING JAR is a 1.17 addition)
   private val createFnRe =
-    ("""(?is)^\s*CREATE\s+(?:TEMPORARY\s+)?(?:SYSTEM\s+)?FUNCTION\s+""" +
-      """(IF\s+NOT\s+EXISTS\s+)?`?([\w.]+)`?\s+AS\s+'([^']+)'""" +
-      """\s*(?:LANGUAGE\s+(\w+)\s*)?;?\s*$""").r
+    new StatementRe(raw"""(?is)^\s*CREATE\s+(?:TEMPORARY\s+)?(?:SYSTEM\s+)?FUNCTION\s+""" +
+      raw"""(IF\s+NOT\s+EXISTS\s+)?`?([\w.]+)`?\s+AS\s+$lit1""" +
+      raw"""\s*(?:LANGUAGE\s+(\w+)\s*)?;?\s*$$""")
   private val dropFnRe =
     """(?is)^\s*DROP\s+(?:TEMPORARY\s+)?(?:SYSTEM\s+)?FUNCTION\s+(IF\s+EXISTS\s+)?`?([\w.]+)`?\s*;?\s*$""".r
   private val alterFnRe =
-    ("""(?is)^\s*ALTER\s+(?:TEMPORARY\s+)?(?:SYSTEM\s+)?FUNCTION\s+""" +
-      """`?([\w.]+)`?\s+AS\s+'([^']+)'\s*(?:LANGUAGE\s+(\w+)\s*)?;?\s*$""").r
+    new StatementRe(raw"""(?is)^\s*ALTER\s+(?:TEMPORARY\s+)?(?:SYSTEM\s+)?FUNCTION\s+""" +
+      raw"""`?([\w.]+)`?\s+AS\s+$lit1\s*(?:LANGUAGE\s+(\w+)\s*)?;?\s*$$""")
   // ALTER TABLE constraint + compaction (ddl/SqlAlterTableAddConstraint,
   // SqlAlterTableDropConstraint, SqlAlterTableCompact — all three are
   // converter-wired in the 1.16 release; the ADD/MODIFY column forms
@@ -1349,11 +1353,11 @@ class SqlEnv private (val spark: SparkSession) {
   // FLIP-190 plan statements (ddl/SqlCompilePlan.java: file path first,
   // then optional IF NOT EXISTS, then FOR <insert|statement set>)
   private val compilePlanRe =
-    """(?is)^\s*COMPILE\s+PLAN\s+'([^']+)'\s+(IF\s+NOT\s+EXISTS\s+)?FOR\s+(.+)$""".r
+    new StatementRe(raw"""(?is)^\s*COMPILE\s+PLAN\s+$lit1\s+(IF\s+NOT\s+EXISTS\s+)?FOR\s+(.+)$$""")
   private val compileExecPlanRe =
-    """(?is)^\s*COMPILE\s+AND\s+EXECUTE\s+PLAN\s+'([^']+)'\s+FOR\s+(.+)$""".r
+    new StatementRe(raw"""(?is)^\s*COMPILE\s+AND\s+EXECUTE\s+PLAN\s+$lit1\s+FOR\s+(.+)$$""")
   private val executePlanRe =
-    """(?is)^\s*EXECUTE\s+PLAN\s+'([^']+)'\s*;?\s*$""".r
+    new StatementRe(raw"""(?is)^\s*EXECUTE\s+PLAN\s+$lit1\s*;?\s*$$""")
   /** Validate + persist a COMPILE PLAN body (see [[PlanFiles]]). */
   private def compilePlanFile(file: String, ifNotExists: Boolean, body: String): Unit = {
     val stmt = body.trim.replaceAll(";\\s*$", "")
@@ -1444,8 +1448,8 @@ class SqlEnv private (val spark: SparkSession) {
   private val useModulesRe =
     """(?is)^\s*USE\s+MODULES\s+(.+?)\s*;?\s*$""".r
   // jars (ddl/SqlAddJar, SqlRemoveJar, dql/SqlShowJars)
-  private val addJarRe = """(?is)^\s*ADD\s+JAR\s+'([^']+)'\s*;?\s*$""".r
-  private val removeJarRe = """(?is)^\s*REMOVE\s+JAR\s+'([^']+)'\s*;?\s*$""".r
+  private val addJarRe = new StatementRe(raw"""(?is)^\s*ADD\s+JAR\s+$lit1\s*;?\s*$$""")
+  private val removeJarRe = new StatementRe(raw"""(?is)^\s*REMOVE\s+JAR\s+$lit1\s*;?\s*$$""")
   private val showJarsRe = """(?is)^\s*SHOW\s+JARS\s*;?\s*$""".r
   @volatile private var currentCatalog = "default_catalog"
   @volatile private var currentDatabase = "default_database"

@@ -34,7 +34,13 @@ final class SqlText private (val text: String, owner: Array[Int]) {
   /** The code view: comments blanked to spaces (whitespace to the parser)
     * and each literal or quoted identifier filled with its quote
     * character, one opaque atom no word, space or paren pattern enters. */
-  lazy val code: String = overwrite(i => !isCode(i)) { i =>
+  lazy val code: String = opaque(!isCode(_))
+
+  /** [[code]] with back-quoted identifiers kept as written, for patterns
+    * that read a name that may be back-quoted. */
+  lazy val codeWithNames: String = opaque(i => !isCode(i) && !isQuotedIdentifier(i))
+
+  private def opaque(p: Int => Boolean): String = overwrite(p) { i =>
     if (isComment(i)) ' '
     else text.charAt(owner(i)) match {
       case 'R' | 'r' => text.charAt(owner(i) + 1)
@@ -137,5 +143,47 @@ object SqlText {
       t = lexer.nextToken()
     }
     new SqlText(text, owner)
+  }
+}
+
+/** A statement regex matched against the code view of the statement
+  * ([[SqlText.codeWithNames]]), so no keyword, paren or separator inside
+  * a literal or comment takes part. There a string literal is a run of
+  * `'` as long as the literal; write a literal group as [[StatementRe.lit]]
+  * (or [[StatementRe.lit1]] for a non-empty one). A group that spans one
+  * `'` literal yields the literal's contents, with `''` read as one
+  * quote; any other group yields its original text.
+  */
+final class StatementRe(pattern: String) {
+  private val re = pattern.r.pattern
+
+  def unapplySeq(sql: String): Option[List[String]] = {
+    val t = StatementRe.lexed(sql)
+    val m = re.matcher(t.codeWithNames)
+    Option.when(m.matches()) {
+      val lits = t.quoted('\'').map { case (s, e, v) => (s, e) -> v }.toMap
+      (1 to m.groupCount).toList.map { g =>
+        if (m.start(g) < 0) null
+        else lits.getOrElse((m.start(g), m.end(g)), sql.substring(m.start(g), m.end(g)))
+      }
+    }
+  }
+
+  def matches(sql: String): Boolean = unapplySeq(sql).isDefined
+}
+
+object StatementRe {
+  /** One `'` string literal; `lit1` one that is not empty (an empty
+    * literal is two quote characters). */
+  val lit = "('+)"
+  val lit1 = "('{3,})"
+
+  /** The statement last lexed: a statement is tried against many
+    * patterns in turn, and is lexed once. */
+  @volatile private var last: SqlText = null
+  private def lexed(sql: String): SqlText = {
+    val l = last
+    if (l != null && (l.text eq sql)) l
+    else { val t = SqlText(sql); last = t; t }
   }
 }

@@ -2515,4 +2515,106 @@ class SqlEnvSpec extends AnyFunSuite {
     assert(env.executeSql("SELECT k FROM lex_q").collect().map(_.getInt(0)).toSeq == Seq(7))
     env.executeSql("DROP TABLE lex_q")
   }
+
+  /** `s` as the body of a `'` string literal. */
+  private def quote(s: String): String = s.replace("'", "''")
+
+  test("SET reads its value from the string token: '' is one quote") {
+    val env = SqlEnv(spark)
+    env.executeSql("SET 'graft.test.quoted' = 'it''s'")
+    val listed = env.executeSql("SET").collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(listed.get("graft.test.quoted").contains("it's"), listed.get("graft.test.quoted"))
+    env.executeSql("RESET 'graft.test.quoted'")
+    assert(!spark.conf.getAll.contains("graft.test.quoted"))
+  }
+
+  test("ADD JAR reads its path from the string token: '' is one quote") {
+    val env = SqlEnv(spark)
+    val jar = java.nio.file.Files.createTempDirectory("graft_jar_quote").resolve("it's.jar")
+    new java.util.jar.JarOutputStream(java.nio.file.Files.newOutputStream(jar)).close()
+    env.executeSql(s"ADD JAR '${quote(jar.toString)}'")
+    assert(env.executeSql("SHOW JARS").collect().map(_.getString(0)).toSeq == Seq(jar.toString))
+  }
+
+  test("COMPILE PLAN and EXECUTE PLAN read the file path from the string token") {
+    val env = SqlEnv(spark).registerTestdata(TestSpark.sfDir)
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_quote").toString
+    val plan = s"$dir/it's.json"
+    env.executeSql("DROP TABLE IF EXISTS planq_t")
+    env.executeSql(
+      s"""CREATE TABLE planq_t (r BIGINT, nm STRING)
+         |WITH ('connector' = 'filesystem', 'path' = '$dir/t', 'format' = 'parquet')""".stripMargin)
+    env.executeSql(
+      s"COMPILE PLAN '${quote(plan)}' FOR INSERT INTO planq_t SELECT r_regionkey, r_name FROM region")
+    assert(new java.io.File(plan).isFile, new java.io.File(dir).list().mkString(", "))
+    val env2 = SqlEnv(spark).registerTestdata(TestSpark.sfDir)
+    env2.executeSql("DROP TABLE IF EXISTS planq_t")
+    env2.executeSql(s"EXECUTE PLAN '${quote(plan)}'")
+    assert(env2.executeSql("SELECT count(*) FROM planq_t").collect()(0).getLong(0) == 5)
+    env2.executeSql("DROP TABLE planq_t")
+  }
+
+  test("a static partition value may hold a ')'") {
+    val env = SqlEnv(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft_part_paren").toString
+    env.executeSql("DROP TABLE IF EXISTS zz_p")
+    env.executeSql(
+      s"""CREATE TABLE zz_p (x INT, p STRING) PARTITIONED BY (p)
+         |WITH ('connector' = 'filesystem', 'path' = '$dir', 'format' = 'parquet')""".stripMargin)
+    env.executeSql("INSERT INTO zz_p PARTITION (p = 'a)b') SELECT 1")
+    val rows = env.executeSql("SELECT x, p FROM zz_p").collect()
+    assert(rows.map(r => (r.getInt(0), r.getString(1))).toSeq == Seq((1, "a)b")))
+    env.executeSql("DROP TABLE zz_p")
+  }
+
+  test("a second SqlEnv on one session runs no registration statement") {
+    val s = spark.newSession()
+    SqlEnv(s)
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = {
+        events.add(f)
+        if (f == "collect") marker.countDown()
+      }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = events.add(f)
+    }
+    s.listenerManager.register(listener)
+    try {
+      SqlEnv(s)
+      // events of one session arrive in order: the marker query's comes last
+      s.range(1).collect()
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS), "no marker event")
+      assert(events.toArray.toSeq == Seq("collect"))
+    } finally s.listenerManager.unregister(listener)
+  }
+
+  test("the next SqlEnv restores a graft function the user dropped or replaced") {
+    val s = spark.newSession()
+    SqlEnv(s)
+    def jsonValue() = s.sql("""SELECT json_value('{"a":"x"}', '$.a')""").head().getString(0)
+    assert(jsonValue() == "x")
+    s.sql("DROP TEMPORARY FUNCTION json_value")
+    intercept[org.apache.spark.sql.AnalysisException](jsonValue())
+    SqlEnv(s)
+    assert(jsonValue() == "x")
+    s.sql(
+      """CREATE OR REPLACE TEMPORARY FUNCTION json_value(j STRING, p STRING)
+        |RETURNS STRING RETURN 'user'""".stripMargin)
+    assert(jsonValue() == "user")
+    SqlEnv(s)
+    assert(jsonValue() == "x")
+  }
+
+  test("a new session gets graft's functions") {
+    SqlEnv(spark)
+    val s = spark.newSession()
+    SqlEnv(s)
+    val r = s.sql(
+      """SELECT json_value('{"a":"x"}', '$.a'), hamming64(1, 3), split_index('a,b', ',', 1)""")
+      .head()
+    assert((r.getString(0), r.getInt(1), r.getString(2)) == ("x", 1, "b"))
+  }
 }

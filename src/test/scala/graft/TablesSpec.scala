@@ -1,8 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import java.util.concurrent.Executors
 import org.apache.spark.sql.types.{StructType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -14,6 +13,7 @@ import scala.concurrent.duration._
   * these paths first.
   */
 class TablesSpec extends AnyFunSuite {
+  import TestSpark.jobsDuring
   lazy val spark = TestSpark.spark
 
   private def freshCopy(): String = {
@@ -23,38 +23,6 @@ class TablesSpec extends AnyFunSuite {
       Files.copy(Path.of(TestSpark.sfDir, f), dir.resolve(f))
     }
     dir.toString
-  }
-
-  /** Jobs that `body` starts on this thread. Listener delivery is
-    * asynchronous, so a tagged marker job closes the window: events of
-    * one queue arrive in order, and the marker's end comes last.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val tag = "graft.test.tables"
-    val started = new ConcurrentLinkedQueue[String]()
-    val markerDone = new java.util.concurrent.CountDownLatch(1)
-    val markerIds = new ConcurrentLinkedQueue[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tag))).foreach {
-          case "marker" => markerIds.add(e.jobId)
-          case t => started.add(t)
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (markerIds.contains(e.jobId)) markerDone.countDown()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "body")
-      try body finally sc.setLocalProperty(tag, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(markerDone.await(30, TimeUnit.SECONDS), "listener never saw the marker job")
-      started.size
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
-    }
   }
 
   test("cached loads match a plain parquet read for every table; events.ts stays TimestampType") {
@@ -111,5 +79,57 @@ class TablesSpec extends AnyFunSuite {
         assert(s == expected(n), s"$n loaded with a wrong schema under concurrency")
       }
     } finally pool.shutdown()
+  }
+
+  /** Replaces `dir`'s region table with five rows of columns (x, y). */
+  private def rewriteRegion(dir: String): Unit = {
+    val tmp = Files.createTempDirectory("graft_tables_rewrite").resolve("out").toString
+    spark.range(5).selectExpr("id AS x", "cast(id AS string) AS y")
+      .coalesce(1).write.parquet(tmp)
+    val part = Files.list(Path.of(tmp)).filter(_.toString.endsWith(".parquet"))
+      .findFirst().get()
+    Files.move(part, Path.of(dir, "region.parquet"), StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  private def views(s: org.apache.spark.sql.SparkSession) =
+    Tables.names.map(n => s.sessionState.catalog.getRawTempView(n).get)
+
+  test("a second registerAll on unchanged files keeps the same view objects") {
+    val dir = freshCopy()
+    val s = spark.newSession()
+    Tables.registerAll(s, dir)
+    val first = views(s)
+    Tables.registerAll(s, dir)
+    Tables.names.zip(first).zip(views(s)).foreach { case ((n, a), b) =>
+      assert(a eq b, s"$n was registered again over unchanged files")
+    }
+    // another directory is other files: every view is registered again
+    Tables.registerAll(s, freshCopy())
+    Tables.names.zip(first).zip(views(s)).foreach { case ((n, a), b) =>
+      assert(a ne b, s"$n kept the view of the other directory")
+    }
+  }
+
+  test("a view the user replaced or dropped is registered again") {
+    val dir = freshCopy()
+    val s = spark.newSession()
+    Tables.registerAll(s, dir)
+    val regions = s.table("region").count()
+    s.range(3).createOrReplaceTempView("orders")
+    s.catalog.dropTempView("region")
+    Tables.registerAll(s, dir)
+    assert(s.table("orders").columns.contains("o_orderkey"))
+    assert(s.table("region").count() == regions)
+  }
+
+  test("a file rewritten in place is re-read by the next registerAll") {
+    val dir = freshCopy()
+    val s = spark.newSession()
+    Tables.registerAll(s, dir)
+    assert(s.table("region").columns.contains("r_name"))
+    rewriteRegion(dir)
+    Tables.registerAll(s, dir)
+    assert(s.table("region").columns.toSeq == Seq("x", "y"))
+    assert(s.table("region").count() == 5)
   }
 }

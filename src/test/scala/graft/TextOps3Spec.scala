@@ -248,4 +248,13 @@ class TextOps3Spec extends AnyFunSuite {
     SparkEntry.queries("t57_bpe_encode")(spark, dir).collect()
     assert(sc.getPersistentRDDs.size <= first)
   }
+
+  test("t55: building the merges submits at most two Spark jobs") {
+    def build() = SparkEntry.queries("t55_bpe_merges")(spark, dir)
+    build() // the first load of documents may infer its schema
+    // one word-table job, plus the shuffle stage adaptive execution
+    // submits as its own job; every round runs on the driver
+    val jobs = TestSpark.jobsDuring(build())
+    assert(jobs <= 2, s"building t55 submitted $jobs Spark jobs")
+  }
 }
