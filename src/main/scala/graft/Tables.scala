@@ -60,8 +60,14 @@ object Tables {
     b.result()
   }
 
-  /** The table at `path` and the fingerprint it was read under. */
+  /** The table at `path` and the fingerprint it was read under. Every
+    * read first sets nanosAsLong (events.ts may be INT64 nanos, readable
+    * only behind it), so the setting is in force before any fingerprint
+    * is taken and loading events leaves the fingerprints of the tables
+    * read before it current.
+    */
   private def read(spark: SparkSession, path: String): (DataFrame, Seq[Any]) = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val fp = fingerprint(spark, path)
     val schema = catalog.get(path) match {
       case (`fp`, s) => s
@@ -76,11 +82,6 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     loadWithFingerprint(spark, dir, name)._1
 
-  /** events.ts may be INT64 nanos, readable only behind this setting,
-    * which is one of the inference settings. */
-  private def readNanosAsLong(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
   private def loadWithFingerprint(spark: SparkSession, dir: String, name: String)
       : (DataFrame, Seq[Any]) =
     if (name == "events") {
@@ -92,7 +93,6 @@ object Tables {
       // query at analysis time again.
       import org.apache.spark.sql.functions.{col, expr}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      readNanosAsLong(spark)
       val (raw, fp) = read(spark, s"$dir/$name.parquet")
       val df = raw.schema("ts").dataType match {
         case LongType => // int64 nanos; µs-granular data, truncation lossless
@@ -123,9 +123,6 @@ object Tables {
     * changed, is registered again.
     */
   def registerAll(spark: SparkSession, dir: String): Unit = {
-    // set before any table is fingerprinted, or loading events would
-    // change the fingerprints of the tables read before it
-    readNanosAsLong(spark)
     val sessionCatalog = spark.sessionState.catalog
     val mine = views.synchronized(views.computeIfAbsent(sessionCatalog, _ => new ConcurrentHashMap()))
     names.foreach { n =>

@@ -593,6 +593,7 @@ case class JavaHashCode(child: Expression) extends UnaryExpression {
 object functions {
   import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.GraftBridge.{column, expression}
+  import org.apache.spark.sql.catalyst.FunctionIdentifier
 
   def minhash(tokens: Column, k: Int): Column =
     column(MinHashSignature(expression(tokens), Literal(k)))
@@ -628,90 +629,98 @@ object functions {
       .otherwise(dot / (normA * normB))
   }
 
-  /** Per session function registry: the registration [[install]] left
-    * under each name it touched. Weak keys keep a stopped session's
-    * registry collectable; the values hold only names and strings.
-    */
-  private val installed = new java.util.WeakHashMap[
-    org.apache.spark.sql.catalyst.analysis.FunctionRegistry,
-    Map[org.apache.spark.sql.catalyst.FunctionIdentifier, ExpressionInfo]]()
+  private val truncate2 = SqlBodied("__truncate2",
+    Seq("x" -> DoubleType, "d" -> IntegerType), DoubleType,
+    """CASE WHEN abs(x) >= 9007199254740992D THEN x
+      |     WHEN abs(x * pow(10, d)) < 9007199254740992D
+      |       THEN CAST(CAST(x * pow(10, d) AS BIGINT) AS DOUBLE) / pow(10, d)
+      |     WHEN d BETWEEN 1 AND 17
+      |       THEN CAST(CAST(x AS DECIMAL(38,18))
+      |              - CAST(x AS DECIMAL(38,18)) % CAST(pow(10, -d) AS DECIMAL(38,18))
+      |            AS DOUBLE)
+      |     ELSE x END""".stripMargin)
 
-  /** Register SQL names so `spark.sql` can use them. The registration
-    * is skipped while every name graft installed in this session still
-    * resolves to that exact registration (compared by identity); a name
-    * the user dropped or replaced makes it run again, restoring graft's.
-    * The map-key policy default of [[jsonfns.mapKeyPolicy]] is applied
-    * every time.
+  /** The SQL-bodied functions: the fixed-arity FlinkSqlOperatorTable
+    * names with no Spark builtin (inlined at plan time, so they stay
+    * inside whole-stage codegen).
+    *  - SPLIT_INDEX (SqlFunctionUtils.splitIndex:387): 0-based,
+    *    LITERAL separator — every regex metachar (incl. backslash)
+    *    escaped individually, since \Q..\E quoting breaks on a
+    *    separator containing \E; NULL when index < 0 or out of
+    *    range; split(limit -1) preserves trailing empties like
+    *    splitByWholeSeparatorPreserveAllTokens.
+    *  - TRUNCATE (SqlFunctionUtils.struncate: BigDecimal ROUND_DOWN):
+    *    toward-zero via the BIGINT cast while x*10^d stays below 2^53;
+    *    identity above 2^53 where the double is integral; and for the
+    *    band |x| < 2^53 <= |x*10^d| (1 <= d <= 17, where the double
+    *    still carries sub-10^-d precision but scaling in double space
+    *    would destroy it) an exact DECIMAL remainder chop — see
+    *    Strings.truncateNum for the regime analysis.
+    *  - IS_ALPHA / IS_DIGIT / IS_DECIMAL (SqlFunctionUtils:62 family).
+    *  - RAND_INTEGER(n): uniform int in [0, n).
+    *  - TO_BASE64/FROM_BASE64 (SqlFunctionUtils.toBase64:1172 /
+    *    fromBase64:1176 — java.util.Base64's basic unchunked codec,
+    *    the same one Spark 4's base64/unbase64 use).
     */
-  def register(spark: SparkSession): Unit = {
-    jsonfns.mapKeyPolicy(spark)
-    val reg = spark.sessionState.functionRegistry
-    val mine = installed.synchronized(Option(installed.get(reg)))
-    if (!mine.exists(_.forall { case (id, info) => reg.lookupFunction(id).exists(_ eq info) })) {
-      def registrations = reg.listFunction().flatMap(id => reg.lookupFunction(id).map(id -> _)).toMap
-      val before = registrations
-      install(spark)
-      // every registration creates a new ExpressionInfo, so the names
-      // install touched are those whose info changed
-      val touched = registrations.filter { case (id, info) => !before.get(id).exists(_ eq info) }
-      installed.synchronized(installed.put(reg, touched))
-    }
-  }
+  val sqlBodied: Seq[SqlBodied] = jsonfns.sqlBodied ++ Seq(
+    SqlBodied("split_index", Seq("s" -> StringType, "sep" -> StringType, "i" -> IntegerType),
+      StringType,
+      """CASE WHEN i < 0 THEN CAST(NULL AS STRING)
+        |     ELSE get(split(s,
+        |       regexp_replace(sep, '([\\\\^$.|?*+()\\[\\]{}])', '\\\\$1'), -1), i) END""".stripMargin),
+    truncate2,
+    SqlBodied("is_alpha", Seq("s" -> StringType), BooleanType, "s rlike '^[A-Za-z]+$'"),
+    SqlBodied("is_digit", Seq("s" -> StringType), BooleanType, "s rlike '^[0-9]+$'"),
+    SqlBodied("is_decimal", Seq("s" -> StringType), BooleanType,
+      """s rlike '^[+-]?([0-9]+(\\.[0-9]*)?|\\.[0-9]+)([eE][+-]?[0-9]+)?$'"""),
+    SqlBodied("rand_integer", Seq("n" -> IntegerType), IntegerType,
+      "CAST(floor(rand() * n) AS INT)"),
+    SqlBodied("to_base64", Seq("s" -> StringType), StringType, "base64(CAST(s AS BINARY))"),
+    SqlBodied("from_base64", Seq("s" -> StringType), StringType, "CAST(unbase64(s) AS STRING)"))
 
-  private def install(spark: SparkSession): Unit = {
-    jsonfns.register(spark)
-    times.register(spark)
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("minhash",
-      es => MinHashSignature(es(0), Cast(es(1), IntegerType)), "built-in")
-    reg.createOrReplaceTempFunction("simhash", es => SimHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("token_hashes", es => TokenHashes(es.head), "built-in")
-    reg.createOrReplaceTempFunction("kgram_hashes",
-      es => KGramHashes(es(0), Cast(es(1), IntegerType)), "built-in")
-    reg.createOrReplaceTempFunction("ngram_hashes",
-      es => NgramHashes(es(0), Cast(es(1), IntegerType)), "built-in")
-    reg.createOrReplaceTempFunction("hamming64",
-      es => HammingDistance64(Cast(es(0), LongType), Cast(es(1), LongType)), "built-in")
-    reg.createOrReplaceTempFunction("sig_agree",
-      es => SigAgreeCount(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("cosine_sim",
-      es => CosineSimilarity(Cast(es(0), ArrayType(FloatType)), Cast(es(1), ArrayType(FloatType))), "built-in")
-    reg.createOrReplaceTempFunction("hyperplane_bits64",
-      es => HyperplaneBits64(Cast(es.head, ArrayType(FloatType))), "built-in")
-    // the reference's PROCTIME() — per-record, unlike current_timestamp()
-    reg.createOrReplaceTempFunction("proctime", _ => ProcTime(), "built-in")
-    // HASH_CODE(str) — FlinkSqlOperatorTable straggler
-    reg.createOrReplaceTempFunction("hash_code",
-      es => JavaHashCode(Cast(es.head, StringType)), "built-in")
-    // r19 coverage sweep of BuiltInFunctionDefinitions (see misc.scala):
-    // INITCAP shadows the Spark builtin with the reference's
-    // any-non-alphanumeric word boundaries (SqlFunctionUtils.initcap);
-    // TYPEOF renders Flink type text; TO_TIMESTAMP_LTZ(numeric, p)
-    // implements DateTimeUtils.toTimestampData (p=0 seconds / p=3
-    // millis, truncation + range semantics)
-    reg.createOrReplaceTempFunction("initcap",
-      es => InitCapFlink(Cast(es.head, StringType)), "built-in")
-    // TYPEOF(x[, force_serializable]) — the optional boolean picks
-    // asSerializableString; it must be a literal (the reference
-    // requires a constant flag). Arity outside 1..2 is a dialect error.
-    reg.createOrReplaceTempFunction("typeof",
-      es => es match {
+  /** Every graft SQL function, name → expression builder. */
+  val builders: Seq[(String, Seq[Expression] => Expression)] =
+    jsonfns.builders ++ times.builders ++ sqlBodied.map(f => (f.name, f.build _)) ++ Seq(
+      ("minhash", es => MinHashSignature(es(0), Cast(es(1), IntegerType))),
+      ("simhash", es => SimHash64(es.head)),
+      ("token_hashes", es => TokenHashes(es.head)),
+      ("kgram_hashes", es => KGramHashes(es(0), Cast(es(1), IntegerType))),
+      ("ngram_hashes", es => NgramHashes(es(0), Cast(es(1), IntegerType))),
+      ("hamming64", es => HammingDistance64(Cast(es(0), LongType), Cast(es(1), LongType))),
+      ("sig_agree", es => SigAgreeCount(es(0), es(1))),
+      ("cosine_sim", es =>
+        CosineSimilarity(Cast(es(0), ArrayType(FloatType)), Cast(es(1), ArrayType(FloatType)))),
+      ("hyperplane_bits64", es => HyperplaneBits64(Cast(es.head, ArrayType(FloatType)))),
+      // the reference's PROCTIME() — per-record, unlike current_timestamp()
+      ("proctime", _ => ProcTime()),
+      // HASH_CODE(str) — FlinkSqlOperatorTable straggler
+      ("hash_code", es => JavaHashCode(Cast(es.head, StringType))),
+      // r19 coverage sweep of BuiltInFunctionDefinitions (see misc.scala):
+      // INITCAP shadows the Spark builtin with the reference's
+      // any-non-alphanumeric word boundaries (SqlFunctionUtils.initcap);
+      // TYPEOF renders Flink type text; TO_TIMESTAMP_LTZ(numeric, p)
+      // implements DateTimeUtils.toTimestampData (p=0 seconds / p=3
+      // millis, truncation + range semantics)
+      ("initcap", es => InitCapFlink(Cast(es.head, StringType))),
+      // TYPEOF(x[, force_serializable]) — the optional boolean picks
+      // asSerializableString; it must be a literal (the reference
+      // requires a constant flag). Arity outside 1..2 is a dialect error.
+      ("typeof", {
         case Seq(x) => TypeOfFlink(x)
         case Seq(x, Literal(b: Boolean, BooleanType)) => TypeOfFlink(x, b)
         case Seq(_, _) => throw new org.apache.spark.sql.AnalysisException(
           errorClass = "INTERNAL_ERROR",
           messageParameters = Map("message" ->
             "TYPEOF(input, force_serializable): force_serializable must be a BOOLEAN literal"))
-        case _ => throw new org.apache.spark.sql.AnalysisException(
+        case es => throw new org.apache.spark.sql.AnalysisException(
           errorClass = "INTERNAL_ERROR",
           messageParameters = Map("message" ->
             (s"TYPEOF expects 1 or 2 arguments, got ${es.length}")))
-      }, "built-in")
-    // Fixed 2-arg arity: a 1-arg call (Spark's builtin string form this
-    // registration shadows) gets a dialect error, not an
-    // IndexOutOfBoundsException from es(1).
-    reg.createOrReplaceTempFunction("to_timestamp_ltz",
-      es => {
+      }),
+      // Fixed 2-arg arity: a 1-arg call (Spark's builtin string form this
+      // registration shadows) gets a dialect error, not an
+      // IndexOutOfBoundsException from es(1).
+      ("to_timestamp_ltz", es => {
         if (es.length != 2) throw new org.apache.spark.sql.AnalysisException(
           errorClass = "INTERNAL_ERROR",
           messageParameters = Map("message" ->
@@ -719,65 +728,27 @@ object functions {
               s"got ${es.length}; the supported precision is '0' for second " +
               "or '3' for millisecond")))
         ToTimestampLtz(es.head, Cast(es(1), IntegerType))
-      }, "built-in")
-    // TRUNCATE accepts BOTH arities (FlinkSqlOperatorTable:226:
-    // NUMERIC_INTEGER or bare NUMERIC — TRUNCATE(x) chops to 0 dp).
-    // SQL-text functions are fixed-arity, so the public name is an
-    // arity-dispatching builder over the 2-arg body (__truncate2).
-    reg.createOrReplaceTempFunction("truncate",
-      es => org.apache.spark.sql.catalyst.analysis.UnresolvedFunction(
-        "__truncate2", Seq(es.head, es.lift(1).getOrElse(Literal(0))),
-        isDistinct = false), "built-in")
-    // Remaining FlinkSqlOperatorTable names with no Spark builtin,
-    // registered as SQL scalar functions (inlined at plan time, so they
-    // stay inside whole-stage codegen):
-    //  - SPLIT_INDEX (SqlFunctionUtils.splitIndex:387): 0-based,
-    //    LITERAL separator — every regex metachar (incl. backslash)
-    //    escaped individually, since \Q..\E quoting breaks on a
-    //    separator containing \E; NULL when index < 0 or out of
-    //    range; split(limit -1) preserves trailing empties like
-    //    splitByWholeSeparatorPreserveAllTokens.
-    //  - TRUNCATE (SqlFunctionUtils.struncate: BigDecimal ROUND_DOWN):
-    //    toward-zero via the BIGINT cast while x*10^d stays below 2^53;
-    //    identity above 2^53 where the double is integral; and for the
-    //    band |x| < 2^53 <= |x*10^d| (1 <= d <= 17, where the double
-    //    still carries sub-10^-d precision but scaling in double space
-    //    would destroy it) an exact DECIMAL remainder chop — see
-    //    Strings.truncateNum for the regime analysis.
-    //  - IS_ALPHA / IS_DIGIT / IS_DECIMAL (SqlFunctionUtils:62 family).
-    //  - RAND_INTEGER(n): uniform int in [0, n).
-    Seq(
-      """CREATE OR REPLACE TEMPORARY FUNCTION split_index(s STRING, sep STRING, i INT)
-        |RETURNS STRING RETURN
-        |CASE WHEN i < 0 THEN CAST(NULL AS STRING)
-        |     ELSE get(split(s,
-        |       regexp_replace(sep, '([\\\\^$.|?*+()\\[\\]{}])', '\\\\$1'), -1), i) END""".stripMargin,
-      """CREATE OR REPLACE TEMPORARY FUNCTION __truncate2(x DOUBLE, d INT)
-        |RETURNS DOUBLE RETURN
-        |CASE WHEN abs(x) >= 9007199254740992D THEN x
-        |     WHEN abs(x * pow(10, d)) < 9007199254740992D
-        |       THEN CAST(CAST(x * pow(10, d) AS BIGINT) AS DOUBLE) / pow(10, d)
-        |     WHEN d BETWEEN 1 AND 17
-        |       THEN CAST(CAST(x AS DECIMAL(38,18))
-        |              - CAST(x AS DECIMAL(38,18)) % CAST(pow(10, -d) AS DECIMAL(38,18))
-        |            AS DOUBLE)
-        |     ELSE x END""".stripMargin,
-      """CREATE OR REPLACE TEMPORARY FUNCTION is_alpha(s STRING)
-        |RETURNS BOOLEAN RETURN s rlike '^[A-Za-z]+$'""".stripMargin,
-      """CREATE OR REPLACE TEMPORARY FUNCTION is_digit(s STRING)
-        |RETURNS BOOLEAN RETURN s rlike '^[0-9]+$'""".stripMargin,
-      """CREATE OR REPLACE TEMPORARY FUNCTION is_decimal(s STRING)
-        |RETURNS BOOLEAN RETURN
-        |s rlike '^[+-]?([0-9]+(\\.[0-9]*)?|\\.[0-9]+)([eE][+-]?[0-9]+)?$'""".stripMargin,
-      """CREATE OR REPLACE TEMPORARY FUNCTION rand_integer(n INT)
-        |RETURNS INT RETURN CAST(floor(rand() * n) AS INT)""".stripMargin,
-      // TO_BASE64/FROM_BASE64 (SqlFunctionUtils.toBase64:1172 /
-      // fromBase64:1176 — java.util.Base64's basic unchunked codec,
-      // the same one Spark 4's base64/unbase64 use)
-      """CREATE OR REPLACE TEMPORARY FUNCTION to_base64(s STRING)
-        |RETURNS STRING RETURN base64(CAST(s AS BINARY))""".stripMargin,
-      """CREATE OR REPLACE TEMPORARY FUNCTION from_base64(s STRING)
-        |RETURNS STRING RETURN CAST(unbase64(s) AS STRING)""".stripMargin
-    ).foreach(spark.sql(_))
+      }),
+      // TRUNCATE accepts BOTH arities (FlinkSqlOperatorTable:226:
+      // NUMERIC_INTEGER or bare NUMERIC — TRUNCATE(x) chops to 0 dp)
+      // over the 2-arg body.
+      ("truncate", es => truncate2.build(Seq(es.head, es.lift(1).getOrElse(Literal(0))))))
+
+  /** Install every graft SQL function in the session, and apply the
+    * map-key policy default of [[jsonfns.mapKeyPolicy]]. Installing
+    * adds expression builders to the session's function registry; it
+    * runs no SQL statement and keeps no state of its own. A name that
+    * already holds graft's builder is left as it is (Spark logs a
+    * warning for every function it replaces); any other function under
+    * a graft name, one the user created included, is replaced, so a
+    * dropped or replaced graft function is restored.
+    */
+  def register(spark: SparkSession): Unit = {
+    jsonfns.mapKeyPolicy(spark)
+    val reg = spark.sessionState.functionRegistry
+    builders.foreach { case (name, b) =>
+      if (!reg.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq b))
+        reg.createOrReplaceTempFunction(name, b, "built-in")
+    }
   }
 }

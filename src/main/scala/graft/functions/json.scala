@@ -70,90 +70,69 @@ object jsonfns {
   private def fn(name: String, args: Expression*): Expression =
     UnresolvedFunction(name, args.toSeq, false)
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
+  private def jsonObject(nullOnNull: Boolean)(es: Seq[Expression]): Expression = {
+    require(es.length % 2 == 0,
+      "json_object expects alternating key/value arguments")
+    StructsToJson(
+      Map("ignoreNullFields" -> (!nullOnNull).toString),
+      CreateNamedStruct(es))
+  }
 
-    // ---- variadic constructors (expression builders: SQL-text ------
-    // functions are fixed-arity, these are not) ----------------------
-    def jsonObject(nullOnNull: Boolean)(es: Seq[Expression]): Expression = {
-      require(es.length % 2 == 0,
-        "json_object expects alternating key/value arguments")
-      StructsToJson(
-        Map("ignoreNullFields" -> (!nullOnNull).toString),
-        CreateNamedStruct(es))
-    }
-    reg.createOrReplaceTempFunction("json_object",
-      jsonObject(nullOnNull = true), "built-in")
-    reg.createOrReplaceTempFunction("json_object_absent",
-      jsonObject(nullOnNull = false), "built-in")
-    reg.createOrReplaceTempFunction("json_array",
-      es => StructsToJson(Map.empty, fn("array_compact", CreateArray(es.toSeq))),
-      "built-in")
-    reg.createOrReplaceTempFunction("json_array_null",
-      es => StructsToJson(Map.empty, CreateArray(es.toSeq)), "built-in")
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    // ---- variadic constructors --------------------------------------
+    ("json_object", jsonObject(nullOnNull = true)),
+    ("json_object_absent", jsonObject(nullOnNull = false)),
+    ("json_array", es => StructsToJson(Map.empty, fn("array_compact", CreateArray(es.toSeq)))),
+    ("json_array_null", es => StructsToJson(Map.empty, CreateArray(es.toSeq))),
 
     // ---- aggregates (deterministic order: sorted entries) ----------
     // json_objectagg relies on [[mapKeyPolicy]]. The r7 per-element
     // filter lambda embedded the whole sort_array(collect_list(...))
     // subtree twice, re-materializing the sorted array per element —
     // O(g²·log g) per group (87× on q86).
-    reg.createOrReplaceTempFunction("json_objectagg", es => {
+    ("json_objectagg", es => {
       val entries = fn("sort_array", fn("collect_list",
         CreateNamedStruct(Seq(Literal("k"), es(0), Literal("v"), es(1)))))
       fn("to_json", fn("map_from_entries", entries))
-    }, "built-in")
-    reg.createOrReplaceTempFunction("json_arrayagg",
-      es => fn("to_json", fn("sort_array", fn("collect_list", es.head))),
-      "built-in")
+    }),
+    ("json_arrayagg", es => fn("to_json", fn("sort_array", fn("collect_list", es.head)))),
 
-    // ---- scalars with generic input types (builders) ---------------
+    // ---- scalars with generic input types --------------------------
     // JSON_STRING: to_json(array(x)) minus the surrounding brackets.
-    reg.createOrReplaceTempFunction("json_string", es => {
+    ("json_string", es => {
       val js = StructsToJson(Map.empty, CreateArray(Seq(es.head)))
       If(IsNull(es.head), Literal(null, StringType),
         Substring(js, Literal(2), Subtract(Length(js), Literal(2))))
-    }, "built-in")
+    }),
     // ELEMENT: null/empty → null, singleton → it, else runtime error.
-    reg.createOrReplaceTempFunction("element", es => {
+    ("element", es => {
       val a = es.head
       CaseWhen(
         Seq((Or(IsNull(a), LessThanOrEqual(fn("cardinality", a), Literal(1))),
           fn("get", a, Literal(0)))),
         fn("get", a, Cast(fn("assert_true", Literal(false),
           Literal("ELEMENT(): array has more than one element")), IntegerType)))
-    }, "built-in")
+    }),
     // SUM0: empty/all-null group sums to 0, not NULL.
-    reg.createOrReplaceTempFunction("sum0",
-      es => fn("coalesce", fn("sum", es.head), Literal(0)), "built-in")
+    ("sum0", es => fn("coalesce", fn("sum", es.head), Literal(0))),
     // CURRENT_ROW_TIMESTAMP(): per-row, like PROCTIME().
-    reg.createOrReplaceTempFunction("current_row_timestamp",
-      _ => ProcTime(), "built-in")
+    ("current_row_timestamp", _ => ProcTime()),
+    // the node-type classifier behind the four predicates below
+    ("json_node_kind", es => JsonNodeKind(es(0), es(1))))
 
-    // the node-type classifier behind the four predicates above
-    reg.createOrReplaceTempFunction("json_node_kind",
-      es => JsonNodeKind(es(0), es(1)), "built-in")
+  private val jp = Seq("j" -> StringType, "p" -> StringType)
 
-    // ---- fixed-arity scalars (SQL-text functions: inlined at plan --
-    // time) ----------------------------------------------------------
-    Seq(
-      """CREATE OR REPLACE TEMPORARY FUNCTION json_value(j STRING, p STRING)
-        |RETURNS STRING RETURN
-        |CASE WHEN json_node_kind(j, p) IN ('string', 'number', 'boolean')
-        |     THEN get_json_object(j, p) ELSE CAST(NULL AS STRING) END""".stripMargin,
-      """CREATE OR REPLACE TEMPORARY FUNCTION json_query(j STRING, p STRING)
-        |RETURNS STRING RETURN
-        |CASE WHEN json_node_kind(j, p) IN ('object', 'array')
-        |     THEN get_json_object(j, p) ELSE CAST(NULL AS STRING) END""".stripMargin,
-      """CREATE OR REPLACE TEMPORARY FUNCTION json_exists(j STRING, p STRING)
-        |RETURNS BOOLEAN RETURN json_node_kind(j, p) IS NOT NULL""".stripMargin,
-      """CREATE OR REPLACE TEMPORARY FUNCTION is_json(s STRING)
-        |RETURNS BOOLEAN RETURN json_node_kind(s, '$') IS NOT NULL""".stripMargin,
-      """CREATE OR REPLACE TEMPORARY FUNCTION sha224(s STRING)
-        |RETURNS STRING RETURN sha2(s, 224)""".stripMargin,
-      """CREATE OR REPLACE TEMPORARY FUNCTION sha384(s STRING)
-        |RETURNS STRING RETURN sha2(s, 384)""".stripMargin,
-      """CREATE OR REPLACE TEMPORARY FUNCTION sha512(s STRING)
-        |RETURNS STRING RETURN sha2(s, 512)""".stripMargin
-    ).foreach(spark.sql(_))
-  }
+  /** The fixed-arity scalars, as SQL bodies (inlined at plan time). */
+  val sqlBodied: Seq[SqlBodied] = Seq(
+    SqlBodied("json_value", jp, StringType,
+      """CASE WHEN json_node_kind(j, p) IN ('string', 'number', 'boolean')
+        |     THEN get_json_object(j, p) ELSE CAST(NULL AS STRING) END""".stripMargin),
+    SqlBodied("json_query", jp, StringType,
+      """CASE WHEN json_node_kind(j, p) IN ('object', 'array')
+        |     THEN get_json_object(j, p) ELSE CAST(NULL AS STRING) END""".stripMargin),
+    SqlBodied("json_exists", jp, BooleanType, "json_node_kind(j, p) IS NOT NULL"),
+    SqlBodied("is_json", Seq("s" -> StringType), BooleanType, "json_node_kind(s, '$') IS NOT NULL"),
+    SqlBodied("sha224", Seq("s" -> StringType), StringType, "sha2(s, 224)"),
+    SqlBodied("sha384", Seq("s" -> StringType), StringType, "sha2(s, 384)"),
+    SqlBodied("sha512", Seq("s" -> StringType), StringType, "sha2(s, 512)"))
 }

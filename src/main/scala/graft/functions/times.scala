@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, TreePattern, UnaryLike}
 import org.apache.spark.sql.types._
@@ -182,24 +181,18 @@ case class TimeAddWrap(
 }
 
 object times {
-  /** Register the TIME helpers (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def prec(es: Seq[Expression]): Int =
-      es.lift(1).collect { case Literal(p: Int, IntegerType) => p }
-        .getOrElse(6).min(6).max(0)
-    reg.createOrReplaceTempFunction("cast_time",
-      es => CastTime(es.head, prec(es)), "built-in")
-    reg.createOrReplaceTempFunction("try_cast_time",
-      es => CastTime(es.head, prec(es), tryMode = true), "built-in")
-    reg.createOrReplaceTempFunction("cast_timestamp",
-      es => CastTimestamp(es.head, ntz = false), "built-in")
-    reg.createOrReplaceTempFunction("cast_timestamp_ntz",
-      es => CastTimestamp(es.head, ntz = true), "built-in")
-    reg.createOrReplaceTempFunction("try_cast_timestamp",
-      es => CastTimestamp(es.head, ntz = false, tryMode = true), "built-in")
-    reg.createOrReplaceTempFunction("try_cast_timestamp_ntz",
-      es => CastTimestamp(es.head, ntz = true, tryMode = true), "built-in")
+  private def prec(es: Seq[Expression]): Int =
+    es.lift(1).collect { case Literal(p: Int, IntegerType) => p }
+      .getOrElse(6).min(6).max(0)
+
+  /** The TIME helpers. */
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("cast_time", es => CastTime(es.head, prec(es))),
+    ("try_cast_time", es => CastTime(es.head, prec(es), tryMode = true)),
+    ("cast_timestamp", es => CastTimestamp(es.head, ntz = false)),
+    ("cast_timestamp_ntz", es => CastTimestamp(es.head, ntz = true)),
+    ("try_cast_timestamp", es => CastTimestamp(es.head, ntz = false, tryMode = true)),
+    ("try_cast_timestamp_ntz", es => CastTimestamp(es.head, ntz = true, tryMode = true)),
     // TIME ± interval with the reference's wrap-around-midnight
     // semantics (FlinkSQL/DuckDB wrap modulo 24 h where Spark's native
     // TIME arithmetic raises DATETIME_OVERFLOW — the delta pinned in
@@ -209,7 +202,5 @@ object times {
     // session-timezone-independent) implementation. Previously a SQL
     // function body whose date_format leg implicit-cast NTZ→TIMESTAMP
     // in the SESSION zone — the r15-advice DST hazard.
-    reg.createOrReplaceTempFunction("time_add_wrap",
-      es => TimeAddWrap(es.head, es(1)), "built-in")
-  }
+    ("time_add_wrap", es => TimeAddWrap(es.head, es(1))))
 }

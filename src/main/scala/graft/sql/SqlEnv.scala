@@ -21,9 +21,10 @@ import org.apache.spark.sql.functions.{col, expr}
   * }}}
   * The SQL dialect is Spark SQL (no custom parser — SURVEY §7.1);
   * graft's extra functions (minhash/simhash/hamming64/cosine_sim/…)
-  * are registered on construction so they work in SQL text. The
-  * registration is skipped while the session still holds every function
-  * graft installed in it ([[graft.functions.functions.register]]).
+  * are installed on construction so they work in SQL text
+  * ([[graft.functions.functions.register]]: expression builders only,
+  * so it runs no SQL statement, and it restores a graft function the
+  * user dropped).
   */
 class SqlEnv private (val spark: SparkSession) {
   import StatementRe.{lit, lit1}

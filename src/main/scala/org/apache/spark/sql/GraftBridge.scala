@@ -14,4 +14,8 @@ object GraftBridge {
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  /** Spark's `WRONG_NUM_ARGS` error for a fixed-arity function
+    * (`QueryCompilationErrors` is private[sql]). */
+  def wrongNumArgs(name: String, expected: Int, actual: Int): Throwable =
+    errors.QueryCompilationErrors.wrongNumArgsError(name, Seq(expected), actual)
 }

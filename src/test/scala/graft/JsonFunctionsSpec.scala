@@ -122,4 +122,11 @@ class JsonFunctionsSpec extends AnyFunSuite {
     assert(!s.isNullAt(0) && s.getLong(0) == 0L)
     assert(!one("current_row_timestamp() AS v").isNullAt(0))
   }
+
+  test("JSON_VALUE and IS JSON inside lambdas") {
+    val v = one("""transform(array('{"a":1}', '{"a":[2]}'), x -> json_value(x, '$.a')) AS v""")
+    assert(v.getSeq[String](0) == Seq("1", null))
+    val j = one("""filter(array('{}', 'nope', '[1]'), s -> is_json(s)) AS v""")
+    assert(j.getSeq[String](0) == Seq("{}", "[1]"))
+  }
 }

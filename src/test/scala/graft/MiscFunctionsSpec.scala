@@ -91,6 +91,81 @@ class MiscFunctionsSpec extends AnyFunSuite {
     assert(one("truncate(CAST(NULL AS DOUBLE))") == null)
   }
 
+  test("TRUNCATE inside a lambda") {
+    assert(one("transform(array(1.234, 5.678), x -> truncate(x, 1))") == Seq(1.2, 5.6))
+  }
+
+  test("each SQL-bodied function agrees with its body declared as a SQL function") {
+    val s = spark.newSession()
+    graft.functions.functions.register(s)
+    val fns = graft.functions.functions.sqlBodied
+    assert(fns.size == 15)
+    // the reference: the same body through Spark's own SQL functions
+    fns.foreach { f =>
+      val params = f.params.map { case (n, t) => s"$n ${t.sql}" }.mkString(", ")
+      s.sql(s"CREATE TEMPORARY FUNCTION ref_${f.name}($params) " +
+        s"RETURNS ${f.returns.sql} RETURN ${f.body}")
+    }
+    s.sql(
+      """CREATE TEMPORARY VIEW t AS SELECT * FROM VALUES
+        |  ('{"a":{"b":"1"}}', '12', 1.2345D, 2, 'g1'),
+        |  ('{"a":[1,2]}', 'ab', -7.891D, 1, 'g1'),
+        |  ('nope', NULL, NULL, NULL, 'g2'),
+        |  (NULL, '3.5e2', 123456789.987654321D, 3, 'g2'),
+        |  ('"s"', 'x,y,z', 9007199254740993D, 0, 'g3')
+        |AS t(j, s, x, d, g)""".stripMargin)
+    // `@f(` calls graft's f in one run and ref_f in the other
+    def rows(query: String, prefix: String) = {
+      val df = s.sql(query.replace("@", prefix))
+      (df.schema.map(_.dataType), df.collect().map(_.toString).sorted.toSeq)
+    }
+    def same(query: String): Unit =
+      assert(rows(query, "") == rows(query, "ref_"), query)
+    val calls = Seq(
+      "@json_value(j, '$.a.b')", "@json_value(j, '$.a')", "@json_query(j, '$.a')",
+      "@json_exists(j, '$.a')", "@is_json(j)", "@sha224(s)", "@sha384(s)", "@sha512(s)",
+      "@split_index(s, ',', d)", "@split_index(s, '.', 0)", "@__truncate2(x, d)",
+      "@is_alpha(s)", "@is_digit(s)", "@is_decimal(s)", "@rand_integer(1)",
+      "@to_base64(s)", "@from_base64(@to_base64(s))")
+    calls.foreach(c => same(s"SELECT $c FROM t"))
+    // NULL for every argument, typed and untyped
+    fns.foreach { f =>
+      same(s"SELECT @${f.name}(${f.params.map(_ => "NULL").mkString(", ")})")
+      same(s"SELECT @${f.name}(${f.params.map(p => s"CAST(NULL AS ${p._2.sql})").mkString(", ")})")
+    }
+    // implicit casts to the parameter types
+    Seq("@is_digit(123)", "@sha224(42)", "@split_index(12345, 3, 1.7)",
+      "@__truncate2(CAST(1.55 AS DECIMAL(4,2)), '1')", "@is_json(42)", "@rand_integer(0.5)")
+      .foreach(c => same(s"SELECT $c"))
+    // nested calls
+    same("""SELECT @json_value(@json_query(j, '$.a'), '$.b'), @is_digit(@split_index(s, ',', 1)),
+           |  @from_base64(@to_base64(@sha512(s))) FROM t""".stripMargin)
+    // GROUP BY, HAVING, aggregate arguments and window ORDER BY
+    same("SELECT @is_json(j), count(*) FROM t GROUP BY @is_json(j)")
+    same("SELECT g FROM t GROUP BY g HAVING @is_alpha(max(s))")
+    same("SELECT g, max(@sha224(s)), sum(@__truncate2(x, 1)) FROM t GROUP BY g")
+    same("SELECT s, row_number() OVER (ORDER BY @is_digit(s), s) FROM t")
+    // a nondeterministic argument is evaluated once, however often the
+    // body names it: the same as over a materialized rand(5)
+    val r = s.sql("SELECT rand(5)").head().getDouble(0)
+    val inline = s.sql("SELECT __truncate2(rand(5), 2)")
+    assert(inline.head().getDouble(0) == (r * 100).toLong.toDouble / 100)
+    assert(inline.head().getDouble(0) ==
+      s.sql("SELECT ref___truncate2(r, 2) FROM (SELECT rand(5) AS r)").head().getDouble(0))
+    val rands = inline.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case e: org.apache.spark.sql.catalyst.expressions.Rand => e
+    }))
+    assert(rands.size == 1, inline.queryExecution.optimizedPlan.toString)
+    // a wrong argument count is the same error
+    def arity(q: String) = {
+      val e = intercept[org.apache.spark.sql.AnalysisException](s.sql(q).collect())
+      (e.getCondition, e.getMessageParameters.get("expectedNum"), e.getMessageParameters.get("actualNum"))
+    }
+    assert(arity("SELECT json_value('{}')") == arity("SELECT ref_json_value('{}')"))
+    assert(arity("SELECT is_digit('1', '2')") == arity("SELECT ref_is_digit('1', '2')"))
+    assert(arity("SELECT is_digit('1', '2')")._1 == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION")
+  }
+
   test("from_unixtime and ifnull are the same-named Spark builtins") {
     assert(one("from_unixtime(86400)") == "1970-01-02 00:00:00")
     assert(one("ifnull(CAST(NULL AS STRING), 'fallback')") == "fallback")

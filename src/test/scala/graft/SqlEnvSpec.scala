@@ -2569,7 +2569,6 @@ class SqlEnvSpec extends AnyFunSuite {
 
   test("a second SqlEnv on one session runs no registration statement") {
     val s = spark.newSession()
-    SqlEnv(s)
     val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val marker = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -2583,6 +2582,8 @@ class SqlEnvSpec extends AnyFunSuite {
     }
     s.listenerManager.register(listener)
     try {
+      // the first SqlEnv on a fresh session, then a second one
+      SqlEnv(s)
       SqlEnv(s)
       // events of one session arrive in order: the marker query's comes last
       s.range(1).collect()
@@ -2600,9 +2601,15 @@ class SqlEnvSpec extends AnyFunSuite {
     intercept[org.apache.spark.sql.AnalysisException](jsonValue())
     SqlEnv(s)
     assert(jsonValue() == "x")
-    s.sql(
+    // a graft function is a builder: Spark will not replace it with a
+    // SQL function in place, so the user drops it first
+    val replace =
       """CREATE OR REPLACE TEMPORARY FUNCTION json_value(j STRING, p STRING)
-        |RETURNS STRING RETURN 'user'""".stripMargin)
+        |RETURNS STRING RETURN 'user'""".stripMargin
+    val e = intercept[org.apache.spark.sql.AnalysisException](s.sql(replace))
+    assert(e.getCondition == "USER_DEFINED_FUNCTIONS.CANNOT_REPLACE_NON_SQL_UDF_WITH_SQL_UDF")
+    s.sql("DROP TEMPORARY FUNCTION json_value")
+    s.sql(replace.replace("OR REPLACE ", ""))
     assert(jsonValue() == "user")
     SqlEnv(s)
     assert(jsonValue() == "x")

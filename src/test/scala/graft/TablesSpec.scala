@@ -51,6 +51,15 @@ class TablesSpec extends AnyFunSuite {
     assert(jobsDuring(Tables.registerAll(spark, dir)) == 0)
   }
 
+  test("loading events keeps the schemas of the tables loaded before it cached") {
+    val dir = freshCopy()
+    val s = spark.newSession()
+    Tables.load(s, dir, "region")
+    Tables.load(s, dir, "events")
+    val again = jobsDuring(Tables.load(s, dir, "region"))
+    assert(again == 0, s"region was inferred again ($again Spark job(s)) after events")
+  }
+
   test("a file rewritten at the same path with other columns is re-inferred") {
     val dir = freshCopy()
     assert(Tables.load(spark, dir, "region").columns.contains("r_name"))
